@@ -178,7 +178,8 @@ object Dedup {
       newDf: DataFrame, id: Column, text: Column): Long = {
     val cur = graft.core.IndexGen.readDir(path)
     val (n, k, _) = readSigMeta(cur)
-    signatureAppendSigs(spark, path, minhashInRow(newDf, id, text, n, k))
+    signatureAppendSigs(spark, path, cur, n, k,
+      minhashInRow(newDf, id, text, n, k))
   }
 
   /** [[signatureAppend]] over an ALREADY-COMPUTED signature table
@@ -186,13 +187,21 @@ object Dedup {
     * probe signatures it computed for the history join instead of
     * re-running the whole shingle+minhash kernel over the survivors
     * (a signature is a pure per-row function, so probe rows filtered to
-    * the survivor ids ARE minhashInRow(survivors)). Callers must supply
-    * signatures computed at the index's own (n, k) geometry. */
-  private[operators] def signatureAppendSigs(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      sigs: DataFrame): Long = {
-    val cur = graft.core.IndexGen.readDir(path)
-    val (n, k, bands) = readSigMeta(cur)
+    * the survivor ids ARE minhashInRow(survivors)).
+    *
+    * `cur` is the generation dir the caller resolved and `(n, k)` the
+    * geometry its signatures were computed at: the append grows THAT
+    * generation's manifest (no second readDir, so probe and append see
+    * one generation) and fails loudly when `(n, k)` is not the
+    * generation's geometry — signatures of another shingle width or
+    * hash count would silently corrupt the signature space. */
+  private[graft] def signatureAppendSigs(
+      spark: org.apache.spark.sql.SparkSession, path: String, cur: String,
+      n: Int, k: Int, sigs: DataFrame): Long = {
+    val (mn, mk, bands) = readSigMeta(cur)
+    require(mn == n && mk == k,
+      s"signatureAppendSigs: signatures at (n=$n, k=$k) do not match the " +
+        s"index geometry (n=$mn, k=$mk) of $cur")
     require(sigs.columns.toSeq == ("id" +: (0 until k).map(i => s"h$i")),
       s"signatureAppendSigs: signature columns ${sigs.columns.mkString(",")} " +
         s"do not match the index geometry k=$k")
@@ -242,10 +251,12 @@ object Dedup {
 
   /** [[dedupAgainst]] over an ALREADY-COMPUTED (and cached) probe
     * signature table (id, h0..h{k-1}) at the index's geometry — shared
-    * by the public entry point and [[dedupRefresh]], whose probe also
-    * serves the survivor append (one signature pass per refresh, not
-    * two). `cur` is the committed generation dir the caller resolved —
-    * one readDir per refresh, so probe and append see one generation. */
+    * by the public entry point and [[dedupRefresh]]'s fallback path,
+    * whose probe also serves the survivor append (one signature pass per
+    * refresh, not two). `cur` is the committed generation dir the caller
+    * resolved; [[dedupRefresh]] hands the same dir to
+    * [[signatureAppendSigs]], so its probe and append see one
+    * generation. */
   private def dedupAgainstSigs(spark: org.apache.spark.sql.SparkSession,
       path: String, cur: String, probe: DataFrame,
       threshold: Double): DataFrame = {
@@ -285,28 +296,68 @@ object Dedup {
     *     aggregation form's absent-row rule).
     *
     * Returns the appended survivor rows (the batch's columns). Cost per
-    * refresh: one batch-sized LSH pass + one signature-table band join +
-    * one O(survivors) append — nothing proportional to history except
-    * the single signature-table read, which is what keeps a 100 TB
-    * corpus refreshable daily. Single-writer, like every segment store. */
+    * refresh: one batch-sized LSH pass + one signature-table scan + one
+    * O(survivors) append — nothing proportional to history except the
+    * single signature-table read, which is what keeps a 100 TB corpus
+    * refreshable daily. Single-writer, like every segment store.
+    *
+    * Size gate ([[graft.core.Small]]): a day's canonical rows are a few
+    * hundred, so when they (and then the history rows sharing one of
+    * their band keys) fit the gate, the probe is answered on the driver
+    * — the history scan filters on per-band `bk IN (batch keys)`, the
+    * band-collision / est / own-id rules run on the collected rows, and
+    * the drop list ships back as an InSet: no band join, no broadcast
+    * build. Above the gate (a rebuild-sized batch) the band join of
+    * [[dedupAgainst]] runs instead; both paths return the same rows.
+    *
+    * Reuse invariant — each per-refresh frame is computed once and read
+    * by every action that needs it:
+    *  - `canon` (eager cache of the in-batch canonicalization): feeds
+    *    the signature table and the survivor return;
+    *  - the signature table (cached, filled by the gate's one collect):
+    *    feeds the history probe AND the survivor append — the kernel
+    *    never runs twice over a text;
+    *  - the index generation dir and its (n, k, bands): resolved once,
+    *    shared by the probe and the append. */
   def dedupRefresh(spark: org.apache.spark.sql.SparkSession, path: String,
       batch: DataFrame, id: Column, text: Column,
       threshold: Double = 0.8, estThreshold: Double = 0.5,
-      maxDf: Int = 100): DataFrame = {
+      maxDf: Int = 100): DataFrame =
+    dedupRefreshGated(spark, path, batch, id, text, threshold, estThreshold,
+      maxDf, graft.core.Small.MaxRows)
+
+  /** [[dedupRefresh]] with an explicit gate size — 0 forces the
+    * band-join history probe (the equivalence specs drive both sides
+    * through here). */
+  private[graft] def dedupRefreshGated(
+      spark: org.apache.spark.sql.SparkSession, path: String,
+      batch: DataFrame, id: Column, text: Column, threshold: Double,
+      estThreshold: Double, maxDf: Int, maxRows: Int): DataFrame = {
     val cur = graft.core.IndexGen.readDir(path)
     val (n, k, bands) = readSigMeta(cur)
-    // eager: the canonical survivor set feeds the history probe AND the
-    // anti-join return — uncached, each branch re-runs the LSH+CC chain
+    val r = k / bands
+    val hs = (0 until k).map(i => col(s"h$i"))
+    // eager: the canonical survivor set feeds the probe signatures AND
+    // the survivor return — uncached, each re-runs the LSH+CC chain
     val canon = Caches.eager(
       canonicalize(batch, id, text, lit(0), n, k, bands, threshold, maxDf)
         .drop("_cluster"))
-    // ONE signature pass per refresh: the probe signatures computed for
-    // the history join below are REUSED for the survivor append (a
-    // MinHash signature is a pure per-row function at the index's own
-    // (n, k), so probe rows semi-joined to the survivor ids ARE
-    // minhashInRow(survivors) — the append previously re-ran the whole
-    // shingle+minhash kernel over the same texts a second time).
-    val probe = Caches.eager(minhashInRow(canon, col("_id"), text, n, k))
+    // ONE signature pass per refresh: every canonical row with its
+    // signature (NULL below n words) and band keys. The same cached
+    // table serves the history probe AND the survivor append (a MinHash
+    // signature is a pure per-row function at the index's own (n, k),
+    // so these rows filtered to the survivor ids ARE
+    // minhashInRow(survivors)). Cached lazily: the gate's collect fills
+    // it.
+    val sigs = Caches.cache(
+      canon.select(col("_id").as("id"),
+          explode(array(graft.plans.TextExprs.minhashSig(text, n, k)))
+            .as("_mh"))
+        .select(col("id") +: (0 until k).map(i =>
+          col("_mh").getItem(i).as(s"h$i")): _*)
+        .select(col("id") +: hs ++:
+          (0 until bands).map(b => bandKey(b, r).as(s"bk$b")): _*))
+    val probe = sigs.filter(col("h0").isNotNull).select(col("id") +: hs: _*)
     // Replay safety: on a RETRIED batch (append committed, downstream
     // write lost) the index already holds this batch's own signatures,
     // and two in-batch survivors in the est ≥ estThreshold /
@@ -315,15 +366,72 @@ object Dedup {
     // output. History matches must therefore exclude the batch's own
     // ids, not just each row's self-id. A fresh batch's ids are never
     // in the index (the caller-feeds-only-new-ids contract shared by
-    // every segment store), so off the replay path this anti-join
-    // removes nothing.
-    val dupIds = dedupAgainstSigs(spark, path, cur, probe, estThreshold)
-      .join(canon.select(col("_id").as("dup_of")), Seq("dup_of"), "left_anti")
-      .select(col("id").as("_id")).distinct()
-    val survivors = Caches.eager(canon.join(dupIds, Seq("_id"), "left_anti"))
-    signatureAppendSigs(spark, path,
-      probe.join(survivors.select(col("_id").as("id")), Seq("id"), "left_semi"))
-    survivors.select(batch.columns.map(col).toSeq: _*)
+    // every segment store), so off the replay path this removes nothing.
+    graft.core.Small.rows(sigs, maxRows)
+      .flatMap(rows => probeLocal(spark, path, cur, k, bands, rows,
+        estThreshold, maxRows)) match {
+      case Some(dups) =>
+        // size gate passed: the probe was answered on the driver, and
+        // the drop list ships back as an InSet — no join, no broadcast
+        signatureAppendSigs(spark, path, cur, n, k,
+          probe.filter(graft.core.Small.notIn(col("id"), dups)))
+        canon.filter(graft.core.Small.notIn(col("_id"), dups))
+          .select(batch.columns.map(col).toSeq: _*)
+      case None =>
+        val dupIds = dedupAgainstSigs(spark, path, cur, Caches.eager(probe),
+            estThreshold)
+          .join(canon.select(col("_id").as("dup_of")), Seq("dup_of"),
+            "left_anti")
+          .select(col("id").as("_id")).distinct()
+        val survivors = Caches.eager(canon.join(dupIds, Seq("_id"), "left_anti"))
+        signatureAppendSigs(spark, path, cur, n, k,
+          probe.join(survivors.select(col("_id").as("id")), Seq("id"),
+            "left_semi"))
+        survivors.select(batch.columns.map(col).toSeq: _*)
+    }
+  }
+
+  /** The history probe of [[dedupRefresh]] answered on the driver, for a
+    * batch whose collected signature rows (`rows`: id, h0..h{k-1},
+    * bk0..bk{bands-1}; NULL signatures for sub-n docs) fit the size gate.
+    * One history scan keeps the rows sharing any band key with the batch
+    * (per-band InSet filters over the same [[bandKey]] expression) and
+    * collects them; the band-collision, est ≥ `estThreshold`, x ≠ y and
+    * own-id rules of the band join then run on the collected rows.
+    * Returns the batch ids with a history match, or None when the
+    * history hits overflow the gate (the caller falls back to the join). */
+  private def probeLocal(spark: org.apache.spark.sql.SparkSession,
+      path: String, cur: String, k: Int, bands: Int,
+      rows: Array[org.apache.spark.sql.Row], estThreshold: Double,
+      maxRows: Int): Option[Set[Any]] = {
+    val r = k / bands
+    val probe = rows.filterNot(_.isNullAt(1))
+    if (probe.isEmpty) return Some(Set.empty)
+    val keys = (0 until bands).map(b => probe.map(_.getString(1 + k + b)).distinct)
+    val byKey = probe.toSeq.flatMap(x =>
+      (0 until bands).map(b => (b, x.getString(1 + k + b)) -> x))
+      .groupMap(_._1)(_._2)
+    // ids compared in the batch's own id type: a boxed Int never equals
+    // a boxed Long, so the history ids are cast before they are collected
+    val idType = rows.head.schema("id").dataType
+    val hist = Similarity.codesParts(spark, path, cur)
+    graft.core.Small.rows(
+      hist.filter((0 until bands).map(b => bandKey(b, r).isin(keys(b): _*))
+          .reduce(_ || _))
+        .select(col("id").cast(idType) +:
+          ((0 until k).map(i => col(s"h$i")) ++
+            (0 until bands).map(b => bandKey(b, r))): _*),
+      maxRows).map { hits =>
+      val own = rows.map(_.get(0)).toSet
+      (for {
+        y <- hits.iterator if !own(y.get(0))
+        x <- (0 until bands).iterator.flatMap(b =>
+          byKey.getOrElse((b, y.getString(1 + k + b)), Nil))
+        if x.get(0) != y.get(0) &&
+          (1 to k).count(i => x.getString(i) == y.getString(i))
+            .toDouble / k >= estThreshold
+      } yield x.get(0)).toSet
+    }
   }
 
   // ------------------------------------------------------------------
@@ -334,7 +442,9 @@ object Dedup {
   // rest is ONE md5 per document (16 bytes of payload vs k hex
   // signatures for the MinHash index), probes are a hash equi-join with
   // the BATCH side broadcast — history is scanned once and never
-  // shuffled, the right orientation when |day's ingest| ≪ |corpus|.
+  // shuffled, the right orientation when |day's ingest| ≪ |corpus|. A
+  // refresh gate whose batch fits [[graft.core.Small]] skips even the
+  // broadcast: [[exactGate]] ships the batch hashes as an InSet filter.
   // Near-dup detection needs the signature index ([[signatureSave]]);
   // this one answers only "have I seen exactly this text before", which
   // in crawl pipelines removes the bulk of duplicates before any
@@ -423,10 +533,10 @@ object Dedup {
       newDf.select(id.as("id"), md5(text).as("h")), broadcastLimitBytes)
 
   /** [[exactAgainst]] over an ALREADY-COMPUTED (id, h = md5(text)) probe
-    * — the seam for callers that carry the batch's content hashes from
-    * their own in-batch exact gate (the incremental pretrain chain, the
-    * DocStore exact gate), so the md5 kernel runs once per batch instead
-    * of once per gate stage. Same broadcast gating and caching. */
+    * — the above-gate path of [[exactGate]], which carries the batch's
+    * content hashes from its in-batch canonicalization, so the md5
+    * kernel runs once per batch instead of once per gate stage. Same
+    * broadcast gating and caching. */
   private[operators] def exactAgainstHashes(
       spark: org.apache.spark.sql.SparkSession, path: String,
       newHashes: DataFrame,
@@ -445,6 +555,75 @@ object Dedup {
     hist.select(col("id").as("dup_of"), col("h"))
       .join(probeSide, Seq("h"))
       .select(col("id"), col("dup_of"))
+  }
+
+  /** The EXACT gate of the refresh loops — shared by
+    * [[Pipelines.pretrainCorpusIncremental]] (documents, `id` =
+    * doc_id) and the DocStore ingest gate (chunks, `id` = chunk_key):
+    *
+    *  1. in-batch canonicalization: one row per distinct md5(`text`),
+    *     the smallest `id` (a hash-aggregable min, never a window sort),
+    *     with the hash KEPT as `_h` so the history probe and the
+    *     caller's index append never re-run the md5 kernel;
+    *  2. history filter: rows whose `_h` is already in the hash index at
+    *     `path` are dropped. With `excludeOwn`, matches against the
+    *     batch's OWN ids do not count (the [[dedupRefresh]] replay rule:
+    *     a retried batch finds its own hashes indexed and must re-derive
+    *     its survivors, not drop them).
+    *
+    * The hashed batch is localCheckpointed once (the gate-seam
+    * discipline: the near gate and the caller reference the gate output
+    * from many plan branches, and a cache does not truncate the analyzed
+    * tree). Size gate ([[graft.core.Small]]): when the (_h, min id)
+    * groups fit, they are collected, history is scanned once with
+    * `h IN (batch hashes)` and its hits collected, the own-id rule runs
+    * on the driver, and the survivors are the checkpoint filtered by
+    * `id IN (kept ids) AND _h NOT IN (dups)` — no join, no broadcast
+    * build. A larger batch (a first ingest or a rebuild-sized day) or an
+    * oversized hit list takes the semi-join + broadcast equi-join of
+    * [[exactAgainstHashes]]. Returns the survivors with `_h`; with no
+    * index yet (a first ingest) every canonical row survives. */
+  private[graft] def exactGate(spark: org.apache.spark.sql.SparkSession,
+      path: String, df: DataFrame, id: String, text: String,
+      excludeOwn: Boolean,
+      maxRows: Int = graft.core.Small.MaxRows): DataFrame = {
+    val withH = df.withColumn("_h", md5(col(text))).localCheckpoint(true)
+    val keep = withH.groupBy(col("_h")).agg(min(col(id)).as(id))
+    val indexed = graft.core.IndexGen.current(path).isDefined
+    val local = graft.core.Small.rows(keep, maxRows).flatMap { groups =>
+      val kept = groups.filterNot(_.isNullAt(1))
+      val hs = kept.filterNot(_.isNullAt(0)).map(_.getString(0))
+      // ids compared in the batch's own id type: a boxed Int never
+      // equals a boxed Long, so history ids are cast before collecting
+      val hits =
+        if (!indexed || hs.isEmpty) Some(Array.empty[org.apache.spark.sql.Row])
+        else {
+          val cur = graft.core.IndexGen.readDir(path)
+          requireHashMeta(cur)
+          graft.core.Small.rows(Similarity.codesParts(spark, path, cur)
+            .filter(col("h").isin(hs: _*))
+            .select(col("id").cast(withH.schema(id).dataType), col("h")),
+            maxRows)
+        }
+      val own = if (excludeOwn) kept.map(_.get(1)).toSet else Set.empty[Any]
+      hits.map(found => withH.filter(col(id).isin(kept.map(_.get(1)): _*) &&
+        graft.core.Small.notIn(col("_h"),
+          found.filterNot(h => own(h.get(0))).map(_.getString(1)).toSet)))
+    }
+    local.getOrElse {
+      val canon = withH.join(keep.select(id), Seq(id), "left_semi")
+      if (!indexed) canon.localCheckpoint(true)
+      else {
+        val dup = exactAgainstHashes(spark, path,
+          canon.select(col(id).as("id"), col("_h").as("h")))
+        val counted =
+          if (excludeOwn) dup.join(canon.select(col(id).as("dup_of")),
+            Seq("dup_of"), "left_anti")
+          else dup
+        canon.join(counted.select(col("id").as(id)).distinct(), Seq(id),
+          "left_anti").localCheckpoint(true)
+      }
+    }
   }
 
   /** Compact a [[signatureSave]]d index's segments into ONE — the
@@ -532,10 +711,15 @@ object Dedup {
     * those concurrent stages serialize on the cache's block locks). */
   private def bandRows(mh: DataFrame, bands: Int, r: Int): DataFrame =
     mh.select(col("id"), explode(array((0 until bands).map { b =>
-        struct(lit(b).as("band"),
-          md5(concat((0 until r).map(i => col(s"h${b * r + i}")): _*)).as("bk"))
+        struct(lit(b).as("band"), bandKey(b, r).as("bk"))
       }: _*)).as("_bb"))
       .select(col("id"), col("_bb.band").as("band"), col("_bb.bk").as("bk"))
+
+  /** Band `b`'s LSH key over signature columns h0..: md5 of its r
+    * hashes. The one definition every banding path evaluates — in Spark
+    * on both sides, never re-implemented on the driver. */
+  private def bandKey(b: Int, r: Int): Column =
+    md5(concat((0 until r).map(i => col(s"h${b * r + i}")): _*))
 
   /** MinHash + LSH near-duplicate pairs: shingle → k minhashes → `bands`
     * bands of k/bands rows → candidates share a band key → exact Jaccard

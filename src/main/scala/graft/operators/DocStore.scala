@@ -297,44 +297,36 @@ object DocStore {
     *
     *  1. in-batch exact canonicalization — one survivor per distinct
     *     chunk text, the min [[chunkKey]] (deterministic re-runs); a
-    *     hash-aggregable long min + semi-join back, never a window sort;
+    *     hash-aggregable long min, never a window sort;
     *  2. history filter — chunks whose md5(text) is already indexed are
-    *     dropped ([[Dedup.exactAgainst]]: probe broadcasts when small,
-    *     the history hash table is scanned once, never shuffled), which
-    *     is also what makes RE-INGESTING the same file a no-op;
+    *     dropped (the history hash table is scanned once, never
+    *     shuffled), which is also what makes RE-INGESTING the same file
+    *     a no-op;
     *  3. the surviving chunks' hashes are appended O(survivors)
     *     ([[indexChunkHashes]] — by the caller, AFTER its downstream
     *     write where one exists, so a retried micro-batch re-embeds and
     *     duplicates rows, at-least-once, instead of losing them).
     *
-    * Eager-cached: the survivors feed the hash append AND the embed
-    * stage. */
+    * Steps 1-2 are [[Dedup.exactGate]], shared with the pretrain chain.
+    * Size gate: an ingest whose distinct chunk texts fit
+    * [[graft.core.Small]] (a micro-batch) is answered on the driver — the
+    * batch hashes go to the history scan as an InSet, the hits come back
+    * in one collect, and the survivors are the checkpointed batch behind
+    * an InSet filter; no join, no broadcast build. A larger ingest (a
+    * first bulk build) takes the semi-join + broadcast probe.
+    *
+    * Reuse invariant: the hashed chunk batch is checkpointed ONCE and
+    * every later action reads it — the gate's collect, the near gate,
+    * the embed stage and the hash append (which reuses its `_h`). */
   private def dedupFreshChunks(spark: SparkSession, chunked: DataFrame,
-      indexPath: String): DataFrame = {
-    val withH = chunked.withColumn("_h", md5(col("text")))
-    val keep = withH.groupBy(col("_h"))
-      .agg(min(col("chunk_key")).as("chunk_key")).select("chunk_key")
-    val canon = withH.join(keep, Seq("chunk_key"), "left_semi")
-    val fresh =
-      if (graft.core.IndexGen.current(indexPath).isDefined) {
-        // probe with the hashes the canonicalization already computed —
-        // exactAgainst would re-run the md5 kernel over the batch text
-        val dup = Dedup.exactAgainstHashes(spark, indexPath,
-            canon.select(col("chunk_key").as("id"), col("_h").as("h")))
-          .select(col("id").as("chunk_key")).distinct()
-        canon.join(dup, Seq("chunk_key"), "left_anti")
-      } else canon
-    // `_h` STAYS on the materialized survivors: indexChunkHashes appends
-    // the stored hashes instead of re-hashing the stored text.
-    // localCheckpoint, not cache (the pretrainCorpusIncremental gate-seam
-    // discipline): the near gate's LSH machinery and the embed stage
-    // reference this frame from MANY plan branches, and a cache does not
-    // truncate the ANALYZED tree — the stacked two-gate + embed lineage
-    // made the store's cached-plan tree ~22k formatted-plan lines, every
-    // downstream analysis re-walking it (measured driver-side, the r15
-    // loopState lesson applied to the ingest gates).
-    fresh.localCheckpoint(true)
-  }
+      indexPath: String): DataFrame =
+    // `_h` STAYS on the survivors: indexChunkHashes appends the stored
+    // hashes instead of re-hashing the stored text. Every history match
+    // counts — unlike the pretrain chain, an ingest does not exclude its
+    // own ids: a re-ingested file carries its original deterministic
+    // chunk keys, and dropping it is the point of the gate.
+    Dedup.exactGate(spark, indexPath, chunked, "chunk_key", "text",
+      excludeOwn = false)
 
   /** Record an ingest's surviving chunk hashes in the dedup index —
     * creates it on first ingest, O(new rows) segment append after

@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Graph algorithms as a library over the iterate driver (reference:
   * stdlib/graphs/pagerank/impl.py:18, bellman_ford/impl.py:42,
@@ -18,14 +19,81 @@ import org.apache.spark.sql.functions._
 object Graphs {
 
   /** Undirected connected components. `edges` needs `src`/`dst` columns;
-    * returns (node, comp) with comp = min node id of the component. */
-  def connectedComponents(edges: DataFrame, maxIter: Int = 50): DataFrame = {
+    * returns (node, comp) with comp = min node id of the component.
+    *
+    * Size gate ([[graft.core.Small]]): an edge set of integral, non-null
+    * ids that fits the gate — the per-refresh near-dup edges of
+    * [[Dedup.canonicalize]] are a few dozen rows — is collected in one
+    * job and solved by union-find on the driver; the answer comes back
+    * as a local relation. The distributed fixpoint below costs ~30 jobs
+    * (half of them broadcast builds) on such a graph. Larger graphs,
+    * and string/binary ids, run the fixpoint. */
+  def connectedComponents(edges: DataFrame, maxIter: Int = 50): DataFrame =
+    connectedComponentsGated(edges, maxIter, graft.core.Small.MaxRows)
+
+  /** [[connectedComponents]] with an explicit gate size — 0 forces the
+    * distributed fixpoint on any non-empty graph (the equivalence specs
+    * drive both sides through here). */
+  private[graft] def connectedComponentsGated(edges: DataFrame, maxIter: Int,
+      maxRows: Int): DataFrame = {
+    val e = edges.select(col("src"), col("dst"))
+      .union(edges.select(col("dst").as("src"), col("src").as("dst")))
+    val idType = e.schema("src").dataType
+    val local = idType match {
+      case ByteType | ShortType | IntegerType | LongType =>
+        graft.core.Small.rows(edges.select(col("src").cast(idType),
+            col("dst").cast(idType)), maxRows)
+          .filter(_.forall(r => !r.isNullAt(0) && !r.isNullAt(1)))
+      case _ => None
+    }
+    local match {
+      case Some(rows) => unionFind(edges.sparkSession, rows, idType)
+      case None => ccFixpoint(e, maxIter)
+    }
+  }
+
+  /** Components of collected integral-id edge rows, comp = min id — the
+    * driver half of [[connectedComponents]]. Every node joins the root
+    * with the smaller id, so each root is its component's minimum. */
+  private def unionFind(spark: org.apache.spark.sql.SparkSession,
+      rows: Array[Row], idType: DataType): DataFrame = {
+    val parent = scala.collection.mutable.LinkedHashMap[Long, Long]()
+    def find(x: Long): Long = {
+      var r = x
+      while (parent(r) != r) r = parent(r)
+      var c = x
+      while (parent(c) != r) { val nx = parent(c); parent(c) = r; c = nx }
+      r
+    }
+    def node(v: Any): Long = {
+      val x = v.asInstanceOf[Number].longValue
+      if (!parent.contains(x)) parent(x) = x
+      x
+    }
+    rows.foreach { r =>
+      val a = find(node(r.get(0)))
+      val b = find(node(r.get(1)))
+      if (a < b) parent(b) = a else if (b < a) parent(a) = b
+    }
+    val box: Long => Any = idType match {
+      case ByteType => _.toByte
+      case ShortType => _.toShort
+      case IntegerType => _.toInt
+      case _ => identity
+    }
+    val out = parent.keys.toSeq.map(x => Row(box(x), box(find(x))))
+    spark.createDataFrame(java.util.Arrays.asList(out: _*),
+      StructType(Seq(StructField("node", idType), StructField("comp", idType))))
+  }
+
+  /** The distributed half of [[connectedComponents]]: min-label
+    * propagation with pointer jumping over the symmetrized edges. */
+  private def ccFixpoint(symEdges: DataFrame, maxIter: Int): DataFrame = {
     // eager-cache the symmetrized edge set: it is re-joined EVERY round,
     // and an uncached `edges` would re-evaluate the caller's whole edge
     // derivation (for LSH clustering, the 24-plane bucket projection)
     // once per iteration
-    val sym = graft.core.Caches.eager(edges.select(col("src"), col("dst"))
-      .union(edges.select(col("dst").as("src"), col("src").as("dst"))))
+    val sym = graft.core.Caches.eager(symEdges)
     val init = sym.select(col("src").as("node")).distinct()
       .withColumn("comp", col("node"))
     // convergence probe: min-label propagation is MONOTONE (comp never

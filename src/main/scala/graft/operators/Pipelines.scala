@@ -276,11 +276,10 @@ object Pipelines {
     *  1. language ID keep, quality floor, optional blocklist — pure
     *     column predicates on the batch scan (identical to
     *     [[pretrainCorpusFull]] stages 1-3);
-    *  2. EXACT gate: in-batch canonicalization (smallest id per
-    *     identical text — a hash-aggregable min + semi-join, never a
-    *     window sort), then drop texts whose md5 is already in the
-    *     hash index ([[Dedup.exactAgainst]] — probe side broadcasts,
-    *     history scanned once, never shuffled);
+    *  2. EXACT gate ([[Dedup.exactGate]]): in-batch canonicalization
+    *     (smallest id per identical text — a hash-aggregable min, never
+    *     a window sort), then drop texts whose md5 is already in the
+    *     hash index (history scanned once, never shuffled);
     *  3. NEAR gate: [[Dedup.dedupRefresh]] against the signature index
     *     — in-batch LSH canonicalization at the index geometry, then
     *     the signature-agreement probe (est ≥ `estThreshold`) drops
@@ -322,13 +321,19 @@ object Pipelines {
     *
     * Returns the packed survivor rows
     * (doc_id, text, n_tokens, bucket, pack, pack_pos).
-    * Cost per refresh: one batch-sized scan + LSH pass, one hash-table
-    * equi-join + one signature band join against the indexes (each one
-    * columnar read of history), O(survivors) appends — nothing
-    * re-shingles or re-canonicalizes history, which is what makes the
-    * daily refresh flat in history size (BASELINE "fixed-probe" table;
-    * run [[Dedup.hashCompact]]/[[Dedup.signatureCompact]] on the usual
-    * cadence). */
+    * Cost per refresh: one batch-sized scan + LSH pass, one probe of
+    * each index (one columnar read of history each), O(survivors)
+    * appends — nothing re-shingles or re-canonicalizes history, which
+    * is what makes the daily refresh flat in history size (BASELINE
+    * "fixed-probe" table; run [[Dedup.hashCompact]]/
+    * [[Dedup.signatureCompact]] on the usual cadence).
+    *
+    * A day's batch is a few hundred rows, so every per-refresh gate
+    * table fits [[graft.core.Small]]'s size gate and is answered on the
+    * driver — the exact and near history probes and the near gate's
+    * connected components ship their lookups back inside expressions
+    * instead of paying a broadcast build per join; a rebuild-sized batch
+    * falls back to the joins with identical results. */
   def pretrainCorpusIncremental(batch: DataFrame, id: Column, text: Column,
       markers: Map[String, Seq[String]], keepLang: String,
       stopwords: Seq[String], minQuality: Double,
@@ -347,37 +352,18 @@ object Pipelines {
     val blocked =
       if (blocklist.isEmpty) qualKept
       else TextOps.blocklistFilter(qualKept, col("text"), blocklist)
-    // EXACT gate — in-batch canonicalization first (one survivor per
-    // distinct text, smallest id: hash-aggregable min + semi-join).
-    // `_h` is KEPT on the frame through the gate checkpoint: the history
-    // probe and the index append below reuse it, so the md5 kernel runs
-    // over the batch text once instead of once per gate stage.
-    val withH = blocked.withColumn("_h", md5(col("text")))
-    val keep = withH.groupBy(col("_h"))
-      .agg(min(col("doc_id")).as("doc_id")).select("doc_id")
-    val canon = withH.join(keep, Seq("doc_id"), "left_semi")
-    // …then the history filter. Matches against the batch's OWN ids are
-    // excluded (dedupRefresh's replay rule): on a RETRIED refresh the
-    // index already holds this batch's hashes, and since in-batch
-    // canonicalization left one row per text, an own-id match can only
-    // be a row matching its own indexed hash — dropping it would lose
-    // the row from the retried output. Fresh batches are unaffected.
-    // localCheckpoint, not cache: the near gate's LSH machinery
-    // references this frame from MANY plan branches (shingle chain,
-    // size lookups, join-backs), and a cache does not truncate the
-    // ANALYZED tree — the composed two-gate lineage made driver-side
-    // re-analysis the dominant cost (measured 49 s wall vs 22 s of
-    // stage time at sf0.001, data-size-independent — the loopState
-    // lesson applied to a one-shot composition)
-    val exactFresh = (
-      if (graft.core.IndexGen.current(hashIndex).isDefined) {
-        val dup = Dedup.exactAgainstHashes(spark, hashIndex,
-            canon.select(col("doc_id").as("id"), col("_h").as("h")))
-          .join(canon.select(col("doc_id").as("dup_of")),
-            Seq("dup_of"), "left_anti")
-          .select(col("id").as("doc_id")).distinct()
-        canon.join(dup, Seq("doc_id"), "left_anti")
-      } else canon).localCheckpoint(true)
+    // EXACT gate (Dedup.exactGate): in-batch canonicalization — one
+    // survivor per distinct text, smallest id, `_h` kept so the history
+    // probe and the index append below never re-run the md5 kernel —
+    // then the history filter, checkpointed at the gate seam. Matches
+    // against the batch's OWN ids are excluded (dedupRefresh's replay
+    // rule): on a RETRIED refresh the index already holds this batch's
+    // hashes, and since in-batch canonicalization left one row per
+    // text, an own-id match can only be a row matching its own indexed
+    // hash — dropping it would lose the row from the retried output.
+    // Fresh batches are unaffected.
+    val exactFresh = Dedup.exactGate(spark, hashIndex, blocked, "doc_id",
+      "text", excludeOwn = true)
     // NEAR gate — the persisted refresh loop at document granularity
     // (dedupRefresh appends the survivors' signatures itself); first
     // refresh creates the index at nearDup's geometry

@@ -684,6 +684,29 @@ class DocStoreSpec extends SparkSpec {
     assert(st4.chunks.count() == 0 && acc.value == 10L)
   }
 
+  test("exact ingest gate: the driver-side lookup ≡ the join fallback at " +
+      "chunk granularity; re-ingested chunk keys still drop") {
+    import graft.operators.Dedup
+    val chunks = store.chunks.select("chunk_key", "doc_id", "text")
+    val idx = java.nio.file.Files
+      .createTempDirectory("ds_gate_spec").toString + "/idx"
+    // doc 1's chunks are indexed under their own keys: re-ingesting them
+    // (and doc 4's identical texts, doc 2's shared first chunk) must
+    // drop — the ingest gate does NOT exclude the batch's own ids
+    Dedup.hashSave(chunks.filter(col("doc_id") === 1L),
+      col("chunk_key"), col("text"), idx)
+    val seen = chunks.filter(col("doc_id") === 1L)
+      .select("text").as[String].collect().toSet
+    val local = Dedup.exactGate(spark, idx, chunks, "chunk_key", "text",
+      excludeOwn = false)
+    val joined = Dedup.exactGate(spark, idx, chunks, "chunk_key", "text",
+      excludeOwn = false, maxRows = 0)
+    assert(rowsOf(local) == rowsOf(joined))
+    val texts = local.select("text").as[String].collect()
+    assert(texts.nonEmpty && texts.forall(t => !seen(t)) &&
+      texts.distinct.length == texts.length, texts.toSeq.toString)
+  }
+
   test("build(nearDedupIndex): near-duplicate chunks of EARLIER ingests " +
       "never reach the embedder; sub-n chunks pass; re-ingest is empty") {
     val acc = spark.sparkContext.longAccumulator("near_embed_calls")

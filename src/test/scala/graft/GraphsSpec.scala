@@ -78,6 +78,38 @@ class GraphsSpec extends SparkSpec {
     assert(Set("x", "y").map(out) == Set("x"))
   }
 
+  test("connectedComponents: driver union-find ≡ distributed fixpoint on " +
+      "seeded random graphs (Int/Long ids, dup/reversed edges, self-loops)") {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    val rnd = new scala.util.Random(1234)
+    def check(edges: org.apache.spark.sql.DataFrame): Unit = {
+      val local = Graphs.connectedComponentsGated(edges, 50, 1 << 20)
+      val loop = Graphs.connectedComponentsGated(edges, 50, 0)
+      // each side really ran: the driver path answers from a local
+      // relation, the fixpoint from its checkpointed loop state
+      assert(local.queryExecution.analyzed.isInstanceOf[LocalRelation])
+      assert(!loop.queryExecution.analyzed.isInstanceOf[LocalRelation] ||
+        edges.isEmpty)
+      assert(local.schema.map(_.dataType) == loop.schema.map(_.dataType))
+      assert(rowsOf(local) == rowsOf(loop), s"edges:\n${edges.collect().toSeq}")
+    }
+    for (_ <- 1 to 4) {
+      val nodes = 4 + rnd.nextInt(20)
+      val base = Seq.fill(1 + rnd.nextInt(24))(
+        (rnd.nextInt(nodes), rnd.nextInt(nodes)))
+      // duplicate and reversed copies, plus a self-loop island
+      val es = base ++ base.take(3) ++ base.take(3).map(_.swap) :+
+        ((nodes + 5, nodes + 5))
+      check(es.toDF("src", "dst"))
+      // Long ids beyond the Int range must not truncate
+      check(es.map { case (a, b) => (a + (1L << 40), b + (1L << 40)) }
+        .toDF("src", "dst"))
+    }
+    // mixed Int/Long columns widen to Long on both sides
+    check(Seq((1, 2L), (3, 2L), (7, 8L)).toDF("src", "dst"))
+    check(Seq.empty[(Int, Int)].toDF("src", "dst"))
+  }
+
   test("louvain rejects non-numeric node ids loudly") {
     val edges = Seq(("a", "b")).toDF("src", "dst")
     intercept[IllegalArgumentException] { Graphs.louvain(edges) }

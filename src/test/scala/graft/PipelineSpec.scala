@@ -237,6 +237,94 @@ class PipelineSpec extends SparkSpec {
       "replayed batch must re-derive the same survivors")
   }
 
+  test("exactGate: the driver-side lookup ≡ the join fallback below and " +
+      "above the gate, with and without the own-id rule, Int batch ids") {
+    val path = java.nio.file.Files.createTempDirectory("exact_gate").toString
+    // history ids are Long; the batch below carries Int ids, so the
+    // own-id rule must compare them in the batch's type
+    Dedup.hashSave(Seq((1L, "a b c"), (2L, "d e f"), (5L, "own text"))
+      .toDF("doc_id", "text"), col("doc_id"), col("text"), path)
+    val batch = Seq((5, "own text"), (6, "a b c"), (7, "a b c"),
+      (8, "fresh words"), (9, "fresh words"), (10, null: String))
+      .toDF("doc_id", "text")
+    def ids(df: org.apache.spark.sql.DataFrame) =
+      df.select("doc_id").as[Int].collect().toSet
+    for ((excludeOwn, want) <- Seq(true -> Set(5, 8, 10),
+        false -> Set(8, 10))) {
+      val local = Dedup.exactGate(spark, path, batch, "doc_id", "text",
+        excludeOwn)
+      val joined = Dedup.exactGate(spark, path, batch, "doc_id", "text",
+        excludeOwn, maxRows = 0)
+      assert(ids(local) == want, s"excludeOwn=$excludeOwn: ${ids(local)}")
+      assert(rowsOf(local) == rowsOf(joined))
+      assert(local.columns.toSeq == Seq("doc_id", "text", "_h"))
+    }
+    // no index yet: canonicalization only, on both sides
+    val none = java.nio.file.Files.createTempDirectory("exact_none")
+      .toString + "/idx"
+    assert(rowsOf(Dedup.exactGate(spark, none, batch, "doc_id", "text",
+      excludeOwn = true)) == rowsOf(Dedup.exactGate(spark, none, batch,
+      "doc_id", "text", excludeOwn = true, maxRows = 0)))
+  }
+
+  test("dedupRefresh: the driver-side history probe ≡ the band join below " +
+      "and above the gate — fresh batch, replay, Int batch ids") {
+    val a = "alpha bravo charlie delta echo foxtrot golf hotel india " +
+      "juliet kilo lima mike november oscar papa quebec romeo sierra tango"
+    val b = "alpha bravo charlie delta echo foxtrot golf hotel india " +
+      "juliet kilo lima mike november oscar papa quebec xray yankee zulu"
+    val history = Seq((1L, "the quick brown fox jumps over the lazy dog"),
+      (2L, "completely unrelated seed corpus about engines"))
+      .toDF("doc_id", "text")
+    val batch = Seq((11L, a), (12L, b),
+      (13L, "the quick brown fox jumps over the lazy dog"), // history dup
+      (14L, a), // in-batch exact dup of 11
+      (15L, "short")) // sub-n: returned, never indexed
+      .toDF("doc_id", "text")
+    def run(maxRows: Int, intIds: Boolean) = {
+      val path = java.nio.file.Files.createTempDirectory("sig_gate").toString
+      Dedup.signatureSave(history, col("doc_id"), col("text"), path,
+        n = 3, k = 6, bands = 6)
+      val in = if (intIds) batch.withColumn("doc_id", col("doc_id").cast("int"))
+        else batch
+      // fresh, then a replay of the same batch (its signatures indexed)
+      val outs = (1 to 2).map(_ => rowsOf(Dedup.dedupRefreshGated(spark,
+        path, in, col("doc_id"), col("text"), 0.8, 0.15, 100, maxRows)))
+      (outs, rowsOf(Similarity.binaryLoadParts(spark, path)
+        .select(col("id").cast("long"), col("h0"), col("h5"))))
+    }
+    for (intIds <- Seq(false, true)) {
+      val (localOuts, localIdx) = run(graft.core.Small.MaxRows, intIds)
+      val (joinOuts, joinIdx) = run(0, intIds)
+      assert(localOuts == joinOuts && localIdx == joinIdx, s"intIds=$intIds")
+      assert(localOuts.map(_.map(_.head.toString.toLong)) ==
+        Seq(Set(11L, 12L, 15L), Set(11L, 12L, 15L)),
+        s"fresh and replayed survivors: $localOuts")
+      assert(localIdx.map(_.head) == Set(1L, 2L, 11L, 12L))
+    }
+  }
+
+  test("signatureAppendSigs: signatures at the wrong n fail loudly") {
+    val path = java.nio.file.Files.createTempDirectory("sig_wrong_n").toString
+    Dedup.signatureSave(docs, col("doc_id"), col("text"), path,
+      n = 3, k = 6, bands = 3)
+    val cur = graft.core.IndexGen.readDir(path)
+    val sigs = Seq((9L, "a b c d e f")).toDF("doc_id", "text")
+      .select(col("doc_id").as("id"),
+        explode(array(graft.plans.TextExprs.minhashSig(col("text"), 2, 6)))
+          .as("m"))
+      .select(col("id") +: (0 until 6).map(i => col("m")(i).as(s"h$i")): _*)
+    val gen0 = graft.core.IndexGen.current(path)
+    val e = intercept[IllegalArgumentException] {
+      Dedup.signatureAppendSigs(spark, path, cur, 2, 6, sigs)
+    }
+    assert(e.getMessage.contains("n=2") && e.getMessage.contains("n=3"))
+    assert(graft.core.IndexGen.current(path) == gen0, "nothing committed")
+    // the same signatures declared at the index geometry append fine
+    Dedup.signatureAppendSigs(spark, path, cur, 3, 6, sigs)
+    assert(graft.core.IndexGen.current(path) != gen0)
+  }
+
   test("exactAgainst: oversized probe falls back to an un-hinted join " +
       "with identical results") {
     val path = java.nio.file.Files.createTempDirectory("hash_gate").toString

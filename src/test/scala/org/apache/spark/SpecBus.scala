@@ -1,0 +1,8 @@
+package org.apache.spark
+
+/** Access to the listener bus, which Spark keeps package-private: a spec
+  * that counts jobs reads its listener only after every event posted so
+  * far has been delivered. */
+object SpecBus {
+  def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}
