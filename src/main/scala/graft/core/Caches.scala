@@ -66,8 +66,47 @@ object Caches {
     * checkpoint fires when `round % every == 0` (and always when
     * `every <= 1`). */
   def loopState(df: DataFrame, round: Int = 0, every: Int = 1): DataFrame =
-    if (every <= 1 || round % every == 0) df.localCheckpoint(true)
+    if (every <= 1 || round % every == 0) checkpoint(df)
     else eager(df)
+
+  private val batchCkpts =
+    new ThreadLocal[scala.collection.mutable.ArrayBuffer[DataFrame]]
+
+  /** `df.localCheckpoint(true)` — the gate-seam and loop-state
+    * truncation. Inside a [[microBatch]] the checkpoint is also recorded
+    * and freed when the micro-batch ends; elsewhere its blocks live until
+    * the frame is garbage-collected (ContextCleaner). A local checkpoint
+    * cannot be recomputed, so [[drain]] never frees one: a caller may
+    * still read it. */
+  def checkpoint(df: DataFrame): DataFrame = {
+    val c = df.localCheckpoint(true)
+    Option(batchCkpts.get).foreach(_ += c)
+    c
+  }
+
+  /** Run one streaming micro-batch body (a `foreachBatch` function) and
+    * release what it left on this thread: the tracked caches ([[drain]])
+    * and the local checkpoints taken through [[checkpoint]]. The body
+    * runs on the stream-execution thread, which no harness drains, and
+    * each micro-batch's checkpoints would otherwise wait for a driver GC
+    * (the ContextCleaner) — a long-running stream accumulates their
+    * blocks in the meantime. Call only around a body whose every
+    * consumer has completed when it returns. */
+  def microBatch(body: => Unit): Unit = {
+    val outer = batchCkpts.get
+    val own = scala.collection.mutable.ArrayBuffer[DataFrame]()
+    batchCkpts.set(own)
+    try body
+    finally {
+      batchCkpts.set(outer)
+      drain()
+      own.foreach(c => try c.queryExecution.logical match {
+          case l: org.apache.spark.sql.execution.LogicalRDD =>
+            l.rdd.unpersist(blocking = false)
+          case _ =>
+        } catch { case _: Throwable => })
+    }
+  }
 
   /** Unpersist every frame tracked on this thread and reset the scope. */
   def drain(): Unit = {

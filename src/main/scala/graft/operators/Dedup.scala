@@ -587,7 +587,7 @@ object Dedup {
       path: String, df: DataFrame, id: String, text: String,
       excludeOwn: Boolean,
       maxRows: Int = graft.core.Small.MaxRows): DataFrame = {
-    val withH = df.withColumn("_h", md5(col(text))).localCheckpoint(true)
+    val withH = Caches.checkpoint(df.withColumn("_h", md5(col(text))))
     val keep = withH.groupBy(col("_h")).agg(min(col(id)).as(id))
     val indexed = graft.core.IndexGen.current(path).isDefined
     val local = graft.core.Small.rows(keep, maxRows).flatMap { groups =>
@@ -612,7 +612,7 @@ object Dedup {
     }
     local.getOrElse {
       val canon = withH.join(keep.select(id), Seq(id), "left_semi")
-      if (!indexed) canon.localCheckpoint(true)
+      if (!indexed) Caches.checkpoint(canon)
       else {
         val dup = exactAgainstHashes(spark, path,
           canon.select(col(id).as("id"), col("_h").as("h")))
@@ -620,8 +620,8 @@ object Dedup {
           if (excludeOwn) dup.join(canon.select(col(id).as("dup_of")),
             Seq("dup_of"), "left_anti")
           else dup
-        canon.join(counted.select(col("id").as(id)).distinct(), Seq(id),
-          "left_anti").localCheckpoint(true)
+        Caches.checkpoint(canon.join(counted.select(col("id").as(id))
+          .distinct(), Seq(id), "left_anti"))
       }
     }
   }
@@ -716,8 +716,11 @@ object Dedup {
       .select(col("id"), col("_bb.band").as("band"), col("_bb.bk").as("bk"))
 
   /** Band `b`'s LSH key over signature columns h0..: md5 of its r
-    * hashes. The one definition every banding path evaluates — in Spark
-    * on both sides, never re-implemented on the driver. */
+    * hashes. The Spark-side definition, evaluated on both sides of every
+    * distributed banding. The driver path ([[lshPairsLocal]]) keys on
+    * the r-hash tuple itself: the hashes are fixed-width hex, so two
+    * tuples are equal exactly when this md5 is equal, barring an md5
+    * collision. */
   private def bandKey(b: Int, r: Int): Column =
     md5(concat((0 until r).map(i => col(s"h${b * r + i}")): _*))
 
@@ -838,6 +841,22 @@ object Dedup {
     * which are tiny by construction), and the representative pick is ONE
     * struct-max aggregate — no window sort over the corpus.
     *
+    * Size gate ([[graft.core.Small]]): a refresh batch is a few hundred
+    * rows, for which the distributed LSH pass costs ~20 jobs and every
+    * broadcast build of the refresh. When the id type is integral and
+    * `(id, shingles)` of the batch fits the gate with no NULL and no
+    * repeated id, the rows are collected in one job and the pass's own
+    * rules run on the driver ([[lshPairsLocal]]: DF cap over all rows,
+    * MinHash via [[graft.plans.MinHashSigExpr.signature]], band
+    * buckets, exact Jaccard on the capped sets); the verified pairs
+    * come back as a local relation, which [[Graphs.connectedComponents]]
+    * solves without a job, and the cluster labels reach the rows as a
+    * literal map instead of a join. Those conditions are what make the
+    * driver rules exact: the distributed pass groups NULL ids together,
+    * merges the shingles of rows sharing an id, and orders string ids by
+    * their bytes. Any other batch runs [[minhashLshPairs]]; both paths
+    * return the same rows.
+    *
     * `df` is consumed TWICE (once into the shingle table, once for the
     * cluster join-back). A raw parquet scan is cheap to evaluate twice;
     * a caller whose `df` is an expensive derived frame (a pipeline
@@ -845,15 +864,101 @@ object Dedup {
     * [[Pipelines.pretrainCorpusFull]]'s near-dup branch. */
   def canonicalize(df: DataFrame, id: Column, text: Column, keepBy: Column,
       n: Int = 3, k: Int = 6, bands: Int = 3,
-      threshold: Double = 0.8, maxDf: Int = 100): DataFrame = {
-    val pairs = minhashLshPairs(df, id, text, n, k, bands, threshold, maxDf)
-    val cc = Graphs.connectedComponents(
+      threshold: Double = 0.8, maxDf: Int = 100): DataFrame =
+    canonicalizeGated(df, id, text, keepBy, n, k, bands, threshold, maxDf,
+      graft.core.Small.MaxRows)
+
+  /** [[canonicalize]] with an explicit gate size — 0 forces the
+    * distributed LSH pass (the equivalence specs drive both sides
+    * through here). */
+  private[graft] def canonicalizeGated(df: DataFrame, id: Column,
+      text: Column, keepBy: Column, n: Int, k: Int, bands: Int,
+      threshold: Double, maxDf: Int, maxRows: Int): DataFrame = {
+    def components(pairs: DataFrame) = Graphs.connectedComponents(
       pairs.select(col("a").as("src"), col("b").as("dst")))
     val docs = df.withColumn("_id", id)
-    val clustered = docs.join(cc, docs("_id") === cc("node"), "left")
-      .withColumn("_cluster", coalesce(col("comp"), col("_id")))
-      .drop("node", "comp")
+    val clustered = lshPairsLocal(df, id, text, n, k, bands, threshold,
+        maxDf, maxRows) match {
+      case Some(pairs) =>
+        // local pairs → union-find, read back without a job; the cluster
+        // labels ship as a literal map (a join against the local
+        // relation would still cost a broadcast build)
+        val comp = components(pairs).collect()
+        docs.withColumn("_cluster",
+          if (comp.isEmpty) col("_id")
+          else coalesce(try_element_at(
+              map_from_arrays(lit(comp.map(_.getAs[Number](0).longValue)),
+                lit(comp.map(_.getAs[Number](1).longValue))),
+              col("_id").cast("long")).cast(docs.schema("_id").dataType),
+            col("_id")))
+      case None =>
+        val cc = components(
+          minhashLshPairs(df, id, text, n, k, bands, threshold, maxDf))
+        docs.join(cc, docs("_id") === cc("node"), "left")
+          .withColumn("_cluster", coalesce(col("comp"), col("_id")))
+          .drop("node", "comp")
+    }
     ColUtils.argmaxRows(clustered, Seq(col("_cluster")), keepBy, col("_id"))
+  }
+
+  /** [[minhashLshPairs]] answered on the driver — the below-gate half of
+    * [[canonicalize]]. Collects `(id, distinct shingles)` in one job and,
+    * when the ids are integral, non-null and distinct, replays the
+    * distributed rules on the collected rows:
+    *  - DF cap: shingles held by more than `maxDf` rows are dropped
+    *    (`Int.MaxValue` = no cap), counted over every collected row;
+    *  - MinHash over the capped set; an empty capped set has no
+    *    signature and is never a candidate;
+    *  - candidates: a < b sharing at least one band's r-hash tuple (equal
+    *    tuples ⇔ equal [[bandKey]] md5, barring an md5 collision);
+    *  - Jaccard = i / (na + nb − i) on the capped sets, kept when i > 0
+    *    and ≥ `threshold` (the inner join + filter of [[verifyJaccard]]).
+    * Returns (a, b, jaccard) as a local relation in the id type, or None
+    * (the caller runs the distributed pass). */
+  private[graft] def lshPairsLocal(df: DataFrame, id: Column, text: Column,
+      n: Int, k: Int, bands: Int, threshold: Double, maxDf: Int,
+      maxRows: Int): Option[DataFrame] = {
+    require(k % bands == 0, "k must be divisible by bands")
+    import org.apache.spark.sql.types._
+    val rowsIn = df.select(id.as("id"),
+      graft.plans.TextExprs.shingles(text, n, distinct = true).as("s"))
+    val idType = rowsIn.schema("id").dataType
+    val integral = idType match {
+      case ByteType | ShortType | IntegerType | LongType => true
+      case _ => false
+    }
+    if (!integral) return None
+    graft.core.Small.rows(rowsIn, maxRows)
+      .filter(rows => !rows.exists(_.isNullAt(0)) &&
+        rows.iterator.map(_.get(0)).distinct.size == rows.length)
+      .map { rows =>
+        val ids = rows.map(_.getAs[Number](0).longValue)
+        val raw = rows.map(x =>
+          if (x.isNullAt(1)) Seq.empty[String] else x.getSeq[String](1))
+        val sets = if (maxDf == Int.MaxValue) raw.map(_.toSet) else {
+          val dfs = scala.collection.mutable.HashMap.empty[String, Int]
+          raw.foreach(_.foreach(s => dfs(s) = dfs.getOrElse(s, 0) + 1))
+          raw.map(_.filter(dfs(_) <= maxDf).toSet)
+        }
+        val r = k / bands
+        val buckets = sets.indices.iterator.flatMap { d =>
+          Option(graft.plans.MinHashSigExpr.signature(sets(d).iterator, k))
+            .iterator.flatMap(sig =>
+              (0 until bands).map(b => (b, sig.slice(b * r, b * r + r).toSeq) -> d))
+        }.toSeq.groupMap(_._1)(_._2)
+        val cand = buckets.valuesIterator.flatMap(ds =>
+          for (x <- ds; y <- ds if ids(x) < ids(y)) yield (x, y)).toSet
+        val pairs = cand.toSeq.flatMap { case (x, y) =>
+          val i = sets(x).count(sets(y))
+          val jaccard = i * 1.0 / (sets(x).size + sets(y).size - i)
+          if (i > 0 && jaccard >= threshold)
+            Some(org.apache.spark.sql.Row(rows(x).get(0), rows(y).get(0), jaccard))
+          else None
+        }
+        df.sparkSession.createDataFrame(java.util.Arrays.asList(pairs: _*),
+          StructType(Seq(StructField("a", idType), StructField("b", idType),
+            StructField("jaccard", DoubleType))))
+      }
   }
 
   /** Winnowed CONTAINMENT pairs (the MOSS report step over

@@ -275,19 +275,20 @@ object DocStore {
     // dedupFreshChunks): truncates the LSH+CC lineage so the embed
     // stage and every Store operation plan from a scan, not from the
     // whole gate tree
-    (if (graft.core.IndexGen.current(path).isDefined)
-      Dedup.dedupRefresh(spark, path, chunked, col("chunk_key"),
-        col("text"), threshold, estThreshold)
-    else {
-      val (n, k, bands) = geometry
-      val canon = graft.core.Caches.eager(
-        Dedup.canonicalize(chunked, col("chunk_key"), col("text"),
-            lit(0), n, k, bands, threshold)
-          .drop("_cluster", "_id"))
-      Dedup.signatureSave(canon, col("chunk_key"), col("text"), path,
-        n, k, bands)
-      canon
-    }).localCheckpoint(true)
+    graft.core.Caches.checkpoint(
+      if (graft.core.IndexGen.current(path).isDefined)
+        Dedup.dedupRefresh(spark, path, chunked, col("chunk_key"),
+          col("text"), threshold, estThreshold)
+      else {
+        val (n, k, bands) = geometry
+        val canon = graft.core.Caches.eager(
+          Dedup.canonicalize(chunked, col("chunk_key"), col("text"),
+              lit(0), n, k, bands, threshold)
+            .drop("_cluster", "_id"))
+        Dedup.signatureSave(canon, col("chunk_key"), col("text"), path,
+          n, k, bands)
+        canon
+      })
 
   /** The exact-dedup gate of the ingest pipeline (`dedupIndex` on
     * [[build]]/[[buildStream]]): at 100 TB the EMBEDDER is the expensive
@@ -459,10 +460,15 @@ object DocStore {
       spread.writeStream.outputMode("append")
         .option("checkpointLocation", checkpoint)
         .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-          try {
+          // the gates eager-cache their survivor/probe frames and
+          // checkpoint their exits on the stream-execution thread;
+          // microBatch releases both when the body returns (all
+          // consumers complete inside it) — otherwise a long-running
+          // ingest accumulates them
+          graft.core.Caches.microBatch {
             if (!batch.isEmpty) {
               // cache parse+chunk once per micro-batch (the batch path's
-              // chunkedC rationale); drained in the finally below
+              // chunkedC rationale); released when the batch ends
               val chunkedC = graft.core.Caches.eager(
                 chunkStage(batch.toDF(), id, data, metadata,
                   parser, postProcess, chunkSize, overlap, splitBy))
@@ -507,12 +513,7 @@ object DocStore {
                 .foreach(p =>
                   Dedup.signatureCompact(batch.sparkSession, p))
             }
-          } finally
-            // the gates eager-cache their survivor/probe frames on the
-            // stream-execution thread; drain per batch or a
-            // long-running ingest accumulates them forever (all
-            // consumers completed above)
-            graft.core.Caches.drain()
+          }
         }
   }
 

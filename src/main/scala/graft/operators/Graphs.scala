@@ -24,8 +24,9 @@ object Graphs {
     * Size gate ([[graft.core.Small]]): an edge set of integral, non-null
     * ids that fits the gate — the per-refresh near-dup edges of
     * [[Dedup.canonicalize]] are a few dozen rows — is collected in one
-    * job and solved by union-find on the driver; the answer comes back
-    * as a local relation. The distributed fixpoint below costs ~30 jobs
+    * job (none when it is already a local relation) and solved by
+    * union-find on the driver; the answer comes back as a local
+    * relation. The distributed fixpoint below costs ~30 jobs
     * (half of them broadcast builds) on such a graph. Larger graphs,
     * and string/binary ids, run the fixpoint. */
   def connectedComponents(edges: DataFrame, maxIter: Int = 50): DataFrame =

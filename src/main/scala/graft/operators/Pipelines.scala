@@ -224,14 +224,13 @@ object Pipelines {
     val langKeep = LangId.predict(base, col("doc_id"), col("text"),
         langModel, langN)
       .filter(col("lang") === keepLang).select(col("id").as("doc_id"))
-    val langKept =
-      base.join(langKeep, Seq("doc_id"), "left_semi").localCheckpoint(true)
+    val langKept = graft.core.Caches.checkpoint(
+      base.join(langKeep, Seq("doc_id"), "left_semi"))
     val qualKeep = Classify.logregPredict(langKept, col("doc_id"),
         col("text"), qualityModel, qualityDim)
       .filter(col("score") >= minScore).select(col("id").as("doc_id"))
-    val qualKept =
-      langKept.join(qualKeep, Seq("doc_id"), "left_semi")
-        .localCheckpoint(true)
+    val qualKept = graft.core.Caches.checkpoint(
+      langKept.join(qualKeep, Seq("doc_id"), "left_semi"))
     corpusTail(qualKept, blocklist, boilerplate, nearDup,
       heldout, heldoutText, ngram, sampleRate, salt,
       packBudget, packBuckets)
@@ -371,7 +370,7 @@ object Pipelines {
     // sample → pack) and the caller's downstream both re-analyze this
     // frame's tree per operation — truncated, they start from a scan
     val gateOut = exactFresh.drop("_h")
-    val canonical = (
+    val canonical = graft.core.Caches.checkpoint(
       if (graft.core.IndexGen.current(sigIndex).isDefined)
         Dedup.dedupRefresh(spark, sigIndex, gateOut,
           col("doc_id"), col("text"),
@@ -385,7 +384,7 @@ object Pipelines {
         Dedup.signatureSave(c, col("doc_id"), col("text"), sigIndex,
           nearDup.n, nearDup.k, nearDup.bands)
         c
-      }).localCheckpoint(true)
+      })
     // record every text SEEN this refresh (exact-gate survivors, near-
     // dropped ones included) — last, so a crash mid-refresh re-derives
     // rather than drops (the exclusions above make either order safe;

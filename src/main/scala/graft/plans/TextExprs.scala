@@ -365,12 +365,13 @@ case class ShinglesExpr(child: Expression, n: Int, distinct: Boolean)
   * table (the CLAUDE.md struct-max trap in min(string) clothing: at
   * corpus scale that sort IS the dominant stage). Here the signature is
   * a pure per-row projection — no explode, no sort, no exchange, and
-  * the same k·shingles md5 work the aggregation paid anyway. Mins are
-  * kept as raw digest bytes (unsigned compare) and hex-encoded once at
-  * the end. CodegenFallback: one dispatch per row amortized over the
-  * whole-document loop. The DF-capped dedup paths (minhashLshPairs)
-  * keep the aggregation form — the cap is a corpus-frequency join that
-  * an in-row expression cannot see. */
+  * the same k·shingles md5 work the aggregation paid anyway. The md5-min
+  * loop is [[MinHashSigExpr.signature]], shared with the driver path of
+  * [[graft.operators.Dedup.canonicalize]], which applies the DF cap to
+  * its collected shingle sets first. CodegenFallback: one dispatch per
+  * row amortized over the whole-document loop. The distributed DF-capped
+  * paths (minhashLshPairs) keep the aggregation form — the cap is a
+  * corpus-frequency join that an in-row expression cannot see. */
 case class MinHashSigExpr(child: Expression, n: Int, k: Int)
     extends UnaryExpression with ImplicitCastInputTypes with CodegenFallback {
 
@@ -382,31 +383,49 @@ case class MinHashSigExpr(child: Expression, n: Int, k: Int)
   override def prettyName: String = "minhash_sig"
   override def nullable: Boolean = true
 
-  private[this] val hexDigits = "0123456789abcdef".toCharArray
-
   override protected def nullSafeEval(t: Any): Any = {
     val toks = t.toString.split(" ", -1)
     val nsh = toks.length - (n - 1)
     if (nsh <= 0) return null
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val mins = new Array[Array[Byte]](k)
     val sb = new java.lang.StringBuilder
-    val prefixes = new Array[Array[Byte]](k)
-    var i = 0
-    while (i < k) {
-      prefixes(i) = s"$i|".getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      i += 1
-    }
-    var j = 0
-    while (j < nsh) {
+    val shingles = Iterator.tabulate(nsh) { j =>
       sb.setLength(0)
       var o = 0
       while (o < n) {
         if (o > 0) sb.append(' ')
         sb.append(toks(j + o)); o += 1
       }
-      val sBytes = sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      i = 0
+      sb.toString
+    }
+    new GenericArrayData(
+      MinHashSigExpr.signature(shingles, k).map[Any](UTF8String.fromString))
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): MinHashSigExpr =
+    copy(child = newChild)
+}
+
+object MinHashSigExpr {
+
+  private[this] val hexDigits = "0123456789abcdef".toCharArray
+
+  /** The MinHash kernel over one document's shingles: h_i = min over
+    * `shingles` of md5("i|" ‖ shingle), i = 0..k-1, as lowercase hex.
+    * Mins are kept as raw digest bytes (unsigned compare) and
+    * hex-encoded once at the end. Duplicate shingles do not change a
+    * min, so the input need not be distinct. Returns null for an empty
+    * input (no signature). The one implementation behind
+    * [[MinHashSigExpr]] and the driver path of
+    * [[graft.operators.Dedup.canonicalize]]. */
+  def signature(shingles: Iterator[String], k: Int): Array[String] = {
+    if (!shingles.hasNext) return null
+    val md = java.security.MessageDigest.getInstance("MD5")
+    val prefixes = Array.tabulate(k)(i =>
+      s"$i|".getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    val mins = new Array[Array[Byte]](k)
+    while (shingles.hasNext) {
+      val sBytes = shingles.next().getBytes(java.nio.charset.StandardCharsets.UTF_8)
+      var i = 0
       while (i < k) {
         md.reset()
         md.update(prefixes(i))
@@ -415,12 +434,8 @@ case class MinHashSigExpr(child: Expression, n: Int, k: Int)
         if (mins(i) == null || unsignedLess(d, mins(i))) mins(i) = d
         i += 1
       }
-      j += 1
     }
-    val out = new Array[Any](k)
-    i = 0
-    while (i < k) {
-      val d = mins(i)
+    mins.map { d =>
       val hex = new Array[Char](32)
       var b = 0
       while (b < 16) {
@@ -428,10 +443,8 @@ case class MinHashSigExpr(child: Expression, n: Int, k: Int)
         hex(2 * b + 1) = hexDigits(d(b) & 0xf)
         b += 1
       }
-      out(i) = UTF8String.fromString(new String(hex))
-      i += 1
+      new String(hex)
     }
-    new GenericArrayData(out)
   }
 
   private def unsignedLess(a: Array[Byte], b: Array[Byte]): Boolean = {
@@ -444,9 +457,6 @@ case class MinHashSigExpr(child: Expression, n: Int, k: Int)
     }
     false
   }
-
-  override protected def withNewChildInternal(newChild: Expression): MinHashSigExpr =
-    copy(child = newChild)
 }
 
 /** One-pass separator-aware chunk packing (the

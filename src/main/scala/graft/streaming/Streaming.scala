@@ -282,7 +282,13 @@ object Streaming {
     stream.writeStream.outputMode("append")
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        try {
+        // dedupRefresh eager-caches its canonical/survivor frames on
+        // THIS (the stream-execution) thread; without a per-batch
+        // release a long-running loop accumulates one frame set per
+        // micro-batch forever. All consumers (append + survivors
+        // write) complete inside the body, so microBatch may free
+        // them when it returns.
+        graft.core.Caches.microBatch {
           if (!batch.isEmpty) {
             val survivors = graft.operators.Dedup.dedupRefresh(
               batch.sparkSession, indexPath, batch.toDF(), id, text,
@@ -304,13 +310,7 @@ object Streaming {
               batch.sparkSession, indexPath)
             ()
           }
-        } finally
-          // dedupRefresh eager-caches its canonical/survivor frames on
-          // THIS (the stream-execution) thread; without a per-batch
-          // drain a long-running loop accumulates one cached frame
-          // set per micro-batch forever. All consumers (append +
-          // survivors write) completed above, so the drain is safe.
-          graft.core.Caches.drain()
+        }
       }
 
   /** The streaming twin of [[graft.operators.Pipelines
@@ -346,7 +346,10 @@ object Streaming {
     stream.writeStream.outputMode("append")
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        try {
+        // the chain eager-caches and checkpoints its gate frames on
+        // the stream-execution thread; microBatch releases them
+        // when the body returns (all consumers complete inside it)
+        graft.core.Caches.microBatch {
           if (!batch.isEmpty) {
             // eager: the isEmpty probe and the write would otherwise
             // each run the decontaminate→sample→pack tail (the gate
@@ -376,11 +379,7 @@ object Streaming {
                 batch.sparkSession, sigIndex)
             ()
           }
-        } finally
-          // the chain eager-caches its gate frames on the
-          // stream-execution thread — drain per batch (all consumers
-          // done above); its localCheckpoint frames are GC-cleaned
-          graft.core.Caches.drain()
+        }
       }
 
   /** As-of-now join (reference: _asof_now_join.py:176): each left

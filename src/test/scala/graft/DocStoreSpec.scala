@@ -784,6 +784,52 @@ class DocStoreSpec extends SparkSpec {
     }
   }
 
+  test("buildStream frees each micro-batch's gate checkpoints: storage " +
+      "blocks after 8 batches stay within a constant of those after 2") {
+    val t = java.nio.file.Files.createTempDirectory("ds_stream_blocks").toString
+    implicit val sqlCtx = spark.sqlContext
+    val in = org.apache.spark.sql.execution.streaming.runtime
+      .MemoryStream[(Long, String)]
+    val sq = DocStore.buildStream(in.toDF().toDF("doc_id", "text")
+        .select(col("doc_id"), encode(col("text"), "UTF-8").as("data")),
+      col("doc_id"), col("data"), s"$t/store", s"$t/ckpt", chunkSize = 4,
+      overlap = 1, embedder = DocStore.hashEmbedder(8),
+      dedupIndex = Some(s"$t/exact"), nearDedupIndex = Some(s"$t/near"))
+      .start()
+    val sc = spark.sparkContext
+    // hold every persisted RDD strongly, so a driver GC (ContextCleaner)
+    // cannot free a batch's blocks — only an explicit release can
+    val held = java.util.concurrent.ConcurrentHashMap.newKeySet[AnyRef]()
+    val hold = new org.apache.spark.scheduler.SparkListener {
+      override def onJobEnd(
+          e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
+        sc.getPersistentRDDs.values.foreach(held.add)
+    }
+    sc.addSparkListener(hold)
+    // released blocks are removed asynchronously: read the count once it
+    // stops falling
+    def settled(): Int = {
+      var prev = org.apache.spark.SpecBus.rddBlocks(sc)
+      var stable = 0
+      while (stable < 3) {
+        Thread.sleep(100)
+        val now = org.apache.spark.SpecBus.rddBlocks(sc)
+        stable = if (now == prev) stable + 1 else 0
+        prev = now
+      }
+      prev
+    }
+    val counts = try (1 to 8).map { b =>
+      in.addData((b * 10L, s"batch $b unique words here and more words $b"),
+        (b * 10L + 1, s"another text for batch $b with other words"))
+      sq.processAllAvailable()
+      settled()
+    } finally { sq.stop(); sc.removeSparkListener(hold) }
+    assert(spark.read.parquet(s"$t/store/chunks").select("doc_id").distinct()
+      .count() == 16, "every batch must land")
+    assert(counts(7) <= counts(1) + 2, s"RDD blocks per batch: $counts")
+  }
+
   test("nearGeometry: a first ingest creates the near index at the " +
       "requested (n, k, bands); later ingests read it from the index") {
     val t = java.nio.file.Files.createTempDirectory("ds_near_geom").toString

@@ -106,4 +106,75 @@ class GateJobsSpec extends SparkSpec {
     assert(joinBc > canonBc)
     assert(smallOut == joinOut && smallOut == Set(12L, 14L))
   }
+
+  test("a small-batch canonicalize runs at most 4 jobs, no broadcast build") {
+    val batch = Seq(
+      (1L, "the quick brown fox jumps over the lazy dog", 2),
+      (2L, "the quick brown fox jumps over the lazy dog today", 1),
+      (3L, "completely different content about spark engines", 0),
+      (4L, "short", 0)).toDF("doc_id", "text", "score").localCheckpoint(true)
+    def canon(maxRows: Int) = jobsOf(Dedup.canonicalizeGated(batch,
+      col("doc_id"), col("text"), col("score"), 3, 6, 3, 0.5, 100, maxRows)
+      .collect())
+    val (small, smallBc) = canon(graft.core.Small.MaxRows)
+    assert(small <= 4 && smallBc == 0,
+      s"driver path ran $small jobs, $smallBc broadcast builds")
+    // the pin can fail: the distributed pass broadcasts
+    val (dist, distBc) = canon(0)
+    assert(dist > small && distBc > 0, s"distributed pass: $dist / $distBc")
+  }
+
+  test("Small.rows over an 8-file scan runs one job, fitting or not") {
+    val dir = tmp("gatejobs_rows") + "/t"
+    spark.range(0, 400, 1, 8).selectExpr("id", "cast(id as string) as s")
+      .write.parquet(dir)
+    val df = spark.read.parquet(dir)
+    assert(new java.io.File(dir).listFiles().count(_.getName.endsWith(
+      ".parquet")) == 8)
+    // precondition: the limit form scales up over this scan
+    val (limitJobs, _) = jobsOf(df.limit(401).collect())
+    assert(limitJobs > 1, s"limit+collect ran $limitJobs jobs")
+    var fit: Option[Array[org.apache.spark.sql.Row]] = None
+    val (fitJobs, _) = jobsOf { fit = graft.core.Small.rows(df, 400) }
+    assert(fitJobs == 1 && fit.map(_.toSeq) == Some(df.collect().toSeq))
+    var over: Option[Array[org.apache.spark.sql.Row]] = Some(Array.empty)
+    val (overJobs, _) = jobsOf { over = graft.core.Small.rows(df, 399) }
+    assert(overJobs == 1 && over.isEmpty)
+    assert(graft.core.Small.rows(df, 0).isEmpty)
+  }
+
+  test("Small.rows cancels an oversized table: the rows sent stay bounded") {
+    // 64 partitions of 20 rows: every partition is under the 101-row cap,
+    // 1,280 rows in all. Capping per partition alone would send them all;
+    // the overflow must cancel the job after about 6 partitions
+    val slow = udf { (x: Long) => Thread.sleep(2); x }
+    val df = spark.range(0, 1280, 1, 64).select(slow(col("id")).as("id"))
+    val tag = s"gatejobs-sent-${System.nanoTime}"
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val done = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.properties != null &&
+            e.properties.getProperty("graft.spec.tag") == tag)
+          e.stageIds.foreach(stages.add(_))
+      override def onTaskEnd(
+          e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        if (e.reason == org.apache.spark.Success) done.add(e.stageId)
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(l)
+    sc.setLocalProperty("graft.spec.tag", tag)
+    val r = try graft.core.Small.rows(df, 100)
+    finally {
+      sc.setLocalProperty("graft.spec.tag", null)
+      org.apache.spark.SpecBus.drain(sc)
+      sc.removeSparkListener(l)
+    }
+    assert(r.isEmpty)
+    import scala.jdk.CollectionConverters._
+    val sent = done.asScala.count(stages.contains)
+    assert(sent >= 6 && sent <= 16,
+      s"$sent of 64 partitions sent their rows to the driver")
+  }
 }

@@ -487,6 +487,58 @@ class PlanSpec extends SparkSpec {
       !p.contains("BroadcastNestedLoopJoin"), s"no cartesian fallback:\n$p")
   }
 
+  test("q_pretrain_model: the logreg weights broadcast into the chain " +
+      "segment the quality keep checkpoints (AQE initial plan)") {
+    // the tail plan above scans the checkpointed keeps, so the predict
+    // segments are only visible as the plans of the checkpoint actions
+    import org.apache.spark.sql.execution.{EmptyRelationExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    // (AQE initial plan, AQE final plan) of each localCheckpoint action
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(SparkPlan, SparkPlan)]()
+    val l = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+        if (funcName == "localCheckpoint") qe.executedPlan match {
+          case a: AdaptiveSparkPlanExec => seen.add(a.initialPlan -> a.executedPlan)
+          case p => seen.add(p -> p)
+        }
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(l)
+    try plan("q_pretrain_model")
+    finally {
+      org.apache.spark.SpecBus.drain(spark.sparkContext)
+      spark.listenerManager.unregister(l)
+    }
+    import scala.jdk.CollectionConverters._
+    // the quality keep is the checkpoint whose plan featurizes for the
+    // logreg predict (hash_embed); the langid keep's plan has none
+    val quality = seen.asScala.toSeq.filter(_._1.toString.contains("hash_embed"))
+    assert(quality.nonEmpty, s"no quality-keep checkpoint among " +
+      s"${seen.size} localCheckpoint plans")
+    val bcast = "BroadcastExchange IdentityBroadcastMode"
+    def provedEmpty(p: SparkPlan): Boolean = p.find {
+      case q: QueryStageExec => provedEmpty(q.plan)
+      case n => n.isInstanceOf[EmptyRelationExec]
+    }.isDefined
+    quality.foreach { case (initial, finalPlan) =>
+      // the one-row weight array is an identity-mode broadcast feeding
+      // the margin fold. Pinned on the AQE initial plan: on sf0.001 the
+      // final plan of this segment is an EmptyRelation (no document
+      // survives the keep), so the final plan must either keep the
+      // broadcast or be one AQE proved empty
+      val i = initial.toString
+      assert(i.contains(bcast), s"expected the broadcast logreg weights:\n$i")
+      assert(!i.contains("CartesianProduct"), s"no cartesian fallback:\n$i")
+      val f = finalPlan.toString
+      assert(f.contains(bcast) || provedEmpty(finalPlan),
+        s"final plan dropped the broadcast:\n$f")
+      assert(!f.contains("CartesianProduct"), s"no cartesian fallback:\n$f")
+    }
+  }
+
   test("q_dedup_incremental: in-row signatures (minhash_sig, one node per " +
       "branch), no SortAggregate, no cartesian") {
     val p = plan("q_dedup_incremental")

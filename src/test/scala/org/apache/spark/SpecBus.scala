@@ -5,4 +5,9 @@ package org.apache.spark
   * far has been delivered. */
 object SpecBus {
   def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+
+  /** RDD blocks (cached or checkpointed partitions) held by the block
+    * managers right now. */
+  def rddBlocks(sc: SparkContext): Int =
+    sc.env.blockManager.master.getStorageStatus.map(_.rddBlocks.size).sum
 }
