@@ -11,10 +11,10 @@ import java.nio.file.{Files, StandardCopyOption}
   * A `mode("overwrite")` rewrite of a live index directory is NOT
   * atomic: a reader landing mid-rebuild can see new centroids with
   * old/half-deleted inverted lists (the r10 judge finding). This helper
-  * gives every persisted index ([[graft.operators.Similarity.ivfSave]],
-  * `pqSave`, [[graft.operators.Hnsw.hnswSave]], and therefore
-  * `DocStore.rebuildIndex`) the same generation-dir + marker-flip
-  * protocol the upsert sink uses for snapshots
+  * gives every persisted index (the [[SegmentStore]] families, and
+  * therefore `DocStore.rebuildIndex`, plus the fitted-model saves) the
+  * same generation-dir + marker-flip protocol the upsert sink uses for
+  * snapshots
   * ([[graft.streaming.Streaming]]'s staged-tmp + atomic-rename
   * discipline):
   *
@@ -22,10 +22,8 @@ import java.nio.file.{Files, StandardCopyOption}
   *    an uncommitted leftover from a crashed build is skipped over,
   *    never reused), write every artifact inside it, then [[commit]]:
   *    one atomic rename flips the `_current` marker to N;
-  *  - readers resolve [[readDir]] — the committed generation, or the
-  *    legacy flat layout when no marker exists (pre-r11 indexes stay
-  *    readable) — so they see exactly one complete generation, never a
-  *    mix;
+  *  - readers resolve [[readDir]] — the committed generation — so they
+  *    see exactly one complete generation, never a mix;
   *  - [[commit]] prunes generations older than N-1: an in-flight reader
   *    that resolved the PREVIOUS marker can still finish its scan (one
   *    generation of grace — the reader-vs-swap discipline of the upsert
@@ -49,14 +47,15 @@ object IndexGen {
     if (m.isFile) Some(Files.readString(m.toPath).trim.toLong) else None
   }
 
-  /** Directory to READ index artifacts from: the committed generation
-    * when a marker exists, else the legacy flat layout (`path` itself).
+  /** The committed generation number; fails, naming `path`, when
+    * nothing was ever committed there. */
+  def committed(path: String): Long = current(path).getOrElse(
+    throw new IllegalArgumentException(s"no committed index generation at $path"))
+
+  /** Directory to READ index artifacts from: the committed generation.
     * Resolve per query batch — a long-lived reader then serves whatever
     * generation is committed at read time. */
-  def readDir(path: String): String = current(path) match {
-    case Some(n) => s"$path/gen-$n"
-    case None => path
-  }
+  def readDir(path: String): String = s"$path/gen-${committed(path)}"
 
   /** Reserve the next generation dir: (dir, gen). Nothing becomes
     * visible to readers until [[commit]]. */
@@ -103,9 +102,5 @@ object IndexGen {
       Option(new File(path).list()).getOrElse(Array.empty[String])
         .collect { case GenPattern(n) if n.toLong <= cur => n.toLong }
         .toSeq.sorted
-  }
-
-  private def rmTree(f: File): Unit = {
-    Option(f.listFiles).foreach(_.foreach(rmTree)); f.delete(); ()
   }
 }

@@ -141,12 +141,7 @@ object Clustering {
   def kmeansLoadAssign(spark: org.apache.spark.sql.SparkSession,
       path: String, df: DataFrame, id: Column, vec: Column): DataFrame = {
     val dir = graft.core.IndexGen.readDir(path)
-    // pre-r11 models were a flat parquet dir at `path` (readDir then
-    // resolves to `path` itself); committed generations hold centroids/
-    val cents =
-      if (dir == path) spark.read.parquet(path)
-      else spark.read.parquet(s"$dir/centroids")
-    kmeansAssign(df, id, vec, cents)
+    kmeansAssign(df, id, vec, spark.read.parquet(s"$dir/centroids"))
   }
 
   /** SemDeDup-style semantic deduplication (Abbas et al. 2023: k-means

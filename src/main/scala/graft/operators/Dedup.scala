@@ -2,7 +2,9 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.core.Caches
+
+import graft.core.{Caches, SegmentStore}
+import graft.core.SegmentStore.{Family, Meta}
 
 /** Deduplication suite for large-scale training-data pipelines.
   *
@@ -144,23 +146,26 @@ object Dedup {
         (0 until k).map(i => col("_mh").getItem(i).as(s"h$i")): _*)
 
   /** Persist a MinHash signature index over a corpus: the (id, h0..hk-1)
-    * signature table under an atomic [[graft.core.IndexGen]] generation
-    * (segment manifest, so [[signatureAppend]] grows it O(new rows)),
-    * plus the (n, k, bands) geometry the signatures were computed with —
+    * signature table as one segment of a [[SegmentStore]] generation (so
+    * [[signatureAppend]] grows it O(new rows)), whose meta record holds
+    * the (n, k, bands) geometry the signatures were computed with —
     * probes and appends read the geometry from the index, so a caller
     * cannot accidentally mix signature spaces. One O(corpus) in-row
     * signature pass ([[minhashInRow]] — shuffle-free), paid once. */
   def signatureSave(df: DataFrame, id: Column, text: Column, path: String,
       n: Int = 3, k: Int = 6, bands: Int = 3): Unit = {
     require(k % bands == 0, "k must be divisible by bands")
-    val sigs = minhashInRow(df, id, text, n, k)
-    val (dir, gen) = graft.core.IndexGen.stage(path)
-    writeSigMeta(dir, n, k, bands)
-    val seg = Similarity.newSegmentName()
-    Similarity.writeManifest(dir, Seq(seg)) // manifest-first discipline
-    Similarity.writeBinarySegmentTo(sigs, path, seg)
-    graft.core.IndexGen.commit(path, gen)
-    Similarity.vacuumSegments(path)
+    SegmentStore.save(path, Meta(Family.Signature, Seq(n, k, bands)),
+      minhashInRow(df, id, text, n, k))
+    ()
+  }
+
+  /** The committed generation of the signature index at `path` and its
+    * (n, k, bands). */
+  private def openSig(path: String): (SegmentStore.Generation, Int, Int, Int) = {
+    val g = SegmentStore.open(path).of(Family.Signature)
+    val Seq(n, k, bands) = g.meta.geometry
+    (g, n, k, bands)
   }
 
   /** Grow a [[signatureSave]]d index by the new documents only — one
@@ -176,10 +181,8 @@ object Dedup {
     * Returns the committed generation. */
   def signatureAppend(spark: org.apache.spark.sql.SparkSession, path: String,
       newDf: DataFrame, id: Column, text: Column): Long = {
-    val cur = graft.core.IndexGen.readDir(path)
-    val (n, k, _) = readSigMeta(cur)
-    signatureAppendSigs(spark, path, cur, n, k,
-      minhashInRow(newDf, id, text, n, k))
+    val (g, n, k, _) = openSig(path)
+    signatureAppendSigs(g, n, k, minhashInRow(newDf, id, text, n, k))
   }
 
   /** [[signatureAppend]] over an ALREADY-COMPUTED signature table
@@ -189,41 +192,26 @@ object Dedup {
     * (a signature is a pure per-row function, so probe rows filtered to
     * the survivor ids ARE minhashInRow(survivors)).
     *
-    * `cur` is the generation dir the caller resolved and `(n, k)` the
+    * `g` is the generation the caller resolved and `(n, k)` the
     * geometry its signatures were computed at: the append grows THAT
-    * generation's manifest (no second readDir, so probe and append see
-    * one generation) and fails loudly when `(n, k)` is not the
+    * generation's manifest (no second open, so probe and append see one
+    * generation), and the store fails it loudly when `(n, k)` is not the
     * generation's geometry — signatures of another shingle width or
     * hash count would silently corrupt the signature space. */
-  private[graft] def signatureAppendSigs(
-      spark: org.apache.spark.sql.SparkSession, path: String, cur: String,
+  private[graft] def signatureAppendSigs(g: SegmentStore.Generation,
       n: Int, k: Int, sigs: DataFrame): Long = {
-    val (mn, mk, bands) = readSigMeta(cur)
-    require(mn == n && mk == k,
-      s"signatureAppendSigs: signatures at (n=$n, k=$k) do not match the " +
-        s"index geometry (n=$mn, k=$mk) of $cur")
+    val meta = Meta(Family.Signature, Seq(n, k, g.meta.geometry.last))
     require(sigs.columns.toSeq == ("id" +: (0 until k).map(i => s"h$i")),
       s"signatureAppendSigs: signature columns ${sigs.columns.mkString(",")} " +
         s"do not match the index geometry k=$k")
     // nothing to add (an all-dup or all-sub-n batch — dedupRefresh hits
     // this legitimately): keep the current generation. A zero-row
     // parquet write can land with no part files, and a later manifest
-    // read of that segment would fail schema inference.
-    if (sigs.isEmpty) return graft.core.IndexGen.current(path).getOrElse(
-      throw new IllegalStateException(s"signatureAppend: no committed " +
-        s"generation at $path"))
-    val (dir, gen) = graft.core.IndexGen.stage(path)
-    writeSigMeta(dir, n, k, bands)
-    val oldSegs = Similarity.readManifest(cur).getOrElse(
-      throw new IllegalStateException(
-        s"signatureAppend: no segment manifest in $cur — not a " +
-          "signatureSave index"))
-    val seg = Similarity.newSegmentName()
-    Similarity.writeManifest(dir, oldSegs :+ seg)
-    Similarity.writeBinarySegmentTo(sigs, path, seg)
-    graft.core.IndexGen.commit(path, gen)
-    Similarity.vacuumSegments(path)
-    gen
+    // read of that segment would fail schema inference. A batch at
+    // another geometry still goes to the append, whose record check
+    // fails it.
+    if (meta == g.meta && sigs.isEmpty) g.gen
+    else SegmentStore.append(g, meta, sigs)
   }
 
   /** Dedup NEW documents against the persisted history: band-key
@@ -238,14 +226,13 @@ object Dedup {
     * (id, dup_of, est_jaccard) for every candidate pair with
     * est ≥ threshold; new docs are NOT deduped among themselves — run
     * [[minhashLshPairs]] on the batch first, that is the in-batch half
-    * of the refresh loop. Serves the committed generation (one readDir),
+    * of the refresh loop. Serves the committed generation (one open),
     * so probes keep answering through a concurrent append. */
   def dedupAgainst(spark: org.apache.spark.sql.SparkSession, path: String,
       newDf: DataFrame, id: Column, text: Column,
       threshold: Double = 0.5): DataFrame = {
-    val cur = graft.core.IndexGen.readDir(path)
-    val (n, k, _) = readSigMeta(cur)
-    dedupAgainstSigs(spark, path, cur,
+    val (g, n, k, _) = openSig(path)
+    dedupAgainstSigs(spark, g,
       Caches.eager(minhashInRow(newDf, id, text, n, k)), threshold)
   }
 
@@ -253,16 +240,16 @@ object Dedup {
     * signature table (id, h0..h{k-1}) at the index's geometry — shared
     * by the public entry point and [[dedupRefresh]]'s fallback path,
     * whose probe also serves the survivor append (one signature pass per
-    * refresh, not two). `cur` is the committed generation dir the caller
-    * resolved; [[dedupRefresh]] hands the same dir to
+    * refresh, not two). `g` is the committed generation the caller
+    * resolved; [[dedupRefresh]] hands the same generation to
     * [[signatureAppendSigs]], so its probe and append see one
     * generation. */
   private def dedupAgainstSigs(spark: org.apache.spark.sql.SparkSession,
-      path: String, cur: String, probe: DataFrame,
+      g: SegmentStore.Generation, probe: DataFrame,
       threshold: Double): DataFrame = {
-    val (_, k, bands) = readSigMeta(cur)
+    val Seq(_, k, bands) = g.meta.geometry
     val r = k / bands
-    val hist = Similarity.codesParts(spark, path, cur)
+    val hist = g.rows(spark)
     val cand = bandRows(probe, bands, r).as("x")
       .join(bandRows(hist, bands, r).as("y"),
         col("x.band") === col("y.band") && col("x.bk") === col("y.bk") &&
@@ -317,7 +304,7 @@ object Dedup {
     *  - the signature table (cached, filled by the gate's one collect):
     *    feeds the history probe AND the survivor append — the kernel
     *    never runs twice over a text;
-    *  - the index generation dir and its (n, k, bands): resolved once,
+    *  - the index generation and its (n, k, bands): resolved once,
     *    shared by the probe and the append. */
   def dedupRefresh(spark: org.apache.spark.sql.SparkSession, path: String,
       batch: DataFrame, id: Column, text: Column,
@@ -333,8 +320,7 @@ object Dedup {
       spark: org.apache.spark.sql.SparkSession, path: String,
       batch: DataFrame, id: Column, text: Column, threshold: Double,
       estThreshold: Double, maxDf: Int, maxRows: Int): DataFrame = {
-    val cur = graft.core.IndexGen.readDir(path)
-    val (n, k, bands) = readSigMeta(cur)
+    val (g, n, k, bands) = openSig(path)
     val r = k / bands
     val hs = (0 until k).map(i => col(s"h$i"))
     // eager: the canonical survivor set feeds the probe signatures AND
@@ -368,23 +354,23 @@ object Dedup {
     // in the index (the caller-feeds-only-new-ids contract shared by
     // every segment store), so off the replay path this removes nothing.
     graft.core.Small.rows(sigs, maxRows)
-      .flatMap(rows => probeLocal(spark, path, cur, k, bands, rows,
+      .flatMap(rows => probeLocal(spark, g, k, bands, rows,
         estThreshold, maxRows)) match {
       case Some(dups) =>
         // size gate passed: the probe was answered on the driver, and
         // the drop list ships back as an InSet — no join, no broadcast
-        signatureAppendSigs(spark, path, cur, n, k,
+        signatureAppendSigs(g, n, k,
           probe.filter(graft.core.Small.notIn(col("id"), dups)))
         canon.filter(graft.core.Small.notIn(col("_id"), dups))
           .select(batch.columns.map(col).toSeq: _*)
       case None =>
-        val dupIds = dedupAgainstSigs(spark, path, cur, Caches.eager(probe),
+        val dupIds = dedupAgainstSigs(spark, g, Caches.eager(probe),
             estThreshold)
           .join(canon.select(col("_id").as("dup_of")), Seq("dup_of"),
             "left_anti")
           .select(col("id").as("_id")).distinct()
         val survivors = Caches.eager(canon.join(dupIds, Seq("_id"), "left_anti"))
-        signatureAppendSigs(spark, path, cur, n, k,
+        signatureAppendSigs(g, n, k,
           probe.join(survivors.select(col("_id").as("id")), Seq("id"),
             "left_semi"))
         survivors.select(batch.columns.map(col).toSeq: _*)
@@ -401,7 +387,7 @@ object Dedup {
     * Returns the batch ids with a history match, or None when the
     * history hits overflow the gate (the caller falls back to the join). */
   private def probeLocal(spark: org.apache.spark.sql.SparkSession,
-      path: String, cur: String, k: Int, bands: Int,
+      g: SegmentStore.Generation, k: Int, bands: Int,
       rows: Array[org.apache.spark.sql.Row], estThreshold: Double,
       maxRows: Int): Option[Set[Any]] = {
     val r = k / bands
@@ -414,7 +400,7 @@ object Dedup {
     // ids compared in the batch's own id type: a boxed Int never equals
     // a boxed Long, so the history ids are cast before they are collected
     val idType = rows.head.schema("id").dataType
-    val hist = Similarity.codesParts(spark, path, cur)
+    val hist = g.rows(spark)
     graft.core.Small.rows(
       hist.filter((0 until bands).map(b => bandKey(b, r).isin(keys(b): _*))
           .reduce(_ || _))
@@ -450,9 +436,9 @@ object Dedup {
   // in crawl pipelines removes the bulk of duplicates before any
   // shingling runs.
 
-  /** Persist an exact-dedup index over a corpus: (id, h = md5(text))
-    * under an atomic [[graft.core.IndexGen]] generation with a segment
-    * manifest ([[hashAppend]] grows it O(new rows)). NULL-text docs have
+  /** Persist an exact-dedup index over a corpus: (id, h = md5(text)) as
+    * one segment of a [[SegmentStore]] generation ([[hashAppend]] grows
+    * it O(new rows)). NULL-text docs have
     * no hash and are absent (they can never be exact dups). */
   def hashSave(df: DataFrame, id: Column, text: Column,
       path: String): Unit =
@@ -463,14 +449,9 @@ object Dedup {
     * first-ingest twin of [[hashAppendHashes]]. */
   private[operators] def hashSaveHashes(newHashes: DataFrame,
       path: String): Unit = {
-    val hashes = newHashes.toDF("id", "h").filter(col("h").isNotNull)
-    val (dir, gen) = graft.core.IndexGen.stage(path)
-    writeHashMeta(dir)
-    val seg = Similarity.newSegmentName()
-    Similarity.writeManifest(dir, Seq(seg)) // manifest-first discipline
-    Similarity.writeBinarySegmentTo(hashes, path, seg)
-    graft.core.IndexGen.commit(path, gen)
-    Similarity.vacuumSegments(path)
+    SegmentStore.save(path, Meta(Family.Hash),
+      newHashes.toDF("id", "h").filter(col("h").isNotNull))
+    ()
   }
 
   /** Grow a [[hashSave]]d index by the new documents only — O(new rows)
@@ -491,25 +472,12 @@ object Dedup {
   private[operators] def hashAppendHashes(
       spark: org.apache.spark.sql.SparkSession, path: String,
       newHashes: DataFrame): Long = {
-    val cur = graft.core.IndexGen.readDir(path)
-    requireHashMeta(cur)
+    val g = SegmentStore.open(path).of(Family.Hash)
     val hashes = newHashes.toDF("id", "h").filter(col("h").isNotNull)
     // empty/all-NULL batch: keep the current generation (zero-row
     // parquet segments can land without part files — see signatureAppend)
-    if (hashes.isEmpty) return graft.core.IndexGen.current(path).getOrElse(
-      throw new IllegalStateException(s"hashAppend: no committed " +
-        s"generation at $path"))
-    val (dir, gen) = graft.core.IndexGen.stage(path)
-    writeHashMeta(dir)
-    val oldSegs = Similarity.readManifest(cur).getOrElse(
-      throw new IllegalStateException(
-        s"hashAppend: no segment manifest in $cur — not a hashSave index"))
-    val seg = Similarity.newSegmentName()
-    Similarity.writeManifest(dir, oldSegs :+ seg)
-    Similarity.writeBinarySegmentTo(hashes, path, seg)
-    graft.core.IndexGen.commit(path, gen)
-    Similarity.vacuumSegments(path)
-    gen
+    if (hashes.isEmpty) g.gen
+    else SegmentStore.append(g, Meta(Family.Hash), hashes)
   }
 
   /** Exact-dedup NEW documents against the persisted history: every new
@@ -524,8 +492,8 @@ object Dedup {
     * instead of blowing Spark's 8 GB broadcast hard limit / driver
     * memory on an unconditional hint. The probe is cached and counted
     * in ONE job, so `newDf` is evaluated once either way. Serves the
-    * committed generation (one readDir), so probes keep answering
-    * through a concurrent append. */
+    * committed generation (one open), so probes keep answering through
+    * a concurrent append. */
   def exactAgainst(spark: org.apache.spark.sql.SparkSession, path: String,
       newDf: DataFrame, id: Column, text: Column,
       broadcastLimitBytes: Long = 512L << 20): DataFrame =
@@ -541,9 +509,7 @@ object Dedup {
       spark: org.apache.spark.sql.SparkSession, path: String,
       newHashes: DataFrame,
       broadcastLimitBytes: Long = 512L << 20): DataFrame = {
-    val cur = graft.core.IndexGen.readDir(path)
-    requireHashMeta(cur)
-    val hist = Similarity.codesParts(spark, path, cur)
+    val hist = SegmentStore.open(path).of(Family.Hash).rows(spark)
     val probe = Caches.cache(
       newHashes.toDF("id", "h").filter(col("h").isNotNull))
     probe.count() // ONE job: the count IS the cache materialization
@@ -598,10 +564,9 @@ object Dedup {
       val hits =
         if (!indexed || hs.isEmpty) Some(Array.empty[org.apache.spark.sql.Row])
         else {
-          val cur = graft.core.IndexGen.readDir(path)
-          requireHashMeta(cur)
-          graft.core.Small.rows(Similarity.codesParts(spark, path, cur)
-            .filter(col("h").isin(hs: _*))
+          graft.core.Small.rows(
+            SegmentStore.open(path).of(Family.Hash).rows(spark)
+              .filter(col("h").isin(hs: _*))
             .select(col("id").cast(withH.schema(id).dataType), col("h")),
             maxRows)
         }
@@ -634,7 +599,8 @@ object Dedup {
     * manifest segment per batch, so after thousands of batches every
     * probe unions thousands of small parquet reads. This rewrites the
     * committed generation's signature table as a single segment under a
-    * new atomic generation — same rows, same meta, so probe results are
+    * new atomic generation ([[SegmentStore.compact]]) — same rows, same
+    * meta record, so probe results are
     * identical (the spec pins it) — WITHOUT the original text: one
     * signature-table read, no re-shingling. Probes keep serving the old
     * generation until the commit rename; appends resume on the
@@ -642,66 +608,21 @@ object Dedup {
     * compact concurrently with an append). Returns the committed
     * generation. */
   def signatureCompact(spark: org.apache.spark.sql.SparkSession,
-      path: String): Long = compactIndex(spark, path, "sig_meta.txt")
+      path: String): Long = compactIndex(spark, path, Family.Signature)
 
   /** [[signatureCompact]] for a [[hashSave]]d exact-dedup index. */
   def hashCompact(spark: org.apache.spark.sql.SparkSession,
-      path: String): Long = compactIndex(spark, path, "hash_meta.txt")
+      path: String): Long = compactIndex(spark, path, Family.Hash)
 
   private def compactIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String, metaFile: String): Long = {
-    val cur = graft.core.IndexGen.readDir(path)
-    val metaSrc = new java.io.File(cur, metaFile)
-    require(metaSrc.isFile,
-      s"compact: not a $metaFile index — missing ${metaSrc.getPath}")
-    require(Similarity.readManifest(cur).isDefined,
-      s"compact: no segment manifest in $cur")
-    val all = Similarity.codesParts(spark, path, cur)
+      path: String, family: Family): Long = {
+    val g = SegmentStore.open(path).of(family)
+    val all = g.rows(spark)
     // zero-row guard, mirroring signatureAppend/hashAppend: an empty
     // committed table compacted to a zero-row parquet segment can land
     // with no part files, and every later manifest read would fail
     // schema inference — keep the current generation instead
-    if (all.isEmpty) return graft.core.IndexGen.current(path).getOrElse(
-      throw new IllegalStateException(
-        s"compact: no committed generation at $path"))
-    val (dir, gen) = graft.core.IndexGen.stage(path)
-    new java.io.File(dir).mkdirs()
-    java.nio.file.Files.copy(metaSrc.toPath,
-      new java.io.File(dir, metaFile).toPath)
-    val seg = Similarity.newSegmentName()
-    Similarity.writeManifest(dir, Seq(seg)) // manifest-first discipline
-    Similarity.writeBinarySegmentTo(all, path, seg)
-    graft.core.IndexGen.commit(path, gen)
-    Similarity.vacuumSegments(path)
-    gen
-  }
-
-  private def writeHashMeta(genDir: String): Unit = {
-    new java.io.File(genDir).mkdirs()
-    java.nio.file.Files.writeString(
-      new java.io.File(genDir, "hash_meta.txt").toPath, "algo=md5")
-    ()
-  }
-
-  private def requireHashMeta(genDir: String): Unit =
-    require(new java.io.File(genDir, "hash_meta.txt").isFile,
-      s"not a hashSave exact-dedup index: missing hash_meta.txt in $genDir")
-
-  private def writeSigMeta(genDir: String, n: Int, k: Int, bands: Int): Unit = {
-    new java.io.File(genDir).mkdirs()
-    java.nio.file.Files.writeString(
-      new java.io.File(genDir, "sig_meta.txt").toPath,
-      s"n=$n\nk=$k\nbands=$bands")
-    ()
-  }
-
-  private def readSigMeta(genDir: String): (Int, Int, Int) = {
-    val f = new java.io.File(genDir, "sig_meta.txt")
-    require(f.isFile, s"not a signature index: missing ${f.getPath}")
-    val kv = java.nio.file.Files.readString(f.toPath).split("\n")
-      .map(_.trim).filter(_.contains("="))
-      .map { l => val Array(a, b) = l.split("=", 2); a -> b.toInt }.toMap
-    (kv("n"), kv("k"), kv("bands"))
+    if (all.isEmpty) g.gen else SegmentStore.compact(g, all)
   }
 
   /** (band, band-key) rows for an LSH banding of a minhash signature

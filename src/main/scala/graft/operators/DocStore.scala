@@ -588,7 +588,7 @@ object DocStore {
       .filterNot(keep)
       .map(new java.io.File(_))
       .filter(_.isDirectory)
-      .foreach(rmTreeDs)
+      .foreach(graft.core.rmTree)
   }
 
   /** Every kind-scoped index dir a store at `path` could own — one
@@ -599,10 +599,6 @@ object DocStore {
   private[graft] def allKindDirs(path: String): Seq[String] =
     Seq[StoreIndex](IvfFlat(), PqCodes(1, 1, 1), BinaryCodes(1),
       IvfPqCodes(1, 1, 0, 1)).map(k => indexDirOf(path, k)).distinct
-
-  private def rmTreeDs(f: java.io.File): Unit = {
-    Option(f.listFiles).foreach(_.foreach(rmTreeDs)); f.delete(); ()
-  }
 
   /** The kind's index location — kind-SCOPED dirs ("index" stays the
     * IVF-flat home for pre-codes-era stores) are what makes the kind
@@ -721,14 +717,8 @@ object DocStore {
     // append must agree on the kind even if a concurrent rebuild flips it
     val kind = readIndexKind(path)
     val dir = indexDirOf(path, kind)
-    val indexed = kind match {
-      case IvfFlat(_) =>
-        Similarity.ivfLoadParts(spark, dir)._2
-          .select(col("neighbor_id").as("chunk_key"))
-      case _ =>
-        Similarity.binaryLoadParts(spark, dir)
-          .select(col("neighbor_id").as("chunk_key"))
-    }
+    val indexed = graft.core.SegmentStore.open(dir).rows(spark)
+      .select(col("neighbor_id").as("chunk_key"))
     val fresh = graft.core.Caches.eager(
       chunks.join(indexed, Seq("chunk_key"), "left_anti"))
     val n = fresh.count()

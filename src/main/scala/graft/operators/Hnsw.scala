@@ -4,6 +4,9 @@ import scala.collection.mutable
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.core.SegmentStore
+import graft.core.SegmentStore.{Family, Meta}
+
 /** Partitioned HNSW ANN (reference:
   * src/external_integration/usearch_integration.rs — the reference
   * links the USearch HNSW library; stdlib/indexing/nearest_neighbors.py:65
@@ -284,22 +287,6 @@ object Hnsw {
       .select(col("query_id"), col("rank"), col("neighbor_id"), col("cosine"))
   }
 
-  /** Persist sharded HNSW graphs: build one [[PartIndex]] per partition
-    * of `data` (exactly as [[topK]] would) and serialize each graph as
-    * parquet rows under `path/graphs` — (node, id, vec, level,
-    * level-indexed links), partitioned by shard so one query task
-    * rebuilds whole graphs from whole files — plus a `path/meta` marker
-    * pinning (m, efConstruction): search quality is a property of the
-    * BUILT graph, so a reader must know what it is probing, and a
-    * mismatched assumption fails loudly at load instead of silently
-    * degrading recall. Parquet round-trips doubles and int arrays
-    * exactly, so a restored graph answers bit-identically to the
-    * instance it was saved from (HnswSpec pins this in the approximate
-    * regime, where it is NOT implied by exactness).
-    *
-    * Same build-once/query-many motivation as [[Similarity.ivfSave]]:
-    * at corpus scale the graph build (the expensive, insert-ordered
-    * part) happens in one batch job; later jobs probe from disk. */
   /** One graph per partition of `data`, dumped as parquet-ready rows
     * (shard, node, id, vec, level, links, entry, max_level) — the
     * build half shared by [[hnswSave]] and [[hnswAppend]]. */
@@ -324,25 +311,35 @@ object Hnsw {
     }.toDF("shard", "node", "id", "vec", "level", "links", "entry", "max_level")
   }
 
+  /** Persist sharded HNSW graphs: build one [[PartIndex]] per partition
+    * of `data` (exactly as [[topK]] would) and serialize each graph as
+    * parquet rows — (node, id, vec, level, level-indexed links),
+    * partitioned by shard so one query task rebuilds whole graphs from
+    * whole files — as one segment of a [[SegmentStore]] generation
+    * (so [[hnswAppend]] can grow the index O(new rows)), whose meta
+    * record pins (m, efConstruction): search quality is a property of
+    * the BUILT graph, so a reader must know what it is probing. Parquet
+    * round-trips doubles and int arrays exactly, so a restored graph
+    * answers bit-identically to the instance it was saved from
+    * (HnswSpec pins this in the approximate regime, where it is NOT
+    * implied by exactness).
+    *
+    * Same build-once/query-many motivation as [[Similarity.ivfSave]]:
+    * at corpus scale the graph build (the expensive, insert-ordered
+    * part) happens in one batch job; later jobs probe from disk. */
   def hnswSave(data: DataFrame, did: Column, dvec: Column, path: String,
       m: Int = 16, efConstruction: Int = 64): Unit = {
-    val spark = data.sparkSession
-    import spark.implicits._
-    val rows = buildGraphRows(data, did, dvec, m, efConstruction)
-    // atomic generation publish (graft.core.IndexGen, shared with
-    // ivfSave/pqSave): manifest + meta land in a fresh gen dir, one
-    // marker rename makes them visible together — a reader never pairs
-    // new graphs with old meta (or vice versa). Graphs live in the
-    // SEGMENT store ([[Similarity.newSegmentName]] manifest-first
-    // discipline) so [[hnswAppend]] can grow the index O(new rows)
-    val (dir, gen) = graft.core.IndexGen.stage(path)
-    val seg = Similarity.newSegmentName()
-    Similarity.writeManifest(dir, Seq(seg))
-    rows.write.mode("overwrite").partitionBy("shard").parquet(s"$path/$seg")
-    Seq((m, efConstruction)).toDF("m", "ef_construction")
-      .write.mode("overwrite").parquet(s"$dir/meta")
-    graft.core.IndexGen.commit(path, gen)
-    Similarity.vacuumSegments(path)
+    SegmentStore.save(path, Meta(Family.Hnsw, Seq(m, efConstruction)),
+      buildGraphRows(data, did, dvec, m, efConstruction))
+    ()
+  }
+
+  /** The committed generation of the HNSW index at `path` and its
+    * (m, efConstruction). */
+  private def openHnsw(path: String): (SegmentStore.Generation, Int, Int) = {
+    val g = SegmentStore.open(path).of(Family.Hnsw)
+    val Seq(m, efc) = g.meta.geometry
+    (g, m, efc)
   }
 
   /** Incremental index growth — the same SEGMENT model as
@@ -362,34 +359,13 @@ object Hnsw {
     * so appends degrade query latency linearly in segment count —
     * compact on the usual cadence, like every segmented index here.
     * The caller feeds only NEW ids (the shared segment-store
-    * contract); m/efConstruction come from the saved meta, so every
-    * segment's graphs share the build geometry. A pre-segment
-    * generation (flat `graphs/` layout) is migrated by re-pointing its
-    * rows as segment 0 — one O(corpus) copy, after which appends are
-    * incremental. Returns the committed generation. */
+    * contract); m/efConstruction come from the meta record, so every
+    * segment's graphs share the build geometry. Returns the committed
+    * generation. */
   def hnswAppend(spark: org.apache.spark.sql.SparkSession, path: String,
       newData: DataFrame, did: Column, dvec: Column): Long = {
-    val cur = graft.core.IndexGen.readDir(path)
-    val metaRow = spark.read.parquet(s"$cur/meta").collect()(0)
-    val (m, efc) = (metaRow.getAs[Int]("m"), metaRow.getAs[Int]("ef_construction"))
-    val rows = buildGraphRows(newData, did, dvec, m, efc)
-    val (dir, gen) = graft.core.IndexGen.stage(path)
-    val oldManifest = Similarity.readManifest(cur)
-    val legacySeg = if (oldManifest.isEmpty) Some(Similarity.newSegmentName()) else None
-    val seg = Similarity.newSegmentName()
-    Similarity.writeManifest(dir, oldManifest.getOrElse(legacySeg.toSeq) :+ seg)
-    legacySeg.foreach { n =>
-      spark.read.parquet(s"$cur/graphs")
-        .select("shard", "node", "id", "vec", "level", "links", "entry",
-          "max_level")
-        .write.mode("overwrite").partitionBy("shard").parquet(s"$path/$n")
-    }
-    rows.write.mode("overwrite").partitionBy("shard").parquet(s"$path/$seg")
-    spark.read.parquet(s"$cur/meta")
-      .write.mode("overwrite").parquet(s"$dir/meta")
-    graft.core.IndexGen.commit(path, gen)
-    Similarity.vacuumSegments(path)
-    gen
+    val (g, m, efc) = openHnsw(path)
+    SegmentStore.append(g, g.meta, buildGraphRows(newData, did, dvec, m, efc))
   }
 
   /** Fold every appended segment into the base graphs — the USearch
@@ -406,15 +382,9 @@ object Hnsw {
   def hnswCompact(spark: org.apache.spark.sql.SparkSession,
       path: String): Long = {
     import spark.implicits._
-    val cur = graft.core.IndexGen.readDir(path)
-    val curGen = graft.core.IndexGen.current(path).getOrElse(0L)
-    val metaRow = spark.read.parquet(s"$cur/meta").collect()(0)
-    val (m, efc) = (metaRow.getAs[Int]("m"), metaRow.getAs[Int]("ef_construction"))
-    val segs = Similarity.readManifest(cur).getOrElse(Seq("graphs"))
-    if (segs.length <= 1 && Similarity.readManifest(cur).isDefined)
-      return curGen
-    val segDirs = segs.map(s0 =>
-      if (s0 == "graphs") s"$cur/graphs" else s"$path/$s0")
+    val (g, m, efc) = openHnsw(path)
+    if (g.segments.length <= 1) return g.gen
+    val segDirs = g.segmentDirs
     val cols = Seq("shard", "node", "id", "vec", "level", "links",
       "entry", "max_level")
     val base = spark.read.parquet(segDirs.head)
@@ -423,7 +393,7 @@ object Hnsw {
     // build task), sorted for determinism
     val baseShards = base.select("shard").distinct()
       .collect().map(_.getAs[Int]("shard")).sorted
-    if (baseShards.isEmpty) return curGen // zero-row guard, as everywhere
+    if (baseShards.isEmpty) return g.gen // zero-row guard, as everywhere
     val later = segDirs.tail.map(d0 => spark.read.parquet(d0)
       .select(col("id"), col("vec"))).reduceOption(_ unionByName _)
     val fresh = later match {
@@ -462,15 +432,7 @@ object Hnsw {
         }
       }.toDF("shard", "node", "id", "vec", "level", "links", "entry",
         "max_level")
-    val (dir, gen) = graft.core.IndexGen.stage(path)
-    val seg = Similarity.newSegmentName()
-    Similarity.writeManifest(dir, Seq(seg))
-    folded.write.mode("overwrite").partitionBy("shard").parquet(s"$path/$seg")
-    spark.read.parquet(s"$cur/meta")
-      .write.mode("overwrite").parquet(s"$dir/meta")
-    graft.core.IndexGen.commit(path, gen)
-    Similarity.vacuumSegments(path)
-    gen
+    SegmentStore.compact(g, folded)
   }
 
   /** Top-k against a [[hnswSave]]d index without rebuilding the graphs.
@@ -484,9 +446,7 @@ object Hnsw {
       efSearch: Int = 64, exact: Boolean = false,
       maxQueries: Int = 100000): DataFrame = {
     import spark.implicits._
-    val dir = graft.core.IndexGen.readDir(path)
-    val metaRow = spark.read.parquet(s"$dir/meta").collect()(0)
-    val (m, efc) = (metaRow.getAs[Int]("m"), metaRow.getAs[Int]("ef_construction"))
+    val (g, m, efc) = openHnsw(path)
     val qRows = queries.select(qid.cast("long").as("qid"),
         qvec.cast("array<double>").as("qv"))
       .limit(maxQueries + 1)
@@ -496,16 +456,10 @@ object Hnsw {
       s"Hnsw.hnswLoadTopK: query side exceeds the broadcast smallness " +
         s"contract (> $maxQueries rows)")
     val qB = spark.sparkContext.broadcast(qRows)
-    // manifest = the segment store ([[hnswAppend]]); a pre-segment save
-    // is the flat graphs/ dir. Graphs from different segments are
-    // INDEPENDENT (each was built whole), so the group key is
-    // (segment, shard) — encoded into one long for the shuffle
-    val segDirs = Similarity.readManifest(dir) match {
-      case Some(segs) => segs.map(s0 =>
-        if (s0 == "graphs") s"$dir/graphs" else s"$path/$s0")
-      case None => Seq(s"$dir/graphs")
-    }
-    val g = segDirs.zipWithIndex.map { case (d0, i) =>
+    // graphs from different segments are INDEPENDENT (each was built
+    // whole), so the group key is (segment, shard) — encoded into one
+    // long for the shuffle
+    val graphs = g.segmentDirs.zipWithIndex.map { case (d0, i) =>
       spark.read.parquet(d0)
         .select((lit(i.toLong) * lit(1000000L) +
             col("shard").cast("long")).as("grp"),
@@ -514,7 +468,7 @@ object Hnsw {
     }.reduce(_ unionByName _)
       .repartition(col("grp"))
       .as[(Long, Int, Long, Seq[Double], Int, Seq[Seq[Int]], Int, Int)]
-    val perShard = g.mapPartitions { it =>
+    val perShard = graphs.mapPartitions { it =>
       // a task may receive several whole graphs (hash co-location) —
       // restore and search each independently
       it.toSeq.groupBy(_._1).iterator.flatMap { case (_, rows) =>

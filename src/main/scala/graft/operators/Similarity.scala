@@ -3,6 +3,9 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.core.SegmentStore
+import graft.core.SegmentStore.{Family, Meta}
+
 /** Similarity search over embedding columns (reference:
   * stdlib/indexing/nearest_neighbors.py:170 brute-force KNN, :262 LSH
   * KNN; engine src/external_integration/brute_force_knn_integration.rs).
@@ -313,20 +316,15 @@ object Similarity {
     * long-lived built indexes server-side, queries joining against them
     * (external_index integration; xpack vector store).
     *
-    * Saves are atomically VERSIONED ([[graft.core.IndexGen]]): both
-    * tables land in a fresh `gen-<N>/` dir, one marker rename publishes
-    * them, so a reader concurrent with a re-save sees the old or the
-    * new index — never new centroids over old lists. */
+    * Saves are atomically VERSIONED ([[graft.core.SegmentStore]]): the
+    * centroids and the lists land in a fresh generation, one marker
+    * rename publishes them, so a reader concurrent with a re-save sees
+    * the old or the new index — never new centroids over old lists. */
   def ivfSave(data: DataFrame, did: Column, dvec: Column, path: String,
       nlist: Int, dim: Int = 0): Unit = {
     val (cents, assigned) = ivfBuild(data, did, dvec, nlist, dim)
-    val (dir, gen) = graft.core.IndexGen.stage(path)
-    cents.write.mode("overwrite").parquet(s"$dir/centroids")
-    val seg = newSegmentName()
-    writeManifest(dir, Seq(seg)) // manifest-first: see newSegmentName
-    writeSegmentTo(assigned, path, seg)
-    graft.core.IndexGen.commit(path, gen)
-    vacuumSegments(path)
+    SegmentStore.save(path, Meta(Family.Ivf), assigned, "centroids" -> cents)
+    ()
   }
 
   /** Incremental index refresh — the Lucene/FAISS SEGMENT model: assign
@@ -346,32 +344,12 @@ object Similarity {
     * full [[ivfSave]] rebuild periodically (the same compact-vs-append
     * tradeoff every segmented index has). The caller feeds only NEW
     * ids; re-appending an id creates a duplicate entry (same as feeding
-    * a duplicate to ivfSave).
-    *
-    * A pre-segment generation (flat `assigned/` layout) is migrated by
-    * rewriting its lists as segment 0 — one-time O(corpus) I/O, after
-    * which appends are incremental. Returns the committed generation. */
+    * a duplicate to ivfSave). Returns the committed generation. */
   def ivfAppend(spark: org.apache.spark.sql.SparkSession, path: String,
       newData: DataFrame, did: Column, dvec: Column, dim: Int = 0): Long = {
-    val cur = graft.core.IndexGen.readDir(path)
-    val cents = spark.read.parquet(s"$cur/centroids")
-    val assigned = assignVectors(newData, did, dvec, cents, dim)
-    val (dir, gen) = graft.core.IndexGen.stage(path)
-    cents.write.mode("overwrite").parquet(s"$dir/centroids")
-    // legacy layout (flat assigned/ dir): fold into the segment store once
-    val oldManifest = readManifest(cur)
-    val legacySeg = if (oldManifest.isEmpty) Some(newSegmentName()) else None
-    val seg = newSegmentName()
-    writeManifest(dir, oldManifest.getOrElse(legacySeg.toSeq) :+ seg)
-    legacySeg.foreach { n =>
-      val legacy = spark.read.parquet(s"$cur/assigned")
-        .withColumn("cid", col("cid").cast(cents.schema("cid").dataType))
-      writeSegmentTo(legacy, path, n)
-    }
-    writeSegmentTo(assigned, path, seg)
-    graft.core.IndexGen.commit(path, gen)
-    vacuumSegments(path)
-    gen
+    val g = SegmentStore.open(path).of(Family.Ivf)
+    SegmentStore.append(g, Meta(Family.Ivf),
+      assignVectors(newData, did, dvec, g.side(spark, "centroids"), dim))
   }
 
   /** Assign vectors to FIXED centroids — the map-side half of
@@ -385,89 +363,16 @@ object Similarity {
         .withColumn("n2", norm2(col("v"), dim)),
       cents)
 
-  /** Reserve a segment name. Writers stage the name into the NEW
-    * generation's manifest BEFORE the segment's bytes land in
-    * `segments/` ([[writeSegmentTo]] after [[writeManifest]]): the
-    * staged manifest is what [[vacuumSegments]] reads, so there is no
-    * instant at which a freshly-written segment is unreferenced — a
-    * concurrent writer's vacuum (already a violation of the
-    * single-writer contract) can no longer delete a mid-append segment
-    * and commit a manifest pointing at deleted files. */
-  private[operators] def newSegmentName(): String =
-    s"segments/seg-${java.util.UUID.randomUUID()}"
-
-  /** One inverted-list segment under `path/segments/` — cluster by cid
-    * before the partitioned write: partitionBy opens one file per
-    * (task, cid) pair, so un-clustered input writes up to tasks×nlist
-    * near-empty files (8k at nlist=256, local[32]) — slow here, and the
-    * classic small-files problem on a real filesystem. Hash-clustered,
-    * each list lands in exactly one task → nlist files. */
-  private def writeSegmentTo(assigned: DataFrame, path: String,
-      name: String): Unit = {
-    // explicit partition count: a bare repartition(cid) gets
-    // AQE-coalesced by the bytes it sees (measured: 2 tasks creating
-    // 256 list dirs serially — 2.9 s of a 5 s save); the explicit-N
-    // form is exempt, so list-file creation spreads over the executors
-    fanoutRepartition(assigned, col("cid")).write.mode("overwrite")
-      .partitionBy("cid").parquet(s"$path/$name")
-  }
-
-  private[operators] def writeManifest(genDir: String, segs: Seq[String]): Unit = {
-    // binary saves write nothing else into the gen dir before the
-    // manifest (ivf's centroid parquet creates it as a side effect)
-    new java.io.File(genDir).mkdirs()
-    java.nio.file.Files.writeString(
-      new java.io.File(genDir, "segments.txt").toPath, segs.mkString("\n"))
-    ()
-  }
-
-  private[operators] def readManifest(genDir: String): Option[Seq[String]] = {
-    val f = new java.io.File(genDir, "segments.txt")
-    if (f.isFile)
-      Some(java.nio.file.Files.readString(f.toPath).split("\n").toSeq
-        .map(_.trim).filter(_.nonEmpty))
-    else None
-  }
-
-  /** Drop segment dirs no surviving generation references (commit
-    * already pruned old generation dirs; their exclusive segments are
-    * dead weight). Single-writer discipline, same as the sink vacuums. */
-  private[operators] def vacuumSegments(path: String): Unit = {
-    val segRoot = new java.io.File(path, "segments")
-    if (!segRoot.isDirectory) return
-    val root = new java.io.File(path)
-    val referenced = Option(root.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.startsWith("gen-"))
-      .flatMap(g => readManifest(g.getPath).getOrElse(Nil))
-      .map(rel => new java.io.File(path, rel).getCanonicalPath).toSet
-    Option(segRoot.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && !referenced.contains(f.getCanonicalPath))
-      .foreach(rmTreeSim)
-  }
-
-  private def rmTreeSim(f: java.io.File): Unit = {
-    Option(f.listFiles).foreach(_.foreach(rmTreeSim)); f.delete(); ()
-  }
-
   /** Load the committed generation's (centroids, inverted lists) pair —
-    * lists unioned across the manifest's segments (or the legacy flat
-    * dir), cid re-cast to the centroid table's type (partition discovery
-    * re-infers small longs as int). */
+    * lists unioned across the manifest's segments, cid re-cast to the
+    * centroid table's type (partition discovery re-infers small longs as
+    * int). */
   private[graft] def ivfLoadParts(spark: org.apache.spark.sql.SparkSession,
       path: String): (DataFrame, DataFrame) = {
-    val dir = graft.core.IndexGen.readDir(path)
-    val cents = spark.read.parquet(s"$dir/centroids")
-    val raw = readManifest(dir) match {
-      // one scan per segment, unioned: a multi-path read would try to
-      // infer ONE partition scheme across segment roots and reject the
-      // layout; per-segment discovery keeps each seg's cid= pruning.
-      // Segment counts stay small by policy (periodic rebuild compacts
-      // to one), so the union width is bounded.
-      case Some(segs) =>
-        segs.map(s => spark.read.parquet(s"$path/$s")).reduce(_.unionByName(_))
-      case None => spark.read.parquet(s"$dir/assigned")
-    }
-    (cents, raw.withColumn("cid", col("cid").cast(cents.schema("cid").dataType)))
+    val g = SegmentStore.open(path).of(Family.Ivf)
+    val cents = g.side(spark, "centroids")
+    (cents, g.rows(spark).withColumn("cid",
+      col("cid").cast(cents.schema("cid").dataType)))
   }
 
   /** Retrieve against an [[ivfSave]]d index without rebuilding it —
@@ -805,18 +710,14 @@ object Similarity {
     * (100 TB of float64 embeddings → ~1.6 TB of codes); the float
     * corpus is NOT persisted — the refine stage rescans only shortlist
     * rows from the source table via `rescoreAgainst`, the [[pqSave]]
-    * contract. Atomically versioned through [[graft.core.IndexGen]]
-    * like every index save; codes land as one SEGMENT under a manifest
-    * (the [[ivfAppend]] layout), so [[binaryAppend]] can grow the index
-    * O(new rows) without rewriting the corpus codes. */
+    * contract. Atomically versioned through [[graft.core.SegmentStore]]
+    * like every index save; codes land as one SEGMENT under a manifest,
+    * so [[binaryAppend]] can grow the index O(new rows) without
+    * rewriting the corpus codes. */
   def binarySave(data: DataFrame, did: Column, dvec: Column,
       path: String): Unit = {
-    val (dir, gen) = graft.core.IndexGen.stage(path)
-    val seg = newSegmentName()
-    writeManifest(dir, Seq(seg)) // manifest-first: see newSegmentName
-    writeBinarySegmentTo(binaryCodesOf(data, did, dvec), path, seg)
-    graft.core.IndexGen.commit(path, gen)
-    vacuumSegments(path)
+    SegmentStore.save(path, Meta(Family.Binary), binaryCodesOf(data, did, dvec))
+    ()
   }
 
   /** Incremental growth of a [[binarySave]]d index — the segment-append
@@ -829,21 +730,9 @@ object Similarity {
     * spec pins ranking equality). Same single-writer/duplicate-id
     * contract as ivfAppend. Returns the committed generation. */
   def binaryAppend(spark: org.apache.spark.sql.SparkSession, path: String,
-      newData: DataFrame, did: Column, dvec: Column): Long = {
-    val cur = graft.core.IndexGen.readDir(path)
-    val (dir, gen) = graft.core.IndexGen.stage(path)
-    // legacy layout (flat codes/ dir): fold into the segment store once
-    val oldManifest = readManifest(cur)
-    val legacySeg = if (oldManifest.isEmpty) Some(newSegmentName()) else None
-    val seg = newSegmentName()
-    writeManifest(dir, oldManifest.getOrElse(legacySeg.toSeq) :+ seg)
-    legacySeg.foreach(n =>
-      writeBinarySegmentTo(spark.read.parquet(s"$cur/codes"), path, n))
-    writeBinarySegmentTo(binaryCodesOf(newData, did, dvec), path, seg)
-    graft.core.IndexGen.commit(path, gen)
-    vacuumSegments(path)
-    gen
-  }
+      newData: DataFrame, did: Column, dvec: Column): Long =
+    SegmentStore.append(SegmentStore.open(path).of(Family.Binary),
+      Meta(Family.Binary), binaryCodesOf(newData, did, dvec))
 
   private def binaryCodesOf(data: DataFrame, did: Column,
       dvec: Column): DataFrame =
@@ -852,31 +741,11 @@ object Similarity {
         dvec.cast("array<double>").as("_v")),
       col("_v"), "bcodes").select(col("neighbor_id"), col("bcodes"))
 
-  /** One code segment (binary sign codes or PQ codes) — plain parquet
-    * (no cid to partition by; code serving scans every code anyway).
-    * Same manifest-first discipline as [[writeSegmentTo]].
-    *
-    * The write keeps its input parallelism ON PURPOSE — do NOT add
-    * guide-§6 single-file sizing here (attempted and reverted, r16):
-    * for a code table, part-file count at rest IS the read-side
-    * parallelism of every downstream kernel (maxPartitionBytes makes a
-    * small file one scan split), and a single-file PQ code segment ran
-    * the whole |q|·|chunks| decode-dot retrieval single-threaded
-    * (q_doc_store_pq 5 s → 41 s at sf0.1, caught by the bench diff;
-    * coalesce(1) additionally serialized the encode kernel itself).
-    * Per-append file-count growth is the compaction cadence's job
-    * ([[graft.operators.Dedup.signatureCompact]]/hashCompact,
-    * ivfSave-after-ivfAppend), not the write's. */
-  private[operators] def writeBinarySegmentTo(codes: DataFrame, path: String,
-      name: String): Unit = {
-    codes.write.mode("overwrite").parquet(s"$path/$name")
-  }
-
-  /** The committed generation's code table — manifest segments unioned,
-    * or the legacy flat `codes/` dir. */
+  /** The committed generation's code table — the rows of every code
+    * family (binary, PQ, IVF-PQ), manifest segments unioned. */
   private[graft] def binaryLoadParts(
       spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
-    codesParts(spark, path, graft.core.IndexGen.readDir(path))
+    SegmentStore.open(path).rows(spark)
 
   /** `restrictTo` contract check shared by the persisted-index loaders:
     * exactly ONE id column, renamed to neighbor_id for the pre-rank
@@ -890,18 +759,6 @@ object Similarity {
         "column first")
     ids.toDF("neighbor_id")
   }
-
-  /** Code segments of an ALREADY-RESOLVED generation dir — callers that
-    * read several index parts (codebook + codes) must resolve the
-    * generation ONCE so a concurrent append can't hand them parts from
-    * two different commits. */
-  private[operators] def codesParts(spark: org.apache.spark.sql.SparkSession,
-      path: String, dir: String): DataFrame =
-    readManifest(dir) match {
-      case Some(segs) =>
-        segs.map(s => spark.read.parquet(s"$path/$s")).reduce(_.unionByName(_))
-      case None => spark.read.parquet(s"$dir/codes")
-    }
 
   /** Query a [[binarySave]]d index: Hamming rank over the persisted
     * codes (narrow pair rows, NULL-hamming dropped before the ascending
@@ -922,7 +779,7 @@ object Similarity {
     require(rescore <= 0 || rescoreAgainst.isDefined,
       s"binaryLoadTopK: rescore = $rescore needs rescoreAgainst — the index " +
         "persists codes only, the refine stage must be given the float corpus")
-    val codes0 = binaryLoadParts(spark, path)
+    val codes0 = SegmentStore.open(path).of(Family.Binary).rows(spark)
     val codes = restrictTo match {
       case None => codes0
       case Some(ids) => codes0.join(
@@ -1307,8 +1164,8 @@ object Similarity {
     * refine stage reads `rescoreAgainst` shortlist rows at query time
     * (the [[pqSave]]/[[binarySave]] contract). Same deterministic
     * recipes as [[ivfPqRetrieve]], so save→load answers identically to
-    * the ad-hoc composition. Atomically versioned ([[graft.core.IndexGen]]).
-    */
+    * the ad-hoc composition. Atomically versioned
+    * ([[graft.core.SegmentStore]]). */
   def ivfPqSave(data: DataFrame, did: Column, dvec: Column, path: String,
       nlist: Int, m: Int, ksub: Int, dim: Int): Unit = {
     val (d, cents, coarse, cb) = ivfPqBuild(data, did, dvec, nlist, m, ksub, dim)
@@ -1319,14 +1176,9 @@ object Similarity {
           .as("codes"))
       .join(coarse, "neighbor_id")
       .select(col("neighbor_id"), col("cid"), col("codes"))
-    val (dir, gen) = graft.core.IndexGen.stage(path)
-    cents.write.mode("overwrite").parquet(s"$dir/centroids")
-    cb.write.mode("overwrite").parquet(s"$dir/codebook")
-    val seg = newSegmentName()
-    writeManifest(dir, Seq(seg)) // manifest-first: see newSegmentName
-    writeSegmentTo(lists, path, seg)
-    graft.core.IndexGen.commit(path, gen)
-    vacuumSegments(path)
+    SegmentStore.save(path, Meta(Family.IvfPq), lists,
+      "centroids" -> cents, "codebook" -> cb)
+    ()
   }
 
   /** Incremental growth of an [[ivfPqSave]]d index: assign ONLY
@@ -1339,16 +1191,9 @@ object Similarity {
     * [[ivfPqSave]] rebuilds re-derive both. Returns the generation. */
   def ivfPqAppend(spark: org.apache.spark.sql.SparkSession, path: String,
       newData: DataFrame, did: Column, dvec: Column): Long = {
-    val cur = graft.core.IndexGen.readDir(path)
-    val cents = spark.read.parquet(s"$cur/centroids")
-    val cb = spark.read.parquet(s"$cur/codebook")
-    // fail loudly, never default to Nil: ivfPqSave always writes a
-    // manifest, so its absence means corruption or a wrong path — a
-    // Nil default would commit a generation listing ONLY the new
-    // segment and the vacuum would then delete the corpus codes
-    val oldSegs = readManifest(cur).getOrElse(throw new IllegalStateException(
-      s"ivfPqAppend: no segment manifest in $cur — not an ivfPqSave index"))
-    val (flatCb, cwn2s, mA, ksubA, dsubA) = cbArrays(cb)
+    val g = SegmentStore.open(path).of(Family.IvfPq)
+    val cents = g.side(spark, "centroids")
+    val (flatCb, cwn2s, mA, ksubA, dsubA) = cbArrays(g.side(spark, "codebook"))
     val d = graft.core.Caches.eager(l2normalize(
       spread(newData).select(did.as("id"), dvec.cast("array<double>").as("v")),
       "v").withColumn("n2", norm2(col("v"))))
@@ -1358,15 +1203,7 @@ object Similarity {
         graft.plans.VecExprs.pqEncode(col("v"), flatCb, cwn2s, mA, ksubA, dsubA)
           .as("codes")), "neighbor_id")
       .select(col("neighbor_id"), col("cid"), col("codes"))
-    val (dir, gen) = graft.core.IndexGen.stage(path)
-    cents.write.mode("overwrite").parquet(s"$dir/centroids")
-    cb.write.mode("overwrite").parquet(s"$dir/codebook")
-    val seg = newSegmentName()
-    writeManifest(dir, oldSegs :+ seg) // manifest-first: see newSegmentName
-    writeSegmentTo(lists, path, seg)
-    graft.core.IndexGen.commit(path, gen)
-    vacuumSegments(path)
-    gen
+    SegmentStore.append(g, Meta(Family.IvfPq), lists)
   }
 
   /** Query an [[ivfPqSave]]d index: probe `nprobe` lists by coarse
@@ -1375,8 +1212,8 @@ object Similarity {
     * against `rescoreAgainst` — REQUIRED (rescore > 0 is the precision
     * contract of this layout, as in [[ivfPqRetrieve]]; the index itself
     * holds no floats). `restrictTo` semi-joins the lists pre-rank.
-    * Serves the committed generation (one readDir for all three parts,
-    * so a concurrent re-save can't mix commits). Returns
+    * Serves the committed generation (one open for all three parts, so
+    * a concurrent re-save can't mix commits). Returns
     * (query_id, rank, neighbor_id, cosine). */
   def ivfPqLoadTopK(spark: org.apache.spark.sql.SparkSession, path: String,
       queries: DataFrame, qid: Column, qvec: Column,
@@ -1385,10 +1222,10 @@ object Similarity {
       excludeSelf: Boolean = false,
       restrictTo: Option[DataFrame] = None): DataFrame = {
     require(rescore > 0, "ivfPqLoadTopK: rescore must be > 0")
-    val dir = graft.core.IndexGen.readDir(path)
-    val cents = spark.read.parquet(s"$dir/centroids")
-    val cb = spark.read.parquet(s"$dir/codebook")
-    val lists0 = codesParts(spark, path, dir)
+    val g = SegmentStore.open(path).of(Family.IvfPq)
+    val cents = g.side(spark, "centroids")
+    val cb = g.side(spark, "codebook")
+    val lists0 = g.rows(spark)
       .withColumn("cid", col("cid").cast(cents.schema("cid").dataType))
     val lists1 = restrictTo match {
       case None => lists0
@@ -1442,20 +1279,15 @@ object Similarity {
     * time) and `codes/` (m bytes per corpus vector, THE at-rest corpus
     * representation: a 100 TB float corpus persists as ~1.5 TB of
     * codes). Same build-once/query-many split — and the same atomic
-    * generation-dir publish ([[graft.core.IndexGen]]) — as [[ivfSave]]. The
+    * generation publish ([[graft.core.SegmentStore]]) — as [[ivfSave]]. The
     * original float vectors are NOT persisted — rescore against them by
     * passing the source table to [[pqLoadTopK]] (rescans only the
     * shortlist rows' vectors). */
   def pqSave(data: DataFrame, did: Column, dvec: Column, path: String,
       m: Int, ksub: Int, dim: Int): Unit = {
     val (cb, codes) = pqBuild(data, did, dvec, m, ksub, dim)
-    val (dir, gen) = graft.core.IndexGen.stage(path)
-    cb.write.mode("overwrite").parquet(s"$dir/codebook")
-    val seg = newSegmentName()
-    writeManifest(dir, Seq(seg)) // manifest-first: see newSegmentName
-    writeBinarySegmentTo(codes, path, seg)
-    graft.core.IndexGen.commit(path, gen)
-    vacuumSegments(path)
+    SegmentStore.save(path, Meta(Family.Pq), codes, "codebook" -> cb)
+    ()
   }
 
   /** Incremental growth of a [[pqSave]]d index — encode ONLY `newData`
@@ -1471,28 +1303,15 @@ object Similarity {
     * generation. */
   def pqAppend(spark: org.apache.spark.sql.SparkSession, path: String,
       newData: DataFrame, did: Column, dvec: Column): Long = {
-    val cur = graft.core.IndexGen.readDir(path)
-    val cb = spark.read.parquet(s"$cur/codebook")
-    val (flatCb, cwn2s, mA, ksubA, dsubA) = cbArrays(cb)
+    val g = SegmentStore.open(path).of(Family.Pq)
+    val (flatCb, cwn2s, mA, ksubA, dsubA) = cbArrays(g.side(spark, "codebook"))
     val d = l2normalize(
       spread(newData).select(did.as("id"),
         dvec.cast("array<double>").as("v")), "v")
     val codes = d.select(col("id").as("neighbor_id"),
       graft.plans.VecExprs.pqEncode(col("v"), flatCb, cwn2s, mA, ksubA, dsubA)
         .as("codes"))
-    val (dir, gen) = graft.core.IndexGen.stage(path)
-    cb.write.mode("overwrite").parquet(s"$dir/codebook")
-    // legacy layout (flat codes/ dir): fold into the segment store once
-    val oldManifest = readManifest(cur)
-    val legacySeg = if (oldManifest.isEmpty) Some(newSegmentName()) else None
-    val seg = newSegmentName()
-    writeManifest(dir, oldManifest.getOrElse(legacySeg.toSeq) :+ seg)
-    legacySeg.foreach(n =>
-      writeBinarySegmentTo(spark.read.parquet(s"$cur/codes"), path, n))
-    writeBinarySegmentTo(codes, path, seg)
-    graft.core.IndexGen.commit(path, gen)
-    vacuumSegments(path)
-    gen
+    SegmentStore.append(g, Meta(Family.Pq), codes)
   }
 
   /** Query a [[pqSave]]d index. `rescoreAgainst` supplies the float
@@ -1512,9 +1331,9 @@ object Similarity {
     require(rescore <= 0 || rescoreAgainst.isDefined,
       s"pqLoadTopK: rescore = $rescore needs rescoreAgainst — the index " +
         "persists codes only, the refine stage must be given the float corpus")
-    val dir = graft.core.IndexGen.readDir(path)
-    val cb = spark.read.parquet(s"$dir/codebook")
-    val codes0 = codesParts(spark, path, dir)
+    val g = SegmentStore.open(path).of(Family.Pq)
+    val cb = g.side(spark, "codebook")
+    val codes0 = g.rows(spark)
     val codes = restrictTo match {
       case None => codes0
       case Some(ids) => codes0.join(

@@ -5,6 +5,8 @@ import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode}
 
+import graft.core.rmTree
+
 /** Streaming operator layer (reference: stdlib/temporal/temporal_behavior
   * .py, table.py:1064 deduplicate, _asof_now_join.py, io/_subscribe.py,
   * temporal/time_utils.py).
@@ -916,10 +918,6 @@ object Streaming {
     }
     rmTree(stage)
     todo.length
-  }
-
-  private def rmTree(f: java.io.File): Unit = {
-    Option(f.listFiles).foreach(_.foreach(rmTree)); f.delete(); ()
   }
 
   /** Restore an [[upsertParquetSink]] snapshot dir from swap leftovers

@@ -219,7 +219,7 @@ class DataIndexSpec extends SparkSpec {
     assert(incF.getLong(2) == 999L)
   }
 
-  test("binaryAppend: segment growth ≡ rebuild, legacy layout migrates") {
+  test("binaryAppend: segment growth ≡ rebuild") {
     import graft.operators.Similarity
     val rnd = new scala.util.Random(31)
     val corpus = (0 until 120).map(i =>
@@ -244,17 +244,6 @@ class DataIndexSpec extends SparkSpec {
     val manifest = java.nio.file.Files.readString(
       new java.io.File(incGen, "segments.txt").toPath)
     assert(manifest.split("\n").count(_.nonEmpty) == 2)
-    // a legacy flat codes/ dir (pre-segment layout) appends fine too
-    val legacy = java.nio.file.Files.createTempDirectory("bin_leg").toString
-    val (dir, gen) = graft.core.IndexGen.stage(legacy)
-    Similarity.binarySignQuantize(
-        half1.select(col("id").as("neighbor_id"),
-          col("v").cast("array<double>").as("_v")), col("_v"), "bcodes")
-      .select("neighbor_id", "bcodes")
-      .write.parquet(s"$dir/codes")
-    graft.core.IndexGen.commit(legacy, gen)
-    Similarity.binaryAppend(spark, legacy, half2, col("id"), col("v"))
-    assert(top(legacy) == top(full))
   }
 
   test("NULL embeddings never NPE the coarse-quantizer builds") {
@@ -506,51 +495,23 @@ class DataIndexSpec extends SparkSpec {
       "segments referenced only by pruned generations must be vacuumed")
   }
 
-  test("ivfAppend migrates a legacy flat layout into segments once") {
+  test("a load or an append on a path with no committed generation " +
+      "fails and names the path") {
     import graft.operators.Similarity
-    val all = (1L to 30).map { i =>
-      (i, Seq.tabulate(4)(j => (math.cos(i * 2.9 + j) * 10).toFloat))
-    }.toDF("id", "v")
-    val base = all.filter(col("id") <= 20)
-    val idx = java.nio.file.Files.createTempDirectory("graft_ivf_mig").toString
-    val (cents, assigned) = Similarity.ivfBuild(base, col("id"), col("v"),
-      nlist = 4, dim = 0)
-    cents.write.parquet(s"$idx/centroids")
-    assigned.repartition(col("cid")).write.partitionBy("cid")
-      .parquet(s"$idx/assigned")
-    Similarity.ivfAppend(spark, idx, all.filter(col("id") > 20),
-      col("id"), col("v"))
-    val loaded = Similarity.ivfLoadRetrieve(spark, idx, all,
-        col("id"), col("v"), nprobe = 2, k = 2, excludeSelf = true)
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
-    val refAssigned = Similarity.assignVectors(all, col("id"), col("v"),
-      cents, dim = 0)
-    val direct = Similarity.ivfSearch(cents, refAssigned, all,
-        col("id"), col("v"), nprobe = 2, k = 2, excludeSelf = true, dim = 0)
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
-    assert(loaded == direct)
-  }
-
-  test("pre-r11 flat index layout (no generation marker) stays readable") {
-    import graft.operators.Similarity
-    val corpus = (1L to 30).map { i =>
-      (i, Seq.tabulate(4)(j => (math.cos(i * 3.7 + j) * 10).toFloat))
-    }.toDF("id", "v")
-    val direct = Similarity.ivfRetrieve(corpus, corpus, col("id"), col("v"),
-        col("id"), col("v"), nlist = 4, nprobe = 2, k = 2, excludeSelf = true)
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
-    // write the legacy FLAT layout by hand: artifacts directly under the
-    // path, no _current marker — what every pre-r11 ivfSave produced
-    val idx = java.nio.file.Files.createTempDirectory("graft_ivf_legacy").toString
-    val (cents, assigned) = Similarity.ivfBuild(corpus, col("id"), col("v"),
-      nlist = 4, dim = 0)
-    cents.write.parquet(s"$idx/centroids")
-    assigned.repartition(col("cid")).write.partitionBy("cid")
-      .parquet(s"$idx/assigned")
-    val loaded = Similarity.ivfLoadRetrieve(spark, idx, corpus,
-        col("id"), col("v"), nprobe = 2, k = 2, excludeSelf = true)
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
-    assert(loaded == direct)
+    val corpus = (1L to 8).map(i => (i, Seq(i.toFloat, 1f))).toDF("id", "v")
+    // artifacts without a generation marker: nothing was ever committed
+    val idx = java.nio.file.Files.createTempDirectory("graft_no_gen").toString
+    corpus.write.parquet(s"$idx/centroids")
+    val attempts = Seq[() => Any](
+      () => Similarity.ivfLoadRetrieve(spark, idx, corpus, col("id"), col("v"),
+        nprobe = 1, k = 1),
+      () => Similarity.ivfAppend(spark, idx, corpus, col("id"), col("v")),
+      () => Similarity.binaryAppend(spark, idx, corpus, col("id"), col("v")))
+    attempts.foreach { run =>
+      val e = intercept[IllegalArgumentException](run())
+      assert(e.getMessage.contains(idx), e.getMessage)
+    }
+    assert(graft.core.IndexGen.current(idx).isEmpty, "nothing committed")
   }
 
   test("classify: majority vote, pinned tie-break, NULL on empty retrieval") {

@@ -833,8 +833,7 @@ class DocStoreSpec extends SparkSpec {
   test("nearGeometry: a first ingest creates the near index at the " +
       "requested (n, k, bands); later ingests read it from the index") {
     val t = java.nio.file.Files.createTempDirectory("ds_near_geom").toString
-    def meta(p: String) = java.nio.file.Files.readString(new java.io.File(
-      graft.core.IndexGen.readDir(p), "sig_meta.txt").toPath)
+    def meta(p: String) = graft.core.SegmentStore.open(p).meta.geometry
     // custom geometry: wider k → finer estimate granularity (1/k); the
     // banding S-curve is threshold-driven, which is why this is a build
     // parameter rather than a corpus-count derivation
@@ -842,14 +841,14 @@ class DocStoreSpec extends SparkSpec {
       chunkSize = 3, overlap = 1,
       dedupIndex = Some(s"$t/exact"), nearDedupIndex = Some(s"$t/near"),
       nearGeometry = (2, 8, 4))
-    assert(meta(s"$t/near") == "n=2\nk=8\nbands=4",
+    assert(meta(s"$t/near") == Seq(2, 8, 4),
       s"custom geometry must land in the index: ${meta(s"$t/near")}")
     // default unchanged (what the oracle pins)
     val t2 = java.nio.file.Files.createTempDirectory("ds_near_geom2").toString
     DocStore.build(docsDf, col("doc_id"), col("data"),
       chunkSize = 3, overlap = 1,
       dedupIndex = Some(s"$t2/exact"), nearDedupIndex = Some(s"$t2/near"))
-    assert(meta(s"$t2/near") == "n=3\nk=6\nbands=3")
+    assert(meta(s"$t2/near") == Seq(3, 6, 3))
     // a second ingest probes at the INDEX's geometry (k=8 signatures) —
     // byte-identical re-ingest is emptied by the exact gate, and a new
     // doc passes both gates and appends at the stored geometry
@@ -862,6 +861,6 @@ class DocStoreSpec extends SparkSpec {
       dedupIndex = Some(s"$t/exact"), nearDedupIndex = Some(s"$t/near"),
       nearGeometry = (2, 8, 4))
     assert(st.chunks.count() > 0)
-    assert(meta(s"$t/near").contains("k=8"), "append keeps the index geometry")
+    assert(meta(s"$t/near")(1) == 8, "append keeps the index geometry")
   }
 }

@@ -308,7 +308,7 @@ class PipelineSpec extends SparkSpec {
     val path = java.nio.file.Files.createTempDirectory("sig_wrong_n").toString
     Dedup.signatureSave(docs, col("doc_id"), col("text"), path,
       n = 3, k = 6, bands = 3)
-    val cur = graft.core.IndexGen.readDir(path)
+    val cur = graft.core.SegmentStore.open(path)
     val sigs = Seq((9L, "a b c d e f")).toDF("doc_id", "text")
       .select(col("doc_id").as("id"),
         explode(array(graft.plans.TextExprs.minhashSig(col("text"), 2, 6)))
@@ -316,12 +316,12 @@ class PipelineSpec extends SparkSpec {
       .select(col("id") +: (0 until 6).map(i => col("m")(i).as(s"h$i")): _*)
     val gen0 = graft.core.IndexGen.current(path)
     val e = intercept[IllegalArgumentException] {
-      Dedup.signatureAppendSigs(spark, path, cur, 2, 6, sigs)
+      Dedup.signatureAppendSigs(cur, 2, 6, sigs)
     }
     assert(e.getMessage.contains("n=2") && e.getMessage.contains("n=3"))
     assert(graft.core.IndexGen.current(path) == gen0, "nothing committed")
     // the same signatures declared at the index geometry append fine
-    Dedup.signatureAppendSigs(spark, path, cur, 3, 6, sigs)
+    Dedup.signatureAppendSigs(cur, 3, 6, sigs)
     assert(graft.core.IndexGen.current(path) != gen0)
   }
 
