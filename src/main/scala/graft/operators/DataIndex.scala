@@ -20,8 +20,9 @@ trait Retriever {
 
 object DataIndex {
 
-  /** Exact cosine KNN over an embedding column. `dim > 0` unrolls the
-    * dot product into the codegen'd fixed-width expression. */
+  /** Exact cosine KNN over an embedding column. The dot product is one
+    * native expression that sizes itself from the data; `dim` is
+    * ignored. */
   def bruteForce(data: DataFrame, id: Column, vec: Column, dim: Int = 0): Retriever =
     new Retriever {
       def retrieve(queries: DataFrame, qid: Column, query: Column, k: Int): DataFrame =
@@ -53,14 +54,11 @@ object DataIndex {
         val q = queries.select(qid.as("qid"), query.cast("array<double>").as("qv"))
           .withColumn("bucket", Similarity.rhpBucket(col("qv"), dim, nPlanes))
           .withColumn("qn2", Similarity.norm2(col("qv")))
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy("qid").orderBy(col("score").desc, col("id").asc)
-        q.join(d, "bucket")
+        val scored = q.join(d, "bucket")
           .select(col("qid"), col("id"),
             Similarity.cosinePrenorm(col("qv"), col("v"),
               col("qn2"), col("n2")).as("score"))
-          .withColumn("rank", row_number().over(w))
-          .filter(col("rank") <= k)
+        Similarity.topKPer(scored, "qid", "score", "id", k)
           .select("qid", "rank", "id", "score")
       }
     }
@@ -223,11 +221,7 @@ object DataIndex {
       def retrieve(queries: DataFrame, qid: Column, query: Column, k: Int): DataFrame = {
         val ra = a.retrieve(queries, qid, query, k)
         val rb = b.retrieve(queries, qid, query, k)
-        val fused = Bm25.rrfFuse(k0, ra, rb)
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy("qid").orderBy(col("rrf_score").desc, col("id").asc)
-        fused.withColumn("rank", row_number().over(w))
-          .filter(col("rank") <= k)
+        Similarity.topKPer(Bm25.rrfFuse(k0, ra, rb), "qid", "rrf_score", "id", k)
           .select(col("qid"), col("rank"), col("id"), col("rrf_score").as("score"))
       }
     }

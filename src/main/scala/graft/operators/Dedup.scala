@@ -1033,14 +1033,14 @@ object Dedup {
     val v0 = Caches.eager(Similarity.spread(df)
       .select(id.as("id"), vec.cast("array<double>").as("v"),
         block.as("_blk"))
-      .withColumn("_n2", Similarity.norm2(col("v"), dim)))
+      .withColumn("_n2", Similarity.norm2(col("v"))))
     // pin the per-block pairwise expansion's parallelism
     val v = Similarity.fanoutRepartition(v0, col("_blk"))
     v.as("x").join(v.as("y"),
         col("x._blk") === col("y._blk") && col("x.id") < col("y.id"))
       .select(col("x.id").as("a"), col("y.id").as("b"),
         Similarity.cosinePrenorm(col("x.v"), col("y.v"),
-          col("x._n2"), col("y._n2"), dim).as("cosine"))
+          col("x._n2"), col("y._n2")).as("cosine"))
       .filter(col("cosine") >= threshold)
   }
 
@@ -1060,14 +1060,14 @@ object Dedup {
       id: Column, vec: Column, tau: Double, dim: Int = 0): DataFrame = {
     val t = Similarity.spread(train)
       .select(id.as("id"), vec.cast("array<double>").as("v"))
-      .withColumn("_n2", Similarity.norm2(col("v"), dim))
+      .withColumn("_n2", Similarity.norm2(col("v")))
     // _hn2 > 0: a degenerate (zero-norm or NULL) held-out vector yields
     // cosine NaN against EVERY train row, and NaN >= tau is TRUE under
     // Spark's NaN-greatest ordering — one such row would silently empty
     // the whole training corpus through the anti join. Cosine to a
     // zero vector is undefined, so it contaminates nothing.
     val h = heldout.select(vec.cast("array<double>").as("_hv"))
-      .withColumn("_hn2", Similarity.norm2(col("_hv"), dim))
+      .withColumn("_hn2", Similarity.norm2(col("_hv")))
       .filter(col("_hn2") > 0)
     // symmetrically, `_n2 > 0` in the condition: a zero-norm TRAIN row's
     // NaN cosine must not count as a contamination match (it survives —
@@ -1075,7 +1075,7 @@ object Dedup {
     t.join(broadcast(h),
         col("_n2") > 0 &&
           Similarity.cosinePrenorm(col("v"), col("_hv"),
-            col("_n2"), col("_hn2"), dim) >= tau,
+            col("_n2"), col("_hn2")) >= tau,
         "left_anti")
       .select(col("id"))
   }

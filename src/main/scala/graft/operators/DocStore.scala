@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 
 /** Document-store pipeline façade (reference:
   * python/pathway/xpacks/llm/document_store.py:31 `DocumentStore` — the
@@ -828,10 +827,7 @@ object DocStore {
         .select(col("qid"), col("chunk_key"),
           Similarity.cosinePrenorm(col("_qv"), col("embedding"),
             col("_qn"), col("_dn")).as("score"))
-      val w = Window.partitionBy("qid")
-        .orderBy(col("score").desc, col("chunk_key").asc)
-      (scored.withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= k), corpus)
+      (Similarity.topKPer(scored, "qid", "score", "chunk_key", k), corpus)
     }
 
     /** Diversity retrieval — fetch the `fetch` nearest chunks by cosine,
@@ -1018,15 +1014,9 @@ object DocStore {
       val dir = DocStore.indexDirOf(path, kind)
       kind match {
         case IvfFlat(_) =>
-          val (cents, assigned0) = Similarity.ivfLoadParts(spark, dir)
-          val assigned = restrict match {
-            case None => assigned0
-            case Some(ids) => assigned0.join(
-              ids.select(col("chunk_key").as("neighbor_id")),
-              Seq("neighbor_id"), "left_semi")
-          }
+          val (cents, assigned) = Similarity.ivfLoadParts(spark, dir)
           Similarity.ivfSearch(cents, assigned, q, col("qid"),
-              col("qv"), nprobe, k, excludeSelf = false, dim = 0)
+              col("qv"), nprobe, k, excludeSelf = false, restrictTo = restrict)
             .select(col("query_id").as("qid"), col("rank"),
               col("neighbor_id").as("chunk_key"), col("cosine").as("score"))
         case BinaryCodes(rescore) =>
@@ -1163,10 +1153,7 @@ object DocStore {
     val q = broadcast(queries.select(qid.as("qid"), qtext.as("_qt")))
     val rescored = hits.join(q, "qid")
       .withColumn("_score2", scorer(col("_qt"), col("text")))
-    val w = Window.partitionBy("qid")
-      .orderBy(col("_score2").desc, col("_r1").asc)
-    rescored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    Similarity.topKPer(rescored, "qid", "_score2", "_r1", k)
       .select(col("qid") +: col("rank") +: col("doc_id") +: col("chunk_id") +:
         col("text") +: metadata.map(col) :+ col("_score2").as("score"): _*)
   }

@@ -231,6 +231,22 @@ object Hnsw {
     }
   }
 
+  /** The query side of [[topK]] / [[hnswLoadTopK]], collected for
+    * broadcast and sorted by qid. The smallness contract is enforced by
+    * [[graft.core.Small.rows]]: one job that stops fetching past
+    * `maxQueries` rows, so a giant query table can't OOM the driver
+    * before the require names the contract. */
+  private def queryRows(queries: DataFrame, qid: Column, qvec: Column,
+      maxQueries: Int, who: String): Array[(Long, Array[Double])] = {
+    val rows = graft.core.Small.rows(queries.select(qid.cast("long").as("qid"),
+      qvec.cast("array<double>").as("qv")), maxQueries)
+    require(rows.isDefined,
+      s"$who: query side exceeds the broadcast smallness contract " +
+        s"(> $maxQueries rows) — raise maxQueries deliberately or batch " +
+        s"the queries; the CORPUS side is the distributed one")
+    rows.get.map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).sortBy(_._1)
+  }
+
   /** Sharded HNSW top-k: one index per partition of `data`, queries
     * broadcast, per-shard top-k merged by a global rank window. Returns
     * (query_id, rank, neighbor_id, cosine), rank 1..k.
@@ -250,19 +266,8 @@ object Hnsw {
       exact: Boolean = false, maxQueries: Int = 100000): DataFrame = {
     val spark = data.sparkSession
     import spark.implicits._
-    // the smallness contract, enforced: limit(max+1) bounds the fetch
-    // itself (a giant query table can't OOM the driver before the check),
-    // then the require names the contract instead of a bare OOM
-    val qRows = queries.select(qid.cast("long").as("qid"),
-        qvec.cast("array<double>").as("qv"))
-      .limit(maxQueries + 1)
-      .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-      .sortBy(_._1)
-    require(qRows.length <= maxQueries,
-      s"Hnsw.topK: query side exceeds the broadcast smallness contract " +
-        s"(> $maxQueries rows) — raise maxQueries deliberately or batch " +
-        s"the queries; the CORPUS side is the distributed one")
-    val qB = spark.sparkContext.broadcast(qRows)
+    val qB = spark.sparkContext.broadcast(
+      queryRows(queries, qid, qvec, maxQueries, "Hnsw.topK"))
     val d = Similarity.spread(
       data.select(did.cast("long").as("id"), dvec.cast("array<double>").as("v")))
       .as[(Long, Array[Double])]
@@ -279,12 +284,7 @@ object Hnsw {
           .map { case (nid, cos) => (q, nid, cos) }
       }
     }.toDF("query_id", "neighbor_id", "cosine")
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    perShard.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"), col("cosine"))
+    Similarity.rankTopK(perShard, "cosine", k)
   }
 
   /** One graph per partition of `data`, dumped as parquet-ready rows
@@ -447,15 +447,8 @@ object Hnsw {
       maxQueries: Int = 100000): DataFrame = {
     import spark.implicits._
     val (g, m, efc) = openHnsw(path)
-    val qRows = queries.select(qid.cast("long").as("qid"),
-        qvec.cast("array<double>").as("qv"))
-      .limit(maxQueries + 1)
-      .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-      .sortBy(_._1)
-    require(qRows.length <= maxQueries,
-      s"Hnsw.hnswLoadTopK: query side exceeds the broadcast smallness " +
-        s"contract (> $maxQueries rows)")
-    val qB = spark.sparkContext.broadcast(qRows)
+    val qB = spark.sparkContext.broadcast(
+      queryRows(queries, qid, qvec, maxQueries, "Hnsw.hnswLoadTopK"))
     // graphs from different segments are INDEPENDENT (each was built
     // whole), so the group key is (segment, shard) — encoded into one
     // long for the shuffle
@@ -484,11 +477,6 @@ object Hnsw {
         }
       }
     }.toDF("query_id", "neighbor_id", "cosine")
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    perShard.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"), col("cosine"))
+    Similarity.rankTopK(perShard, "cosine", k)
   }
 }

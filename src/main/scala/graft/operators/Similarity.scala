@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.core.SegmentStore
@@ -18,6 +19,23 @@ import graft.core.SegmentStore.{Family, Meta}
   *    per-bucket, an equi-join Catalyst shuffles by bucket. The
   *    hyperplane weights are derived from md5 so every engine (and the
   *    DuckDB oracle) regenerates the identical planes.
+  *
+  * Every vector index family is a BUILD (encode the corpus into
+  * inverted lists or codes) plus one shared search pipeline, whose
+  * stages run in this order:
+  *  - probe ([[probeLists]], IVF families only): each query against the
+  *    broadcast centroid table, its top-`nprobe` lists kept;
+  *  - rank ([[topKPer]]): one `row_number() ≤ k` window per query, which
+  *    Spark pushes below the sort as WindowGroupLimit;
+  *  - refine ([[refine]], when `rescore > 0`): the top max(rescore, k)
+  *    candidates by the family's code score, the float vectors joined
+  *    back onto that shortlist only, ranked by an exact score. Two exact
+  *    formulas, never mixed — they are not bit-identical and each
+  *    family's oracle pins its own: [[unitDot]] (dot of L2-normalized
+  *    vectors) for PQ and IVF-PQ; [[normCosine]] ([[cosinePrenorm]])
+  *    for binary, IVF-binary and IVF-SQ.
+  * The ad-hoc retriever of a persisted family runs the very search its
+  * loader runs, over the structures its save would write.
   *
   * All vector math is built-in higher-order functions (zip_with /
   * aggregate) over array<double> — codegen'd, no UDF.
@@ -44,7 +62,7 @@ object Similarity {
   /** cosine(a, b) = dot / sqrt(|a|²·|b|²) — formula shape matters for
     * bit-parity with the oracle; keep one sqrt. */
   def cosine(a: Column, b: Column, dim: Int = 0): Column =
-    nanDiv(dot(a, b, dim), sqrt(dot(a, a, dim) * dot(b, b, dim)))
+    nanDiv(dot(a, b), sqrt(dot(a, a) * dot(b, b)))
 
   /** cosine from a pre-computed squared-norm pair — at scale the |v|²
     * must be computed once per ROW, not once per PAIR (cuts 2/3 of the
@@ -52,7 +70,7 @@ object Similarity {
     * because dot(v,v) is the same fold either way. */
   def cosinePrenorm(a: Column, b: Column, na2: Column, nb2: Column,
       dim: Int = 0): Column =
-    nanDiv(dot(a, b, dim), sqrt(na2 * nb2))
+    nanDiv(dot(a, b), sqrt(na2 * nb2))
 
   /** IEEE division for the cosine denominators: Spark 4's ANSI mode
     * RAISES on x/0 even for doubles, so ONE zero-norm vector anywhere
@@ -69,7 +87,7 @@ object Similarity {
     when(den === 0.0, lit(Double.NaN)).otherwise(num / den)
 
   /** Squared L2 norm. */
-  def norm2(v: Column, dim: Int = 0): Column = dot(v, v, dim)
+  def norm2(v: Column, dim: Int = 0): Column = dot(v, v)
 
   /** Explicit-N repartition by `keys` ahead of a fan-out join.
     *
@@ -95,31 +113,149 @@ object Similarity {
   private[operators] def spread(df: DataFrame): DataFrame =
     graft.core.Par.spread(df)
 
+  // -------------------------------------------------------------------
+  // The shared search pipeline: probe → rank → refine (see the object
+  // scaladoc). Column contract: queries are (query_id, qv[, qn2]),
+  // corpus rows (neighbor_id, …), centroids (cid, cv, cn2).
+
+  /** Rank stage: `rank` = row_number over `part`, ordered by `score`
+    * (descending; ascending for a distance) then `id`, rows with
+    * rank ≤ k kept. The filter-on-row_number shape is what Spark pushes
+    * below the window's sort as WindowGroupLimit (PlanSpec pins it), so
+    * each sort keeps at most k rows per key. */
+  private[operators] def topKPer(df: DataFrame, part: String, score: String,
+      id: String, k: Int, ascending: Boolean = false): DataFrame = {
+    val w = Window.partitionBy(part)
+      .orderBy(if (ascending) col(score).asc else col(score).desc, col(id).asc)
+    df.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+  }
+
+  /** [[topKPer]] per query over candidate rows →
+    * (query_id, rank, neighbor_id, `score`), ties to the smaller id. */
+  private[operators] def rankTopK(cand: DataFrame, score: String, k: Int,
+      ascending: Boolean = false): DataFrame =
+    topKPer(cand, "query_id", score, "neighbor_id", k, ascending)
+      .select(col("query_id"), col("rank"), col("neighbor_id"), col(score))
+
+  /** Probe stage of the IVF families: each query row (query_id, qv,
+    * qn2, `carry`…) scored against the broadcast centroid table by
+    * cosine, its `nprobe` nearest lists kept → (query_id, carry…, cid),
+    * ties to the smaller cid.
+    *
+    * NOTE the (query_id, cid) repartition keys (see
+    * [[fanoutRepartition]]): repartitioning on query_id alone is
+    * statically identical to the rank window's own exchange, Catalyst
+    * elides it as redundant, and AQE then coalesces the window exchange
+    * to one partition anyway. PlanSpec pins the two-key exchange. */
+  private def probeLists(q: DataFrame, cents: DataFrame, nprobe: Int,
+      carry: String*): DataFrame = {
+    val keep = col("query_id") +: carry.map(col)
+    val scored = q.crossJoin(broadcast(cents))
+      .select(keep ++ Seq(col("cid"),
+        cosinePrenorm(col("qv"), col("cv"), col("qn2"), col("cn2")).as("cc")): _*)
+    fanoutRepartition(
+      topKPer(scored, "query_id", "cc", "cid", nprobe).select(keep :+ col("cid"): _*),
+      col("query_id"), col("cid"))
+  }
+
+  /** Self-match condition of a (query, neighbor) pair expansion; the
+    * optimizer drops a `lit(true)` filter. Pass excludeSelf = false when
+    * queries and corpus are different tables whose id spaces can
+    * coincide — a hard-coded self-exclusion there silently drops a true
+    * nearest neighbor on an accidental id collision. */
+  private def pairCond(excludeSelf: Boolean): Column =
+    if (excludeSelf) col("query_id") =!= col("neighbor_id") else lit(true)
+
+  /** Exact score of PQ and IVF-PQ refines: the dot of L2-normalized
+    * query and corpus vectors (`qv`, `dv`). */
+  private def unitDot: Column = dot(col("qv"), col("dv"))
+
+  /** Exact score of binary, IVF-binary and IVF-SQ refines (and of the
+    * float searches): [[cosinePrenorm]] over `qv`/`dv` and the squared
+    * norms `qn2`/`dn2` their rows carry. */
+  private def normCosine: Column =
+    cosinePrenorm(col("qv"), col("dv"), col("qn2"), col("dn2"))
+
+  /** Refine stage: each query's top max(rescore, k) candidates by the
+    * code `score` (ascending for Hamming), the floats joined back onto
+    * that shortlist only — `qf` (query_id, qv[, qn2]) by query id, `df`
+    * (neighbor_id, dv[, dn2]) by neighbor id — and ranked by `exact` →
+    * (query_id, rank, neighbor_id, cosine). Candidate rows reach the
+    * shortlist window with ids and the code score only: the pair
+    * expansion never carries a float vector, which is the memory
+    * argument for codes. The shortlist (|q|·max(rescore, k) rows)
+    * broadcasts, so the float corpus is scanned, never shuffled. */
+  private def refine(cand: DataFrame, score: String, ascending: Boolean,
+      rescore: Int, k: Int, qf: DataFrame, df: DataFrame,
+      exact: Column): DataFrame = {
+    val short = topKPer(cand, "query_id", score, "neighbor_id",
+        math.max(rescore, k), ascending)
+      .select(col("query_id"), col("neighbor_id"))
+    rankTopK(broadcast(short.join(broadcast(qf), Seq("query_id")))
+        .join(df, Seq("neighbor_id"))
+        .select(col("query_id"), col("neighbor_id"), exact.as("cosine")),
+      "cosine", k)
+  }
+
+  /** `restrictTo` applied once, in the shared searches: exactly ONE id
+    * column, semi-joined against the lists/codes BEFORE ranking — the
+    * push-the-filter-into-the-index contract: k survivors come from
+    * matching ids only, never a lossy post-filter of unfiltered hits.
+    * The one-column check is loud because a multi-column frame would
+    * otherwise filter by whichever column came first — a wrong-column
+    * mistake with no error. */
+  private def restricted(rows: DataFrame, restrictTo: Option[DataFrame]): DataFrame =
+    restrictTo.fold(rows) { ids =>
+      require(ids.columns.length == 1,
+        "restrictTo must be a single-id-column DataFrame (the ids to keep); " +
+          s"got columns [${ids.columns.mkString(", ")}] — select the id " +
+          "column first")
+      rows.join(ids.toDF("neighbor_id"), Seq("neighbor_id"), "left_semi")
+    }
+
+  /** Hamming distance of packed query codes `qb` to corpus codes `db`.
+    * A NULL hamming (NULL embedding, ragged packing) must not enter the
+    * ASCENDING rank window: Spark sorts NULLS FIRST there, which would
+    * hand the malformed row rank 1 of every query (and DuckDB sorts
+    * NULLS LAST — the cross-engine trap CLAUDE.md pins). */
+  private def hammingOf(pairs: DataFrame, qb: String, db: String): DataFrame =
+    pairs.select(col("query_id"), col("neighbor_id"),
+        graft.plans.VecExprs.hamming(col(qb), col(db)).as("hamming"))
+      .filter(col("hamming").isNotNull)
+
+  private def queryFloats(queries: DataFrame, qid: Column, qvec: Column): DataFrame =
+    queries.select(qid.as("query_id"), qvec.cast("array<double>").as("qv"))
+
+  private def corpusFloats(data: DataFrame, did: Column, dvec: Column): DataFrame =
+    data.select(did.as("neighbor_id"), dvec.cast("array<double>").as("dv"))
+
+  /** Build-side rows (id, v) of a corpus, spread to the session's
+    * parallelism. */
+  private def buildRows(data: DataFrame, did: Column, dvec: Column): DataFrame =
+    spread(data).select(did.as("id"), dvec.cast("array<double>").as("v"))
+
+  /** Every query row against every data row (self ids excluded), scored
+    * by exact cosine → (query_id, neighbor_id, cosine). The query side
+    * is spread before the |q|×|d| expansion: a small query table arrives
+    * in one input split and the whole scoring loop would otherwise run
+    * in that single task. */
+  private def exactPairs(queries: DataFrame, data: DataFrame,
+      qid: Column, qvec: Column, did: Column, dvec: Column): DataFrame = {
+    val q = fanoutRepartition(queryFloats(queries, qid, qvec)
+      .withColumn("qn2", norm2(col("qv"))), col("query_id"))
+    val d = corpusFloats(data, did, dvec).withColumn("dn2", norm2(col("dv")))
+    q.join(d, pairCond(excludeSelf = true))
+      .select(col("query_id"), col("neighbor_id"), normCosine.as("cosine"))
+  }
+
   /** Exact brute-force top-k by cosine: every query row against every
     * data row (broadcast data when it fits). Returns
     * (query_id, rank, neighbor_id, cosine), rank 1..k,
     * ties broken by neighbor id. */
   def bruteForceTopK(queries: DataFrame, data: DataFrame,
       qid: Column, qvec: Column, did: Column, dvec: Column,
-      k: Int, dim: Int = 0): DataFrame = {
-    // spread the query side before the |q|x|d| expansion: a small query
-    // table arrives in one input split and the whole scoring loop would
-    // otherwise run in that single task
-    val q = fanoutRepartition(
-      queries.select(qid.as("query_id"), qvec.cast("array<double>").as("qv"))
-        .withColumn("qn", norm2(col("qv"), dim)), col("query_id"))
-    val d = data.select(did.as("neighbor_id"), dvec.cast("array<double>").as("dv"))
-      .withColumn("dn", norm2(col("dv"), dim))
-    val scored = q.join(d, col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        cosinePrenorm(col("qv"), col("dv"), col("qn"), col("dn"), dim).as("cosine"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"), col("cosine"))
-  }
+      k: Int, dim: Int = 0): DataFrame =
+    rankTopK(exactPairs(queries, data, qid, qvec, did, dvec), "cosine", k)
 
   /** Default per-band bucket-occupancy target for [[lshCluster]]'s
     * derived geometry: small buckets keep near-dup clusters tight and
@@ -177,8 +313,7 @@ object Similarity {
     * singletons keep their own id. */
   def lshCluster(df: DataFrame, id: Column, vec: Column, dim: Int,
       planesPerBand: Int = 0, bands: Int = 2): DataFrame = {
-    val v = graft.core.Caches.eager(
-      spread(df).select(id.as("id"), vec.cast("array<double>").as("v")))
+    val v = graft.core.Caches.eager(buildRows(df, id, vec))
     // the eager cache above already ran a count job — this one is a
     // cache-metadata hit, so the derivation costs no extra scan
     val pp = if (planesPerBand > 0) planesPerBand
@@ -187,7 +322,7 @@ object Similarity {
       v.select(col("id"), lit(b).as("band"),
         rhpBucketSlice(col("v"), dim, b * pp, pp).as("bk"))
     }.reduce(_ unionByName _)
-    val wmin = org.apache.spark.sql.expressions.Window.partitionBy("band", "bk")
+    val wmin = Window.partitionBy("band", "bk")
     val edges = banded.withColumn("m", min(col("id")).over(wmin))
       .filter(col("id") =!= col("m"))
       .select(col("id").as("src"), col("m").as("dst"))
@@ -215,7 +350,7 @@ object Similarity {
   def ivfTopK(df: DataFrame, id: Column, vec: Column,
       nlist: Int, nprobe: Int, k: Int, dim: Int = 0): DataFrame =
     ivfRetrieve(df, df, id, vec, id, vec, nlist, nprobe, k,
-      excludeSelf = true, dim = dim)
+      excludeSelf = true)
 
   /** Two-sided IVF retrieval — see [[ivfTopK]] for the structure. The
     * centroid sample comes from the DATA side; queries only probe. */
@@ -223,26 +358,30 @@ object Similarity {
       qid: Column, qvec: Column, did: Column, dvec: Column,
       nlist: Int, nprobe: Int, k: Int,
       excludeSelf: Boolean = false, dim: Int = 0): DataFrame = {
-    val (cents, assigned) = ivfBuild(data, did, dvec, nlist, dim)
-    ivfSearch(cents, assigned, queries, qid, qvec, nprobe, k, excludeSelf, dim)
+    val (cents, assigned) = ivfBuild(data, did, dvec, nlist)
+    ivfSearch(cents, assigned, queries, qid, qvec, nprobe, k, excludeSelf)
   }
+
+  /** Coarse quantizer: the `nlist` rows of `d` (id, v, n2) with the
+    * smallest md5(id), as a centroid table (cid, cv, cn2). v.isNotNull:
+    * a NULL embedding sampled into the centroid set would reach the
+    * driver-side collect in assignToCents and NPE the job (NULL corpus
+    * rows themselves are fine — they assign to no list). */
+  private def sampleCents(d: DataFrame, nlist: Int): DataFrame =
+    graft.core.Caches.eager(
+      d.filter(col("v").isNotNull)
+        .select(col("id").as("cid"), col("v").as("cv"), col("n2").as("cn2"))
+        .orderBy(md5(col("cid").cast("string"))).limit(nlist))
 
   /** Build the two IVF structures: the centroid table (cid, cv, cn2) and
     * the inverted-list assignment (neighbor_id, cid, dv, dn2). */
   private[graft] def ivfBuild(data: DataFrame, did: Column, dvec: Column,
-      nlist: Int, dim: Int): (DataFrame, DataFrame) = {
+      nlist: Int): (DataFrame, DataFrame) = {
     // eager: d is referenced by the centroid sample, the assignment
     // scan and the candidate join — see Caches.eager for the lock story
     val d = graft.core.Caches.eager(
-      spread(data).select(did.as("id"), dvec.cast("array<double>").as("v"))
-        .withColumn("n2", norm2(col("v"), dim)))
-    // v.isNotNull: a NULL embedding sampled into the centroid set would
-    // reach the driver-side collect in assignToCents and NPE the job
-    // (NULL corpus rows themselves are fine — they assign to no list)
-    val cents = graft.core.Caches.eager(
-      d.filter(col("v").isNotNull)
-        .select(col("id").as("cid"), col("v").as("cv"), col("n2").as("cn2"))
-        .orderBy(md5(col("cid").cast("string"))).limit(nlist))
+      buildRows(data, did, dvec).withColumn("n2", norm2(col("v"))))
+    val cents = sampleCents(d, nlist)
     // data side: each vector lands in exactly one list (argmax cosine,
     // tie -> smallest cid) — one native one-pass expression per row
     // against the collected centroid matrix (NearestCentroidExpr: the
@@ -271,37 +410,18 @@ object Similarity {
       graft.plans.VecExprs.nearestCentroidOf(col("v"), rows.toSeq)))
   }
 
-  /** Query-side half of IVF retrieval over pre-built structures. */
+  /** The IVF-flat search shared by [[ivfRetrieve]], [[ivfLoadRetrieve]]
+    * and the document store: probe, exact cosine inside the probed
+    * lists, rank. */
   private[graft] def ivfSearch(cents: DataFrame, assigned: DataFrame,
       queries: DataFrame, qid: Column, qvec: Column,
-      nprobe: Int, k: Int, excludeSelf: Boolean, dim: Int): DataFrame = {
-    // query side: probe the nprobe nearest lists
-    val q = queries.select(qid.as("query_id"), qvec.cast("array<double>").as("qv"))
-      .withColumn("qn2", norm2(col("qv"), dim))
-    val qScored = q.crossJoin(broadcast(cents))
-      .select(col("query_id"), col("qv"), col("qn2"), col("cid"),
-        cosinePrenorm(col("qv"), col("cv"), col("qn2"), col("cn2"), dim).as("cc"))
-    val wp = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(col("cc").desc, col("cid").asc)
-    // NOTE the (query_id, cid) keys: repartitioning on query_id alone is
-    // statically identical to the rank-window's own exchange, Catalyst
-    // elides it as redundant, and AQE then coalesces the window exchange
-    // to one partition anyway
-    val probes = fanoutRepartition(
-      qScored.withColumn("_pr", row_number().over(wp))
-        .filter(col("_pr") <= nprobe)
-        .select(col("query_id"), col("qv"), col("qn2"), col("cid")),
-      col("query_id"), col("cid"))
-    val cand0 = probes.join(assigned, Seq("cid"))
-    val cand = (if (excludeSelf) cand0.filter(col("query_id") =!= col("neighbor_id"))
-      else cand0)
-      .select(col("query_id"), col("neighbor_id"),
-        cosinePrenorm(col("qv"), col("dv"), col("qn2"), col("dn2"), dim).as("cosine"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    cand.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"), col("cosine"))
+      nprobe: Int, k: Int, excludeSelf: Boolean,
+      restrictTo: Option[DataFrame] = None): DataFrame = {
+    val q = queryFloats(queries, qid, qvec).withColumn("qn2", norm2(col("qv")))
+    val cand = probeLists(q, cents, nprobe, "qv", "qn2")
+      .join(restricted(assigned, restrictTo), Seq("cid")).filter(pairCond(excludeSelf))
+      .select(col("query_id"), col("neighbor_id"), normCosine.as("cosine"))
+    rankTopK(cand, "cosine", k)
   }
 
   /** Persist an IVF index as two parquet tables under `path`:
@@ -322,7 +442,7 @@ object Similarity {
     * the old or the new index — never new centroids over old lists. */
   def ivfSave(data: DataFrame, did: Column, dvec: Column, path: String,
       nlist: Int, dim: Int = 0): Unit = {
-    val (cents, assigned) = ivfBuild(data, did, dvec, nlist, dim)
+    val (cents, assigned) = ivfBuild(data, did, dvec, nlist)
     SegmentStore.save(path, Meta(Family.Ivf), assigned, "centroids" -> cents)
     ()
   }
@@ -349,19 +469,16 @@ object Similarity {
       newData: DataFrame, did: Column, dvec: Column, dim: Int = 0): Long = {
     val g = SegmentStore.open(path).of(Family.Ivf)
     SegmentStore.append(g, Meta(Family.Ivf),
-      assignVectors(newData, did, dvec, g.side(spark, "centroids"), dim))
+      assignVectors(newData, did, dvec, g.side(spark, "centroids")))
   }
 
   /** Assign vectors to FIXED centroids — the map-side half of
     * [[ivfBuild]] (argmax cosine, tie → smallest cid), one
     * [[assignToCents]] pass per row. */
   private[graft] def assignVectors(data: DataFrame, did: Column,
-      dvec: Column, cents: DataFrame, dim: Int): DataFrame =
+      dvec: Column, cents: DataFrame): DataFrame =
     assignToCents(
-      spread(data)
-        .select(did.as("id"), dvec.cast("array<double>").as("v"))
-        .withColumn("n2", norm2(col("v"), dim)),
-      cents)
+      buildRows(data, did, dvec).withColumn("n2", norm2(col("v"))), cents)
 
   /** Load the committed generation's (centroids, inverted lists) pair —
     * lists unioned across the manifest's segments, cid re-cast to the
@@ -382,7 +499,7 @@ object Similarity {
       nprobe: Int, k: Int, excludeSelf: Boolean = false,
       dim: Int = 0): DataFrame = {
     val (cents, assigned) = ivfLoadParts(spark, path)
-    ivfSearch(cents, assigned, queries, qid, qvec, nprobe, k, excludeSelf, dim)
+    ivfSearch(cents, assigned, queries, qid, qvec, nprobe, k, excludeSelf)
   }
 
   /** Int8 scalar quantization of an embedding column (beyond the
@@ -429,6 +546,12 @@ object Similarity {
           (x, nn) => x / nn))
       .drop("_norm")
 
+  /** The int8 score s_q·s_d·(codes_q·codes_d) of query (qs, qc) and
+    * corpus (ds, dc) codes — exact in double (|sum| < 2^53). */
+  private def sq8Score: Column =
+    col("qs") * col("ds") * dot(col("qc").cast("array<double>"),
+      col("dc").cast("array<double>"))
+
   /** Brute-force top-k over int8-quantized UNIT vectors: vectors are
     * L2-normalized first, so score = s_q·s_d·(codes_q·codes_d)
     * approximates cosine — the same metric [[bruteForceTopK]] ranks by.
@@ -441,30 +564,17 @@ object Similarity {
     *
     * Same join shape as [[bruteForceTopK]]; at scale the quantized
     * corpus is what gets broadcast/shuffled, which is the point.
-    * Composes with IVF: quantize inside each inverted list and rank by
-    * integer dot, re-scoring the top candidates exactly if needed. */
+    * Composes with IVF: [[ivfQuantizedRetrieve]]. */
   def quantizedTopK(queries: DataFrame, data: DataFrame,
       qid: Column, qvec: Column, did: Column, dvec: Column,
       k: Int): DataFrame = {
     val q = fanoutRepartition(
-      quantizeInt8(
-        l2normalize(queries.select(qid.as("query_id"),
-          qvec.cast("array<double>").as("_qv")), "_qv"),
-        col("_qv"), "qs", "qc").drop("_qv"), col("query_id"))
-    val d = quantizeInt8(
-      l2normalize(data.select(did.as("neighbor_id"),
-        dvec.cast("array<double>").as("_dv")), "_dv"),
-      col("_dv"), "ds", "dc").drop("_dv")
-    val scored = q.join(d, col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        (col("qs") * col("ds") * dot(col("qc").cast("array<double>"),
-          col("dc").cast("array<double>"))).as("score"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id")
-      .orderBy(col("score").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"), col("score"))
+      quantizeInt8(l2normalize(queryFloats(queries, qid, qvec), "qv"),
+        col("qv"), "qs", "qc").drop("qv"), col("query_id"))
+    val d = quantizeInt8(l2normalize(corpusFloats(data, did, dvec), "dv"),
+      col("dv"), "ds", "dc").drop("dv")
+    rankTopK(q.join(d, pairCond(excludeSelf = true))
+      .select(col("query_id"), col("neighbor_id"), sq8Score.as("score")), "score", k)
   }
 
   // -------------------------------------------------------------------
@@ -478,22 +588,17 @@ object Similarity {
 
   /** Build IVF-SQ structures: float centroid table (cid, cv, cn2) and
     * quantized inverted lists (neighbor_id, cid, ds, dc, dv, dn2) — the
-    * float vector rides along for the optional exact re-score; drop
-    * `dv`/`dn2` downstream when rescore is never used and the 8× memory
-    * win should be fully realized. Vectors are L2-normalized first so
-    * the integer dot approximates cosine (see [[quantizedTopK]]). */
+    * float vector stays on the lists for the optional exact re-score,
+    * which joins it back onto the shortlist; drop `dv`/`dn2` downstream
+    * when rescore is never used and the 8× memory win should be fully
+    * realized. Vectors are L2-normalized first so the integer dot
+    * approximates cosine (see [[quantizedTopK]]). */
   private[graft] def ivfQuantizedBuild(data: DataFrame, did: Column,
-      dvec: Column, nlist: Int, dim: Int): (DataFrame, DataFrame) = {
-    val d0 = l2normalize(
-      spread(data).select(did.as("id"), dvec.cast("array<double>").as("v")), "v")
+      dvec: Column, nlist: Int): (DataFrame, DataFrame) = {
     val d = graft.core.Caches.eager(
-      quantizeInt8(d0, col("v"), "ds", "dc")
-        .withColumn("n2", norm2(col("v"), dim)))
-    // see ivfBuild on the isNotNull guard
-    val cents = graft.core.Caches.eager(
-      d.filter(col("v").isNotNull)
-        .select(col("id").as("cid"), col("v").as("cv"), col("n2").as("cn2"))
-        .orderBy(md5(col("cid").cast("string"))).limit(nlist))
+      quantizeInt8(l2normalize(buildRows(data, did, dvec), "v"), col("v"), "ds", "dc")
+        .withColumn("n2", norm2(col("v"))))
+    val cents = sampleCents(d, nlist)
     // same one-pass assignment as ivfBuild, int8 codes riding along
     (cents, assignToCents(d, cents, keep = Seq("ds", "dc")))
   }
@@ -510,53 +615,16 @@ object Similarity {
       qid: Column, qvec: Column, did: Column, dvec: Column,
       nlist: Int, nprobe: Int, k: Int, rescore: Int = 0,
       excludeSelf: Boolean = false, dim: Int = 0): DataFrame = {
-    val (cents, assigned) = ivfQuantizedBuild(data, did, dvec, nlist, dim)
-    val q0 = l2normalize(
-      queries.select(qid.as("query_id"), qvec.cast("array<double>").as("qv")), "qv")
-    val q = quantizeInt8(q0, col("qv"), "qs", "qc")
-      .withColumn("qn2", norm2(col("qv"), dim))
-    val qScored = q.crossJoin(broadcast(cents))
-      .select(col("query_id"), col("qv"), col("qn2"), col("qs"), col("qc"),
-        col("cid"),
-        cosinePrenorm(col("qv"), col("cv"), col("qn2"), col("cn2"), dim).as("cc"))
-    val wp = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(col("cc").desc, col("cid").asc)
-    val probes = fanoutRepartition(
-      qScored.withColumn("_pr", row_number().over(wp))
-        .filter(col("_pr") <= nprobe)
-        .select(col("query_id"), col("qv"), col("qn2"), col("qs"), col("qc"),
-          col("cid")),
-      col("query_id"), col("cid"))
-    val cand0 = probes.join(assigned, Seq("cid"))
-    val cand = (if (excludeSelf) cand0.filter(col("query_id") =!= col("neighbor_id"))
-      else cand0)
-      .select(col("query_id"), col("neighbor_id"),
-        (col("qs") * col("ds") * dot(col("qc").cast("array<double>"),
-          col("dc").cast("array<double>"))).as("qscore"),
-        col("qv"), col("qn2"), col("dv"), col("dn2"))
-    val wq = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id")
-      .orderBy(col("qscore").desc, col("neighbor_id").asc)
-    if (rescore <= 0)
-      cand.withColumn("rank", row_number().over(wq))
-        .filter(col("rank") <= k)
-        .select(col("query_id"), col("rank"), col("neighbor_id"),
-          col("qscore").as("score"))
-    else {
-      // exact float cosine only on the short integer-ranked list — the
-      // expensive fold runs on ≤ max(rescore, k) rows per query
-      val short = cand.withColumn("_qr", row_number().over(wq))
-        .filter(col("_qr") <= math.max(rescore, k))
-        .select(col("query_id"), col("neighbor_id"),
-          cosinePrenorm(col("qv"), col("dv"), col("qn2"), col("dn2"), dim)
-            .as("cosine"))
-      val wr = org.apache.spark.sql.expressions.Window
-        .partitionBy("query_id")
-        .orderBy(col("cosine").desc, col("neighbor_id").asc)
-      short.withColumn("rank", row_number().over(wr))
-        .filter(col("rank") <= k)
-        .select(col("query_id"), col("rank"), col("neighbor_id"), col("cosine"))
-    }
+    val (cents, assigned) = ivfQuantizedBuild(data, did, dvec, nlist)
+    val qf = l2normalize(queryFloats(queries, qid, qvec), "qv")
+      .withColumn("qn2", norm2(col("qv")))
+    val q = quantizeInt8(qf, col("qv"), "qs", "qc")
+    val cand = probeLists(q, cents, nprobe, "qs", "qc")
+      .join(assigned, Seq("cid")).filter(pairCond(excludeSelf))
+      .select(col("query_id"), col("neighbor_id"), sq8Score.as("score"))
+    if (rescore <= 0) rankTopK(cand, "score", k)
+    else refine(cand, "score", ascending = false, rescore, k, qf,
+      assigned.select(col("neighbor_id"), col("dv"), col("dn2")), normCosine)
   }
 
   /** 1-bit sign quantization of an embedding column (beyond the
@@ -577,68 +645,23 @@ object Similarity {
       graft.plans.VecExprs.signPack(vec.cast("array<double>")))
 
   /** Brute-force top-k by Hamming distance over [[binarySignQuantize]]d
-    * codes. The pair rows carry ONLY the packed codes (8·ceil(dim/64)
-    * bytes — 16 B at dim 64) and the score is one codegen'd XOR-popcount
-    * pass ([[graft.plans.HammingExpr]]) — exact integers, so the ranking
-    * has zero float-summation ambiguity. With `rescore > 0` the top
-    * max(rescore, k) Hamming candidates are re-scored by exact float
-    * cosine, with the floats JOINED BACK by id on the shortlist only —
-    * the full pair expansion never touches a float vector, which is the
-    * entire memory argument for binary codes. Emits
-    * (query_id, rank, neighbor_id, hamming) without rescore,
+    * codes — the codes [[binarySave]] would persist, searched exactly as
+    * [[binaryLoadTopK]] searches them. The pair rows carry ONLY the
+    * packed codes (8·ceil(dim/64) bytes — 16 B at dim 64) and the score
+    * is one codegen'd XOR-popcount pass ([[graft.plans.HammingExpr]]) —
+    * exact integers, so the ranking has zero float-summation ambiguity.
+    * With `rescore > 0` the top max(rescore, k) Hamming candidates are
+    * re-scored by exact float cosine, with the floats JOINED BACK by id
+    * on the shortlist only — the full pair expansion never touches a
+    * float vector, which is the entire memory argument for binary codes.
+    * Emits (query_id, rank, neighbor_id, hamming) without rescore,
     * (query_id, rank, neighbor_id, cosine) with. */
   def binaryTopK(queries: DataFrame, data: DataFrame,
       qid: Column, qvec: Column, did: Column, dvec: Column,
       k: Int, rescore: Int = 0, dim: Int = 0,
-      excludeSelf: Boolean = true): DataFrame = {
-    val qf = queries.select(qid.as("query_id"),
-      qvec.cast("array<double>").as("qv"))
-    val df0 = data.select(did.as("neighbor_id"),
-      dvec.cast("array<double>").as("dv"))
-    val q = fanoutRepartition(
-      binarySignQuantize(qf, col("qv"), "qb").drop("qv"), col("query_id"))
-    val d = binarySignQuantize(df0, col("dv"), "db").drop("dv")
-    // excludeSelf mirrors binaryLoadTopK/ivfBinaryRetrieve: pass false
-    // when queries and corpus are different tables whose id spaces can
-    // coincide — a hard-coded self-exclusion there silently dropped a
-    // true nearest neighbor on an accidental id collision
-    val scored = q.join(d,
-        if (excludeSelf) col("query_id") =!= col("neighbor_id") else lit(true))
-      .select(col("query_id"), col("neighbor_id"),
-        graft.plans.VecExprs.hamming(col("qb"), col("db")).as("hamming"))
-      // a NULL hamming (NULL embedding, ragged packing) must not enter
-      // the ASCENDING rank window: Spark sorts NULLS FIRST there, which
-      // would hand the malformed row rank 1 of every query (and DuckDB
-      // sorts NULLS LAST — the cross-engine trap CLAUDE.md pins)
-      .filter(col("hamming").isNotNull)
-    val wh = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(col("hamming").asc, col("neighbor_id").asc)
-    if (rescore <= 0)
-      scored.withColumn("rank", row_number().over(wh))
-        .filter(col("rank") <= k)
-        .select(col("query_id"), col("rank"), col("neighbor_id"), col("hamming"))
-    else {
-      val short = scored.withColumn("_qr", row_number().over(wh))
-        .filter(col("_qr") <= math.max(rescore, k))
-        .select(col("query_id"), col("neighbor_id"))
-      // floats only for |q|·max(rescore,k) shortlist rows: the query
-      // side broadcasts (|q| rows), the corpus side is an equi-join
-      // that touches only matched ids
-      val resc = short
-        .join(broadcast(qf.withColumn("qn2", norm2(col("qv"), dim))),
-          Seq("query_id"))
-        .join(df0.withColumn("dn2", norm2(col("dv"), dim)), Seq("neighbor_id"))
-        .select(col("query_id"), col("neighbor_id"),
-          cosinePrenorm(col("qv"), col("dv"), col("qn2"), col("dn2"), dim)
-            .as("cosine"))
-      val wr = org.apache.spark.sql.expressions.Window
-        .partitionBy("query_id")
-        .orderBy(col("cosine").desc, col("neighbor_id").asc)
-      resc.withColumn("rank", row_number().over(wr))
-        .filter(col("rank") <= k)
-        .select(col("query_id"), col("rank"), col("neighbor_id"), col("cosine"))
-    }
-  }
+      excludeSelf: Boolean = true): DataFrame =
+    binarySearch(binaryCodesOf(data, did, dvec), queries, qid, qvec, k,
+      rescore, Some((data, did, dvec)), excludeSelf, None)
 
   /** Contrastive hard-negative mining — the embedding-training pair
     * miner: for every anchor, the top-k most-similar OTHER rows whose
@@ -658,22 +681,11 @@ object Similarity {
       aid: Column, avec: Column, did: Column, dvec: Column,
       k: Int, loSim: Double, hiSim: Double, dim: Int = 0): DataFrame = {
     require(loSim < hiSim, s"hardNegatives: need loSim < hiSim, got [$loSim, $hiSim)")
-    val a = fanoutRepartition(
-      anchors.select(aid.as("anchor_id"), avec.cast("array<double>").as("av"))
-        .withColumn("an", norm2(col("av"), dim)), col("anchor_id"))
-    val d = data.select(did.as("negative_id"), dvec.cast("array<double>").as("dv"))
-      .withColumn("dn", norm2(col("dv"), dim))
-    val scored = a.join(d, col("anchor_id") =!= col("negative_id"))
-      .select(col("anchor_id"), col("negative_id"),
-        cosinePrenorm(col("av"), col("dv"), col("an"), col("dn"), dim)
-          .as("cosine"))
+    val scored = exactPairs(anchors, data, aid, avec, did, dvec)
       .filter(col("cosine") >= loSim && col("cosine") < hiSim)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("anchor_id")
-      .orderBy(col("cosine").desc, col("negative_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("anchor_id"), col("rank"), col("negative_id"), col("cosine"))
+    rankTopK(scored, "cosine", k)
+      .select(col("query_id").as("anchor_id"), col("rank"),
+        col("neighbor_id").as("negative_id"), col("cosine"))
   }
 
   /** Maximal-marginal-relevance re-selection over a retrieval shortlist
@@ -736,29 +748,14 @@ object Similarity {
 
   private def binaryCodesOf(data: DataFrame, did: Column,
       dvec: Column): DataFrame =
-    binarySignQuantize(
-      spread(data).select(did.as("neighbor_id"),
-        dvec.cast("array<double>").as("_v")),
-      col("_v"), "bcodes").select(col("neighbor_id"), col("bcodes"))
+    binarySignQuantize(buildRows(data, did, dvec), col("v"), "bcodes")
+      .select(col("id").as("neighbor_id"), col("bcodes"))
 
   /** The committed generation's code table — the rows of every code
     * family (binary, PQ, IVF-PQ), manifest segments unioned. */
   private[graft] def binaryLoadParts(
       spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
     SegmentStore.open(path).rows(spark)
-
-  /** `restrictTo` contract check shared by the persisted-index loaders:
-    * exactly ONE id column, renamed to neighbor_id for the pre-rank
-    * semi-join. Silently taking columns.head accepted a multi-column
-    * frame and filtered by whatever its first column happened to be —
-    * a wrong-column mistake with no error. */
-  private def restrictIds(ids: DataFrame): DataFrame = {
-    require(ids.columns.length == 1,
-      "restrictTo must be a single-id-column DataFrame (the ids to keep); " +
-        s"got columns [${ids.columns.mkString(", ")}] — select the id " +
-        "column first")
-    ids.toDF("neighbor_id")
-  }
 
   /** Query a [[binarySave]]d index: Hamming rank over the persisted
     * codes (narrow pair rows, NULL-hamming dropped before the ascending
@@ -779,49 +776,30 @@ object Similarity {
     require(rescore <= 0 || rescoreAgainst.isDefined,
       s"binaryLoadTopK: rescore = $rescore needs rescoreAgainst — the index " +
         "persists codes only, the refine stage must be given the float corpus")
-    val codes0 = SegmentStore.open(path).of(Family.Binary).rows(spark)
-    val codes = restrictTo match {
-      case None => codes0
-      case Some(ids) => codes0.join(
-        restrictIds(ids),
-        Seq("neighbor_id"), "left_semi")
-    }
-    val qf = queries.select(qid.as("query_id"),
-      qvec.cast("array<double>").as("qv"))
+    binarySearch(SegmentStore.open(path).of(Family.Binary).rows(spark),
+      queries, qid, qvec, k, rescore, rescoreAgainst, excludeSelf, restrictTo)
+  }
+
+  /** The binary search shared by [[binaryTopK]] and [[binaryLoadTopK]]:
+    * Hamming rank of the packed query codes over `codes`
+    * (neighbor_id, bcodes), refined by [[normCosine]] against the float
+    * corpus `against` when `rescore > 0`. */
+  private def binarySearch(codes: DataFrame, queries: DataFrame,
+      qid: Column, qvec: Column, k: Int, rescore: Int,
+      against: Option[(DataFrame, Column, Column)], excludeSelf: Boolean,
+      restrictTo: Option[DataFrame]): DataFrame = {
+    val qf = queryFloats(queries, qid, qvec)
     val q = fanoutRepartition(
       binarySignQuantize(qf, col("qv"), "qb").drop("qv"), col("query_id"))
-    val scored = q.join(codes,
-        if (excludeSelf) col("query_id") =!= col("neighbor_id") else lit(true))
-      .select(col("query_id"), col("neighbor_id"),
-        graft.plans.VecExprs.hamming(col("qb"), col("bcodes")).as("hamming"))
-      .filter(col("hamming").isNotNull)
-    val wh = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(col("hamming").asc, col("neighbor_id").asc)
-    (rescore, rescoreAgainst) match {
-      case (r, Some((data, did, dvec))) if r > 0 =>
-        val short = scored.withColumn("_qr", row_number().over(wh))
-          .filter(col("_qr") <= math.max(r, k))
-          .select(col("query_id"), col("neighbor_id"))
-        val dfull = data.select(did.as("neighbor_id"),
-          dvec.cast("array<double>").as("dv"))
-          .withColumn("dn2", norm2(col("dv"), dim))
-        val resc = short
-          .join(broadcast(qf.withColumn("qn2", norm2(col("qv"), dim))),
-            Seq("query_id"))
-          .join(dfull, Seq("neighbor_id"))
-          .select(col("query_id"), col("neighbor_id"),
-            cosinePrenorm(col("qv"), col("dv"), col("qn2"), col("dn2"), dim)
-              .as("cosine"))
-        val wr = org.apache.spark.sql.expressions.Window
-          .partitionBy("query_id")
-          .orderBy(col("cosine").desc, col("neighbor_id").asc)
-        resc.withColumn("rank", row_number().over(wr))
-          .filter(col("rank") <= k)
-          .select(col("query_id"), col("rank"), col("neighbor_id"), col("cosine"))
-      case _ =>
-        scored.withColumn("rank", row_number().over(wh))
-          .filter(col("rank") <= k)
-          .select(col("query_id"), col("rank"), col("neighbor_id"), col("hamming"))
+    val scored = hammingOf(
+      q.join(restricted(codes, restrictTo), pairCond(excludeSelf)), "qb", "bcodes")
+    against match {
+      case Some((data, did, dvec)) if rescore > 0 =>
+        refine(scored, "hamming", ascending = true, rescore, k,
+          qf.withColumn("qn2", norm2(col("qv"))),
+          corpusFloats(data, did, dvec).withColumn("dn2", norm2(col("dv"))),
+          normCosine)
+      case _ => rankTopK(scored, "hamming", k, ascending = true)
     }
   }
 
@@ -839,63 +817,19 @@ object Similarity {
       qid: Column, qvec: Column, did: Column, dvec: Column,
       nlist: Int, nprobe: Int, k: Int, rescore: Int = 0,
       excludeSelf: Boolean = false, dim: Int = 0): DataFrame = {
-    val (cents, assigned0) = ivfBuild(data, did, dvec, nlist, dim)
-    val assigned = assigned0.withColumn("db",
-      graft.plans.VecExprs.signPack(col("dv")))
-    val q = queries.select(qid.as("query_id"),
-        qvec.cast("array<double>").as("qv"))
-      .withColumn("qn2", norm2(col("qv"), dim))
-      .withColumn("qb", graft.plans.VecExprs.signPack(col("qv")))
-    val qScored = q.crossJoin(broadcast(cents))
-      .select(col("query_id"), col("qb"), col("cid"),
-        cosinePrenorm(col("qv"), col("cv"), col("qn2"), col("cn2"), dim).as("cc"))
-    val wp = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(col("cc").desc, col("cid").asc)
-    val probes = fanoutRepartition(
-      qScored.withColumn("_pr", row_number().over(wp))
-        .filter(col("_pr") <= nprobe)
-        .select(col("query_id"), col("qb"), col("cid")),
-      col("query_id"), col("cid"))
+    val (cents, assigned) = ivfBuild(data, did, dvec, nlist)
+    val qf = queryFloats(queries, qid, qvec).withColumn("qn2", norm2(col("qv")))
+    val probes = probeLists(
+      qf.withColumn("qb", graft.plans.VecExprs.signPack(col("qv"))), cents, nprobe, "qb")
     // candidate pair rows carry ONLY the packed codes' hamming — the
     // 64×-smaller payload claim must hold through the rank window's
-    // exchange and sort, exactly like binaryTopK; floats join back on
-    // the shortlist alone. NULL hamming rows are dropped before the
-    // ascending window (Spark NULLS FIRST would rank them first).
-    val cand0 = probes.join(assigned, Seq("cid"))
-    val cand = (if (excludeSelf) cand0.filter(col("query_id") =!= col("neighbor_id"))
-      else cand0)
-      .select(col("query_id"), col("neighbor_id"),
-        graft.plans.VecExprs.hamming(col("qb"), col("db")).as("hamming"))
-      .filter(col("hamming").isNotNull)
-    val wh = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id")
-      .orderBy(col("hamming").asc, col("neighbor_id").asc)
-    if (rescore <= 0)
-      cand.withColumn("rank", row_number().over(wh))
-        .filter(col("rank") <= k)
-        .select(col("query_id"), col("rank"), col("neighbor_id"), col("hamming"))
-    else {
-      // exact float cosine only on the short Hamming-ranked list; the
-      // query side broadcasts (|q| rows), the corpus side is an
-      // equi-join touching only shortlisted ids
-      val short = cand.withColumn("_qr", row_number().over(wh))
-        .filter(col("_qr") <= math.max(rescore, k))
-        .select(col("query_id"), col("neighbor_id"))
-      val resc = short
-        .join(broadcast(q.select(col("query_id"), col("qv"), col("qn2"))),
-          Seq("query_id"))
-        .join(assigned.select(col("neighbor_id"), col("dv"), col("dn2")),
-          Seq("neighbor_id"))
-        .select(col("query_id"), col("neighbor_id"),
-          cosinePrenorm(col("qv"), col("dv"), col("qn2"), col("dn2"), dim)
-            .as("cosine"))
-      val wr = org.apache.spark.sql.expressions.Window
-        .partitionBy("query_id")
-        .orderBy(col("cosine").desc, col("neighbor_id").asc)
-      resc.withColumn("rank", row_number().over(wr))
-        .filter(col("rank") <= k)
-        .select(col("query_id"), col("rank"), col("neighbor_id"), col("cosine"))
-    }
+    // exchange and sort, exactly like binaryTopK
+    val cand = hammingOf(probes
+      .join(assigned.withColumn("db", graft.plans.VecExprs.signPack(col("dv"))), Seq("cid"))
+      .filter(pairCond(excludeSelf)), "qb", "db")
+    if (rescore <= 0) rankTopK(cand, "hamming", k, ascending = true)
+    else refine(cand, "hamming", ascending = true, rescore, k, qf,
+      assigned.select(col("neighbor_id"), col("dv"), col("dn2")), normCosine)
   }
 
   // -------------------------------------------------------------------
@@ -908,14 +842,15 @@ object Similarity {
   // the DuckDB oracle regenerates codebooks, codes, and rankings
   // bit-identically.
 
+  /** L2-normalized build rows (id, v) — the corpus side of every PQ
+    * family. */
+  private def unitRows(data: DataFrame, did: Column, dvec: Column): DataFrame =
+    l2normalize(buildRows(data, did, dvec), "v")
+
   /** Build PQ structures over L2-normalized vectors.
     *
     *  - `m` subspaces of `dim/m` dimensions each (dim must divide);
-    *  - per subspace, `ksub` codewords: subvector s of the `ksub` rows
-    *    with smallest md5(id), codeword index j = 1..ksub in that md5
-    *    order (production PQ fixes ksub = 256 — one byte per code; m
-    *    grows with DIM, not corpus size, so codes stay m bytes however
-    *    large the corpus);
+    *  - per subspace, `ksub` codewords (see [[pqCodebook]]);
     *  - encode: each row's subvector s maps to its L2-nearest codeword,
     *    argmin (|c|² − 2·x_s·c) with ties to the smallest j — exact
     *    double arithmetic, no float-summation ambiguity in the ranking
@@ -927,34 +862,30 @@ object Similarity {
   private[graft] def pqBuild(data: DataFrame, did: Column, dvec: Column,
       m: Int, ksub: Int, dim: Int): (DataFrame, DataFrame) = {
     require(dim > 0 && dim % m == 0, s"pq: m ($m) must divide dim ($dim)")
-    val dsub = dim / m
-    val d = graft.core.Caches.eager(l2normalize(
-      spread(data).select(did.as("id"), dvec.cast("array<double>").as("v")), "v"))
-    // codeword sample: md5-smallest ksub rows, j = row_number in md5
-    // order (single-partition window over ksub rows only). isNotNull: a
-    // NULL embedding in the sample would NPE the driver-side cbArrays
-    // collect (NULL corpus rows themselves encode to NULL codes)
+    val d = graft.core.Caches.eager(unitRows(data, did, dvec))
+    val cb = pqCodebook(d, m, ksub, dim / m)
+    (cb, d.select(col("id").as("neighbor_id"), pqEncodeBy(cb).as("codes")))
+  }
+
+  /** The codebook (s, j, cw, cwn2): per subspace s, subvector s of the
+    * `ksub` rows of `d` with smallest md5(id), codeword index
+    * j = 1..ksub in that md5 order (production PQ fixes ksub = 256 — one
+    * byte per code; m grows with DIM, not corpus size, so codes stay m
+    * bytes however large the corpus). */
+  private def pqCodebook(d: DataFrame, m: Int, ksub: Int, dsub: Int): DataFrame = {
+    // single-partition window over ksub rows only. isNotNull: a NULL
+    // embedding in the sample would NPE the driver-side cbArrays collect
+    // (NULL corpus rows themselves encode to NULL codes)
     val samp = d.filter(col("v").isNotNull)
       .orderBy(md5(col("id").cast("string"))).limit(ksub)
       .withColumn("j", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .orderBy(md5(col("id").cast("string")))))
-    val cb = graft.core.Caches.eager(
+        Window.orderBy(md5(col("id").cast("string")))))
+    graft.core.Caches.eager(
       samp.select(col("j"), posexplode(transform(
           sequence(lit(0), lit(m - 1)),
           s => slice(col("v"), s * lit(dsub) + lit(1), lit(dsub))))
         .as(Seq("s", "cw")))
         .withColumn("cwn2", norm2(col("cw"))))
-    // encode: one native argmin pass per row against the collected
-    // codebook (PqEncodeExpr — the m·ksub·dsub flops per row are the
-    // one-time build cost FAISS pays too, but as a pure scan: the
-    // subspace-explode + broadcast-join formulation materialized
-    // |corpus|·m·ksub pair rows through a sort-based argmin)
-    val (flatCb, cwn2s, _, ksubA, _) = cbArrays(cb)
-    val codes = d.select(col("id").as("neighbor_id"),
-      graft.plans.VecExprs.pqEncode(col("v"), flatCb, cwn2s, m, ksubA, dsub)
-        .as("codes"))
-    (cb, codes)
   }
 
   /** Collect a (s, j, cw, cwn2) codebook table driver-side into the flat
@@ -990,105 +921,96 @@ object Similarity {
     (flat, n2, m, ksub, dsub)
   }
 
+  /** `v` → its PQ codes against codebook `cb`: one native argmin pass
+    * per row ([[graft.plans.PqEncodeExpr]] — the m·ksub·dsub flops per
+    * row are the one-time build cost FAISS pays too, but as a pure scan:
+    * the subspace-explode + broadcast-join formulation materialized
+    * |corpus|·m·ksub pair rows through a sort-based argmin). */
+  private def pqEncodeBy(cb: DataFrame): Column = {
+    val (flat, n2, m, ksub, dsub) = cbArrays(cb)
+    graft.plans.VecExprs.pqEncode(col("v"), flat, n2, m, ksub, dsub)
+  }
+
+  /** `codes` → the reconstructed vector: one native
+    * memcpy-per-subspace pass ([[graft.plans.PqDecodeExpr]]). */
+  private def pqDecodeBy(cb: DataFrame): Column = {
+    val (flat, _, m, ksub, dsub) = cbArrays(cb)
+    graft.plans.VecExprs.pqDecode(col("codes"), flat, m, ksub, dsub)
+  }
+
   /** PQ top-k by asymmetric distance: rank every corpus row against each
     * query by dot(query, decode(codes)) — the codes-only corpus is what
-    * persists/shuffles (m bytes/vector); decoding joins the broadcast
-    * codebook and concatenates codewords in subspace order, so the score
-    * is ONE in-order dot against the reconstructed vector — the same
-    * fold every engine computes bit-identically (a per-subspace LUT sum
-    * would regroup the additions and lose oracle replayability; decode
-    * touches the same m·dsub multiplies). With `rescore > 0`, the top
-    * max(rescore, k) PQ-ranked candidates are re-scored by exact float
-    * cosine against the original vectors (the FAISS refine stage) and
-    * that ranking is emitted (`cosine`); otherwise the PQ score
-    * (`score`). `dim` is REQUIRED (> 0, divisible by m) — unlike the
-    * generic-loop dim=0 convention elsewhere in this object, PQ's
-    * subspace slicing cannot size itself from the data. `excludeSelf`
-    * (default true) drops corpus rows whose id equals the query id —
-    * the self-ANN convention; pass false for disjoint query/corpus id
-    * spaces where a match on the same id is a real neighbor.
+    * persists/shuffles (m bytes/vector); decoding concatenates codewords
+    * in subspace order, so the score is ONE in-order dot against the
+    * reconstructed vector — the same fold every engine computes
+    * bit-identically (a per-subspace LUT sum would regroup the additions
+    * and lose oracle replayability; decode touches the same m·dsub
+    * multiplies). With `rescore > 0`, the top max(rescore, k) PQ-ranked
+    * candidates are re-scored by exact float cosine against the original
+    * vectors (the FAISS refine stage) and that ranking is emitted
+    * (`cosine`); otherwise the PQ score (`score`). `dim` is REQUIRED
+    * (> 0, divisible by m) — unlike the generic-loop dim=0 convention
+    * elsewhere in this object, PQ's subspace slicing cannot size itself
+    * from the data. `excludeSelf` (default true) drops corpus rows whose
+    * id equals the query id — the self-ANN convention; pass false for
+    * disjoint query/corpus id spaces where a match on the same id is a
+    * real neighbor. The [[pqBuild]] structures [[pqSave]] would persist,
+    * searched exactly as [[pqLoadTopK]] searches them.
     * Returns (query_id, rank, neighbor_id, score|cosine). */
   def pqTopK(queries: DataFrame, data: DataFrame,
       qid: Column, qvec: Column, did: Column, dvec: Column,
       m: Int, ksub: Int, k: Int, rescore: Int = 0, dim: Int,
       excludeSelf: Boolean = true): DataFrame = {
     val (cb, codes) = pqBuild(data, did, dvec, m, ksub, dim)
-    // decode once per CORPUS row (not per pair): codes explode to
-    // decode: one native memcpy-per-subspace pass (PqDecodeExpr)
-    val (flatCb, _, mA, ksubA, dsubA) = cbArrays(cb)
-    val rv = codes.select(col("neighbor_id"),
-      graft.plans.VecExprs.pqDecode(col("codes"), flatCb, mA, ksubA, dsubA)
-        .as("rv"))
-    val q = fanoutRepartition(
-      l2normalize(queries.select(qid.as("query_id"),
-        qvec.cast("array<double>").as("qv")), "qv"), col("query_id"))
-    val scored = q.join(rv,
-        if (excludeSelf) col("query_id") =!= col("neighbor_id") else lit(true))
-      .select(col("query_id"), col("neighbor_id"), col("qv"),
-        dot(col("qv"), col("rv")).as("score"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id")
-      .orderBy(col("score").desc, col("neighbor_id").asc)
-    if (rescore <= 0)
-      scored.withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= k)
-        .select(col("query_id"), col("rank"), col("neighbor_id"), col("score"))
-    else {
-      val short = scored.withColumn("_qr", row_number().over(w))
-        .filter(col("_qr") <= math.max(rescore, k))
-        .select(col("query_id"), col("qv"), col("neighbor_id"))
-      // exact re-score on the short list only: the float corpus vectors
-      // are touched for |q|·rescore rows, never for the full candidate set
-      val dfull = l2normalize(
-        data.select(did.as("neighbor_id"), dvec.cast("array<double>").as("dv")), "dv")
-      val wr = org.apache.spark.sql.expressions.Window
-        .partitionBy("query_id")
-        .orderBy(col("cosine").desc, col("neighbor_id").asc)
-      broadcast(short).join(dfull, "neighbor_id")
-        .select(col("query_id"), col("neighbor_id"),
-          dot(col("qv"), col("dv")).as("cosine"))
-        .withColumn("rank", row_number().over(wr))
-        .filter(col("rank") <= k)
-        .select(col("query_id"), col("rank"), col("neighbor_id"), col("cosine"))
+    pqSearch(cb, codes, queries, qid, qvec, k, rescore,
+      Some((data, did, dvec)), excludeSelf, None)
+  }
+
+  /** The PQ search shared by [[pqTopK]] and [[pqLoadTopK]]: decoded-dot
+    * rank of the normalized queries over `codes` (neighbor_id, codes),
+    * refined by [[unitDot]] against the float corpus `against` when
+    * `rescore > 0`. */
+  private def pqSearch(cb: DataFrame, codes: DataFrame, queries: DataFrame,
+      qid: Column, qvec: Column, k: Int, rescore: Int,
+      against: Option[(DataFrame, Column, Column)], excludeSelf: Boolean,
+      restrictTo: Option[DataFrame]): DataFrame = {
+    // decode once per CORPUS row, not per pair
+    val rv = restricted(codes, restrictTo)
+      .select(col("neighbor_id"), pqDecodeBy(cb).as("rv"))
+    val qf = l2normalize(queryFloats(queries, qid, qvec), "qv")
+    val scored = fanoutRepartition(qf, col("query_id")).join(rv, pairCond(excludeSelf))
+      .select(col("query_id"), col("neighbor_id"), dot(col("qv"), col("rv")).as("score"))
+    against match {
+      case Some((data, did, dvec)) if rescore > 0 =>
+        refine(scored, "score", ascending = false, rescore, k, qf,
+          l2normalize(corpusFloats(data, did, dvec), "dv"), unitDot)
+      case _ => rankTopK(scored, "score", k)
     }
   }
 
   /** The IVF-PQ structures shared by [[ivfPqRetrieve]] and
     * [[ivfPqSave]] — ONE copy of the recipe, because the persisted and
-    * ad-hoc paths are spec-pinned to answer identically and a tweak
-    * applied to one copy would break that equality at a distance:
-    * normalized corpus `d` (id, v, n2; eager — referenced by the
-    * centroid sample, the assignment, the codebook sample, and the
-    * encode), md5-sample coarse `cents` (NULL-filtered — see ivfBuild),
-    * one-pass `coarse` assignment (neighbor_id, cid), and the
-    * md5-sample `cb` codebook (j, s, cw, cwn2). */
+    * ad-hoc paths are spec-pinned to answer identically: normalized
+    * corpus `d` (id, v, n2; eager — referenced by the centroid sample,
+    * the assignment, the codebook sample, and the encode), md5-sample
+    * coarse `cents`, the md5-sample `cb` codebook (s, j, cw, cwn2), and
+    * the cid-clustered `lists` (neighbor_id, cid, codes). */
   private def ivfPqBuild(data: DataFrame, did: Column, dvec: Column,
       nlist: Int, m: Int, ksub: Int, dim: Int)
       : (DataFrame, DataFrame, DataFrame, DataFrame) = {
     require(dim > 0 && dim % m == 0, s"pq: m ($m) must divide dim ($dim)")
-    val dsub = dim / m
-    val d = graft.core.Caches.eager(l2normalize(
-      spread(data).select(did.as("id"), dvec.cast("array<double>").as("v")), "v")
-      .withColumn("n2", norm2(col("v"))))
-    val cents = graft.core.Caches.eager(
-      d.filter(col("v").isNotNull)
-        .select(col("id").as("cid"), col("v").as("cv"), col("n2").as("cn2"))
-        .orderBy(md5(col("cid").cast("string"))).limit(nlist))
-    val coarse = assignToCents(d, cents)
-      .select(col("neighbor_id"), col("cid"))
-    val samp = d.filter(col("v").isNotNull)
-      .orderBy(md5(col("id").cast("string"))).limit(ksub)
-      .withColumn("j", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .orderBy(md5(col("id").cast("string")))))
-    val cb = graft.core.Caches.eager(
-      samp.select(col("j"), posexplode(transform(
-          sequence(lit(0), lit(m - 1)),
-          s => slice(col("v"), s * lit(dsub) + lit(1), lit(dsub))))
-        .as(Seq("s", "cw")))
-        .withColumn("cwn2", norm2(col("cw"))))
-    (d, cents, coarse, cb)
+    val d = graft.core.Caches.eager(
+      unitRows(data, did, dvec).withColumn("n2", norm2(col("v"))))
+    val cents = sampleCents(d, nlist)
+    val cb = pqCodebook(d, m, ksub, dim / m)
+    (d, cents, cb, ivfPqLists(d, cents, cb))
   }
+
+  /** Rows of `d` (id, v, n2) as IVF-PQ list rows (neighbor_id, cid,
+    * codes): coarse assignment and PQ encode in one pass per row. */
+  private def ivfPqLists(d: DataFrame, cents: DataFrame, cb: DataFrame): DataFrame =
+    assignToCents(d.withColumn("codes", pqEncodeBy(cb)), cents, keep = Seq("codes"))
+      .select(col("neighbor_id"), col("cid"), col("codes"))
 
   /** IVF-PQ retrieval — the full FAISS serving composition: a coarse
     * quantizer of `nlist` md5-sample centroids prunes each query to its
@@ -1098,61 +1020,35 @@ object Similarity {
     * volume is |q|·nprobe·(n/nlist) like IVF-flat, but the in-flight
     * candidate payload is codes, not vectors — the coarse prune and the
     * PQ memory win COMPOSE. Deterministic end to end for the same
-    * reasons as [[ivfTopK]] + [[pqTopK]]. Returns
-    * (query_id, rank, neighbor_id, cosine) — `rescore` must be > 0 (the
-    * refine stage is the precision contract of this layout). */
+    * reasons as [[ivfTopK]] + [[pqTopK]]; the lists [[ivfPqSave]] would
+    * persist, searched exactly as [[ivfPqLoadTopK]] searches them.
+    * Returns (query_id, rank, neighbor_id, cosine) — `rescore` must be
+    * > 0 (the refine stage is the precision contract of this layout). */
   def ivfPqRetrieve(queries: DataFrame, data: DataFrame,
       qid: Column, qvec: Column, did: Column, dvec: Column,
       nlist: Int, nprobe: Int, m: Int, ksub: Int, k: Int, rescore: Int,
       excludeSelf: Boolean = false, dim: Int = 0): DataFrame = {
     require(rescore > 0, "ivfPqRetrieve: rescore must be > 0")
-    val (d, cents, coarse, cb) = ivfPqBuild(data, did, dvec, nlist, m, ksub, dim)
-    val dsub = dim / m
-    // encode + decode composed in one native pass per row (PqEncodeExpr
-    // → PqDecodeExpr — codes never materialize here; the reconstructed
-    // vector is what the in-list rank dots against)
-    val (flatCb, cwn2s, _, ksubA, _) = cbArrays(cb)
-    val rv = d.select(col("id"),
-      graft.plans.VecExprs.pqDecode(
-        graft.plans.VecExprs.pqEncode(col("v"), flatCb, cwn2s, m, ksubA, dsub),
-        flatCb, m, ksubA, dsub).as("rv"))
-    val lists = coarse.withColumnRenamed("neighbor_id", "id").join(rv, "id")
-      .select(col("id").as("neighbor_id"), col("cid"), col("rv"))
-    // query side: probe nprobe lists, rank in-list by decoded dot
-    val q = l2normalize(
-      queries.select(qid.as("query_id"), qvec.cast("array<double>").as("qv")), "qv")
-      .withColumn("qn2", norm2(col("qv")))
-    val qScored = q.crossJoin(broadcast(cents))
-      .select(col("query_id"), col("qv"), col("qn2"), col("cid"),
-        cosinePrenorm(col("qv"), col("cv"), col("qn2"), col("cn2"), dim).as("cc"))
-    val wp = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(col("cc").desc, col("cid").asc)
-    val probes = fanoutRepartition(
-      qScored.withColumn("_pr", row_number().over(wp))
-        .filter(col("_pr") <= nprobe)
-        .select(col("query_id"), col("qv"), col("cid")),
-      col("query_id"), col("cid"))
-    val cand0 = probes.join(lists, Seq("cid"))
-    val cand = (if (excludeSelf) cand0.filter(col("query_id") =!= col("neighbor_id"))
-      else cand0)
-      .select(col("query_id"), col("qv"), col("neighbor_id"),
-        dot(col("qv"), col("rv")).as("qscore"))
-    val wq = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id")
-      .orderBy(col("qscore").desc, col("neighbor_id").asc)
-    val short = cand.withColumn("_qr", row_number().over(wq))
-      .filter(col("_qr") <= math.max(rescore, k))
-      .select(col("query_id"), col("qv"), col("neighbor_id"))
-    val wr = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    broadcast(short)
-      .join(d.select(col("id").as("neighbor_id"), col("v").as("dv")), "neighbor_id")
-      .select(col("query_id"), col("neighbor_id"),
-        dot(col("qv"), col("dv")).as("cosine"))
-      .withColumn("rank", row_number().over(wr))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"), col("cosine"))
+    val (d, cents, cb, lists) = ivfPqBuild(data, did, dvec, nlist, m, ksub, dim)
+    ivfPqSearch(cents, cb, lists, queries, qid, qvec, nprobe, k, rescore,
+      d.select(col("id").as("neighbor_id"), col("v").as("dv")), excludeSelf, None)
+  }
+
+  /** The IVF-PQ search shared by [[ivfPqRetrieve]] and [[ivfPqLoadTopK]]:
+    * probe by coarse centroid cosine, rank in-list candidates by
+    * decoded-vector dot, refine by [[unitDot]] against the normalized
+    * float corpus `floats` (neighbor_id, dv). */
+  private def ivfPqSearch(cents: DataFrame, cb: DataFrame, lists: DataFrame,
+      queries: DataFrame, qid: Column, qvec: Column, nprobe: Int, k: Int,
+      rescore: Int, floats: DataFrame, excludeSelf: Boolean,
+      restrictTo: Option[DataFrame]): DataFrame = {
+    val rv = restricted(lists, restrictTo)
+      .select(col("neighbor_id"), col("cid"), pqDecodeBy(cb).as("rv"))
+    val qf = l2normalize(queryFloats(queries, qid, qvec), "qv")
+    val probes = probeLists(qf.withColumn("qn2", norm2(col("qv"))), cents, nprobe, "qv")
+    val cand = probes.join(rv, Seq("cid")).filter(pairCond(excludeSelf))
+      .select(col("query_id"), col("neighbor_id"), dot(col("qv"), col("rv")).as("score"))
+    refine(cand, "score", ascending = false, rescore, k, qf, floats, unitDot)
   }
 
   /** Persist an IVF-PQ index — the full FAISS serving layout at rest:
@@ -1168,14 +1064,7 @@ object Similarity {
     * ([[graft.core.SegmentStore]]). */
   def ivfPqSave(data: DataFrame, did: Column, dvec: Column, path: String,
       nlist: Int, m: Int, ksub: Int, dim: Int): Unit = {
-    val (d, cents, coarse, cb) = ivfPqBuild(data, did, dvec, nlist, m, ksub, dim)
-    val dsub = dim / m
-    val (flatCb, cwn2s, _, ksubA, _) = cbArrays(cb)
-    val lists = d.select(col("id").as("neighbor_id"),
-        graft.plans.VecExprs.pqEncode(col("v"), flatCb, cwn2s, m, ksubA, dsub)
-          .as("codes"))
-      .join(coarse, "neighbor_id")
-      .select(col("neighbor_id"), col("cid"), col("codes"))
+    val (_, cents, cb, lists) = ivfPqBuild(data, did, dvec, nlist, m, ksub, dim)
     SegmentStore.save(path, Meta(Family.IvfPq), lists,
       "centroids" -> cents, "codebook" -> cb)
     ()
@@ -1192,18 +1081,10 @@ object Similarity {
   def ivfPqAppend(spark: org.apache.spark.sql.SparkSession, path: String,
       newData: DataFrame, did: Column, dvec: Column): Long = {
     val g = SegmentStore.open(path).of(Family.IvfPq)
-    val cents = g.side(spark, "centroids")
-    val (flatCb, cwn2s, mA, ksubA, dsubA) = cbArrays(g.side(spark, "codebook"))
-    val d = graft.core.Caches.eager(l2normalize(
-      spread(newData).select(did.as("id"), dvec.cast("array<double>").as("v")),
-      "v").withColumn("n2", norm2(col("v"))))
-    val lists = assignToCents(d, cents)
-      .select(col("neighbor_id"), col("cid"))
-      .join(d.select(col("id").as("neighbor_id"),
-        graft.plans.VecExprs.pqEncode(col("v"), flatCb, cwn2s, mA, ksubA, dsubA)
-          .as("codes")), "neighbor_id")
-      .select(col("neighbor_id"), col("cid"), col("codes"))
-    SegmentStore.append(g, Meta(Family.IvfPq), lists)
+    val d = graft.core.Caches.eager(
+      unitRows(newData, did, dvec).withColumn("n2", norm2(col("v"))))
+    SegmentStore.append(g, Meta(Family.IvfPq),
+      ivfPqLists(d, g.side(spark, "centroids"), g.side(spark, "codebook")))
   }
 
   /** Query an [[ivfPqSave]]d index: probe `nprobe` lists by coarse
@@ -1224,55 +1105,12 @@ object Similarity {
     require(rescore > 0, "ivfPqLoadTopK: rescore must be > 0")
     val g = SegmentStore.open(path).of(Family.IvfPq)
     val cents = g.side(spark, "centroids")
-    val cb = g.side(spark, "codebook")
-    val lists0 = g.rows(spark)
+    val lists = g.rows(spark)
       .withColumn("cid", col("cid").cast(cents.schema("cid").dataType))
-    val lists1 = restrictTo match {
-      case None => lists0
-      case Some(ids) => lists0.join(
-        restrictIds(ids),
-        Seq("neighbor_id"), "left_semi")
-    }
-    val (flatCb, _, mA, ksubA, dsubA) = cbArrays(cb)
-    val lists = lists1.select(col("neighbor_id"), col("cid"),
-      graft.plans.VecExprs.pqDecode(col("codes"), flatCb, mA, ksubA, dsubA)
-        .as("rv"))
-    val q = l2normalize(
-      queries.select(qid.as("query_id"), qvec.cast("array<double>").as("qv")),
-      "qv").withColumn("qn2", norm2(col("qv")))
-    val qScored = q.crossJoin(broadcast(cents))
-      .select(col("query_id"), col("qv"), col("qn2"), col("cid"),
-        cosinePrenorm(col("qv"), col("cv"), col("qn2"), col("cn2"), 0).as("cc"))
-    val wp = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(col("cc").desc, col("cid").asc)
-    val probes = fanoutRepartition(
-      qScored.withColumn("_pr", row_number().over(wp))
-        .filter(col("_pr") <= nprobe)
-        .select(col("query_id"), col("qv"), col("cid")),
-      col("query_id"), col("cid"))
-    val cand0 = probes.join(lists, Seq("cid"))
-    val cand = (if (excludeSelf) cand0.filter(col("query_id") =!= col("neighbor_id"))
-      else cand0)
-      .select(col("query_id"), col("qv"), col("neighbor_id"),
-        dot(col("qv"), col("rv")).as("qscore"))
-    val wq = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id")
-      .orderBy(col("qscore").desc, col("neighbor_id").asc)
-    val short = cand.withColumn("_qr", row_number().over(wq))
-      .filter(col("_qr") <= math.max(rescore, k))
-      .select(col("query_id"), col("qv"), col("neighbor_id"))
     val (rdata, rdid, rdvec) = rescoreAgainst
-    val dfull = l2normalize(rdata.select(rdid.as("neighbor_id"),
-      rdvec.cast("array<double>").as("dv")), "dv")
-    val wr = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    broadcast(short).join(dfull, "neighbor_id")
-      .select(col("query_id"), col("neighbor_id"),
-        dot(col("qv"), col("dv")).as("cosine"))
-      .withColumn("rank", row_number().over(wr))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"), col("cosine"))
+    ivfPqSearch(cents, g.side(spark, "codebook"), lists, queries, qid, qvec,
+      nprobe, k, rescore, l2normalize(corpusFloats(rdata, rdid, rdvec), "dv"),
+      excludeSelf, restrictTo)
   }
 
   /** Persist a PQ index: `codebook/` (m·ksub rows — broadcast at query
@@ -1304,13 +1142,8 @@ object Similarity {
   def pqAppend(spark: org.apache.spark.sql.SparkSession, path: String,
       newData: DataFrame, did: Column, dvec: Column): Long = {
     val g = SegmentStore.open(path).of(Family.Pq)
-    val (flatCb, cwn2s, mA, ksubA, dsubA) = cbArrays(g.side(spark, "codebook"))
-    val d = l2normalize(
-      spread(newData).select(did.as("id"),
-        dvec.cast("array<double>").as("v")), "v")
-    val codes = d.select(col("id").as("neighbor_id"),
-      graft.plans.VecExprs.pqEncode(col("v"), flatCb, cwn2s, mA, ksubA, dsubA)
-        .as("codes"))
+    val codes = unitRows(newData, did, dvec).select(col("id").as("neighbor_id"),
+      pqEncodeBy(g.side(spark, "codebook")).as("codes"))
     SegmentStore.append(g, Meta(Family.Pq), codes)
   }
 
@@ -1332,49 +1165,8 @@ object Similarity {
       s"pqLoadTopK: rescore = $rescore needs rescoreAgainst — the index " +
         "persists codes only, the refine stage must be given the float corpus")
     val g = SegmentStore.open(path).of(Family.Pq)
-    val cb = g.side(spark, "codebook")
-    val codes0 = g.rows(spark)
-    val codes = restrictTo match {
-      case None => codes0
-      case Some(ids) => codes0.join(
-        restrictIds(ids),
-        Seq("neighbor_id"), "left_semi")
-    }
-    val (flatCb, _, mA, ksubA, dsubA) = cbArrays(cb)
-    val rv = codes.select(col("neighbor_id"),
-      graft.plans.VecExprs.pqDecode(col("codes"), flatCb, mA, ksubA, dsubA)
-        .as("rv"))
-    val q = fanoutRepartition(
-      l2normalize(queries.select(qid.as("query_id"),
-        qvec.cast("array<double>").as("qv")), "qv"), col("query_id"))
-    val scored = q.join(rv,
-        if (excludeSelf) col("query_id") =!= col("neighbor_id") else lit(true))
-      .select(col("query_id"), col("neighbor_id"), col("qv"),
-        dot(col("qv"), col("rv")).as("score"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id")
-      .orderBy(col("score").desc, col("neighbor_id").asc)
-    (rescore, rescoreAgainst) match {
-      case (r, Some((data, did, dvec))) if r > 0 =>
-        val short = scored.withColumn("_qr", row_number().over(w))
-          .filter(col("_qr") <= math.max(r, k))
-          .select(col("query_id"), col("qv"), col("neighbor_id"))
-        val dfull = l2normalize(data.select(did.as("neighbor_id"),
-          dvec.cast("array<double>").as("dv")), "dv")
-        val wr = org.apache.spark.sql.expressions.Window
-          .partitionBy("query_id")
-          .orderBy(col("cosine").desc, col("neighbor_id").asc)
-        broadcast(short).join(dfull, "neighbor_id")
-          .select(col("query_id"), col("neighbor_id"),
-            dot(col("qv"), col("dv")).as("cosine"))
-          .withColumn("rank", row_number().over(wr))
-          .filter(col("rank") <= k)
-          .select(col("query_id"), col("rank"), col("neighbor_id"), col("cosine"))
-      case _ =>
-        scored.withColumn("rank", row_number().over(w))
-          .filter(col("rank") <= k)
-          .select(col("query_id"), col("rank"), col("neighbor_id"), col("score"))
-    }
+    pqSearch(g.side(spark, "codebook"), g.rows(spark), queries, qid, qvec, k,
+      rescore, rescoreAgainst, excludeSelf, restrictTo)
   }
 
   /** Plane count that keeps EXPECTED bucket occupancy near
@@ -1413,22 +1205,16 @@ object Similarity {
     * with the corpus, not stay constant. */
   def lshTopK(df: DataFrame, id: Column, vec: Column,
       dim: Int, planes: Int, k: Int): DataFrame = {
-    val b0 = graft.core.Caches.eager(
-      spread(df).select(id.as("id"), vec.cast("array<double>").as("v"))
-        .withColumn("bucket", rhpBucket(col("v"), dim, planes))
-        .withColumn("n2", norm2(col("v"), dim)))
+    val b0 = graft.core.Caches.eager(buildRows(df, id, vec)
+      .withColumn("bucket", rhpBucket(col("v"), dim, planes))
+      .withColumn("n2", norm2(col("v"))))
     // pin the per-bucket pairwise expansion's parallelism (see
     // fanoutRepartition); both self-join sides share the one exchange
     val b = fanoutRepartition(b0, col("bucket"))
     val scored = b.as("q").join(b.as("d"),
         col("q.bucket") === col("d.bucket") && col("q.id") =!= col("d.id"))
       .select(col("q.id").as("query_id"), col("d.id").as("neighbor_id"),
-        cosinePrenorm(col("q.v"), col("d.v"), col("q.n2"), col("d.n2"), dim).as("cosine"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"), col("cosine"))
+        cosinePrenorm(col("q.v"), col("d.v"), col("q.n2"), col("d.n2")).as("cosine"))
+    rankTopK(scored, "cosine", k)
   }
 }

@@ -480,11 +480,11 @@ class DataIndexSpec extends SparkSpec {
         col("id"), col("v"), nprobe = 2, k = 3, excludeSelf = true)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
     val (cents, _) = Similarity.ivfBuild(base, col("id"), col("v"),
-      nlist = 8, dim = 0)
+      nlist = 8)
     val refAssigned = Similarity.assignVectors(all, col("id"), col("v"),
-      cents, dim = 0)
+      cents)
     val direct = Similarity.ivfSearch(cents, refAssigned, all,
-        col("id"), col("v"), nprobe = 2, k = 3, excludeSelf = true, dim = 0)
+        col("id"), col("v"), nprobe = 2, k = 3, excludeSelf = true)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
     assert(loaded == direct)
     // two full rebuilds later, the pre-append segments are unreferenced
@@ -549,5 +549,70 @@ class DataIndexSpec extends SparkSpec {
     // 100x corpus adds ~log2(100) ≈ 6.6 planes
     assert(Similarity.planesFor(10000000, 256) - Similarity.planesFor(100000, 256) == 7)
     assert(Similarity.planesFor(10, 256) == 1) // floor
+  }
+
+  test("pq twins: ad-hoc ≡ save → load with equal rank, id and bit-equal " +
+      "score, restrictTo ≡ the ad-hoc ranking cut to the kept ids") {
+    import graft.operators.Similarity
+    import org.apache.spark.sql.DataFrame
+    val rnd = new scala.util.Random(41)
+    val corpus = (0 until 96).map(i =>
+      (i.toLong, Seq.fill(16)(rnd.nextGaussian()))).toDF("id", "v")
+    val queries = corpus.filter(col("id") % 12 === 0)
+    val kept = corpus.filter(col("id") % 3 =!= 0).select(col("id"))
+    val keptIds = kept.collect().map(_.getLong(0)).toSet
+    val pqPath = java.nio.file.Files.createTempDirectory("pq_twin").toString
+    Similarity.pqSave(corpus, col("id"), col("v"), pqPath, m = 4, ksub = 8, dim = 16)
+    val ivfPqPath = java.nio.file.Files.createTempDirectory("ivfpq_twin").toString
+    Similarity.ivfPqSave(corpus, col("id"), col("v"), ivfPqPath,
+      nlist = 8, m = 4, ksub = 8, dim = 16)
+    val against = (corpus, col("id"), col("v"))
+    // (query, rank, id, raw score bits): equal bits ⇔ bit-equal doubles
+    def rows(df: DataFrame): Seq[(Long, Int, Long, Long)] = df.collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2),
+        java.lang.Double.doubleToRawLongBits(r.getDouble(3)))).toSeq.sorted
+    // a restricted load ranks only the kept ids: the reference is the
+    // ad-hoc ranking over every candidate, cut to the kept ids, re-ranked
+    def cut(all: Seq[(Long, Int, Long, Long)], k: Int) =
+      all.filter(r => keptIds(r._3)).groupBy(_._1).toSeq.flatMap {
+        case (_, rs) => rs.sortBy(_._2).take(k).zipWithIndex
+          .map { case ((q, _, n, s), i) => (q, i + 1, n, s) }
+      }.sorted
+    def pqAdhoc(k: Int, r: Int, ex: Boolean) = Similarity.pqTopK(queries, corpus,
+      col("id"), col("v"), col("id"), col("v"), m = 4, ksub = 8, k = k,
+      rescore = r, dim = 16, excludeSelf = ex)
+    def pqLoad(r: Int, ex: Boolean, restrict: Option[DataFrame] = None) =
+      Similarity.pqLoadTopK(spark, pqPath, queries, col("id"), col("v"), k = 3,
+        rescore = r, rescoreAgainst = if (r > 0) Some(against) else None,
+        excludeSelf = ex, restrictTo = restrict)
+    def ivfPqAdhoc(k: Int, r: Int, ex: Boolean) = Similarity.ivfPqRetrieve(
+      queries, corpus, col("id"), col("v"), col("id"), col("v"), nlist = 8,
+      nprobe = 2, m = 4, ksub = 8, k = k, rescore = r, excludeSelf = ex, dim = 16)
+    def ivfPqLoad(r: Int, ex: Boolean, restrict: Option[DataFrame] = None) =
+      Similarity.ivfPqLoadTopK(spark, ivfPqPath, queries, col("id"), col("v"),
+        nprobe = 2, k = 3, rescore = r, rescoreAgainst = against,
+        excludeSelf = ex, restrictTo = restrict)
+    val cases: Seq[(String, () => Seq[(Long, Int, Long, Long)],
+        () => Seq[(Long, Int, Long, Long)])] =
+      (for (ex <- Seq(true, false); r <- Seq(0, 6)) yield
+        (s"pq rescore=$r excludeSelf=$ex",
+          () => rows(pqAdhoc(3, r, ex)), () => rows(pqLoad(r, ex)))) ++
+      (for (ex <- Seq(true, false)) yield
+        (s"ivfPq excludeSelf=$ex",
+          () => rows(ivfPqAdhoc(3, 6, ex)), () => rows(ivfPqLoad(6, ex)))) ++
+      Seq(
+        ("pq restrictTo",
+          () => cut(rows(pqAdhoc(96, 0, true)), 3),
+          () => rows(pqLoad(0, true, Some(kept)))),
+        // rescore ≥ every probed candidate: the shortlist cut keeps all
+        // of them on both sides, so only the id restriction differs
+        ("ivfPq restrictTo",
+          () => cut(rows(ivfPqAdhoc(96, 96, false)), 3),
+          () => rows(ivfPqLoad(96, false, Some(kept)))))
+    cases.foreach { case (name, adhoc, loaded) =>
+      val a = adhoc()
+      assert(a.nonEmpty, s"$name: empty answer")
+      assert(loaded() == a, name)
+    }
   }
 }

@@ -562,4 +562,18 @@ class PlanSpec extends SparkSpec {
     assert(occurrences <= 4, s"minhash_sig appears $occurrences times — " +
       s"the explode barrier must keep ONE evaluation in the cached plan:\n$p")
   }
+
+  test("persisted IVF probes fan out on (query_id, cid) with an explicit " +
+      "partition count") {
+    // keyed on query_id alone, the repartition is statically the probe
+    // rank window's own exchange: Catalyst elides it and AQE coalesces
+    // the window to one partition, so the list join runs in one task
+    val fanout = ("Exchange hashpartitioning\\(query_id#\\d+L?, cid#\\d+L?, " +
+      "\\d+\\), REPARTITION_BY_NUM").r
+    Seq("q_knn_ivf_persisted", "q_knn_ivf_pq_persisted").foreach { q =>
+      val p = plan(q)
+      assert(fanout.findFirstIn(p).isDefined,
+        s"$q: probe rows must repartition by (query_id, cid):\n$p")
+    }
+  }
 }
