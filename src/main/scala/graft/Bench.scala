@@ -67,18 +67,9 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = graft.core.Session.cpus
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // UTC everywhere loadEvents' NTZ→timestamp cast runs, not just in
-      // Verify — a non-UTC host JVM would shift event instants and make
-      // Bench/RunOne row counts diverge from the oracle-checked results
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Session.local(cpus)
     // warmup: touch every table (OS page cache + parquet footers), then
     // run EVERY query once at the smallest SF — same codegen/JIT paths,
     // negligible data. Timed runs then measure steady-state compute (the

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 /** Plan inspection helper: prints the formatted physical plan of the
   * given queries (default: a representative set) at the given sf dir. */
 object Explain {
@@ -7,11 +6,7 @@ object Explain {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.01"
     val names = if (args.length > 1) args.drop(1).toSeq
       else Seq("q1_agg", "q_ix", "q_interval_join", "q_dedup_minhash")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC") // match Verify/oracle
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.core.Session.local()
     names.foreach { n =>
       println(s"===== $n =====")
       SparkEntry.queries(n)(spark, sfDir).explain("formatted")

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Synthetic scale-up generator for scale-evidence runs: writes N
@@ -24,12 +24,7 @@ object GenScale {
     val src = args(0)
     val out = args(1)
     val copies = args(2).toInt
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("LC", "32")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SP", "32"))
-      .config("spark.sql.session.timeZone", "UTC") // match Verify/oracle
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.core.Session.local()
     val OFF = 10000000L
 
     def replicate(name: String)(mutate: (DataFrame, Int) => DataFrame): Unit = {

@@ -1,14 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 /** Run a single named query (timed) — profiling helper. */
 object RunOne {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    val spark = SparkSession.builder().master(s"local[${sys.env.getOrElse("LC", "32")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SP", "32"))
-      .config("spark.sql.session.timeZone", "UTC") // match Verify/oracle
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.core.Session.local()
     args.drop(1).foreach { n =>
       val t0 = System.nanoTime()
       val cnt = SparkEntry.queries(n)(spark, sfDir).count()

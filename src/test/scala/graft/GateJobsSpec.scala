@@ -124,6 +124,62 @@ class GateJobsSpec extends SparkSpec {
     assert(dist > small && distBc > 0, s"distributed pass: $dist / $distBc")
   }
 
+  test("a refresh's jobs do not grow with history: equal counts against " +
+      "1x and 8x history, no broadcast build behind the gates") {
+    // 8x history = the base docs plus 7 copies with every word suffixed
+    // _rN (GenScale's discipline: disjoint shingles, distinct texts)
+    val rnd = new scala.util.Random(42)
+    def text(vocab: String) =
+      Seq.fill(24)(s"$vocab${rnd.nextInt(300)}").mkString("the ", " ", "")
+    val base = (1L to 40L).map(i => (i, text("w")))
+    def history(copies: Int) = (0 until copies).flatMap { r =>
+      if (r == 0) base
+      else base.map { case (id, t) =>
+        (id + r * 1000L, t.split(" ").map(w => s"${w}_r$r").mkString(" ")) }
+    }.toDF("doc_id", "text")
+    // one fixed batch: half exact copies of base texts, half novel
+    val batch = (base.take(10).map { case (id, t) => (id + 100000L, t) } ++
+        (1L to 10L).map(i => (i + 200000L, text("v"))))
+      .toDF("doc_id", "text").localCheckpoint(true)
+    val heldout = Seq(text("h")).toDF("text")
+    def refresh(root: String, in: DataFrame) =
+      graft.operators.Pipelines.pretrainCorpusIncremental(in, col("doc_id"),
+        col("text"), Map("en" -> Seq("the")), keepLang = "en",
+        stopwords = Seq("the", "a"), minQuality = 0.0, blocklist = Nil,
+        hashIndex = s"$root/hash", sigIndex = s"$root/sig",
+        heldout = heldout, heldoutText = col("text"), ngram = 5,
+        sampleRate = 1.0, salt = "hj", packBudget = 256, packBuckets = 4)
+    // (row, answered behind the Small gates, set-up over a history → the
+    // measured call). dedupAgainst is lazy, so its call materializes the
+    // answer; the refresh's gates run at call time, and its lazy tail
+    // never reads history. dedupAgainst has no gate: its band join's
+    // broadcast builds are pinned equal across history sizes, not zero
+    val rows: Seq[(String, Boolean, DataFrame => () => DataFrame)] = Seq(
+      ("dedupAgainst", false, { hist =>
+        val path = tmp("gatejobs_hist_sig")
+        Dedup.signatureSave(hist, col("doc_id"), col("text"), path)
+        () => graft.core.Caches.eager(Dedup.dedupAgainst(spark, path, batch,
+          col("doc_id"), col("text")).select(col("id").as("doc_id")))
+      }),
+      ("pretrainCorpusIncremental", true, { hist =>
+        val root = tmp("gatejobs_hist_chain")
+        refresh(root, hist).count() // backfill both indexes
+        () => refresh(root, batch)
+      }))
+    rows.foreach { case (name, gated, setUp) =>
+      val Seq((j1, bc1, out1), (j8, bc8, out8)) = Seq(1, 8).map { copies =>
+        val call = setUp(history(copies))
+        var out: DataFrame = null
+        val (j, bc) = jobsOf { out = call() }
+        (j, bc, out.select("doc_id").as[Long].collect().toSet)
+      }
+      assert(j1 == j8 && bc1 == bc8 && (!gated || bc1 == 0),
+        s"$name: 1x history ran $j1 jobs / $bc1 broadcast builds, " +
+          s"8x ran $j8 / $bc8")
+      assert(out1 == out8 && out1.nonEmpty, s"$name: $out1 at 1x, $out8 at 8x")
+    }
+  }
+
   test("Small.rows over an 8-file scan runs one job, fitting or not") {
     val dir = tmp("gatejobs_rows") + "/t"
     spark.range(0, 400, 1, 8).selectExpr("id", "cast(id as string) as s")

@@ -539,6 +539,68 @@ class PlanSpec extends SparkSpec {
     }
   }
 
+  test("q_pretrain_model over a keep that retains rows (sf0.01): the AQE " +
+      "final plan of the quality keep broadcasts the logreg weights") {
+    // the test above reads the initial plan: at sf0.001 no document
+    // reaches the quality floor, so AQE proves that keep's final plan
+    // empty. At sf0.01 documents pass it, and the final plan is the one
+    // that runs
+    import org.apache.spark.sql.execution.{EmptyRelationExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    // (AQE initial plan, AQE final plan) of each localCheckpoint action
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(SparkPlan, SparkPlan)]()
+    val l = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+        if (funcName == "localCheckpoint") qe.executedPlan match {
+          case a: AdaptiveSparkPlanExec => seen.add(a.initialPlan -> a.executedPlan)
+          case p => seen.add(p -> p)
+        }
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(l)
+    try SparkEntry.queries("q_pretrain_model")(spark,
+      new java.io.File(dir).getParent + "/sf0.01")
+    finally {
+      org.apache.spark.SpecBus.drain(spark.sparkContext)
+      spark.listenerManager.unregister(l)
+    }
+    import scala.jdk.CollectionConverters._
+    // the quality keep is the checkpoint that featurizes (hash_embed)
+    val quality = seen.asScala.toSeq.filter(_._1.toString.contains("hash_embed"))
+    assert(quality.size == 1, s"${quality.size} quality-keep checkpoints")
+    val f = quality.head._2
+    def provedEmpty(p: SparkPlan): Boolean = p.find {
+      case q: QueryStageExec => provedEmpty(q.plan)
+      case n => n.isInstanceOf[EmptyRelationExec]
+    }.isDefined
+    // precondition: the keep retains rows, so the pins below are not
+    // checked against an empty chain
+    assert(!provedEmpty(f), s"the quality keep's final plan is empty:\n$f")
+    val p = f.toString
+    assert(p.contains("BroadcastExchange IdentityBroadcastMode"),
+      s"expected the broadcast logreg weights:\n$p")
+    assert(!p.contains("CartesianProduct"), s"no cartesian fallback:\n$p")
+    // the weights join the corpus as the one-row build side of a nested
+    // loop; no nested loop may build on anything else (the corpus)
+    import org.apache.spark.sql.catalyst.optimizer.BuildRight
+    import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p.collect {
+      case q: QueryStageExec => nodes(q.plan)
+      case n => Seq(n)
+    }.flatten
+    val loops = nodes(f).collect { case j: BroadcastNestedLoopJoinExec => j }
+    assert(loops.nonEmpty, s"expected the weights' nested loop:\n$p")
+    loops.foreach { j =>
+      val build = (if (j.buildSide == BuildRight) j.right else j.left).toString
+      assert(build.contains("BroadcastExchange IdentityBroadcastMode") &&
+        build.contains("collect_list") && !build.contains("ExistingRDD"),
+        s"a nested loop builds on more than the weight array:\n$build")
+    }
+  }
+
   test("q_dedup_incremental: in-row signatures (minhash_sig, one node per " +
       "branch), no SortAggregate, no cartesian") {
     val p = plan("q_dedup_incremental")

@@ -7,13 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * session startup dominates test wall-clock otherwise). */
 object SparkSpec {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // two threads: GateJobsSpec's job counts are pinned at 2 partitions
+    val s = graft.core.Session.local(2)
     s.sparkContext.setLogLevel("ERROR")
     s
   }

@@ -12,5 +12,4 @@ for p in java.base/java.lang java.base/java.lang.invoke java.base/java.lang.refl
   OPENS="$OPENS --add-opens $p=ALL-UNNAMED"
 done
 exec java $OPENS -Xmx${SPARK_DRIVER_MEM:-32g} -XX:ReservedCodeCacheSize=1g \
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -cp "$CP" "$@"
