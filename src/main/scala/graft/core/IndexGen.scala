@@ -24,11 +24,15 @@ import java.nio.file.{Files, StandardCopyOption}
   *    one atomic rename flips the `_current` marker to N;
   *  - readers resolve [[readDir]] — the committed generation — so they
   *    see exactly one complete generation, never a mix;
-  *  - [[commit]] prunes generations older than N-1: an in-flight reader
-  *    that resolved the PREVIOUS marker can still finish its scan (one
-  *    generation of grace — the reader-vs-swap discipline of the upsert
-  *    sink's `.old` dirs), while uncommitted debris below the grace line
-  *    is cleared.
+  *  - [[commit]] keeps the previously COMMITTED generation (the
+  *    marker's old value): an in-flight reader that resolved the
+  *    previous marker can still finish its scan (one generation of grace
+  *    — the reader-vs-swap discipline of the upsert sink's `.old` dirs).
+  *    Every other dir below N is pruned, uncommitted debris included: a
+  *    crashed, never-committed generation must not take the previous
+  *    complete one's place. Each generation records its commit in a
+  *    `_committed` file, so [[versions]] lists committed generations
+  *    only.
   *
   * Single writer per index path (the same contract as the upsert sink);
   * concurrent readers are the point. Renames are atomic on a real
@@ -40,6 +44,14 @@ object IndexGen {
   private val GenPattern = "gen-(\\d+)".r
 
   private def markerFile(path: String) = new File(path, "_current")
+
+  /** The record that generation `gen` was committed at some point. */
+  private def record(path: String, gen: Long) =
+    new File(path, s"gen-$gen/_committed")
+
+  private def gens(path: String): Seq[Long] =
+    Option(new File(path).list()).getOrElse(Array.empty[String])
+      .collect { case GenPattern(n) => n.toLong }.toSeq
 
   /** The committed generation number, if any. */
   def current(path: String): Option[Long] = {
@@ -60,29 +72,36 @@ object IndexGen {
   /** Reserve the next generation dir: (dir, gen). Nothing becomes
     * visible to readers until [[commit]]. */
   def stage(path: String): (String, Long) = {
-    val root = new File(path)
-    root.mkdirs()
-    val existing = Option(root.list()).getOrElse(Array.empty[String])
-      .collect { case GenPattern(n) => n.toLong }
-    val next = (existing.toSeq :+ 0L).max + 1
+    new File(path).mkdirs()
+    val next = (gens(path) :+ 0L).max + 1
     (s"$path/gen-$next", next)
   }
 
   /** Atomically publish generation `gen` (write-aside + ATOMIC_MOVE of
     * the marker — the instant of the rename is the instant every new
-    * reader switches), then prune generations older than `gen - grace`.
-    * The default grace of 1 keeps exactly the previous generation for
-    * in-flight readers; version-retaining consumers (the time-travel
-    * snapshot sink) pass a larger grace and vacuum explicitly. */
+    * reader switches), record it and the marker's previous value as
+    * committed, then prune every dir below `gen` except the `grace`
+    * newest committed generations. The default grace of 1 keeps exactly
+    * the previously committed generation for in-flight readers;
+    * version-retaining consumers (the time-travel snapshot sink) pass a
+    * larger grace. A staged generation that never committed is pruned
+    * however new it is. */
   def commit(path: String, gen: Long, grace: Long = 1): Unit = {
     val root = new File(path)
+    val prev = current(path)
     val tmp = new File(root, s".tmp-current-${java.util.UUID.randomUUID()}")
     Files.writeString(tmp.toPath, gen.toString)
     Files.move(tmp.toPath, markerFile(path).toPath,
       StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    // after the rename: a crash before these writes leaves `gen` current
+    // (committed by the marker), and the next commit records it as prev
+    (prev.toSeq :+ gen).filter(n => new File(root, s"gen-$n").isDirectory)
+      .foreach(n => record(path, n).createNewFile())
+    val keep = gens(path).filter(n => n < gen && record(path, n).isFile)
+      .sorted.takeRight(grace.toInt).toSet
     Option(root.listFiles()).getOrElse(Array.empty[File]).foreach { f =>
       f.getName match {
-        case GenPattern(n) if n.toLong < gen - grace => rmTree(f)
+        case GenPattern(n) if n.toLong < gen && !keep(n.toLong) => rmTree(f)
         // a crash between marker write-aside and rename leaves a
         // .tmp-current-<uuid> orphan — clear them on the next commit
         // (this commit's own tmp was already renamed away; single writer)
@@ -93,14 +112,12 @@ object IndexGen {
   }
 
   /** Committed generations on disk, ascending — every one of these is a
-    * complete, readable artifact set (uncommitted staged dirs above the
-    * marker are excluded). The time-travel surface of version-retaining
-    * consumers. */
+    * complete, readable artifact set (a staged dir that never committed
+    * is excluded wherever it lies). The time-travel surface of
+    * version-retaining consumers. */
   def versions(path: String): Seq[Long] = current(path) match {
     case None => Nil
     case Some(cur) =>
-      Option(new File(path).list()).getOrElse(Array.empty[String])
-        .collect { case GenPattern(n) if n.toLong <= cur => n.toLong }
-        .toSeq.sorted
+      gens(path).filter(n => n == cur || n < cur && record(path, n).isFile).sorted
   }
 }

@@ -94,9 +94,25 @@ object SegmentStore {
     /** The index rows: one scan per segment, unioned. A multi-path read
       * would infer ONE partition scheme across segment roots and reject
       * the layout; per-segment discovery keeps each segment's cid=
-      * pruning. Segment counts stay small by the compaction cadence. */
-    def rows(spark: SparkSession): DataFrame =
-      segmentDirs.map(spark.read.parquet(_)).reduce(_ unionByName _)
+      * pruning. Segment counts stay small by the compaction cadence.
+      *
+      * Unpartitioned segments of one schema are read as ONE scan
+      * instead, so a probe's plan, and its generated code, is the same
+      * at any segment count (a union gives each segment's scan a codegen
+      * stage of its own, whose class differs by stage id). Segments
+      * whose schemas differ (ids appended in another integral type)
+      * keep the union, which widens them. */
+    def rows(spark: SparkSession): DataFrame = {
+      val parts = segmentDirs.map(spark.read.parquet(_))
+      val schema = parts.head.schema
+      val partitioned = meta.family match {
+        case Family.Ivf | Family.IvfPq | Family.Hnsw => true
+        case _ => false
+      }
+      if (partitioned || parts.exists(_.schema != schema))
+        parts.reduce(_ unionByName _)
+      else spark.read.schema(schema).parquet(segmentDirs: _*)
+    }
   }
 
   /** Resolve the committed generation of the index at `path`. Fails,

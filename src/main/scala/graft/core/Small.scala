@@ -1,14 +1,21 @@
 package graft.core
 
 import java.util.concurrent.atomic.{AtomicBoolean, AtomicReference}
+import scala.collection.immutable.HashSet
 import scala.concurrent.Await
 import scala.concurrent.duration.Duration
 import org.apache.spark.FutureAction
 import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{Expression, InSet,
+  RuntimeReplaceable, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
-import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.catalyst.trees.UnaryLike
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
+import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.types.{ByteType, DataType, DateType,
+  IntegerType, LongType, ShortType}
 
 /** The size gate for per-batch tables that are answered on the driver.
   *
@@ -17,7 +24,7 @@ import org.apache.spark.sql.functions.lit
   * rows, yet answering them with joins and fixpoint loops costs dozens
   * of Spark jobs — each broadcast build alone is one job per action.
   * Below the gate a caller collects the table once ([[rows]], one job)
-  * and ships the lookup back inside an expression (`isin` → InSet),
+  * and ships the lookup back inside an expression ([[in]] / [[notIn]]),
   * which costs no job.
   * Above it (a first ingest, a full rebuild: corpus-sized tables) the
   * caller keeps its distributed join.
@@ -77,15 +84,72 @@ object Small {
     if (overflow.get) None
     else {
       f.value.get.get // a failed job throws here
-      val toRow = ExpressionEncoder(df.schema).resolveAndBind().createDeserializer()
-      Some(parts.iterator.flatMap(_.iterator.map(toRow)).toArray)
+      // converted without generated code: an encoder's deserializer is
+      // one more compiled class per gated table's schema
+      val toRow = CatalystTypeConverters.createToScalaConverter(df.schema)
+      Some(parts.iterator.flatMap(_.iterator.map(toRow(_).asInstanceOf[Row]))
+        .toArray)
     }
   }
 
+  /** `c IN values` as a predicate whose generated code reads the value
+    * set through a reference and never inlines it, at any size and for
+    * any key type. The code of a per-batch plan is then the same on
+    * every batch, and Spark's codegen cache (keyed on the source text)
+    * compiles it once. `isin` inlines: 10 or fewer values stay an `In`
+    * that compiles one comparison per literal, and an Int/Short/Byte/
+    * Date `InSet` of up to 400 values compiles a `switch` over them.
+    * An empty set is a set too, so the plan keeps its shape whether or
+    * not a batch has values. Values must be boxed in the column's own
+    * type; a NULL key is NULL (false in a filter). */
+  private[graft] def in(c: Column, values: Iterable[Any]): Column =
+    ColumnBridge.column(ValueSetIn(ColumnBridge.expression(c), values.toSet))
+
   /** `c NOT IN values` as a row filter that keeps NULL keys — the
-    * left-anti-join semantics the driver-side gates replace (`!isin`
-    * alone is NULL, i.e. false, on a NULL key). Values must be boxed in
-    * the column's own type. */
+    * left-anti-join semantics the driver-side gates replace (`!in`
+    * alone is NULL, i.e. false, on a NULL key). Value-free code, like
+    * [[in]]. */
   private[graft] def notIn(c: Column, values: Iterable[Any]): Column =
-    if (values.isEmpty) lit(true) else c.isNull || !c.isin(values.toSeq: _*)
+    c.isNull || !in(c, values)
+}
+
+/** [[Small.in]]'s predicate: an `InSet` over the key, built once the key
+  * is resolved. Int-family and Date keys are widened to long
+  * ([[WidenToLong]]), so the set path (a `contains` on a referenced set)
+  * runs instead of the `switch` those types get; other keys are looked
+  * up as they are. The generated code names the referenced set's class,
+  * so the set is always a `HashSet`: Scala builds sets of up to 4
+  * values as `Set1` … `Set4`, one more variant of the code per size. */
+private[graft] final case class ValueSetIn(child: Expression, values: Set[Any])
+    extends Expression with RuntimeReplaceable with UnaryLike[Expression] {
+  override lazy val replacement: Expression = {
+    val (key, toKey): (Expression, Any => Any) = child.dataType match {
+      case ByteType | ShortType | IntegerType =>
+        (WidenToLong(child), v => v.asInstanceOf[Number].longValue)
+      case DateType =>
+        (WidenToLong(child), v => DateTimeUtils.anyToDays(v).toLong)
+      case dt => (child, CatalystTypeConverters.createToCatalystConverter(dt))
+    }
+    InSet(key, HashSet.from(
+      values.iterator.map(v => if (v == null) null else toKey(v))))
+  }
+  override protected def withNewChildInternal(c: Expression): Expression =
+    copy(child = c)
+}
+
+/** An Int-family or Date value (a date is its epoch day) as a long. Not a
+  * `Cast`: the optimizer unwraps `cast(k AS BIGINT) IN (…)` back to an
+  * int `InSet`, whose code inlines its values. */
+private[graft] final case class WidenToLong(child: Expression)
+    extends UnaryExpression {
+  override def dataType: DataType = LongType
+  override protected def nullSafeEval(v: Any): Any = v match {
+    case b: Byte => b.toLong
+    case s: Short => s.toLong
+    case i: Int => i.toLong
+  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c => s"(long) $c")
+  override protected def withNewChildInternal(c: Expression): Expression =
+    copy(child = c)
 }

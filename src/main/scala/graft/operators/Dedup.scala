@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Caches, SegmentStore}
+import graft.core.{Caches, SegmentStore, Small}
 import graft.core.SegmentStore.{Family, Meta}
 
 /** Deduplication suite for large-scale training-data pipelines.
@@ -197,9 +197,13 @@ object Dedup {
     * generation's manifest (no second open, so probe and append see one
     * generation), and the store fails it loudly when `(n, k)` is not the
     * generation's geometry — signatures of another shingle width or
-    * hash count would silently corrupt the signature space. */
+    * hash count would silently corrupt the signature space.
+    *
+    * `hasRows` is whether `sigs` has any row, when the caller already
+    * knows it from rows its gate collected; None probes `sigs`. */
   private[graft] def signatureAppendSigs(g: SegmentStore.Generation,
-      n: Int, k: Int, sigs: DataFrame): Long = {
+      n: Int, k: Int, sigs: DataFrame,
+      hasRows: Option[Boolean] = None): Long = {
     val meta = Meta(Family.Signature, Seq(n, k, g.meta.geometry.last))
     require(sigs.columns.toSeq == ("id" +: (0 until k).map(i => s"h$i")),
       s"signatureAppendSigs: signature columns ${sigs.columns.mkString(",")} " +
@@ -210,7 +214,7 @@ object Dedup {
     // read of that segment would fail schema inference. A batch at
     // another geometry still goes to the append, whose record check
     // fails it.
-    if (meta == g.meta && sigs.isEmpty) g.gen
+    if (meta == g.meta && !hasRows.getOrElse(!sigs.isEmpty)) g.gen
     else SegmentStore.append(g, meta, sigs)
   }
 
@@ -293,9 +297,10 @@ object Dedup {
     * their band keys) fit the gate, the probe is answered on the driver
     * — the history scan filters on per-band `bk IN (batch keys)`, the
     * band-collision / est / own-id rules run on the collected rows, and
-    * the drop list ships back as an InSet: no band join, no broadcast
-    * build. Above the gate (a rebuild-sized batch) the band join of
-    * [[dedupAgainst]] runs instead; both paths return the same rows.
+    * the drop list ships back as a value set ([[Small.notIn]]): no band
+    * join, no broadcast build. Above the gate (a rebuild-sized batch)
+    * the band join of [[dedupAgainst]] runs instead; both paths return
+    * the same rows.
     *
     * Reuse invariant — each per-refresh frame is computed once and read
     * by every action that needs it:
@@ -314,8 +319,8 @@ object Dedup {
       maxDf, graft.core.Small.MaxRows)
 
   /** [[dedupRefresh]] with an explicit gate size — 0 forces the
-    * band-join history probe (the equivalence specs drive both sides
-    * through here). */
+    * distributed canonicalization and the band-join history probe (the
+    * equivalence specs drive both sides through here). */
   private[graft] def dedupRefreshGated(
       spark: org.apache.spark.sql.SparkSession, path: String,
       batch: DataFrame, id: Column, text: Column, threshold: Double,
@@ -323,11 +328,14 @@ object Dedup {
     val (g, n, k, bands) = openSig(path)
     val r = k / bands
     val hs = (0 until k).map(i => col(s"h$i"))
-    // eager: the canonical survivor set feeds the probe signatures AND
-    // the survivor return — uncached, each re-runs the LSH+CC chain
-    val canon = Caches.eager(
-      canonicalize(batch, id, text, lit(0), n, k, bands, threshold, maxDf)
-        .drop("_cluster"))
+    // the canonical survivor set feeds the probe signatures AND the
+    // survivor return. Eager when a distributed pass ran: uncached,
+    // each would re-run the LSH+CC chain or the pick. The driver pass
+    // leaves a filter over `batch`, cheaper to re-read than to cache.
+    val (canonOut, local) = canonicalizeWith(batch, id, text, lit(0), n, k,
+      bands, threshold, maxDf, maxRows)
+    val canon = if (local) canonOut.drop("_cluster")
+      else Caches.eager(canonOut.drop("_cluster"))
     // ONE signature pass per refresh: every canonical row with its
     // signature (NULL below n words) and band keys. The same cached
     // table serves the history probe AND the survivor append (a MinHash
@@ -353,15 +361,19 @@ object Dedup {
     // ids, not just each row's self-id. A fresh batch's ids are never
     // in the index (the caller-feeds-only-new-ids contract shared by
     // every segment store), so off the replay path this removes nothing.
-    graft.core.Small.rows(sigs, maxRows)
-      .flatMap(rows => probeLocal(spark, g, k, bands, rows,
-        estThreshold, maxRows)) match {
-      case Some(dups) =>
+    Small.rows(sigs, maxRows).flatMap(rows =>
+      probeLocal(spark, g, k, bands, rows, estThreshold, maxRows)
+        .map(rows -> _)) match {
+      case Some((rows, dups)) =>
         // size gate passed: the probe was answered on the driver, and
-        // the drop list ships back as an InSet — no join, no broadcast
+        // the drop list ships back as a value set — no join, no
+        // broadcast. The collected rows say whether any survivor has a
+        // signature, so the append needs no emptiness probe.
         signatureAppendSigs(g, n, k,
-          probe.filter(graft.core.Small.notIn(col("id"), dups)))
-        canon.filter(graft.core.Small.notIn(col("_id"), dups))
+          probe.filter(Small.notIn(col("id"), dups)),
+          Some(rows.exists(x => !x.isNullAt(1) &&
+            (x.isNullAt(0) || !dups(x.get(0))))))
+        canon.filter(Small.notIn(col("_id"), dups))
           .select(batch.columns.map(col).toSeq: _*)
       case None =>
         val dupIds = dedupAgainstSigs(spark, g, Caches.eager(probe),
@@ -381,9 +393,10 @@ object Dedup {
     * batch whose collected signature rows (`rows`: id, h0..h{k-1},
     * bk0..bk{bands-1}; NULL signatures for sub-n docs) fit the size gate.
     * One history scan keeps the rows sharing any band key with the batch
-    * (per-band InSet filters over the same [[bandKey]] expression) and
-    * collects them; the band-collision, est ≥ `estThreshold`, x ≠ y and
-    * own-id rules of the band join then run on the collected rows.
+    * (per-band [[Small.in]] filters over the same [[bandKey]]
+    * expression) and collects them; the band-collision,
+    * est ≥ `estThreshold`, x ≠ y and own-id rules of the band join then
+    * run on the collected rows.
     * Returns the batch ids with a history match, or None when the
     * history hits overflow the gate (the caller falls back to the join). */
   private def probeLocal(spark: org.apache.spark.sql.SparkSession,
@@ -401,8 +414,8 @@ object Dedup {
     // a boxed Long, so the history ids are cast before they are collected
     val idType = rows.head.schema("id").dataType
     val hist = g.rows(spark)
-    graft.core.Small.rows(
-      hist.filter((0 until bands).map(b => bandKey(b, r).isin(keys(b): _*))
+    Small.rows(
+      hist.filter((0 until bands).map(b => Small.in(bandKey(b, r), keys(b)))
           .reduce(_ || _))
         .select(col("id").cast(idType) +:
           ((0 until k).map(i => col(s"h$i")) ++
@@ -468,15 +481,18 @@ object Dedup {
     * the seam for callers whose gate already carries the batch's content
     * hashes (the incremental pretrain chain threads `_h` from its
     * in-batch canonicalization through the gate checkpoint), so the md5
-    * kernel is not re-run over the batch text a third time. */
+    * kernel is not re-run over the batch text a third time. `hasHashes`
+    * is whether any row has a non-NULL hash, when the caller's gate
+    * already knows it ([[exactGate]]'s answer below the gate); None
+    * probes the table. */
   private[operators] def hashAppendHashes(
       spark: org.apache.spark.sql.SparkSession, path: String,
-      newHashes: DataFrame): Long = {
+      newHashes: DataFrame, hasHashes: Option[Boolean] = None): Long = {
     val g = SegmentStore.open(path).of(Family.Hash)
     val hashes = newHashes.toDF("id", "h").filter(col("h").isNotNull)
     // empty/all-NULL batch: keep the current generation (zero-row
     // parquet segments can land without part files — see signatureAppend)
-    if (hashes.isEmpty) g.gen
+    if (!hasHashes.getOrElse(!hashes.isEmpty)) g.gen
     else SegmentStore.append(g, Meta(Family.Hash), hashes)
   }
 
@@ -544,19 +560,23 @@ object Dedup {
     * groups fit, they are collected, history is scanned once with
     * `h IN (batch hashes)` and its hits collected, the own-id rule runs
     * on the driver, and the survivors are the checkpoint filtered by
-    * `id IN (kept ids) AND _h NOT IN (dups)` — no join, no broadcast
-    * build. A larger batch (a first ingest or a rebuild-sized day) or an
-    * oversized hit list takes the semi-join + broadcast equi-join of
-    * [[exactAgainstHashes]]. Returns the survivors with `_h`; with no
-    * index yet (a first ingest) every canonical row survives. */
+    * `id IN (kept ids) AND _h NOT IN (dups)` ([[Small.in]] value sets) —
+    * no join, no broadcast build. A larger batch (a first ingest or a
+    * rebuild-sized day) or an oversized hit list takes the semi-join +
+    * broadcast equi-join of [[exactAgainstHashes]]. Returns the
+    * survivors with `_h`; with no index yet (a first ingest) every
+    * canonical row survives. With them comes whether any survivor has a
+    * non-NULL `_h` — known from the collected groups below the gate (a
+    * kept group's own row survives exactly when its hash is not
+    * dropped), None above it — for the caller's hash append. */
   private[graft] def exactGate(spark: org.apache.spark.sql.SparkSession,
       path: String, df: DataFrame, id: String, text: String,
       excludeOwn: Boolean,
-      maxRows: Int = graft.core.Small.MaxRows): DataFrame = {
+      maxRows: Int = Small.MaxRows): (DataFrame, Option[Boolean]) = {
     val withH = Caches.checkpoint(df.withColumn("_h", md5(col(text))))
     val keep = withH.groupBy(col("_h")).agg(min(col(id)).as(id))
     val indexed = graft.core.IndexGen.current(path).isDefined
-    val local = graft.core.Small.rows(keep, maxRows).flatMap { groups =>
+    val local = Small.rows(keep, maxRows).flatMap { groups =>
       val kept = groups.filterNot(_.isNullAt(1))
       val hs = kept.filterNot(_.isNullAt(0)).map(_.getString(0))
       // ids compared in the batch's own id type: a boxed Int never
@@ -564,20 +584,22 @@ object Dedup {
       val hits =
         if (!indexed || hs.isEmpty) Some(Array.empty[org.apache.spark.sql.Row])
         else {
-          graft.core.Small.rows(
+          Small.rows(
             SegmentStore.open(path).of(Family.Hash).rows(spark)
-              .filter(col("h").isin(hs: _*))
+              .filter(Small.in(col("h"), hs))
             .select(col("id").cast(withH.schema(id).dataType), col("h")),
             maxRows)
         }
       val own = if (excludeOwn) kept.map(_.get(1)).toSet else Set.empty[Any]
-      hits.map(found => withH.filter(col(id).isin(kept.map(_.get(1)): _*) &&
-        graft.core.Small.notIn(col("_h"),
-          found.filterNot(h => own(h.get(0))).map(_.getString(1)).toSet)))
+      hits.map { found =>
+        val dropped = found.filterNot(h => own(h.get(0))).map(_.getString(1)).toSet
+        (withH.filter(Small.in(col(id), kept.map(_.get(1))) &&
+          Small.notIn(col("_h"), dropped)), Some(hs.exists(!dropped(_))))
+      }
     }
     local.getOrElse {
       val canon = withH.join(keep.select(id), Seq(id), "left_semi")
-      if (!indexed) Caches.checkpoint(canon)
+      if (!indexed) (Caches.checkpoint(canon), None)
       else {
         val dup = exactAgainstHashes(spark, path,
           canon.select(col(id).as("id"), col("_h").as("h")))
@@ -585,8 +607,8 @@ object Dedup {
           if (excludeOwn) dup.join(canon.select(col(id).as("dup_of")),
             Seq("dup_of"), "left_anti")
           else dup
-        Caches.checkpoint(canon.join(counted.select(col("id").as(id))
-          .distinct(), Seq(id), "left_anti"))
+        (Caches.checkpoint(canon.join(counted.select(col("id").as(id))
+          .distinct(), Seq(id), "left_anti")), None)
       }
     }
   }
@@ -617,12 +639,15 @@ object Dedup {
   private def compactIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, family: Family): Long = {
     val g = SegmentStore.open(path).of(family)
-    val all = g.rows(spark)
     // zero-row guard, mirroring signatureAppend/hashAppend: an empty
     // committed table compacted to a zero-row parquet segment can land
     // with no part files, and every later manifest read would fail
-    // schema inference — keep the current generation instead
-    if (all.isEmpty) g.gen else SegmentStore.compact(g, all)
+    // schema inference — keep the current generation instead. The count
+    // comes from the segments' parquet footers: an `isEmpty` over the
+    // segment union is a limit plan whose per-child limit counters make
+    // fresh generated code on every call.
+    if (g.segmentDirs.map(graft.core.parquetRowCount(spark, _)).sum == 0) g.gen
+    else SegmentStore.compact(g, g.rows(spark))
   }
 
   /** (band, band-key) rows for an LSH banding of a minhash signature
@@ -638,7 +663,7 @@ object Dedup {
 
   /** Band `b`'s LSH key over signature columns h0..: md5 of its r
     * hashes. The Spark-side definition, evaluated on both sides of every
-    * distributed banding. The driver path ([[lshPairsLocal]]) keys on
+    * distributed banding. The driver path ([[lshLocal]]) keys on
     * the r-hash tuple itself: the hashes are fixed-width hex, so two
     * tuples are equal exactly when this md5 is equal, barring an md5
     * collision. */
@@ -767,12 +792,13 @@ object Dedup {
     * broadcast build of the refresh. When the id type is integral and
     * `(id, shingles)` of the batch fits the gate with no NULL and no
     * repeated id, the rows are collected in one job and the pass's own
-    * rules run on the driver ([[lshPairsLocal]]: DF cap over all rows,
+    * rules run on the driver ([[lshLocal]]: DF cap over all rows,
     * MinHash via [[graft.plans.MinHashSigExpr.signature]], band
     * buckets, exact Jaccard on the capped sets); the verified pairs
     * come back as a local relation, which [[Graphs.connectedComponents]]
-    * solves without a job, and the cluster labels reach the rows as a
-    * literal map instead of a join. Those conditions are what make the
+    * solves without a job, the cluster labels reach the rows as a
+    * literal map instead of a join, and an integral `keepBy` is picked
+    * on the driver too ([[pickLocal]]). Those conditions are what make the
     * driver rules exact: the distributed pass groups NULL ids together,
     * merges the shingles of rows sharing an id, and orders string ids by
     * their bytes. Any other batch runs [[minhashLshPairs]]; both paths
@@ -791,41 +817,106 @@ object Dedup {
 
   /** [[canonicalize]] with an explicit gate size — 0 forces the
     * distributed LSH pass (the equivalence specs drive both sides
-    * through here). */
+    * through here).
+    *
+    * Below the gate the representative pick runs on the driver too: the
+    * LSH pass's one collect also takes `keepBy`, and [[pickLocal]]
+    * applies [[ColUtils.argmaxRows]]' rules to the collected rows. The
+    * kept rows come back behind a [[Small.in]] id filter, so the pick
+    * costs no job and no sort-based `min(struct)` aggregate, and its
+    * code is the same on every batch. A `keepBy` type whose order the
+    * driver rule does not replay exactly keeps `argmaxRows`. */
   private[graft] def canonicalizeGated(df: DataFrame, id: Column,
       text: Column, keepBy: Column, n: Int, k: Int, bands: Int,
-      threshold: Double, maxDf: Int, maxRows: Int): DataFrame = {
+      threshold: Double, maxDf: Int, maxRows: Int): DataFrame =
+    canonicalizeWith(df, id, text, keepBy, n, k, bands, threshold, maxDf,
+      maxRows)._1
+
+  /** [[canonicalizeGated]], and whether the whole pass ran on the driver
+    * (LSH pairs and pick): the frame is then a filter over `df`. */
+  private def canonicalizeWith(df: DataFrame, id: Column,
+      text: Column, keepBy: Column, n: Int, k: Int, bands: Int,
+      threshold: Double, maxDf: Int, maxRows: Int): (DataFrame, Boolean) = {
     def components(pairs: DataFrame) = Graphs.connectedComponents(
       pairs.select(col("a").as("src"), col("b").as("dst")))
     val docs = df.withColumn("_id", id)
-    val clustered = lshPairsLocal(df, id, text, n, k, bands, threshold,
-        maxDf, maxRows) match {
-      case Some(pairs) =>
+    lshLocal(df, id, text, keepBy, n, k, bands, threshold, maxDf,
+        maxRows) match {
+      case Some(pass) =>
         // local pairs → union-find, read back without a job; the cluster
         // labels ship as a literal map (a join against the local
-        // relation would still cost a broadcast build)
-        val comp = components(pairs).collect()
-        docs.withColumn("_cluster",
-          if (comp.isEmpty) col("_id")
-          else coalesce(try_element_at(
-              map_from_arrays(lit(comp.map(_.getAs[Number](0).longValue)),
-                lit(comp.map(_.getAs[Number](1).longValue))),
-              col("_id").cast("long")).cast(docs.schema("_id").dataType),
-            col("_id")))
+        // relation would still cost a broadcast build), empty or not:
+        // one plan shape for batches with and without clusters
+        val comp = components(pass.pairs).collect()
+          .map(r => r.getAs[Number](0).longValue -> r.getAs[Number](1).longValue)
+        val clustered = docs.withColumn("_cluster", coalesce(try_element_at(
+            map_from_arrays(lit(comp.map(_._1)), lit(comp.map(_._2))),
+            col("_id").cast("long")).cast(docs.schema("_id").dataType),
+          col("_id")))
+        pickLocal(pass, comp.toMap) match {
+          case Some(kept) => (clustered.filter(Small.in(col("_id"), kept)), true)
+          case None => (ColUtils.argmaxRows(clustered, Seq(col("_cluster")),
+            keepBy, col("_id")), false)
+        }
       case None =>
         val cc = components(
           minhashLshPairs(df, id, text, n, k, bands, threshold, maxDf))
-        docs.join(cc, docs("_id") === cc("node"), "left")
+        val clustered = docs.join(cc, docs("_id") === cc("node"), "left")
           .withColumn("_cluster", coalesce(col("comp"), col("_id")))
           .drop("node", "comp")
+        (ColUtils.argmaxRows(clustered, Seq(col("_cluster")), keepBy,
+          col("_id")), false)
     }
-    ColUtils.argmaxRows(clustered, Seq(col("_cluster")), keepBy, col("_id"))
+  }
+
+  /** What [[lshLocal]] collected and derived: the verified pairs as a
+    * local relation, and per collected row its id (boxed in the id
+    * type) and its `keepBy` value (NULL as null) of type `keepType`. */
+  private[graft] final case class LocalPass(pairs: DataFrame,
+      ids: Array[Any], keys: Array[Any],
+      keepType: org.apache.spark.sql.types.DataType)
+
+  /** [[ColUtils.argmaxRows]]' pick over [[lshLocal]]'s rows, on the
+    * driver: per cluster (`comp` maps a clustered id to its label; an id
+    * absent from it is its own cluster) the largest `keepBy` wins, NULL
+    * loses to any value, and a tie goes to the smallest id. Returns the
+    * kept ids, or None for a `keepBy` type this rule is not exact for:
+    * only integral keys are replayed (argmaxRows negates a decimal-
+    * widened copy of them, whose order is the integers' own), not
+    * floating keys (NaN and -0.0) or other orders. Ids are integral,
+    * non-null and distinct — [[lshLocal]]'s gate. */
+  private def pickLocal(pass: LocalPass, comp: Map[Long, Long]): Option[Seq[Any]] = {
+    import org.apache.spark.sql.types._
+    pass.keepType match {
+      case ByteType | ShortType | IntegerType | LongType =>
+        def score(i: Int): Option[Long] =
+          Option(pass.keys(i)).map(_.asInstanceOf[Number].longValue)
+        def id(i: Int): Long = pass.ids(i).asInstanceOf[Number].longValue
+        def better(a: Int, b: Int): Boolean = (score(a), score(b)) match {
+          case (Some(x), Some(y)) if x != y => x > y
+          case (Some(_), None) => true
+          case (None, Some(_)) => false
+          case _ => id(a) < id(b)
+        }
+        Some(pass.ids.indices.groupBy(i => comp.getOrElse(id(i), id(i)))
+          .valuesIterator.map(_.reduce((a, b) => if (better(a, b)) a else b))
+          .map(pass.ids(_)).toSeq)
+      case _ => None
+    }
   }
 
   /** [[minhashLshPairs]] answered on the driver — the below-gate half of
-    * [[canonicalize]]. Collects `(id, distinct shingles)` in one job and,
-    * when the ids are integral, non-null and distinct, replays the
-    * distributed rules on the collected rows:
+    * [[canonicalize]]; see [[lshLocal]]. Returns the pairs alone. */
+  private[graft] def lshPairsLocal(df: DataFrame, id: Column, text: Column,
+      n: Int, k: Int, bands: Int, threshold: Double, maxDf: Int,
+      maxRows: Int): Option[DataFrame] =
+    lshLocal(df, id, text, lit(null), n, k, bands, threshold, maxDf, maxRows)
+      .map(_.pairs)
+
+  /** [[minhashLshPairs]] answered on the driver. Collects
+    * `(id, distinct shingles, keepBy)` in one job and, when the ids are
+    * integral, non-null and distinct, replays the distributed rules on
+    * the collected rows:
     *  - DF cap: shingles held by more than `maxDf` rows are dropped
     *    (`Int.MaxValue` = no cap), counted over every collected row;
     *  - MinHash over the capped set; an empty capped set has no
@@ -834,22 +925,24 @@ object Dedup {
     *    tuples ⇔ equal [[bandKey]] md5, barring an md5 collision);
     *  - Jaccard = i / (na + nb − i) on the capped sets, kept when i > 0
     *    and ≥ `threshold` (the inner join + filter of [[verifyJaccard]]).
-    * Returns (a, b, jaccard) as a local relation in the id type, or None
-    * (the caller runs the distributed pass). */
-  private[graft] def lshPairsLocal(df: DataFrame, id: Column, text: Column,
-      n: Int, k: Int, bands: Int, threshold: Double, maxDf: Int,
-      maxRows: Int): Option[DataFrame] = {
+    * Returns (a, b, jaccard) as a local relation in the id type with the
+    * collected ids and `keepBy` values, or None (the caller runs the
+    * distributed pass). */
+  private def lshLocal(df: DataFrame, id: Column, text: Column,
+      keepBy: Column, n: Int, k: Int, bands: Int, threshold: Double,
+      maxDf: Int, maxRows: Int): Option[LocalPass] = {
     require(k % bands == 0, "k must be divisible by bands")
     import org.apache.spark.sql.types._
     val rowsIn = df.select(id.as("id"),
-      graft.plans.TextExprs.shingles(text, n, distinct = true).as("s"))
+      graft.plans.TextExprs.shingles(text, n, distinct = true).as("s"),
+      keepBy.as("keep"))
     val idType = rowsIn.schema("id").dataType
     val integral = idType match {
       case ByteType | ShortType | IntegerType | LongType => true
       case _ => false
     }
     if (!integral) return None
-    graft.core.Small.rows(rowsIn, maxRows)
+    Small.rows(rowsIn, maxRows)
       .filter(rows => !rows.exists(_.isNullAt(0)) &&
         rows.iterator.map(_.get(0)).distinct.size == rows.length)
       .map { rows =>
@@ -876,9 +969,10 @@ object Dedup {
             Some(org.apache.spark.sql.Row(rows(x).get(0), rows(y).get(0), jaccard))
           else None
         }
-        df.sparkSession.createDataFrame(java.util.Arrays.asList(pairs: _*),
-          StructType(Seq(StructField("a", idType), StructField("b", idType),
-            StructField("jaccard", DoubleType))))
+        LocalPass(df.sparkSession.createDataFrame(java.util.Arrays.asList(pairs: _*),
+            StructType(Seq(StructField("a", idType), StructField("b", idType),
+              StructField("jaccard", DoubleType)))),
+          rows.map(_.get(0)), rows.map(_.get(2)), rowsIn.schema("keep").dataType)
       }
   }
 

@@ -192,9 +192,9 @@ object DocStore {
         // carries its original deterministic chunk_key, which the near
         // gate would treat as a replayed batch id and let through — the
         // exact gate drops it first; see nearFreshChunks)
-        val exactFreshH = dedupIndex match {
+        val (exactFreshH, hashed) = dedupIndex match {
           case Some(p) => dedupFreshChunks(spark, chunkedC, p)
-          case None => chunkedC
+          case None => (chunkedC, None)
         }
         // the gate survivors are checkpointed with their `_h` content
         // hashes (indexChunkHashes reuses them — no md5 re-run);
@@ -221,7 +221,7 @@ object DocStore {
         val store = new Store(graft.core.Caches.eager(
           fresh.withColumn("embedding", embedder(col("text")))),
           metadata, embedder)
-        dedupIndex.foreach(p => indexChunkHashes(spark, p, exactFreshH))
+        dedupIndex.foreach(p => indexChunkHashes(spark, p, exactFreshH, hashed))
         // gate checkpoints release with their RDDs (ContextCleaner); the
         // only explicit release left is the no-gate chunk cache alias
         if (exactFreshH eq chunkedC) chunkedC.unpersist(blocking = false)
@@ -319,7 +319,7 @@ object DocStore {
     * every later action reads it — the gate's collect, the near gate,
     * the embed stage and the hash append (which reuses its `_h`). */
   private def dedupFreshChunks(spark: SparkSession, chunked: DataFrame,
-      indexPath: String): DataFrame =
+      indexPath: String): (DataFrame, Option[Boolean]) =
     // `_h` STAYS on the survivors: indexChunkHashes appends the stored
     // hashes instead of re-hashing the stored text. Every history match
     // counts — unlike the pretrain chain, an ingest does not exclude its
@@ -331,14 +331,15 @@ object DocStore {
   /** Record an ingest's surviving chunk hashes in the dedup index —
     * creates it on first ingest, O(new rows) segment append after
     * ([[Dedup.hashCompact]] is the long-run maintenance cadence).
-    * Single writer, like every segment store. */
+    * `hashed` is the gate's answer to whether any survivor has a hash
+    * (None above the gate). Single writer, like every segment store. */
   private def indexChunkHashes(spark: SparkSession, indexPath: String,
-      freshH: DataFrame): Unit = {
+      freshH: DataFrame, hashed: Option[Boolean]): Unit = {
     // the gate survivors arrive with their `_h` content hashes cached
     // (dedupFreshChunks) — append those, never re-hash the chunk text
     val hashes = freshH.select(col("chunk_key").as("id"), col("_h").as("h"))
     if (graft.core.IndexGen.current(indexPath).isDefined) {
-      Dedup.hashAppendHashes(spark, indexPath, hashes)
+      Dedup.hashAppendHashes(spark, indexPath, hashes, hashed)
       ()
     } else if (!freshH.isEmpty)
       Dedup.hashSaveHashes(hashes, indexPath)
@@ -471,9 +472,9 @@ object DocStore {
               val chunkedC = graft.core.Caches.eager(
                 chunkStage(batch.toDF(), id, data, metadata,
                   parser, postProcess, chunkSize, overlap, splitBy))
-              val exactFreshH = dedupIndex match {
+              val (exactFreshH, hashed) = dedupIndex match {
                 case Some(p) => dedupFreshChunks(batch.sparkSession, chunkedC, p)
-                case None => chunkedC
+                case None => (chunkedC, None)
               }
               // survivors carry `_h` for the hash append; the chunk
               // table and the near gate see the hash-free projection
@@ -492,7 +493,7 @@ object DocStore {
                 fresh.withColumn("embedding", embedder(col("text")))
                   .write.mode("append").parquet(s"$path/chunks")
               dedupIndex.foreach(p =>
-                indexChunkHashes(batch.sparkSession, p, exactFreshH))
+                indexChunkHashes(batch.sparkSession, p, exactFreshH, hashed))
             }
             // maintenance cadence: fold each gate index's per-batch
             // manifest segments back to one, on THIS thread (the
@@ -521,9 +522,10 @@ object DocStore {
     * of ingest, like the reference's periodic index maintenance.
     * `nlist <= 0` derives from the CURRENT chunk count, so the index
     * geometry grows with the corpus across refreshes — the count comes
-    * from the parquet FOOTERS ([[parquetRowCount]]: O(files) driver-side
-    * metadata reads, no Spark job, no data scan), so a refresh on a huge
-    * chunk table doesn't pay a full-table count() before the build.
+    * from the parquet FOOTERS ([[graft.core.parquetRowCount]]: O(files)
+    * driver-side metadata reads, no Spark job, no data scan), so a
+    * refresh on a huge chunk table doesn't pay a full-table count()
+    * before the build.
     *
     * The save is atomically versioned ([[graft.core.IndexGen]] inside
     * [[Similarity.ivfSave]]): retrieval over [[open]] keeps serving the
@@ -628,13 +630,13 @@ object DocStore {
       .getInt(0)
     def derivedN(defN: Int) = if (nlist > 0) nlist
       else if (defN > 0) defN
-      else Similarity.nlistFor(parquetRowCount(spark, s"$path/chunks"))
+      else Similarity.nlistFor(graft.core.parquetRowCount(spark, s"$path/chunks"))
     kind match {
       case IvfFlat(defN) =>
         Similarity.ivfSave(persisted, col("chunk_key"), col("embedding"),
           dir, derivedN(defN))
       case PqCodes(m, ksub, _) =>
-        flatPqCorpusWarning(parquetRowCount(spark, s"$path/chunks"))
+        flatPqCorpusWarning(graft.core.parquetRowCount(spark, s"$path/chunks"))
           .foreach(msg => System.err.println(s"[graft] WARN $msg"))
         Similarity.pqSave(persisted, col("chunk_key"), col("embedding"),
           dir, m, ksub, dim)
@@ -742,31 +744,6 @@ object DocStore {
         ()
     }
     n
-  }
-
-  /** Exact row count of a parquet directory from file footers alone —
-    * driver-side metadata I/O, zero Spark jobs. For [[rebuildIndex]]'s
-    * nlist derivation the raw listing is the right price: a crashed
-    * streaming micro-batch can leave an uncommitted file the
-    * `_spark_metadata` log would exclude from a READ, but index GEOMETRY
-    * only needs the corpus's order of magnitude, and the committed read
-    * path is untouched. */
-  private[graft] def parquetRowCount(spark: SparkSession, dir: String): Long = {
-    val conf = spark.sessionState.newHadoopConf()
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(conf)
-    def walk(p: org.apache.hadoop.fs.Path): Long =
-      fs.listStatus(p).map { st =>
-        val name = st.getPath.getName
-        if (name.startsWith("_") || name.startsWith(".")) 0L
-        else if (st.isDirectory) walk(st.getPath)
-        else if (name.endsWith(".parquet")) {
-          val in = org.apache.parquet.hadoop.ParquetFileReader.open(
-            org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
-          try in.getRecordCount finally in.close()
-        } else 0L
-      }.sum
-    walk(root)
   }
 
   /** The query surface both store flavors share — what [[serve]]

@@ -158,20 +158,69 @@ object Pipelines {
               c.n, c.k, c.bands, c.threshold, c.maxDf)
             .select(col("doc_id"), col("text")))
     }
-    val trainShingles =
-      Dedup.shingles(canonical, col("doc_id"), col("text"), ngram)
-    val benchShingles = Dedup.shingles(
-        heldout.select(heldoutText.as("_ht")), lit(0L), col("_ht"), ngram)
-      .select(col("s")).distinct()
-    val contaminated = trainShingles.join(benchShingles, Seq("s"))
-      .select(col("id").as("doc_id")).distinct()
-    val decontaminated = canonical.join(contaminated, Seq("doc_id"), "left_anti")
+    // canonicalize keeps one row per doc_id, and its output is cached;
+    // the lazy exact-dedup window is neither, so without the near-dup
+    // stage the tail keeps its joins and windows
+    batchTail(canonical, gated = nearDup.isDefined, heldout,
+      heldoutText, ngram, sampleRate, salt, packBudget, packBuckets)
+  }
+
+  /** The per-batch tail every chain ends in: benchmark decontamination
+    * ([[decontaminateGated]]) → mix sampling ([[Sampling.hashSample]])
+    * → sequence packing ([[Sampling.packSequencesGated]]) over a
+    * (doc_id, text) frame. `gated` says the frame is materialized and
+    * holds at most one row per doc_id (a cached or checkpointed
+    * [[Dedup.canonicalize]] output): then both size gates are open —
+    * the driver-side decontamination is exact and the driver-side pack
+    * re-reads no upstream work. */
+  private def batchTail(canonical: DataFrame, gated: Boolean,
+      heldout: DataFrame, heldoutText: Column, ngram: Int,
+      sampleRate: Double, salt: String,
+      packBudget: Long, packBuckets: Int): DataFrame = {
+    val maxRows = if (gated) graft.core.Small.MaxRows else 0
+    val decontaminated = decontaminateGated(canonical, heldout, heldoutText,
+      ngram, maxRows)
     val sampled = Sampling.hashSample(decontaminated, col("doc_id"),
       sampleRate, salt)
-    Sampling.packSequences(
+    Sampling.packSequencesGated(
       sampled.withColumn("n_tokens", TextOps.tokenCount(col("text"))),
-      col("doc_id"), col("n_tokens"), packBudget, packBuckets, salt)
+      col("doc_id"), col("n_tokens"), packBudget, packBuckets, salt, maxRows)
   }
+
+  /** Benchmark decontamination of a (doc_id, text) frame: drop the docs
+    * sharing ANY `ngram`-gram with `heldout` — the [[Dedup.shingles]]
+    * join against the held-out set's distinct shingles, anti-joined back
+    * by doc_id.
+    *
+    * Size gate ([[graft.core.Small]], `maxRows` = 0 forces the join):
+    * when the held-out shingles fit, they are collected (one job) and
+    * each doc is tested in its own row, `exists(shingles(text),
+    * s -> s IN held)` over a [[graft.core.Small.in]] value set — no
+    * join, no `distinct`, no broadcast build, and the same generated
+    * code on every call. A row with a NULL doc_id is kept, as the
+    * anti-join keeps it. The per-row test equals the anti-join by doc_id
+    * only when no two rows share a doc_id, so callers pass `maxRows` = 0
+    * unless their frame guarantees that. */
+  private[graft] def decontaminateGated(docs: DataFrame, heldout: DataFrame,
+      heldoutText: Column, ngram: Int, maxRows: Int): DataFrame =
+    graft.core.Small.rows(heldout.select(explode(
+        graft.plans.TextExprs.shingles(heldoutText, ngram, distinct = true))),
+        maxRows) match {
+      case Some(rows) =>
+        val held = rows.map(_.getString(0)).toSet
+        docs.filter(col("doc_id").isNull || !coalesce(exists(
+          graft.plans.TextExprs.shingles(col("text"), ngram, distinct = true),
+          graft.core.Small.in(_, held)), lit(false)))
+      case None =>
+        val trainShingles =
+          Dedup.shingles(docs, col("doc_id"), col("text"), ngram)
+        val benchShingles = Dedup.shingles(
+            heldout.select(heldoutText.as("_ht")), lit(0L), col("_ht"), ngram)
+          .select(col("s")).distinct()
+        val contaminated = trainShingles.join(benchShingles, Seq("s"))
+          .select(col("id").as("doc_id")).distinct()
+        docs.join(contaminated, Seq("doc_id"), "left_anti")
+    }
 
   /** The MODEL-DRIVEN pre-training chain — [[pretrainCorpusFull]] with
     * stages 1-2 decided by TRAINED models instead of the marker-lexicon
@@ -361,8 +410,8 @@ object Pipelines {
     // text, an own-id match can only be a row matching its own indexed
     // hash — dropping it would lose the row from the retried output.
     // Fresh batches are unaffected.
-    val exactFresh = Dedup.exactGate(spark, hashIndex, blocked, "doc_id",
-      "text", excludeOwn = true)
+    val (exactFresh, hashed) = Dedup.exactGate(spark, hashIndex, blocked,
+      "doc_id", "text", excludeOwn = true)
     // NEAR gate — the persisted refresh loop at document granularity
     // (dedupRefresh appends the survivors' signatures itself); first
     // refresh creates the index at nearDup's geometry
@@ -390,25 +439,16 @@ object Pipelines {
     // rather than drops (the exclusions above make either order safe;
     // hashes-last additionally keeps a crashed FIRST refresh creating
     // no exact index at all). The hashes ride the gate checkpoint's own
-    // `_h` column — no md5 re-run over the batch text.
+    // `_h` column — no md5 re-run over the batch text — and the gate's
+    // collected groups say whether there is any hash to append.
     val freshHashes = exactFresh.select(col("doc_id").as("id"),
       col("_h").as("h"))
     if (graft.core.IndexGen.current(hashIndex).isDefined)
-      Dedup.hashAppendHashes(spark, hashIndex, freshHashes)
+      Dedup.hashAppendHashes(spark, hashIndex, freshHashes, hashed)
     else Dedup.hashSaveHashes(freshHashes, hashIndex)
-    // per-batch tail of the chain: decontaminate → sample → pack
-    val trainShingles =
-      Dedup.shingles(canonical, col("doc_id"), col("text"), ngram)
-    val benchShingles = Dedup.shingles(
-        heldout.select(heldoutText.as("_ht")), lit(0L), col("_ht"), ngram)
-      .select(col("s")).distinct()
-    val contaminated = trainShingles.join(benchShingles, Seq("s"))
-      .select(col("id").as("doc_id")).distinct()
-    val decontaminated = canonical.join(contaminated, Seq("doc_id"), "left_anti")
-    val sampled = Sampling.hashSample(decontaminated, col("doc_id"),
-      sampleRate, salt)
-    Sampling.packSequences(
-      sampled.withColumn("n_tokens", TextOps.tokenCount(col("text"))),
-      col("doc_id"), col("n_tokens"), packBudget, packBuckets, salt)
+    // per-batch tail of the chain: decontaminate → sample → pack; both
+    // gates' outputs are canonicalize outputs, one row per doc_id
+    batchTail(canonical, gated = true, heldout, heldoutText, ngram,
+      sampleRate, salt, packBudget, packBuckets)
   }
 }

@@ -231,22 +231,70 @@ object Sampling {
     * sequence key, `pack_pos` the row's 1-based position inside it in
     * packing order. */
   def packSequences(df: DataFrame, id: Column, tokenCount: Column,
-      budget: Long, buckets: Int, salt: String = ""): DataFrame = {
+      budget: Long, buckets: Int, salt: String = ""): DataFrame =
+    packSequencesGated(df, id, tokenCount, budget, buckets, salt, 0)
+
+  /** [[packSequences]] with a size gate ([[graft.core.Small]]; 0 forces
+    * the windows). When `(id, bucket, md5 order, tokens)` of `df` fit
+    * and the ids are integral, non-null and distinct, they are
+    * collected in one job and the windows' rules run on the driver:
+    * per bucket in (md5 order, id) order, a row's pack is
+    * floor(Σ earlier tokens / budget) (NULL counts add nothing) and its
+    * pack_pos its 1-based rank among the rows of its pack. The answer
+    * ships back as literal maps keyed by id: no shuffle, no sort, and
+    * the same generated code on every call. `df` is evaluated twice, so
+    * gate only a materialized frame. */
+  private[graft] def packSequencesGated(df: DataFrame, id: Column,
+      tokenCount: Column, budget: Long, buckets: Int, salt: String,
+      maxRows: Int): DataFrame = {
     require(budget > 0 && buckets > 0,
       s"packSequences: budget ($budget) and buckets ($buckets) must be > 0")
+    import org.apache.spark.sql.types._
     val ord = md5(concat(lit(salt), id.cast("string")))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("_bucket")).orderBy(ord, id)
-    val pfx = sum(tokenCount.cast("long"))
-      .over(w.rowsBetween(org.apache.spark.sql.expressions.Window
-        .unboundedPreceding, -1))
-    df.withColumn("_bucket", pmod(hashU32(id, salt), lit(buckets.toLong)))
-      .withColumn("_pfx", coalesce(pfx, lit(0L)))
-      .withColumn("pack", floor(col("_pfx") / lit(budget.toDouble)))
-      .withColumn("pack_pos", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy(col("_bucket"), col("pack")).orderBy(ord, id)))
-      .withColumnRenamed("_bucket", "bucket")
-      .drop("_pfx")
+    val keyed = df.withColumn("_bucket",
+      pmod(hashU32(id, salt), lit(buckets.toLong)))
+    val integral = keyed.select(id).schema.head.dataType match {
+      case ByteType | ShortType | IntegerType | LongType => true
+      case _ => false
+    }
+    val local = if (!integral) None else graft.core.Small.rows(
+        keyed.select(id.cast("long"), col("_bucket"), ord,
+          tokenCount.cast("long")), maxRows)
+      .filter(rows => !rows.exists(_.isNullAt(0)) &&
+        rows.iterator.map(_.getLong(0)).distinct.size == rows.length)
+    local match {
+      case Some(rows) =>
+        val placed = rows.groupBy(_.getLong(1)).valuesIterator.flatMap { b =>
+          var pfx = 0L
+          val seen = scala.collection.mutable.HashMap.empty[Long, Int]
+          b.sortWith((x, y) => x.getString(2) < y.getString(2) ||
+              x.getString(2) == y.getString(2) && x.getLong(0) < y.getLong(0))
+            .map { r =>
+              val pack = math.floor(pfx / budget.toDouble).toLong
+              if (!r.isNullAt(3)) pfx += r.getLong(3)
+              val pos = seen.getOrElse(pack, 0) + 1
+              seen(pack) = pos
+              (r.getLong(0), pack, pos)
+            }
+        }.toArray
+        def lookup[T: scala.reflect.ClassTag](f: ((Long, Long, Int)) => T) =
+          try_element_at(map_from_arrays(lit(placed.map(_._1)), lit(placed.map(f))),
+            id.cast("long"))
+        keyed.withColumn("pack", lookup(_._2)).withColumn("pack_pos", lookup(_._3))
+          .withColumnRenamed("_bucket", "bucket")
+      case None =>
+        val w = org.apache.spark.sql.expressions.Window
+          .partitionBy(col("_bucket")).orderBy(ord, id)
+        val pfx = sum(tokenCount.cast("long"))
+          .over(w.rowsBetween(org.apache.spark.sql.expressions.Window
+            .unboundedPreceding, -1))
+        keyed.withColumn("_pfx", coalesce(pfx, lit(0L)))
+          .withColumn("pack", floor(col("_pfx") / lit(budget.toDouble)))
+          .withColumn("pack_pos", row_number().over(
+            org.apache.spark.sql.expressions.Window
+              .partitionBy(col("_bucket"), col("pack")).orderBy(ord, id)))
+          .withColumnRenamed("_bucket", "bucket")
+          .drop("_pfx")
+    }
   }
 }

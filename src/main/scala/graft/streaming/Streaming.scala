@@ -901,7 +901,7 @@ object Streaming {
     val tag = System.currentTimeMillis()
     val stage = new java.io.File(s"$path.stage.$tag")
     spark.read.parquet(path)
-      .filter(col("b").isin(todo.map(Integer.valueOf): _*))
+      .filter(graft.core.Small.in(col("b"), todo.map(Integer.valueOf)))
       .repartition(todo.length, col("b"))
       .write.mode("overwrite").partitionBy("b").parquet(stage.getPath)
     todo.foreach { i =>

@@ -151,4 +151,33 @@ class CanonicalizeGateSpec extends SparkSpec {
     }
     assert(MinHashSigExpr.signature(Iterator.empty, 6) == null)
   }
+
+  test("driver pick ≡ argmaxRows: Long, Short and NULL keepBy with ties " +
+      "and extremes; a Double keepBy keeps argmaxRows") {
+    val c = cfgs.head
+    val (rows, planted) = batch(11, c)
+    val rnd = new scala.util.Random(3)
+    val extremes = Seq(Long.MinValue, Long.MaxValue, 0L, -1L, 1L)
+    val df = rows.map { case (id, t, _) =>
+        (id, t, if (rnd.nextInt(5) == 0) None
+          else Some(extremes(rnd.nextInt(extremes.size))))
+      }.toDF("doc_id", "text", "score")
+    def canon(keepBy: org.apache.spark.sql.Column, maxRows: Int) =
+      Dedup.canonicalizeGated(df, col("doc_id"), col("text"), keepBy,
+        c.n, c.k, c.bands, c.threshold, c.maxDf, maxRows)
+    for ((name, keepBy) <- Seq("Long" -> col("score"),
+        "Short" -> (col("score") % 7).cast("short"),
+        "literal" -> lit(0), "NULL" -> lit(null).cast("int"),
+        "Double" -> (col("score") / 3.0))) {
+      val driver = canon(keepBy, graft.core.Small.MaxRows)
+      assert(rowsOf(driver) == rowsOf(canon(keepBy, 0)), name)
+      // the integral picks really run on the driver: no struct-min
+      // aggregate is left in the plan
+      val agg = driver.queryExecution.executedPlan.toString
+        .contains("SortAggregate")
+      assert(agg == (name == "Double"), s"$name: SortAggregate = $agg")
+    }
+    // precondition: the batch has clusters to pick from
+    assert(planted.nonEmpty && rowsOf(canon(lit(0), 0)).size < rows.size)
+  }
 }

@@ -579,7 +579,7 @@ class DocStoreSpec extends SparkSpec {
   test("parquetRowCount matches the scan count from footers alone") {
     val root = java.nio.file.Files.createTempDirectory("ds_cnt").toString
     store.save(root, nlist = 4)
-    assert(DocStore.parquetRowCount(spark, s"$root/chunks") ==
+    assert(graft.core.parquetRowCount(spark, s"$root/chunks") ==
       spark.read.parquet(s"$root/chunks").count())
   }
 
@@ -697,9 +697,9 @@ class DocStoreSpec extends SparkSpec {
       col("chunk_key"), col("text"), idx)
     val seen = chunks.filter(col("doc_id") === 1L)
       .select("text").as[String].collect().toSet
-    val local = Dedup.exactGate(spark, idx, chunks, "chunk_key", "text",
+    val (local, _) = Dedup.exactGate(spark, idx, chunks, "chunk_key", "text",
       excludeOwn = false)
-    val joined = Dedup.exactGate(spark, idx, chunks, "chunk_key", "text",
+    val (joined, _) = Dedup.exactGate(spark, idx, chunks, "chunk_key", "text",
       excludeOwn = false, maxRows = 0)
     assert(rowsOf(local) == rowsOf(joined))
     val texts = local.select("text").as[String].collect()

@@ -64,7 +64,7 @@ class GateJobsSpec extends SparkSpec {
     val batch = Seq((5L, "a b c"), (6L, "g h i"), (7L, "g h i"))
       .toDF("doc_id", "text").localCheckpoint(true)
     def gate(maxRows: Int) = jobsOf(Dedup.exactGate(spark, path, batch,
-      "doc_id", "text", excludeOwn = true, maxRows).collect())
+      "doc_id", "text", excludeOwn = true, maxRows)._1.collect())
     val (_, smallBc) = gate(graft.core.Small.MaxRows)
     assert(smallBc == 0, s"driver-side exact gate built $smallBc broadcasts")
     // the pin can fail: the join fallback does broadcast

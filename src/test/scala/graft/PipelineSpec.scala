@@ -251,9 +251,9 @@ class PipelineSpec extends SparkSpec {
       df.select("doc_id").as[Int].collect().toSet
     for ((excludeOwn, want) <- Seq(true -> Set(5, 8, 10),
         false -> Set(8, 10))) {
-      val local = Dedup.exactGate(spark, path, batch, "doc_id", "text",
+      val (local, _) = Dedup.exactGate(spark, path, batch, "doc_id", "text",
         excludeOwn)
-      val joined = Dedup.exactGate(spark, path, batch, "doc_id", "text",
+      val (joined, _) = Dedup.exactGate(spark, path, batch, "doc_id", "text",
         excludeOwn, maxRows = 0)
       assert(ids(local) == want, s"excludeOwn=$excludeOwn: ${ids(local)}")
       assert(rowsOf(local) == rowsOf(joined))
@@ -263,8 +263,8 @@ class PipelineSpec extends SparkSpec {
     val none = java.nio.file.Files.createTempDirectory("exact_none")
       .toString + "/idx"
     assert(rowsOf(Dedup.exactGate(spark, none, batch, "doc_id", "text",
-      excludeOwn = true)) == rowsOf(Dedup.exactGate(spark, none, batch,
-      "doc_id", "text", excludeOwn = true, maxRows = 0)))
+      excludeOwn = true)._1) == rowsOf(Dedup.exactGate(spark, none, batch,
+      "doc_id", "text", excludeOwn = true, maxRows = 0)._1))
   }
 
   test("dedupRefresh: the driver-side history probe ≡ the band join below " +
@@ -690,6 +690,29 @@ class PipelineSpec extends SparkSpec {
       Seq((1L, "clean row"), (2L, "has abc inside")).toDF("id", "t"),
       col("t"), Seq("abc")).collect().map(_.getLong(0)).toSeq
     assert(kept == Seq(1L))
+  }
+
+  test("decontaminateGated: the driver-side shingle set ≡ the anti-join, " +
+      "NULL ids and texts, short docs") {
+    import graft.operators.Pipelines
+    val held = Seq((1L, "zz1 zz2 zz3 zz4 zz5 zz6"), (2L, null: String),
+      (3L, "yy1 yy2 yy3 yy4 yy5")).toDF("h", "text")
+    val train = Seq[(Option[Long], String)](
+      (Some(10L), "a b zz2 zz3 zz4 zz5 zz6 c"), // shares a 5-gram: drops
+      (Some(11L), "zz1 zz2 zz3 zz4 yy5 yy6"),   // no shared 5-gram: kept
+      (Some(12L), "yy1 yy2 yy3 yy4 yy5"),       // equal to a held doc
+      (Some(13L), "zz1 zz2"),                    // shorter than n
+      (Some(14L), null),
+      (None, "yy1 yy2 yy3 yy4 yy5 x"),          // NULL id: the anti-join keeps it
+      (Some(15L), "fresh words only here today")).toDF("doc_id", "text")
+    def run(maxRows: Int) = rowsOf(Pipelines.decontaminateGated(train, held,
+      col("text"), 5, maxRows))
+    assert(run(graft.core.Small.MaxRows) == run(0))
+    assert(run(0).map(_.head) == Set(11L, 13L, 14L, null, 15L))
+    // no held-out shingles at all: every row survives on both paths
+    val none = held.filter(lit(false))
+    assert(rowsOf(Pipelines.decontaminateGated(train, none, col("text"), 5,
+      graft.core.Small.MaxRows)) == rowsOf(train))
   }
 
   test("decontaminateSemantic drops train rows near any held-out vector") {

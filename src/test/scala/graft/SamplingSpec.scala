@@ -170,6 +170,23 @@ class SamplingSpec extends SparkSpec {
     assert(rowsOf(packed) == rowsOf(re))
   }
 
+  test("packSequencesGated: the driver pack ≡ the windows, NULL and zero " +
+      "token counts, Int ids; NULL ids keep the windows") {
+    val d = (1 to 300).map(i => (i, if (i % 17 == 0) None
+        else Some((i * 7 % 45).toLong))).toDF("id", "t")
+    def pack(df: org.apache.spark.sql.DataFrame, maxRows: Int) =
+      Sampling.packSequencesGated(df, col("id"), col("t"), budget = 60,
+        buckets = 3, salt = "ps", maxRows)
+    val driver = pack(d, graft.core.Small.MaxRows)
+    assert(!driver.queryExecution.executedPlan.toString.contains("Window"))
+    assert(rowsOf(driver) == rowsOf(pack(d, 0)))
+    assert(driver.schema.map(f => (f.name, f.dataType)) ==
+      pack(d, 0).schema.map(f => (f.name, f.dataType)))
+    val withNull = d.union(Seq((None: Option[Int], Some(5L))).toDF("id", "t"))
+    assert(pack(withNull, graft.core.Small.MaxRows).queryExecution
+      .executedPlan.toString.contains("Window"))
+  }
+
   test("sampleWeighted: exact n, partition-independent, weight-biased") {
     // 500 light rows (w=1) + 100 heavy rows (w=50)
     val d = ((1L to 500L).map(i => (i, 1.0)) ++

@@ -17,6 +17,30 @@ class SegmentStoreSpec extends SparkSpec {
   private def partFiles(dir: String): Int =
     new java.io.File(dir).listFiles.count(_.getName.startsWith("part-"))
 
+  test("IndexGen: an abandoned staged generation never replaces the " +
+      "previous committed one") {
+    val path = tmp("indexgen_prune")
+    def gen(): Long = {
+      val (dir, g) = IndexGen.stage(path)
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
+      g
+    }
+    IndexGen.commit(path, gen())
+    IndexGen.commit(path, gen())
+    val torn = gen() // staged, then abandoned: a crashed writer
+    val g4 = gen()
+    assert((torn, g4) == (3L, 4L))
+    IndexGen.commit(path, g4)
+    val dirs = new java.io.File(path).list().filter(_.startsWith("gen-")).sorted
+    assert(dirs.toSeq == Seq("gen-2", "gen-4"), dirs.mkString(","))
+    assert(IndexGen.versions(path) == Seq(2L, 4L))
+    // a retained window larger than one counts committed generations only
+    val (g5, g6) = (gen(), gen()) // g5 abandoned
+    IndexGen.commit(path, g6, grace = 3)
+    assert(IndexGen.versions(path) == Seq(2L, 4L, 6L))
+    assert(!new java.io.File(path, s"gen-$g5").exists)
+  }
+
   test("an append onto an index of another family fails before staging") {
     val rnd = new scala.util.Random(7)
     val vecs = (0 until 24).map(i =>
