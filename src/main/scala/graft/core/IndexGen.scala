@@ -32,7 +32,10 @@ import java.nio.file.{Files, StandardCopyOption}
   *    crashed, never-committed generation must not take the previous
   *    complete one's place. Each generation records its commit in a
   *    `_committed` file, so [[versions]] lists committed generations
-  *    only.
+  *    only. A path written before commits left records has none at or
+  *    below its marker; there every generation up to the marker counts
+  *    as committed (the rule that layout was written under), and the
+  *    next commit records them all before it prunes.
   *
   * Single writer per index path (the same contract as the upsert sink);
   * concurrent readers are the point. Renames are atomic on a real
@@ -52,6 +55,17 @@ object IndexGen {
   private def gens(path: String): Seq[Long] =
     Option(new File(path).list()).getOrElse(Array.empty[String])
       .collect { case GenPattern(n) => n.toLong }.toSeq
+
+  /** The generations that count as committed at or below the marker
+    * value `cur`: the recorded ones and `cur` itself, or every one on a
+    * path with no record at or below `cur` (written before commits left
+    * records). */
+  private def committedUpTo(path: String, cur: Long): Seq[Long] = {
+    val below = gens(path).filter(_ <= cur)
+    val recorded = below.filter(n => record(path, n).isFile)
+    if (recorded.isEmpty) below
+    else (recorded ++ below.filter(_ == cur)).distinct
+  }
 
   /** The committed generation number, if any. */
   def current(path: String): Option[Long] = {
@@ -95,7 +109,8 @@ object IndexGen {
       StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
     // after the rename: a crash before these writes leaves `gen` current
     // (committed by the marker), and the next commit records it as prev
-    (prev.toSeq :+ gen).filter(n => new File(root, s"gen-$n").isDirectory)
+    (prev.toSeq.flatMap(committedUpTo(path, _)) :+ gen)
+      .filter(n => new File(root, s"gen-$n").isDirectory)
       .foreach(n => record(path, n).createNewFile())
     val keep = gens(path).filter(n => n < gen && record(path, n).isFile)
       .sorted.takeRight(grace.toInt).toSet
@@ -117,7 +132,6 @@ object IndexGen {
     * version-retaining consumers. */
   def versions(path: String): Seq[Long] = current(path) match {
     case None => Nil
-    case Some(cur) =>
-      gens(path).filter(n => n == cur || n < cur && record(path, n).isFile).sorted
+    case Some(cur) => committedUpTo(path, cur).sorted
   }
 }

@@ -8,7 +8,7 @@ import org.apache.spark.FutureAction
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.{Expression, InSet,
-  RuntimeReplaceable, UnaryExpression}
+  Literal, RuntimeReplaceable, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.catalyst.trees.UnaryLike
@@ -100,8 +100,11 @@ object Small {
     * that compiles one comparison per literal, and an Int/Short/Byte/
     * Date `InSet` of up to 400 values compiles a `switch` over them.
     * An empty set is a set too, so the plan keeps its shape whether or
-    * not a batch has values. Values must be boxed in the column's own
-    * type; a NULL key is NULL (false in a filter). */
+    * not a batch has values. Values of an integral key may be any boxed
+    * integral type (they are compared as longs); any other key takes
+    * values of its own external type, and a value of another type fails
+    * when the predicate is planned instead of matching nothing. A NULL
+    * key is NULL (false in a filter). */
   private[graft] def in(c: Column, values: Iterable[Any]): Column =
     ColumnBridge.column(ValueSetIn(ColumnBridge.expression(c), values.toSet))
 
@@ -117,7 +120,8 @@ object Small {
   * is resolved. Int-family and Date keys are widened to long
   * ([[WidenToLong]]), so the set path (a `contains` on a referenced set)
   * runs instead of the `switch` those types get; other keys are looked
-  * up as they are. The generated code names the referenced set's class,
+  * up as they are, each value checked against the key's type the way a
+  * literal is. The generated code names the referenced set's class,
   * so the set is always a `HashSet`: Scala builds sets of up to 4
   * values as `Set1` … `Set4`, one more variant of the code per size. */
 private[graft] final case class ValueSetIn(child: Expression, values: Set[Any])
@@ -126,9 +130,11 @@ private[graft] final case class ValueSetIn(child: Expression, values: Set[Any])
     val (key, toKey): (Expression, Any => Any) = child.dataType match {
       case ByteType | ShortType | IntegerType =>
         (WidenToLong(child), v => v.asInstanceOf[Number].longValue)
+      case LongType => (child, v => v.asInstanceOf[Number].longValue)
       case DateType =>
         (WidenToLong(child), v => DateTimeUtils.anyToDays(v).toLong)
-      case dt => (child, CatalystTypeConverters.createToCatalystConverter(dt))
+      // a Literal validates its value against its type
+      case dt => (child, v => Literal.create(v, dt).value)
     }
     InSet(key, HashSet.from(
       values.iterator.map(v => if (v == null) null else toKey(v))))

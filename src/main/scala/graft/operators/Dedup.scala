@@ -318,13 +318,15 @@ object Dedup {
     dedupRefreshGated(spark, path, batch, id, text, threshold, estThreshold,
       maxDf, graft.core.Small.MaxRows)
 
-  /** [[dedupRefresh]] with an explicit gate size — 0 forces the
-    * distributed canonicalization and the band-join history probe (the
-    * equivalence specs drive both sides through here). */
+  /** [[dedupRefresh]] with explicit gate sizes: `maxRows` = 0 forces
+    * the band-join history probe, `canonMaxRows` = 0 the distributed
+    * in-batch canonicalization (the equivalence specs drive both sides
+    * of each through here). */
   private[graft] def dedupRefreshGated(
       spark: org.apache.spark.sql.SparkSession, path: String,
       batch: DataFrame, id: Column, text: Column, threshold: Double,
-      estThreshold: Double, maxDf: Int, maxRows: Int): DataFrame = {
+      estThreshold: Double, maxDf: Int, maxRows: Int,
+      canonMaxRows: Int = graft.core.Small.MaxRows): DataFrame = {
     val (g, n, k, bands) = openSig(path)
     val r = k / bands
     val hs = (0 until k).map(i => col(s"h$i"))
@@ -333,7 +335,7 @@ object Dedup {
     // each would re-run the LSH+CC chain or the pick. The driver pass
     // leaves a filter over `batch`, cheaper to re-read than to cache.
     val (canonOut, local) = canonicalizeWith(batch, id, text, lit(0), n, k,
-      bands, threshold, maxDf, maxRows)
+      bands, threshold, maxDf, canonMaxRows)
     val canon = if (local) canonOut.drop("_cluster")
       else Caches.eager(canonOut.drop("_cluster"))
     // ONE signature pass per refresh: every canonical row with its

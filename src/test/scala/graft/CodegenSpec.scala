@@ -64,6 +64,27 @@ class CodegenSpec extends SparkSpec {
     assert(inlined > 0, "isin must recompile for new values")
   }
 
+  test("Small.in takes any boxed integral value for an integral key; a " +
+      "value of another type fails instead of matching nothing") {
+    val t = spark.range(0, 10, 1, 1)
+      .select(col("id"), col("id").cast("int").as("i"),
+        col("id").cast("string").as("s"), col("id").cast("double").as("d"))
+    def ids(c: String, vs: Seq[Any]) = t.filter(Small.in(col(c), vs))
+      .select(col("id")).as[Long].collect().toSet
+    def kept(c: String, vs: Seq[Any]) = t.filter(Small.notIn(col(c), vs))
+      .count()
+    val mixed = Seq[Any](2, 3L, 4.toShort, 5.toByte)
+    for (c <- Seq("id", "i")) {
+      assert(ids(c, mixed) == Set(2L, 3L, 4L, 5L), c)
+      assert(kept(c, mixed) == 6, c)
+    }
+    assert(ids("s", Seq("2", "3")) == Set(2L, 3L))
+    assert(ids("d", Seq(2.0, 3.0)) == Set(2L, 3L))
+    for ((c, vs) <- Seq("s" -> Seq[Any](2), "d" -> Seq[Any](2),
+        "id" -> Seq[Any]("2")))
+      intercept[Exception](ids(c, vs))
+  }
+
   test("a steady refresh day compiles nothing: days with compaction " +
       "every second day, after two warm days") {
     val rnd = new scala.util.Random(2026)

@@ -304,6 +304,31 @@ class PipelineSpec extends SparkSpec {
     }
   }
 
+  test("dedupRefresh: the distributed in-batch canonicalization ≡ the " +
+      "driver pick, with either history probe") {
+    val a = "alpha bravo charlie delta echo foxtrot golf hotel india " +
+      "juliet kilo lima mike november oscar papa quebec romeo sierra tango"
+    val history = Seq((1L, "the quick brown fox jumps over the lazy dog"))
+      .toDF("doc_id", "text")
+    val batch = Seq((11L, a), (12L, a + " uniform"),
+      (13L, "the quick brown fox jumps over the lazy dog"), // history dup
+      (14L, a), // in-batch exact dup of 11
+      (15L, "short")).toDF("doc_id", "text")
+    def run(maxRows: Int, canonMaxRows: Int) = {
+      val path = java.nio.file.Files.createTempDirectory("sig_canon").toString
+      Dedup.signatureSave(history, col("doc_id"), col("text"), path,
+        n = 3, k = 6, bands = 6)
+      (rowsOf(Dedup.dedupRefreshGated(spark, path, batch, col("doc_id"),
+        col("text"), 0.8, 0.5, 100, maxRows, canonMaxRows)),
+        rowsOf(Similarity.binaryLoadParts(spark, path)
+          .select(col("id"), col("h0"), col("h5"))))
+    }
+    val local = run(graft.core.Small.MaxRows, graft.core.Small.MaxRows)
+    for (maxRows <- Seq(graft.core.Small.MaxRows, 0))
+      assert(run(maxRows, 0) == local, s"maxRows=$maxRows")
+    assert(local._1.map(_.head) == Set(11L, 15L), s"survivors: ${local._1}")
+  }
+
   test("signatureAppendSigs: signatures at the wrong n fail loudly") {
     val path = java.nio.file.Files.createTempDirectory("sig_wrong_n").toString
     Dedup.signatureSave(docs, col("doc_id"), col("text"), path,

@@ -41,6 +41,40 @@ class SegmentStoreSpec extends SparkSpec {
     assert(!new java.io.File(path, s"gen-$g5").exists)
   }
 
+  test("IndexGen: generations committed before commit records keep " +
+      "their time travel across the upgrade") {
+    // the layout an older writer leaves: gen dirs and a marker, no records
+    def legacy(name: String): String = {
+      val path = tmp(name)
+      for (g <- 1 to 5)
+        java.nio.file.Files.createDirectories(
+          java.nio.file.Paths.get(s"$path/gen-$g"))
+      java.nio.file.Files.writeString(
+        java.nio.file.Paths.get(s"$path/_current"), "5")
+      path
+    }
+    val kept = legacy("indexgen_upgrade")
+    assert(IndexGen.versions(kept) == (1L to 5L))
+    val (_, g6) = IndexGen.stage(kept)
+    new java.io.File(s"$kept/gen-$g6").mkdirs()
+    IndexGen.commit(kept, g6, grace = 8)
+    assert(IndexGen.versions(kept) == (1L to 6L))
+    // from here on the records rule: an abandoned staged dir is pruned
+    val (_, torn) = IndexGen.stage(kept)
+    new java.io.File(s"$kept/gen-$torn").mkdirs()
+    val (_, g8) = IndexGen.stage(kept)
+    new java.io.File(s"$kept/gen-$g8").mkdirs()
+    IndexGen.commit(kept, g8, grace = 8)
+    assert(IndexGen.versions(kept) == (1L to 6L) :+ g8)
+    assert(!new java.io.File(s"$kept/gen-$torn").exists)
+    // the default grace keeps the marker's previous value, as it did
+    val one = legacy("indexgen_upgrade_one")
+    val (_, next) = IndexGen.stage(one)
+    new java.io.File(s"$one/gen-$next").mkdirs()
+    IndexGen.commit(one, next)
+    assert(IndexGen.versions(one) == Seq(5L, 6L))
+  }
+
   test("an append onto an index of another family fails before staging") {
     val rnd = new scala.util.Random(7)
     val vecs = (0 until 24).map(i =>

@@ -25,7 +25,7 @@ with the driver's. The log layout must be tab-separated:
   appender.x.layout.pattern = %d{HH:mm:ss.SSS}\\t%p\\t%t\\t%c{1}\\t%m%n
 
 Usage:
-  python3 tools/codegen_ledger.py LOG [--boundary REGEX] [--skip N] [--json]
+  python3 tools/codegen_ledger.py LOG [--boundary REGEX] [--skip N]
       [--dump DIR] [--sites W]
 
 `--skip N` drops the first N windows (set-up) from the summary lines;
@@ -40,10 +40,8 @@ access then misses, and the distinct keys are the working set).
 """
 import argparse
 import hashlib
-import json
 import os
 import re
-import sys
 
 HEADER = re.compile(r"^\d\d:\d\d:\d\d\.\d{3}\t(\w+)\t(.*?)\t(\S+)\t(.*)$")
 GOT_JOB = re.compile(r"^Got job (\d+) \((.*)\) with ")
@@ -132,7 +130,6 @@ def main():
                     help="regex on the job call site that opens a window")
     ap.add_argument("--skip", type=int, default=0,
                     help="windows of set-up to leave out of the summary")
-    ap.add_argument("--json", action="store_true")
     ap.add_argument("--dump", help="directory for never-reused sources")
     ap.add_argument("--sites", type=int, help="window to split by call site")
     a = ap.parse_args()
@@ -147,10 +144,6 @@ def main():
                 name = f"w{r['window']}-{n['side']}-{n['key']}.java"
                 with open(os.path.join(a.dump, name), "w") as fh:
                     fh.write(sources[(n["side"], n["key"])] + "\n")
-    if a.json:
-        json.dump(rows, sys.stdout, indent=1)
-        print()
-        return
     if a.sites is not None:
         first = {}
         for key, site in windows[a.sites]["compiles"]:
