@@ -107,14 +107,18 @@ object PipelineQueries extends QueryModule {
   // row per doc at rest — history text/shingles never re-read), the
   // odd-id "day's ingest" band-joins against it and keeps candidates at
   // signature-agreement est ≥ 0.5. The batch suite (q_dedup_minhash)
-  // covers the in-batch half of the loop.
+  // covers the in-batch half of the loop. This query runs the band join
+  // (`maxRows = 0`: a probe this small is otherwise answered on the
+  // driver), so the oracle checks the distributed path and PlanSpec pins
+  // its plan; q_dedup_incremental_append runs the driver path against
+  // the same oracle.
   q("q_dedup_incremental", dedupIncrementalSql) { (s, dir) =>
     val docs = load(s, dir, "documents")
     val path = java.nio.file.Files.createTempDirectory("graft_sig").toString
     Dedup.signatureSave(docs.filter(col("doc_id") % 2 === 0),
       col("doc_id"), col("text"), path)
-    Dedup.dedupAgainst(s, path, docs.filter(col("doc_id") % 2 === 1),
-        col("doc_id"), col("text"), threshold = 0.5)
+    Dedup.dedupAgainstGated(s, path, docs.filter(col("doc_id") % 2 === 1),
+        col("doc_id"), col("text"), threshold = 0.5, maxRows = 0)
       .select(col("id"), col("dup_of"), r4e(col("est_jaccard")).as("est_jaccard"))
   }
 

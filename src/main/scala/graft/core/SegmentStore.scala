@@ -5,6 +5,7 @@ import java.nio.file.{Files, Path}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.graftbridge.ColumnBridge
 
 /** The one write protocol of every persisted index family — IVF lists,
   * IVF-PQ lists, binary codes, PQ codes, HNSW graphs, MinHash signatures
@@ -18,7 +19,12 @@ import org.apache.spark.sql.functions.col
   *  - `segments.txt` — the manifest: the segments (under `path`) whose
   *    rows, unioned, are the index;
   *  - side tables (`centroids/`, `codebook/`) — small parquet tables
-  *    the family's encoder and search read.
+  *    the family's encoder and search read;
+  *  - `covers.txt` (optional) — the input files, relative to the table
+  *    the index is built from, whose rows the generation holds. A
+  *    writer that reads its input by file records them so the next one
+  *    reads only files added since; a generation without the record
+  *    covers nothing.
   *
   * Writers go stage → meta + manifest → segment → commit → vacuum:
   *  - [[save]] writes the side tables and one segment into a fresh
@@ -44,6 +50,7 @@ object SegmentStore {
 
   private val MetaFile = "meta.txt"
   private val Manifest = "segments.txt"
+  private val Covers = "covers.txt"
 
   /** A persisted index family: its name in the record and the names of
     * its scalar geometry. */
@@ -71,9 +78,11 @@ object SegmentStore {
   }
 
   /** One committed generation, resolved once: its meta record, its
-    * manifest's segments (relative to `path`) and its side tables. */
+    * manifest's segments (relative to `path`), its side tables and the
+    * input files it covers (None: no record). */
   final case class Generation(path: String, gen: Long, meta: Meta,
-      segments: Seq[String], sides: Seq[String]) {
+      segments: Seq[String], sides: Seq[String],
+      covers: Option[Seq[String]] = None) {
     def dir: String = s"$path/gen-$gen"
 
     /** This generation, after checking that it holds `family`. */
@@ -86,32 +95,28 @@ object SegmentStore {
     /** The side table `name` of this generation. */
     def side(spark: SparkSession, name: String): DataFrame = {
       require(sides.contains(name), s"no $name table in $dir ($meta index)")
-      spark.read.parquet(s"$dir/$name")
+      readParquet(spark, s"$dir/$name")
     }
 
     def segmentDirs: Seq[String] = segments.map(s => s"$path/$s")
 
-    /** The index rows: one scan per segment, unioned. A multi-path read
-      * would infer ONE partition scheme across segment roots and reject
-      * the layout; per-segment discovery keeps each segment's cid=
-      * pruning. Segment counts stay small by the compaction cadence.
-      *
-      * Unpartitioned segments of one schema are read as ONE scan
-      * instead, so a probe's plan, and its generated code, is the same
-      * at any segment count (a union gives each segment's scan a codegen
-      * stage of its own, whose class differs by stage id). Segments
-      * whose schemas differ (ids appended in another integral type)
-      * keep the union, which widens them. */
+    /** The index rows as ONE scan of every segment ([[scanParquet]]):
+      * the plan, and so its generated code, is the same at any segment
+      * count (a union gives each segment's scan a codegen stage of its
+      * own, whose class differs by stage id), and a filter on the
+      * family's partition column (cid, shard) prunes whole directories
+      * in every segment. Schemas come from footers ([[parquetSchema]]),
+      * so no read infers one with a job. Segments whose schemas differ
+      * (ids appended in another integral type) are read one by one and
+      * unioned, which widens them. */
     def rows(spark: SparkSession): DataFrame = {
-      val parts = segmentDirs.map(spark.read.parquet(_))
-      val schema = parts.head.schema
-      val partitioned = meta.family match {
-        case Family.Ivf | Family.IvfPq | Family.Hnsw => true
-        case _ => false
-      }
-      if (partitioned || parts.exists(_.schema != schema))
-        parts.reduce(_ unionByName _)
-      else spark.read.schema(schema).parquet(segmentDirs: _*)
+      val schemas = segmentDirs.map(d =>
+        ColumnBridge.asNullable(parquetSchema(spark, d)))
+      if (schemas.forall(_ == schemas.head))
+        scanParquet(spark, segmentDirs, schemas.head)
+      else segmentDirs.zip(schemas)
+        .map { case (d, s) => spark.read.schema(s).parquet(d) }
+        .reduce(_ unionByName _)
     }
   }
 
@@ -132,52 +137,72 @@ object SegmentStore {
       throw new IllegalArgumentException(s"unknown index family in $mf"))
     val segs = manifestOf(dir).getOrElse(
       throw new IllegalArgumentException(s"no segment manifest in $dir"))
+    val covers = new File(dir, Covers)
     Generation(path, gen, Meta(family, family.geometry.map(kv(_).toInt)), segs,
-      dir.listFiles().filter(_.isDirectory).map(_.getName).sorted.toSeq)
+      dir.listFiles().filter(_.isDirectory).map(_.getName).sorted.toSeq,
+      if (covers.isFile) Some(lines(covers)) else None)
   }
 
   /** A fresh index at `path`: the side tables and `rows` as its one
-    * segment. Returns the committed generation. */
+    * segment, covering the input files `covers` (None: no record).
+    * Returns the committed generation. */
   def save(path: String, meta: Meta, rows: DataFrame,
-      sides: (String, DataFrame)*): Long = {
+      sides: Seq[(String, DataFrame)] = Nil,
+      covers: Option[Seq[String]] = None): Long = {
     val (dir, gen) = IndexGen.stage(path)
     sides.foreach { case (name, df) =>
       df.write.mode("overwrite").parquet(s"$dir/$name")
     }
-    publish(path, dir, gen, meta, Nil, rows)
+    publish(path, dir, gen, meta, Nil, Some(rows), covers)
   }
 
   /** Grow the generation `g` by one segment of `rows`. `meta` is the
     * record the rows were encoded for; it must equal `g`'s, which is
-    * checked before anything is staged. Returns the committed
-    * generation. */
-  def append(g: Generation, meta: Meta, rows: DataFrame): Long = {
+    * checked before anything is staged. `covers` names the input files
+    * the rows come from: they join `g`'s record (None carries the
+    * record over as it is). Returns the committed generation. */
+  def append(g: Generation, meta: Meta, rows: DataFrame,
+      covers: Option[Seq[String]] = None): Long = {
     require(meta == g.meta, s"cannot append a $meta segment to ${g.path}: " +
       s"its committed generation ${g.gen} holds a ${g.meta} index")
-    carry(g, g.segments, rows)
+    carry(g, g.segments, Some(rows), covered(g, covers))
   }
+
+  /** Add `covers` to `g`'s record with no new segment: the files were
+    * read and every row in them is indexed already. Returns the
+    * committed generation. */
+  def cover(g: Generation, covers: Seq[String]): Long =
+    carry(g, g.segments, None, covered(g, Some(covers)))
 
   /** Replace `g`'s segments by `rows` as one segment, same record and
     * side tables. Returns the committed generation. */
-  def compact(g: Generation, rows: DataFrame): Long = carry(g, Nil, rows)
+  def compact(g: Generation, rows: DataFrame): Long =
+    carry(g, Nil, Some(rows), g.covers)
 
-  private def carry(g: Generation, keep: Seq[String], rows: DataFrame): Long = {
+  private def covered(g: Generation, covers: Option[Seq[String]]) =
+    covers.map(g.covers.getOrElse(Nil) ++ _).orElse(g.covers)
+
+  private def carry(g: Generation, keep: Seq[String], rows: Option[DataFrame],
+      covers: Option[Seq[String]]): Long = {
     val (dir, gen) = IndexGen.stage(g.path)
     new File(dir).mkdirs()
     g.sides.foreach(s =>
       copyTree(new File(g.dir, s).toPath, new File(dir, s).toPath))
-    publish(g.path, dir, gen, g.meta, keep, rows)
+    publish(g.path, dir, gen, g.meta, keep, rows, covers)
   }
 
   private def publish(path: String, dir: String, gen: Long, meta: Meta,
-      keep: Seq[String], rows: DataFrame): Long = {
+      keep: Seq[String], rows: Option[DataFrame],
+      covers: Option[Seq[String]]): Long = {
     val seg = s"segments/seg-${java.util.UUID.randomUUID()}"
     new File(dir).mkdirs()
     Files.writeString(new File(dir, MetaFile).toPath,
       (Seq("family" -> meta.family.name, "version" -> FormatVersion.toString) ++
         meta.family.geometry.zip(meta.geometry.map(_.toString)))
         .map { case (k, v) => s"$k=$v" }.mkString("\n"))
-    Files.writeString(new File(dir, Manifest).toPath, (keep :+ seg).mkString("\n"))
+    Files.writeString(new File(dir, Manifest).toPath, (keep ++ rows.map(_ => seg)).mkString("\n"))
+    covers.foreach(c =>
+      Files.writeString(new File(dir, Covers).toPath, c.mkString("\n")))
     // Part-file count at rest IS the read parallelism of every kernel
     // that scans a segment (maxPartitionBytes makes a small file one scan
     // split), so no layout ever coalesces: a single-file PQ code segment
@@ -185,23 +210,25 @@ object SegmentStore {
     // (q_doc_store_pq 5 s → 41 s at sf0.1), and coalesce(1) also
     // serialized the encode kernel. File-count growth per append is the
     // compaction cadence's job, not the write's.
-    val w = meta.family match {
-      // inverted lists: clustered by cid over an EXPLICIT partition
-      // count, one file per list. Unclustered, partitionBy opens one file
-      // per (task, cid) pair (8k near-empty files at nlist=256,
-      // local[32]); a bare repartition(cid) gets AQE-coalesced by the
-      // bytes it sees (2 tasks creating 256 list dirs serially — 2.9 s
-      // of a 5 s save), the explicit-N form is exempt
-      case Family.Ivf | Family.IvfPq =>
-        rows.repartition(rows.sparkSession.sessionState.conf.numShufflePartitions,
-          col("cid")).write.partitionBy("cid")
-      // graphs: each build task wrote whole graphs — no reshuffle
-      case Family.Hnsw => rows.write.partitionBy("shard")
-      // codes, signatures, hashes: one part file per non-empty input
-      // partition
-      case _ => rows.write
+    rows.foreach { rows =>
+      val w = meta.family match {
+        // inverted lists: clustered by cid over an EXPLICIT partition
+        // count, one file per list. Unclustered, partitionBy opens one file
+        // per (task, cid) pair (8k near-empty files at nlist=256,
+        // local[32]); a bare repartition(cid) gets AQE-coalesced by the
+        // bytes it sees (2 tasks creating 256 list dirs serially — 2.9 s
+        // of a 5 s save), the explicit-N form is exempt
+        case Family.Ivf | Family.IvfPq =>
+          rows.repartition(rows.sparkSession.sessionState.conf.numShufflePartitions,
+            col("cid")).write.partitionBy("cid")
+        // graphs: each build task wrote whole graphs — no reshuffle
+        case Family.Hnsw => rows.write.partitionBy("shard")
+        // codes, signatures, hashes: one part file per non-empty input
+        // partition
+        case _ => rows.write
+      }
+      w.mode("overwrite").parquet(s"$path/$seg")
     }
-    w.mode("overwrite").parquet(s"$path/$seg")
     IndexGen.commit(path, gen)
     vacuum(path)
     gen
@@ -209,10 +236,11 @@ object SegmentStore {
 
   private def manifestOf(genDir: File): Option[Seq[String]] = {
     val f = new File(genDir, Manifest)
-    if (f.isFile) Some(Files.readString(f.toPath).split("\n").toSeq
-      .map(_.trim).filter(_.nonEmpty))
-    else None
+    if (f.isFile) Some(lines(f)) else None
   }
+
+  private def lines(f: File): Seq[String] =
+    Files.readString(f.toPath).split("\n").toSeq.map(_.trim).filter(_.nonEmpty)
 
   /** Drop segment dirs no generation on disk references (commit already
     * pruned old generations; their exclusive segments are dead weight). */

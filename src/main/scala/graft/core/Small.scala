@@ -52,9 +52,15 @@ object Small {
     * relation is read without a job. */
   private[graft] def rows(df: DataFrame, maxRows: Int): Option[Array[Row]] = {
     val qe = df.queryExecution
-    if (qe.optimizedPlan.isInstanceOf[LocalRelation]) {
-      val r = df.collect()
-      return if (r.length > maxRows) None else Some(r)
+    // converted without generated code: an encoder's deserializer, or the
+    // projection a local scan builds, is one more compiled class per
+    // gated table's schema
+    val toRow = CatalystTypeConverters.createToScalaConverter(df.schema)
+    qe.optimizedPlan match {
+      case l: LocalRelation =>
+        return if (l.data.length > maxRows) None
+          else Some(l.data.map(toRow(_).asInstanceOf[Row]).toArray)
+      case _ =>
     }
     val cap = maxRows + 1
     val capped = qe.toRdd.mapPartitions(_.take(cap).map(_.copy()))
@@ -84,12 +90,19 @@ object Small {
     if (overflow.get) None
     else {
       f.value.get.get // a failed job throws here
-      // converted without generated code: an encoder's deserializer is
-      // one more compiled class per gated table's schema
-      val toRow = CatalystTypeConverters.createToScalaConverter(df.schema)
       Some(parts.iterator.flatMap(_.iterator.map(toRow(_).asInstanceOf[Row]))
         .toArray)
     }
+  }
+
+  /** Every row of `df`, as `collect()` returns them but converted
+    * without generated code (see [[rows]]): for the small driver-side
+    * tables a per-call path reads whole (centroids), whose encoder's
+    * deserializer would be one more compiled class per schema. */
+  private[graft] def collect(df: DataFrame): Array[Row] = {
+    val toRow = CatalystTypeConverters.createToScalaConverter(df.schema)
+    df.queryExecution.executedPlan.executeCollect()
+      .map(toRow(_).asInstanceOf[Row])
   }
 
   /** `c IN values` as a predicate whose generated code reads the value

@@ -234,10 +234,38 @@ object Dedup {
     * so probes keep answering through a concurrent append. */
   def dedupAgainst(spark: org.apache.spark.sql.SparkSession, path: String,
       newDf: DataFrame, id: Column, text: Column,
-      threshold: Double = 0.5): DataFrame = {
-    val (g, n, k, _) = openSig(path)
-    dedupAgainstSigs(spark, g,
-      Caches.eager(minhashInRow(newDf, id, text, n, k)), threshold)
+      threshold: Double = 0.5): DataFrame =
+    dedupAgainstGated(spark, path, newDf, id, text, threshold, Small.MaxRows)
+
+  /** [[dedupAgainst]] with an explicit gate size — 0 forces the band
+    * join (the equivalence spec drives both sides through here). A probe
+    * whose signature rows fit the gate, with non-null distinct ids, is
+    * answered on the driver ([[bandPairsLocal]]: one history scan behind
+    * per-band [[Small.in]] filters, one collect) and comes back as a
+    * driver-local relation: no band join, no broadcast build. Its rule
+    * is the band join's: a probe row skips only its match with its own
+    * id, not matches with the other ids of the probe. */
+  private[graft] def dedupAgainstGated(spark: org.apache.spark.sql.SparkSession,
+      path: String, newDf: DataFrame, id: Column, text: Column,
+      threshold: Double, maxRows: Int): DataFrame = {
+    import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
+    val (g, n, k, bands) = openSig(path)
+    val r = k / bands
+    val probe = minhashInRow(newDf, id, text, n, k)
+    Small.rows(probe.select(col("id") +: (0 until k).map(i => col(s"h$i")) ++:
+          (0 until bands).map(bandKey(_, r)): _*), maxRows)
+      .filter(rows => !rows.exists(_.isNullAt(0)) &&
+        rows.map(x => idKey(x.get(0))).distinct.length == rows.length)
+      .flatMap(bandPairsLocal(spark, g, k, bands, _, maxRows))
+      .map { pairs =>
+        spark.createDataFrame(java.util.Arrays.asList(pairs.collect {
+            case (x, y, est) if est >= threshold =>
+              org.apache.spark.sql.Row(x.get(0), y, est)
+          }: _*), StructType(Seq(StructField("id", probe.schema("id").dataType),
+            StructField("dup_of", g.rows(spark).schema("id").dataType),
+            StructField("est_jaccard", DoubleType))))
+      }
+      .getOrElse(dedupAgainstSigs(spark, g, Caches.eager(probe), threshold))
   }
 
   /** [[dedupAgainst]] over an ALREADY-COMPUTED (and cached) probe
@@ -306,9 +334,10 @@ object Dedup {
     * by every action that needs it:
     *  - `canon` (eager cache of the in-batch canonicalization): feeds
     *    the signature table and the survivor return;
-    *  - the signature table (cached, filled by the gate's one collect):
-    *    feeds the history probe AND the survivor append — the kernel
-    *    never runs twice over a text;
+    *  - the signature table: below the gate its rows, collected once,
+    *    feed the history probe AND the survivor append (written from the
+    *    driver); above it the cached probe feeds the join and the
+    *    append — the kernel never runs twice over a text;
     *  - the index generation and its (n, k, bands): resolved once,
     *    shared by the probe and the append. */
   def dedupRefresh(spark: org.apache.spark.sql.SparkSession, path: String,
@@ -326,7 +355,20 @@ object Dedup {
       spark: org.apache.spark.sql.SparkSession, path: String,
       batch: DataFrame, id: Column, text: Column, threshold: Double,
       estThreshold: Double, maxDf: Int, maxRows: Int,
-      canonMaxRows: Int = graft.core.Small.MaxRows): DataFrame = {
+      canonMaxRows: Int = graft.core.Small.MaxRows): DataFrame =
+    dedupRefreshWith(spark, path, batch, id, text, threshold, estThreshold,
+      maxDf, maxRows, canonMaxRows)._1
+
+  /** [[dedupRefreshGated]], and whether any row survives: known from the
+    * collected signature rows (one per canonical row) when the history
+    * probe ran on the driver, None when it did not. */
+  private[graft] def dedupRefreshWith(
+      spark: org.apache.spark.sql.SparkSession, path: String,
+      batch: DataFrame, id: Column, text: Column, threshold: Double,
+      estThreshold: Double, maxDf: Int = 100,
+      maxRows: Int = graft.core.Small.MaxRows,
+      canonMaxRows: Int = graft.core.Small.MaxRows)
+      : (DataFrame, Option[Boolean]) = {
     val (g, n, k, bands) = openSig(path)
     val r = k / bands
     val hs = (0 until k).map(i => col(s"h$i"))
@@ -339,20 +381,19 @@ object Dedup {
     val canon = if (local) canonOut.drop("_cluster")
       else Caches.eager(canonOut.drop("_cluster"))
     // ONE signature pass per refresh: every canonical row with its
-    // signature (NULL below n words) and band keys. The same cached
-    // table serves the history probe AND the survivor append (a MinHash
-    // signature is a pure per-row function at the index's own (n, k),
-    // so these rows filtered to the survivor ids ARE
-    // minhashInRow(survivors)). Cached lazily: the gate's collect fills
-    // it.
-    val sigs = Caches.cache(
-      canon.select(col("_id").as("id"),
+    // signature (NULL below n words) and band keys. The same rows serve
+    // the history probe AND the survivor append (a MinHash signature is
+    // a pure per-row function at the index's own (n, k), so these rows
+    // filtered to the survivor ids ARE minhashInRow(survivors)): below
+    // the gate the collected rows are appended as they are, above it
+    // the probe is cached for the join and the append.
+    val sigs = canon.select(col("_id").as("id"),
           explode(array(graft.plans.TextExprs.minhashSig(text, n, k)))
             .as("_mh"))
         .select(col("id") +: (0 until k).map(i =>
           col("_mh").getItem(i).as(s"h$i")): _*)
         .select(col("id") +: hs ++:
-          (0 until bands).map(b => bandKey(b, r).as(s"bk$b")): _*))
+          (0 until bands).map(b => bandKey(b, r).as(s"bk$b")): _*)
     val probe = sigs.filter(col("h0").isNotNull).select(col("id") +: hs: _*)
     // Replay safety: on a RETRIED batch (append committed, downstream
     // write lost) the index already holds this batch's own signatures,
@@ -364,75 +405,89 @@ object Dedup {
     // in the index (the caller-feeds-only-new-ids contract shared by
     // every segment store), so off the replay path this removes nothing.
     Small.rows(sigs, maxRows).flatMap(rows =>
-      probeLocal(spark, g, k, bands, rows, estThreshold, maxRows)
-        .map(rows -> _)) match {
+      bandPairsLocal(spark, g, k, bands, rows, maxRows).map { pairs =>
+        val own = rows.map(x => idKey(x.get(0))).toSet
+        rows -> pairs.collect {
+          case (x, y, est) if !own(idKey(y)) && est >= estThreshold => x.get(0)
+        }.toSet
+      }) match {
       case Some((rows, dups)) =>
         // size gate passed: the probe was answered on the driver, and
         // the drop list ships back as a value set — no join, no
         // broadcast. The collected rows say whether any survivor has a
         // signature, so the append needs no emptiness probe.
-        signatureAppendSigs(g, n, k,
-          probe.filter(Small.notIn(col("id"), dups)),
-          Some(rows.exists(x => !x.isNullAt(1) &&
-            (x.isNullAt(0) || !dups(x.get(0))))))
-        canon.filter(Small.notIn(col("_id"), dups))
-          .select(batch.columns.map(col).toSeq: _*)
+        val appended = rows.toSeq.filter(x => !x.isNullAt(1) &&
+          (x.isNullAt(0) || !dups(x.get(0))))
+          .map(x => org.apache.spark.sql.Row.fromSeq(x.toSeq.take(1 + k)))
+        signatureAppendSigs(g, n, k, spark.createDataFrame(
+          java.util.Arrays.asList(appended: _*), probe.schema),
+          Some(appended.nonEmpty))
+        (canon.filter(Small.notIn(col("_id"), dups))
+          .select(batch.columns.map(col).toSeq: _*),
+          Some(rows.exists(x => x.isNullAt(0) || !dups(x.get(0)))))
       case None =>
-        val dupIds = dedupAgainstSigs(spark, g, Caches.eager(probe),
-            estThreshold)
+        val probeC = Caches.eager(probe)
+        val dupIds = dedupAgainstSigs(spark, g, probeC, estThreshold)
           .join(canon.select(col("_id").as("dup_of")), Seq("dup_of"),
             "left_anti")
           .select(col("id").as("_id")).distinct()
         val survivors = Caches.eager(canon.join(dupIds, Seq("_id"), "left_anti"))
         signatureAppendSigs(g, n, k,
-          probe.join(survivors.select(col("_id").as("id")), Seq("id"),
+          probeC.join(survivors.select(col("_id").as("id")), Seq("id"),
             "left_semi"))
-        survivors.select(batch.columns.map(col).toSeq: _*)
+        (survivors.select(batch.columns.map(col).toSeq: _*), None)
     }
   }
 
-  /** The history probe of [[dedupRefresh]] answered on the driver, for a
-    * batch whose collected signature rows (`rows`: id, h0..h{k-1},
-    * bk0..bk{bands-1}; NULL signatures for sub-n docs) fit the size gate.
-    * One history scan keeps the rows sharing any band key with the batch
-    * (per-band [[Small.in]] filters over the same [[bandKey]]
-    * expression) and collects them; the band-collision,
-    * est ≥ `estThreshold`, x ≠ y and own-id rules of the band join then
-    * run on the collected rows.
-    * Returns the batch ids with a history match, or None when the
-    * history hits overflow the gate (the caller falls back to the join). */
-  private def probeLocal(spark: org.apache.spark.sql.SparkSession,
+  /** The band join of [[dedupAgainstSigs]] answered on the driver, for
+    * collected probe signature rows (`rows`: id, h0..h{k-1},
+    * bk0..bk{bands-1}; a row with a NULL signature is never a
+    * candidate) — the driver half of [[dedupRefresh]]'s history probe
+    * and of [[dedupAgainst]]. One history scan keeps the rows sharing
+    * any band key with the probe (per-band [[Small.in]] filters over the
+    * same [[bandKey]] expression) and collects them. Returns every
+    * (probe row, history id, signature-agreement estimate) pair whose
+    * rows share a band key and whose ids differ (a NULL history id
+    * differs from nothing, as in the join), once per pair; the caller
+    * applies its own-id and threshold rules. None when the history hits
+    * overflow the gate (the caller falls back to the join). */
+  private def bandPairsLocal(spark: org.apache.spark.sql.SparkSession,
       g: SegmentStore.Generation, k: Int, bands: Int,
-      rows: Array[org.apache.spark.sql.Row], estThreshold: Double,
-      maxRows: Int): Option[Set[Any]] = {
+      rows: Array[org.apache.spark.sql.Row], maxRows: Int)
+      : Option[Seq[(org.apache.spark.sql.Row, Any, Double)]] = {
     val r = k / bands
     val probe = rows.filterNot(_.isNullAt(1))
-    if (probe.isEmpty) return Some(Set.empty)
+    if (probe.isEmpty) return Some(Nil)
     val keys = (0 until bands).map(b => probe.map(_.getString(1 + k + b)).distinct)
     val byKey = probe.toSeq.flatMap(x =>
       (0 until bands).map(b => (b, x.getString(1 + k + b)) -> x))
       .groupMap(_._1)(_._2)
-    // ids compared in the batch's own id type: a boxed Int never equals
-    // a boxed Long, so the history ids are cast before they are collected
-    val idType = rows.head.schema("id").dataType
-    val hist = g.rows(spark)
     Small.rows(
-      hist.filter((0 until bands).map(b => Small.in(bandKey(b, r), keys(b)))
+      g.rows(spark)
+        .filter((0 until bands).map(b => Small.in(bandKey(b, r), keys(b)))
           .reduce(_ || _))
-        .select(col("id").cast(idType) +:
+        .select(col("id") +:
           ((0 until k).map(i => col(s"h$i")) ++
             (0 until bands).map(b => bandKey(b, r))): _*),
       maxRows).map { hits =>
-      val own = rows.map(_.get(0)).toSet
       (for {
-        y <- hits.iterator if !own(y.get(0))
+        y <- hits.iterator if !y.isNullAt(0)
         x <- (0 until bands).iterator.flatMap(b =>
-          byKey.getOrElse((b, y.getString(1 + k + b)), Nil))
-        if x.get(0) != y.get(0) &&
-          (1 to k).count(i => x.getString(i) == y.getString(i))
-            .toDouble / k >= estThreshold
-      } yield x.get(0)).toSet
+          byKey.getOrElse((b, y.getString(1 + k + b)), Nil)).distinct
+        if idKey(x.get(0)) != idKey(y.get(0))
+      } yield (x, y.get(0),
+        (1 to k).count(i => x.getString(i) == y.getString(i)).toDouble / k))
+        .toSeq
     }
+  }
+
+  /** An id as the joins compare it: integral ids of any width as longs
+    * (a boxed Int never equals a boxed Long), other ids as they are. */
+  private def idKey(v: Any): Any = v match {
+    case b: java.lang.Byte => b.longValue
+    case s: java.lang.Short => s.longValue
+    case i: java.lang.Integer => i.longValue
+    case other => other
   }
 
   // ------------------------------------------------------------------
@@ -575,16 +630,54 @@ object Dedup {
       path: String, df: DataFrame, id: String, text: String,
       excludeOwn: Boolean,
       maxRows: Int = Small.MaxRows): (DataFrame, Option[Boolean]) = {
+    val (rows, known) = exactGateWith(spark, path, df, id, text, excludeOwn,
+      maxRows)
+    (rows, known.map(_.hashed))
+  }
+
+  /** What [[exactGate]] collected about its survivors below the gate:
+    * whether any has a non-NULL `_h`, whether there is any, and — when
+    * the batch's rows were collected — the survivors' (id, `_h`) rows. */
+  private[graft] final case class Survivors(hashed: Boolean, any: Boolean,
+      rows: Option[Seq[org.apache.spark.sql.Row]])
+
+  /** [[exactGate]] with [[Survivors]] (None above the gate). For
+    * integral ids the gate collects the batch's (id, `_h`) rows and
+    * takes each hash's smallest id on the driver — no aggregation, and
+    * the survivors' rows come back for the caller's hash append; other
+    * ids collect the (`_h`, min id) groups of a hash aggregate. A
+    * survivor exists exactly when a kept group's hash is NULL or not
+    * dropped: that group's own row survives. */
+  private[graft] def exactGateWith(spark: org.apache.spark.sql.SparkSession,
+      path: String, df: DataFrame, id: String, text: String,
+      excludeOwn: Boolean,
+      maxRows: Int): (DataFrame, Option[Survivors]) = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
     val withH = Caches.checkpoint(df.withColumn("_h", md5(col(text))))
     val keep = withH.groupBy(col("_h")).agg(min(col(id)).as(id))
     val indexed = graft.core.IndexGen.current(path).isDefined
-    val local = Small.rows(keep, maxRows).flatMap { groups =>
+    // (groups, rows): the (_h, min id) groups, and the batch's rows when
+    // the groups were taken from them
+    val collected: Option[(Seq[Row], Option[Array[Row]])] =
+      withH.schema(id).dataType match {
+        case ByteType | ShortType | IntegerType | LongType =>
+          Small.rows(withH.select(col(id), col("_h")), maxRows).map { rows =>
+            (rows.toSeq.groupBy(r => Option(r.getString(1))).toSeq.map {
+              case (h, rs) =>
+                Row(h.orNull, rs.filterNot(_.isNullAt(0)).map(_.get(0))
+                  .minByOption(_.asInstanceOf[Number].longValue).orNull)
+            }, Some(rows))
+          }
+        case _ => Small.rows(keep, maxRows).map(g => (g.toSeq, None))
+      }
+    val local = collected.flatMap { case (groups, batchRows) =>
       val kept = groups.filterNot(_.isNullAt(1))
       val hs = kept.filterNot(_.isNullAt(0)).map(_.getString(0))
       // ids compared in the batch's own id type: a boxed Int never
       // equals a boxed Long, so history ids are cast before collecting
       val hits =
-        if (!indexed || hs.isEmpty) Some(Array.empty[org.apache.spark.sql.Row])
+        if (!indexed || hs.isEmpty) Some(Array.empty[Row])
         else {
           Small.rows(
             SegmentStore.open(path).of(Family.Hash).rows(spark)
@@ -595,8 +688,13 @@ object Dedup {
       val own = if (excludeOwn) kept.map(_.get(1)).toSet else Set.empty[Any]
       hits.map { found =>
         val dropped = found.filterNot(h => own(h.get(0))).map(_.getString(1)).toSet
-        (withH.filter(Small.in(col(id), kept.map(_.get(1))) &&
-          Small.notIn(col("_h"), dropped)), Some(hs.exists(!dropped(_))))
+        val keptIds = kept.map(_.get(1)).toSet
+        (withH.filter(Small.in(col(id), keptIds) &&
+          Small.notIn(col("_h"), dropped)), Some(Survivors(
+          hs.exists(!dropped(_)),
+          kept.exists(g => g.isNullAt(0) || !dropped(g.getString(0))),
+          batchRows.map(_.toSeq.filter(r => !r.isNullAt(0) &&
+            keptIds(r.get(0)) && (r.isNullAt(1) || !dropped(r.getString(1))))))))
       }
     }
     local.getOrElse {

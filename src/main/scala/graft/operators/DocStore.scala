@@ -192,7 +192,7 @@ object DocStore {
         // carries its original deterministic chunk_key, which the near
         // gate would treat as a replayed batch id and let through — the
         // exact gate drops it first; see nearFreshChunks)
-        val (exactFreshH, hashed) = dedupIndex match {
+        val (exactFreshH, known) = dedupIndex match {
           case Some(p) => dedupFreshChunks(spark, chunkedC, p)
           case None => (chunkedC, None)
         }
@@ -205,7 +205,7 @@ object DocStore {
         if (exactFreshH ne chunkedC) chunkedC.unpersist(blocking = false)
         val fresh = nearDedupIndex match {
           case Some(np) => nearFreshChunks(spark, exactFresh, np,
-            nearThreshold, nearEstThreshold, nearGeometry)
+            nearThreshold, nearEstThreshold, nearGeometry)._1
           case None => exactFresh
         }
         // EMBED + materialize first, index the exact hashes after — the
@@ -221,7 +221,7 @@ object DocStore {
         val store = new Store(graft.core.Caches.eager(
           fresh.withColumn("embedding", embedder(col("text")))),
           metadata, embedder)
-        dedupIndex.foreach(p => indexChunkHashes(spark, p, exactFreshH, hashed))
+        dedupIndex.foreach(p => indexChunkHashes(spark, p, exactFreshH, known))
         // gate checkpoints release with their RDDs (ContextCleaner); the
         // only explicit release left is the no-gate chunk cache alias
         if (exactFreshH eq chunkedC) chunkedC.unpersist(blocking = false)
@@ -266,17 +266,16 @@ object DocStore {
     * MUST ride behind the exact gate (`dedupIndex` — enforced by
     * [[requireGateOrder]]): the exact gate drops byte-identical
     * re-ingests; this gate handles the near-but-not-identical
-    * remainder. */
+    * remainder.
+    *
+    * Returns the survivors and whether there are any, when the history
+    * probe collected it (None: ask the frame). */
   private def nearFreshChunks(spark: SparkSession, chunked: DataFrame,
       path: String, threshold: Double, estThreshold: Double,
-      geometry: (Int, Int, Int)): DataFrame =
-    // localCheckpoint at the gate exit (not a cache — see
-    // dedupFreshChunks): truncates the LSH+CC lineage so the embed
-    // stage and every Store operation plan from a scan, not from the
-    // whole gate tree
-    graft.core.Caches.checkpoint(
+      geometry: (Int, Int, Int)): (DataFrame, Option[Boolean]) = {
+    val (fresh, any) =
       if (graft.core.IndexGen.current(path).isDefined)
-        Dedup.dedupRefresh(spark, path, chunked, col("chunk_key"),
+        Dedup.dedupRefreshWith(spark, path, chunked, col("chunk_key"),
           col("text"), threshold, estThreshold)
       else {
         val (n, k, bands) = geometry
@@ -286,8 +285,14 @@ object DocStore {
             .drop("_cluster", "_id"))
         Dedup.signatureSave(canon, col("chunk_key"), col("text"), path,
           n, k, bands)
-        canon
-      })
+        (canon, None)
+      }
+    // localCheckpoint at the gate exit (not a cache — see
+    // dedupFreshChunks): truncates the LSH+CC lineage so the embed
+    // stage and every Store operation plan from a scan, not from the
+    // whole gate tree
+    (graft.core.Caches.checkpoint(fresh), any)
+  }
 
   /** The exact-dedup gate of the ingest pipeline (`dedupIndex` on
     * [[build]]/[[buildStream]]): at 100 TB the EMBEDDER is the expensive
@@ -319,29 +324,34 @@ object DocStore {
     * every later action reads it — the gate's collect, the near gate,
     * the embed stage and the hash append (which reuses its `_h`). */
   private def dedupFreshChunks(spark: SparkSession, chunked: DataFrame,
-      indexPath: String): (DataFrame, Option[Boolean]) =
+      indexPath: String): (DataFrame, Option[Dedup.Survivors]) =
     // `_h` STAYS on the survivors: indexChunkHashes appends the stored
     // hashes instead of re-hashing the stored text. Every history match
     // counts — unlike the pretrain chain, an ingest does not exclude its
     // own ids: a re-ingested file carries its original deterministic
     // chunk keys, and dropping it is the point of the gate.
-    Dedup.exactGate(spark, indexPath, chunked, "chunk_key", "text",
-      excludeOwn = false)
+    Dedup.exactGateWith(spark, indexPath, chunked, "chunk_key", "text",
+      excludeOwn = false, graft.core.Small.MaxRows)
 
   /** Record an ingest's surviving chunk hashes in the dedup index —
     * creates it on first ingest, O(new rows) segment append after
     * ([[Dedup.hashCompact]] is the long-run maintenance cadence).
-    * `hashed` is the gate's answer to whether any survivor has a hash
-    * (None above the gate). Single writer, like every segment store. */
+    * `known` is what the gate collected about its survivors (None above
+    * the gate): whether any has a hash, and their (id, hash) rows, which
+    * are appended from the driver instead of scanned again. Single
+    * writer, like every segment store. */
   private def indexChunkHashes(spark: SparkSession, indexPath: String,
-      freshH: DataFrame, hashed: Option[Boolean]): Unit = {
+      freshH: DataFrame, known: Option[Dedup.Survivors]): Unit = {
     // the gate survivors arrive with their `_h` content hashes cached
     // (dedupFreshChunks) — append those, never re-hash the chunk text
-    val hashes = freshH.select(col("chunk_key").as("id"), col("_h").as("h"))
+    val scanned = freshH.select(col("chunk_key").as("id"), col("_h").as("h"))
+    val hashes = known.flatMap(_.rows).fold(scanned)(rows =>
+      spark.createDataFrame(java.util.Arrays.asList(rows: _*), scanned.schema))
+    val hashed = known.map(_.hashed)
     if (graft.core.IndexGen.current(indexPath).isDefined) {
       Dedup.hashAppendHashes(spark, indexPath, hashes, hashed)
       ()
-    } else if (!freshH.isEmpty)
+    } else if (hashed.getOrElse(!freshH.isEmpty))
       Dedup.hashSaveHashes(hashes, indexPath)
   }
 
@@ -466,41 +476,38 @@ object DocStore {
           // consumers complete inside it) — otherwise a long-running
           // ingest accumulates them
           graft.core.Caches.microBatch {
-            if (!batch.isEmpty) {
-              // cache parse+chunk once per micro-batch (the batch path's
-              // chunkedC rationale); released when the batch ends
-              val chunkedC = graft.core.Caches.eager(
-                chunkStage(batch.toDF(), id, data, metadata,
-                  parser, postProcess, chunkSize, overlap, splitBy))
-              val (exactFreshH, hashed) = dedupIndex match {
-                case Some(p) => dedupFreshChunks(batch.sparkSession, chunkedC, p)
-                case None => (chunkedC, None)
-              }
-              // survivors carry `_h` for the hash append; the chunk
-              // table and the near gate see the hash-free projection
-              val exactFresh =
-                if (exactFreshH ne chunkedC) exactFreshH.drop("_h")
-                else chunkedC
-              val fresh = nearDedupIndex match {
-                case Some(np) => nearFreshChunks(batch.sparkSession,
-                  exactFresh, np, nearThreshold, nearEstThreshold,
-                  nearGeometry)
-                case None => exactFresh
-              }
-              // skip all-dup batches: a zero-row FIRST append could
-              // leave a schema-less chunks dir that fails reads
-              if (!fresh.isEmpty)
-                fresh.withColumn("embedding", embedder(col("text")))
-                  .write.mode("append").parquet(s"$path/chunks")
-              dedupIndex.foreach(p =>
-                indexChunkHashes(batch.sparkSession, p, exactFreshH, hashed))
+            val spark = batch.sparkSession
+            // no cache of the parse+chunk stage: the exact gate's first
+            // act is a checkpoint of the chunked batch, which runs the
+            // stage once, and every later read is of that checkpoint.
+            // The rows the gates collect also say whether any chunk
+            // survived, so neither the batch nor the survivors are
+            // probed for emptiness. (This branch runs only with
+            // `dedupIndex` set: `nearDedupIndex` requires it.)
+            val (exactFreshH, known) = dedupFreshChunks(spark,
+              chunkStage(batch.toDF(), id, data, metadata, parser,
+                postProcess, chunkSize, overlap, splitBy), dedupIndex.get)
+            // survivors carry `_h` for the hash append; the chunk table
+            // and the near gate see the hash-free projection
+            val exactFresh = exactFreshH.drop("_h")
+            val (fresh, any) = nearDedupIndex match {
+              case Some(np) => nearFreshChunks(spark, exactFresh, np,
+                nearThreshold, nearEstThreshold, nearGeometry)
+              case None => (exactFresh, known.map(_.any))
             }
+            // skip all-dup batches: a zero-row FIRST append could leave
+            // a schema-less chunks dir that fails reads; only above the
+            // gates is the frame probed
+            if (any.getOrElse(!fresh.isEmpty))
+              fresh.withColumn("embedding", embedder(col("text")))
+                .write.mode("append").parquet(s"$path/chunks")
+            indexChunkHashes(spark, dedupIndex.get, exactFreshH, known)
             // maintenance cadence: fold each gate index's per-batch
             // manifest segments back to one, on THIS thread (the
             // single writer). Keyed to batchId so a retried batch
             // compacts at most once more — compaction is idempotent
-            // (same rows, one segment, new atomic generation). OUTSIDE
-            // the empty-batch guard: an empty micro-batch landing on a
+            // (same rows, one segment, new atomic generation). Every
+            // cadence slot folds: an empty micro-batch landing on a
             // cadence slot must not defer the fold to the next multiple
             // (sparse/bursty sources can skip many slots); the IndexGen
             // guards keep a no-index-yet batch a no-op.
@@ -617,7 +624,10 @@ object DocStore {
 
   private def buildIndex(spark: SparkSession, path: String,
       kind: StoreIndex, nlist: Int): Unit = {
-    val persisted = spark.read.parquet(s"$path/chunks")
+    val persisted = graft.core.readParquet(spark, s"$path/chunks")
+    // the generation covers every chunk file this build reads, so the
+    // next extendIndex reads only files added after it
+    val covers = Some(chunkFiles(spark, path, persisted))
     val dir = indexDirOf(path, kind)
     // dim from the data (one narrow take(1) — PQ's subspace slicing
     // cannot size itself from the stream like the generic dot loop);
@@ -634,19 +644,33 @@ object DocStore {
     kind match {
       case IvfFlat(defN) =>
         Similarity.ivfSave(persisted, col("chunk_key"), col("embedding"),
-          dir, derivedN(defN))
+          dir, derivedN(defN), covers = covers)
       case PqCodes(m, ksub, _) =>
         flatPqCorpusWarning(graft.core.parquetRowCount(spark, s"$path/chunks"))
           .foreach(msg => System.err.println(s"[graft] WARN $msg"))
         Similarity.pqSave(persisted, col("chunk_key"), col("embedding"),
-          dir, m, ksub, dim)
+          dir, m, ksub, dim, covers)
       case BinaryCodes(_) =>
         Similarity.binarySave(persisted, col("chunk_key"), col("embedding"),
-          dir)
+          dir, covers)
       case IvfPqCodes(m, ksub, defN, _) =>
         Similarity.ivfPqSave(persisted, col("chunk_key"), col("embedding"),
-          dir, derivedN(defN), m, ksub, dim)
+          dir, derivedN(defN), m, ksub, dim, covers)
     }
+  }
+
+  /** The files of a chunk table read as `table` (a read of
+    * `$path/chunks`), relative to that dir. They come from the read's
+    * own file index — the streaming sink's log when the table has one —
+    * so an uncommitted file of a crashed batch is never listed. No
+    * Spark job. */
+  private def chunkFiles(spark: SparkSession, path: String,
+      table: DataFrame): Seq[String] = {
+    val root = new org.apache.hadoop.fs.Path(s"$path/chunks")
+    val base = new java.net.URI(root.getFileSystem(spark.sessionState
+      .newHadoopConf()).makeQualified(root).toUri.toString + "/")
+    table.inputFiles.toSeq
+      .map(f => base.relativize(new java.net.URI(f)).toString).sorted
   }
 
   /** Durable index-kind marker — written AFTER the kind's index commits
@@ -703,47 +727,89 @@ object DocStore {
   }
 
   /** INCREMENTAL index refresh — the between-rebuilds maintenance step
-    * for a [[buildStream]]-fed store: chunks not yet in the index
-    * (anti-join of the chunk table against the index's id column — a
-    * column-pruned scan of both, nothing re-embedded) are assigned to
-    * the EXISTING centroids and appended as one new segment
-    * ([[Similarity.ivfAppend]]): O(new chunks) compute, corpus never
-    * rewritten. Centroid geometry is frozen by appends, so keep the
-    * periodic [[rebuildIndex]] as the compaction that re-derives nlist
-    * from the grown corpus — same append-vs-compact split as every
-    * segmented index. Returns the number of newly indexed chunks. */
+    * for a [[buildStream]]-fed store. The index generation records the
+    * chunk files it covers ([[graft.core.SegmentStore]]'s `covers`:
+    * [[rebuildIndex]] sets it to the files it read, each extension adds
+    * its own), so a call lists the chunk dir on the driver and reads
+    * only the files added since — O(new chunks), whatever the store
+    * holds. A call with no new file returns 0 and runs no job. The new
+    * chunks not yet in the index ([[unindexed]]) are assigned to the
+    * EXISTING centroids and appended as one new segment
+    * ([[Similarity.ivfAppend]]), nothing re-embedded, corpus never
+    * rewritten; the generation then covers the new files too, even when
+    * every chunk in them was indexed already (a retried batch).
+    * Centroid geometry is frozen by appends, so keep the periodic
+    * [[rebuildIndex]] as the compaction that re-derives nlist from the
+    * grown corpus — same append-vs-compact split as every segmented
+    * index. A generation written without the record covers nothing: the
+    * first call reads every chunk file, and the key check keeps the
+    * answer exact. Returns the number of newly indexed chunks. */
   def extendIndex(spark: SparkSession, path: String): Long = {
-    val chunks = spark.read.parquet(s"$path/chunks")
     // ONE kind read for the whole call: the indexed-set scan and the
     // append must agree on the kind even if a concurrent rebuild flips it
     val kind = readIndexKind(path)
     val dir = indexDirOf(path, kind)
-    val indexed = graft.core.SegmentStore.open(dir).rows(spark)
-      .select(col("neighbor_id").as("chunk_key"))
-    val fresh = graft.core.Caches.eager(
-      chunks.join(indexed, Seq("chunk_key"), "left_anti"))
-    val n = fresh.count()
-    if (n > 0) kind match {
+    val g = graft.core.SegmentStore.open(dir)
+    val schema = graft.core.parquetSchema(spark, s"$path/chunks")
+    val covered = g.covers.getOrElse(Nil).toSet
+    val added = chunkFiles(spark, path,
+      spark.read.schema(schema).parquet(s"$path/chunks")).filterNot(covered)
+    if (added.isEmpty) return 0L
+    val (fresh, n) = unindexed(spark, g, spark.read.schema(schema)
+      .parquet(added.map(f => s"$path/chunks/$f"): _*))
+    val covers = Some(added)
+    if (n == 0) graft.core.SegmentStore.cover(g, added)
+    else kind match {
       case IvfFlat(_) =>
         Similarity.ivfAppend(spark, dir, fresh,
-          col("chunk_key"), col("embedding"))
-        ()
+          col("chunk_key"), col("embedding"), covers = covers)
       case BinaryCodes(_) =>
         Similarity.binaryAppend(spark, dir, fresh,
-          col("chunk_key"), col("embedding"))
-        ()
+          col("chunk_key"), col("embedding"), covers)
       case PqCodes(_, _, _) =>
         // frozen-codebook encode of the new rows only (the FAISS
         // add-to-trained-index contract; periodic rebuild re-fits)
         Similarity.pqAppend(spark, dir, fresh,
-          col("chunk_key"), col("embedding"))
-        ()
+          col("chunk_key"), col("embedding"), covers)
       case IvfPqCodes(_, _, _, _) =>
         Similarity.ivfPqAppend(spark, dir, fresh,
-          col("chunk_key"), col("embedding"))
-        ()
+          col("chunk_key"), col("embedding"), covers)
     }
     n
+  }
+
+  /** The rows of `chunks` whose key the index generation `g` does not
+    * hold, one per key, and how many keys that is. Delivery is
+    * at-least-once: a retried batch re-appends rows under keys that may
+    * be indexed already, and no key may enter the index twice. Below
+    * [[graft.core.Small]]'s gate the new keys are collected, and one
+    * scan of the index ids ([[graft.core.SegmentStore.Generation.rows]]:
+    * one plan at any segment count) behind a [[graft.core.Small.in]]
+    * over them collects those indexed already; the rest pass a
+    * [[graft.core.Small.notIn]] filter. Above the gate the chunks are
+    * anti-joined against the index ids. Rows sharing a key are
+    * byte-identical ([[readChunks]]), so `distinct()` keeps one of each. */
+  private def unindexed(spark: SparkSession, g: graft.core.SegmentStore.Generation,
+      chunks: DataFrame): (DataFrame, Long) = {
+    import graft.core.Small
+    val keyType = chunks.schema("chunk_key").dataType
+    val ids = g.rows(spark)
+      .select(col("neighbor_id").cast(keyType).as("chunk_key"))
+    Small.rows(chunks.select(col("chunk_key")), Small.MaxRows).flatMap { rows =>
+      val keys = rows.map(_.get(0))
+      val distinct = keys.distinct
+      Small.rows(ids.filter(Small.in(col("chunk_key"), distinct)), Small.MaxRows)
+        .map { hits =>
+          val indexed = hits.map(_.get(0)).toSet
+          val fresh = chunks.filter(Small.notIn(col("chunk_key"), indexed))
+          (if (distinct.length < keys.length) fresh.distinct()
+           else fresh, distinct.count(!indexed(_)).toLong)
+        }
+    }.getOrElse {
+      val fresh = graft.core.Caches.eager(chunks
+        .join(ids, Seq("chunk_key"), "left_anti").distinct())
+      (fresh, fresh.count())
+    }
   }
 
   /** The query surface both store flavors share — what [[serve]]
@@ -921,8 +987,11 @@ object DocStore {
     * sharing a `chunk_key` are byte-identical by construction (the key
     * is a deterministic function of (doc_id, chunk_id) and every other
     * column is a deterministic function of the chunk text), so ONE
-    * representative per key is exact — `dropDuplicates(chunk_key)`, a
-    * hash-aggregable single shuffle, never a window sort. This is the
+    * representative per key is exact — and `distinct()` over whole rows
+    * is that representative: a hash aggregate with no buffers, one
+    * shuffle, never a sort. (`dropDuplicates(chunk_key)` keeps a
+    * `first()` of every other column, and those variable-width buffers
+    * plan a sort-based aggregate.) This is the
     * code form of the delivery-semantics scaladoc's "dedup by chunk_key
     * on read": the documented contract with one obvious entry point.
     * Tables written by the exactly-once sink carry no duplicates and
@@ -930,8 +999,8 @@ object DocStore {
     * `dedup = false` to skip it when the writer is known exact). */
   def readChunks(spark: SparkSession, path: String,
       dedup: Boolean = true): DataFrame = {
-    val raw = spark.read.parquet(s"$path/chunks")
-    if (dedup) raw.dropDuplicates("chunk_key") else raw
+    val raw = graft.core.readParquet(spark, s"$path/chunks")
+    if (dedup) raw.distinct() else raw
   }
 
   /** `dedupChunks = true` reads the chunk table through [[readChunks]]'
@@ -960,10 +1029,60 @@ object DocStore {
       * metadata `filter` is pushed into the index probe the same way
       * [[Store.retrieve]] pushes it pre-rank: the inverted lists are
       * semi-joined against the filtered chunk keys BEFORE candidate
-      * ranking, so k survivors come from matching chunks only. */
+      * ranking, so k survivors come from matching chunks only. An
+      * unfiltered query batch over an IVF-flat index that fits
+      * [[graft.core.Small]]'s gate is answered on the driver
+      * ([[retrieveLocal]]). */
     def retrieve(queries: DataFrame, qid: Column, qtext: Column, k: Int,
         filter: Option[Column] = None): DataFrame =
-      widen(probeNarrow(queries, qid, qtext, k, filter), chunks, metadata)
+      retrieveGated(queries, qid, qtext, k, filter, graft.core.Small.MaxRows)
+
+    /** [[retrieve]] with an explicit gate size — 0 forces the
+      * distributed search (the equivalence spec drives both). */
+    private[graft] def retrieveGated(queries: DataFrame, qid: Column,
+        qtext: Column, k: Int, filter: Option[Column],
+        maxRows: Int): DataFrame =
+      (if (filter.isEmpty) retrieveLocal(queries, qid, qtext, k, maxRows)
+       else None).getOrElse(
+        widen(probeNarrow(queries, qid, qtext, k, filter), chunks, metadata))
+
+    /** [[retrieve]] answered on the driver, in three jobs: the IVF
+      * search of [[Similarity.ivfSearchLocal]] (the centroids and the
+      * probed lists, each collected once), then the hits' chunk rows,
+      * collected from one scan behind a [[graft.core.Small.in]] on
+      * their keys and joined to the hits on the driver — one row per
+      * key with `dedupChunks` (rows sharing a key are byte-identical),
+      * every matching row without, as the join of [[widen]] has it.
+      * The answer is a driver-local relation. None when the index is
+      * not IVF-flat or a table is over the gate. */
+    private def retrieveLocal(queries: DataFrame, qid: Column, qtext: Column,
+        k: Int, maxRows: Int): Option[DataFrame] = {
+      import graft.core.Small
+      import org.apache.spark.sql.Row
+      import org.apache.spark.sql.types.{DoubleType, IntegerType, StructField,
+        StructType}
+      val kind = DocStore.readIndexKind(path)
+      if (!kind.isInstanceOf[IvfFlat]) return None
+      val q = queries.select(qid.as("qid"), embedder(qtext).as("qv"))
+      val wide = Seq("doc_id", "chunk_id", "text") ++ metadata
+      Similarity.ivfSearchLocal(spark, DocStore.indexDirOf(path, kind), q,
+          col("qid"), col("qv"), nprobe, k, maxRows)
+        .flatMap { hits =>
+          Small.rows(readChunks(spark, path, dedup = false)
+              .filter(Small.in(col("chunk_key"), hits.map(_.get(2)).distinct))
+              .select((col("chunk_key") +: wide.map(col)): _*), maxRows)
+            .map { found =>
+              val byKey = found.toSeq.groupBy(_.get(0)).map { case (key, rs) =>
+                key -> (if (dedupChunks) rs.take(1) else rs)
+              }
+              val out = hits.flatMap(h => byKey.getOrElse(h.get(2), Nil).map(w =>
+                Row.fromSeq(h.get(0) +: h.get(1) +: w.toSeq.tail :+ h.get(3))))
+              spark.createDataFrame(java.util.Arrays.asList(out: _*), StructType(
+                q.schema("qid") +: StructField("rank", IntegerType, false) +:
+                  wide.map(chunks.schema(_)) :+ StructField("score", DoubleType)))
+            }
+        }
+    }
 
     /** The narrow index-probe stage shared by [[retrieve]] and
       * [[retrieveDiverse]]: (qid, chunk_key, score, rank ≤ k),

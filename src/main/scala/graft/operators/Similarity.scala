@@ -399,8 +399,9 @@ object Similarity {
   private[graft] def assignToCents(d: DataFrame, cents: DataFrame,
       keep: Seq[String] = Nil): DataFrame = {
     val cidType = cents.schema("cid").dataType
-    val rows = cents.select(col("cid").cast("long"), col("cv"), col("cn2"))
-      .collect().sortBy(_.getLong(0))
+    val rows = graft.core.Small.collect(
+        cents.select(col("cid").cast("long"), col("cv"), col("cn2")))
+      .sortBy(_.getLong(0))
     val out = (r: DataFrame) => r.select(
       Seq(col("id").as("neighbor_id"), col("_cid").cast(cidType).as("cid")) ++
         keep.map(col) ++ Seq(col("v").as("dv"), col("n2").as("dn2")): _*)
@@ -441,9 +442,10 @@ object Similarity {
     * rename publishes them, so a reader concurrent with a re-save sees
     * the old or the new index — never new centroids over old lists. */
   def ivfSave(data: DataFrame, did: Column, dvec: Column, path: String,
-      nlist: Int, dim: Int = 0): Unit = {
+      nlist: Int, dim: Int = 0, covers: Option[Seq[String]] = None): Unit = {
     val (cents, assigned) = ivfBuild(data, did, dvec, nlist)
-    SegmentStore.save(path, Meta(Family.Ivf), assigned, "centroids" -> cents)
+    SegmentStore.save(path, Meta(Family.Ivf), assigned,
+      Seq("centroids" -> cents), covers)
     ()
   }
 
@@ -464,12 +466,15 @@ object Similarity {
     * full [[ivfSave]] rebuild periodically (the same compact-vs-append
     * tradeoff every segmented index has). The caller feeds only NEW
     * ids; re-appending an id creates a duplicate entry (same as feeding
-    * a duplicate to ivfSave). Returns the committed generation. */
+    * a duplicate to ivfSave). `covers` names the input files `newData`
+    * was read from ([[SegmentStore.append]]). Returns the committed
+    * generation. */
   def ivfAppend(spark: org.apache.spark.sql.SparkSession, path: String,
-      newData: DataFrame, did: Column, dvec: Column, dim: Int = 0): Long = {
+      newData: DataFrame, did: Column, dvec: Column, dim: Int = 0,
+      covers: Option[Seq[String]] = None): Long = {
     val g = SegmentStore.open(path).of(Family.Ivf)
     SegmentStore.append(g, Meta(Family.Ivf),
-      assignVectors(newData, did, dvec, g.side(spark, "centroids")))
+      assignVectors(newData, did, dvec, g.side(spark, "centroids")), covers)
   }
 
   /** Assign vectors to FIXED centroids — the map-side half of
@@ -490,6 +495,106 @@ object Similarity {
     val cents = g.side(spark, "centroids")
     (cents, g.rows(spark).withColumn("cid",
       col("cid").cast(cents.schema("cid").dataType)))
+  }
+
+  /** [[ivfSearch]] over the committed IVF-flat generation at `path`,
+    * answered on the driver for a query batch that fits
+    * [[graft.core.Small]]'s gate — no join, no rank window, no AQE
+    * stage:
+    *  - the queries (id, vector) and the centroids are collected (a
+    *    driver-local query relation is read without a job);
+    *  - each query's `nprobe` lists are ranked on the driver by
+    *    [[probeLists]]' cosine, ties to the smaller cid;
+    *  - ONE scan of the generation ([[SegmentStore.Generation.rows]])
+    *    reads the probed lists only — a [[graft.core.Small.in]] on cid
+    *    prunes every other list's files — and its rows are collected;
+    *  - each query scores the rows of its own lists by [[normCosine]]'s
+    *    formula and keeps [[rankTopK]]'s top `k`: cosine descending in
+    *    Spark's double order (NaN largest, -0.0 = 0.0, NULL last), then
+    *    the smaller neighbor id.
+    * The replay is exact for non-null, distinct, integral query ids and
+    * integral neighbor ids (a duplicated query id merges its rows'
+    * probes in the distributed window); other batches, and batches or
+    * probed lists over the gate, return None and the caller runs
+    * [[ivfSearch]]. Returns (query_id, rank, neighbor_id, cosine) rows. */
+  private[graft] def ivfSearchLocal(spark: org.apache.spark.sql.SparkSession,
+      path: String, queries: DataFrame, qid: Column, qvec: Column,
+      nprobe: Int, k: Int, maxRows: Int)
+      : Option[Seq[org.apache.spark.sql.Row]] = {
+    import graft.core.Small
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    def integral(t: DataType) = t match {
+      case ByteType | ShortType | IntegerType | LongType => true
+      case _ => false
+    }
+    def vec(r: Row, i: Int): Array[Double] =
+      if (r.isNullAt(i)) null else r.getSeq[Double](i).toArray
+    def dbl(r: Row, i: Int): java.lang.Double =
+      if (r.isNullAt(i)) null else r.getDouble(i)
+    // DotProductExpr: in-order sum, NULL on a NULL side or unequal length
+    def dotOf(a: Array[Double], b: Array[Double]): java.lang.Double =
+      if (a == null || b == null || a.length != b.length) null
+      else { var acc = 0.0; var i = 0; while (i < a.length) { acc += a(i) * b(i); i += 1 }; acc }
+    // cosinePrenorm: den = 0 → NaN before the dot is looked at
+    def cos(a: Array[Double], b: Array[Double], na2: java.lang.Double,
+        nb2: java.lang.Double): java.lang.Double =
+      if (na2 == null || nb2 == null) null
+      else {
+        val den = math.sqrt(na2 * nb2)
+        val d = dotOf(a, b)
+        if (den == 0.0) Double.NaN else if (d == null) null else d / den
+      }
+    // a descending sort key in Spark's order: NULL last, NaN first
+    def desc(x: java.lang.Double, y: java.lang.Double): Int =
+      if (x == null) (if (y == null) 0 else 1)
+      else if (y == null) -1
+      else if (x.doubleValue == y.doubleValue) 0
+      else -java.lang.Double.compare(x, y)
+    val q = queries.select(qid.as("query_id"), qvec.cast("array<double>").as("qv"))
+    if (!integral(q.schema("query_id").dataType)) return None
+    val g = SegmentStore.open(path).of(Family.Ivf)
+    val lists = g.rows(spark)
+    if (!integral(lists.schema("neighbor_id").dataType)) return None
+    Small.rows(q, maxRows)
+      .filter(qs => !qs.exists(_.isNullAt(0)) &&
+        qs.map(_.get(0)).distinct.length == qs.length)
+      .flatMap { qs =>
+        val cents = Small.collect(g.side(spark, "centroids")
+            .select(col("cid").cast("long"), col("cv"), col("cn2")))
+          .map(c => (c.getLong(0), vec(c, 1), dbl(c, 2)))
+        val probes = qs.map { r =>
+          val qv = vec(r, 1)
+          val qn2 = dotOf(qv, qv)
+          r -> cents.map(c => (c._1, cos(qv, c._2, qn2, c._3)))
+            .sortWith((a, b) => { val o = desc(a._2, b._2); if (o != 0) o < 0 else a._1 < b._1 })
+            .take(nprobe).map(_._1).toSet
+        }
+        Small.rows(lists.filter(Small.in(col("cid"), probes.flatMap(_._2).distinct))
+            .select(col("cid").cast("long"), col("neighbor_id"), col("dv"), col("dn2")),
+          maxRows).map { rows =>
+          def id(r: Row): Option[Long] =
+            if (r.isNullAt(1)) None else Some(r.getAs[Number](1).longValue)
+          probes.toSeq.flatMap { case (qr, probed) =>
+            val qv = vec(qr, 1)
+            val qn2 = dotOf(qv, qv)
+            rows.filter(r => probed(r.getLong(0)))
+              .map(r => (r, cos(qv, vec(r, 2), qn2, dbl(r, 3))))
+              .sortWith { case ((ra, sa), (rb, sb)) =>
+                val o = desc(sa, sb)
+                if (o != 0) o < 0
+                else (id(ra), id(rb)) match { // ascending: NULL first
+                  case (None, Some(_)) => true
+                  case (Some(x), Some(y)) => x < y
+                  case _ => false
+                }
+              }
+              .take(k).zipWithIndex.map { case ((r, score), i) =>
+                Row(qr.get(0), i + 1, r.get(1), score)
+              }
+          }
+        }
+      }
   }
 
   /** Retrieve against an [[ivfSave]]d index without rebuilding it —
@@ -727,8 +832,9 @@ object Similarity {
     * so [[binaryAppend]] can grow the index O(new rows) without
     * rewriting the corpus codes. */
   def binarySave(data: DataFrame, did: Column, dvec: Column,
-      path: String): Unit = {
-    SegmentStore.save(path, Meta(Family.Binary), binaryCodesOf(data, did, dvec))
+      path: String, covers: Option[Seq[String]] = None): Unit = {
+    SegmentStore.save(path, Meta(Family.Binary), binaryCodesOf(data, did, dvec),
+      covers = covers)
     ()
   }
 
@@ -742,9 +848,10 @@ object Similarity {
     * spec pins ranking equality). Same single-writer/duplicate-id
     * contract as ivfAppend. Returns the committed generation. */
   def binaryAppend(spark: org.apache.spark.sql.SparkSession, path: String,
-      newData: DataFrame, did: Column, dvec: Column): Long =
+      newData: DataFrame, did: Column, dvec: Column,
+      covers: Option[Seq[String]] = None): Long =
     SegmentStore.append(SegmentStore.open(path).of(Family.Binary),
-      Meta(Family.Binary), binaryCodesOf(newData, did, dvec))
+      Meta(Family.Binary), binaryCodesOf(newData, did, dvec), covers)
 
   private def binaryCodesOf(data: DataFrame, did: Column,
       dvec: Column): DataFrame =
@@ -1063,10 +1170,11 @@ object Similarity {
     * the ad-hoc composition. Atomically versioned
     * ([[graft.core.SegmentStore]]). */
   def ivfPqSave(data: DataFrame, did: Column, dvec: Column, path: String,
-      nlist: Int, m: Int, ksub: Int, dim: Int): Unit = {
+      nlist: Int, m: Int, ksub: Int, dim: Int,
+      covers: Option[Seq[String]] = None): Unit = {
     val (_, cents, cb, lists) = ivfPqBuild(data, did, dvec, nlist, m, ksub, dim)
     SegmentStore.save(path, Meta(Family.IvfPq), lists,
-      "centroids" -> cents, "codebook" -> cb)
+      Seq("centroids" -> cents, "codebook" -> cb), covers)
     ()
   }
 
@@ -1079,12 +1187,14 @@ object Similarity {
     * [[ivfAppend]], quantization error like [[pqAppend]]); periodic
     * [[ivfPqSave]] rebuilds re-derive both. Returns the generation. */
   def ivfPqAppend(spark: org.apache.spark.sql.SparkSession, path: String,
-      newData: DataFrame, did: Column, dvec: Column): Long = {
+      newData: DataFrame, did: Column, dvec: Column,
+      covers: Option[Seq[String]] = None): Long = {
     val g = SegmentStore.open(path).of(Family.IvfPq)
     val d = graft.core.Caches.eager(
       unitRows(newData, did, dvec).withColumn("n2", norm2(col("v"))))
     SegmentStore.append(g, Meta(Family.IvfPq),
-      ivfPqLists(d, g.side(spark, "centroids"), g.side(spark, "codebook")))
+      ivfPqLists(d, g.side(spark, "centroids"), g.side(spark, "codebook")),
+      covers)
   }
 
   /** Query an [[ivfPqSave]]d index: probe `nprobe` lists by coarse
@@ -1122,9 +1232,9 @@ object Similarity {
     * passing the source table to [[pqLoadTopK]] (rescans only the
     * shortlist rows' vectors). */
   def pqSave(data: DataFrame, did: Column, dvec: Column, path: String,
-      m: Int, ksub: Int, dim: Int): Unit = {
+      m: Int, ksub: Int, dim: Int, covers: Option[Seq[String]] = None): Unit = {
     val (cb, codes) = pqBuild(data, did, dvec, m, ksub, dim)
-    SegmentStore.save(path, Meta(Family.Pq), codes, "codebook" -> cb)
+    SegmentStore.save(path, Meta(Family.Pq), codes, Seq("codebook" -> cb), covers)
     ()
   }
 
@@ -1140,11 +1250,12 @@ object Similarity {
     * as [[ivfAppend]]/[[binaryAppend]]. Returns the committed
     * generation. */
   def pqAppend(spark: org.apache.spark.sql.SparkSession, path: String,
-      newData: DataFrame, did: Column, dvec: Column): Long = {
+      newData: DataFrame, did: Column, dvec: Column,
+      covers: Option[Seq[String]] = None): Long = {
     val g = SegmentStore.open(path).of(Family.Pq)
     val codes = unitRows(newData, did, dvec).select(col("id").as("neighbor_id"),
       pqEncodeBy(g.side(spark, "codebook")).as("codes"))
-    SegmentStore.append(g, Meta(Family.Pq), codes)
+    SegmentStore.append(g, Meta(Family.Pq), codes, covers)
   }
 
   /** Query a [[pqSave]]d index. `rescoreAgainst` supplies the float

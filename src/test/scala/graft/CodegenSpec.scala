@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.functions._
 import graft.core.Small
-import graft.operators.{Dedup, Pipelines}
+import graft.operators.{Dedup, DocStore, Pipelines}
 import graft.plans.MinHashSigExpr
 
 /** Generated-code reuse of the per-batch paths, at the session's default
@@ -154,5 +154,48 @@ class CodegenSpec extends SparkSpec {
     info(s"classes compiled per day: ${counts.mkString(", ")}")
     assert(counts.drop(2).forall(_ == 0),
       s"compiles per day ${counts.mkString(", ")}: a steady day recompiled")
+  }
+
+  test("a steady live-store tick compiles nothing: a gated buildStream " +
+      "micro-batch, extendIndex and a single-query retrieve, after three " +
+      "warm ticks") {
+    val t = tmp("codegen_live")
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val in = org.apache.spark.sql.execution.streaming.runtime
+      .MemoryStream[(Long, String)]
+    val store = s"$t/store"
+    val sq = DocStore.buildStream(in.toDF().toDF("doc_id", "text")
+        .select(col("doc_id"), encode(col("text"), "UTF-8").as("data")),
+      col("doc_id"), col("data"), store, s"$t/ckpt", chunkSize = 16,
+      overlap = 4, dedupIndex = Some(s"$t/exact"),
+      nearDedupIndex = Some(s"$t/near"), compactEvery = 1).start()
+    val rnd = new scala.util.Random(2613)
+    val vocab = (0 until 500).map(i => s"w$i")
+    def text(): String = Seq.fill(30)(vocab(rnd.nextInt(vocab.size))).mkString(" ")
+    val sent = scala.collection.mutable.ArrayBuffer[String]()
+    // each tick: fresh docs plus two exact re-sends of earlier texts, so
+    // the exact gate drops rows on every tick; the index is built once,
+    // then extended, as a live store is
+    def tick(n: Int): Int = {
+      val fresh = (0 until 12).map(j => (n * 1000L + j, text()))
+      val resent = rnd.shuffle(sent.toSeq).take(2).zipWithIndex
+        .map { case (s, j) => (n * 1000L + 500 + j, s) }
+      in.addData(fresh ++ resent: _*)
+      sq.processAllAvailable()
+      sent ++= fresh.map(_._2)
+      if (n == 0) DocStore.rebuildIndex(spark, store, DocStore.IvfFlat(4))
+      else DocStore.extendIndex(spark, store)
+      DocStore.open(spark, store, dedupChunks = true)
+        .retrieve(Seq((n.toLong, text())).toDF("qid", "q"), col("qid"),
+          col("q"), 5).collect().length
+    }
+    val counts = try (0 until 8).map { n =>
+      val (hits, c) = compiles(tick(n))
+      assert(hits == 5, s"tick $n retrieved $hits hits")
+      c
+    } finally sq.stop()
+    info(s"classes compiled per tick: ${counts.mkString(", ")}")
+    assert(counts.drop(3).forall(_ == 0),
+      s"compiles per tick ${counts.mkString(", ")}: a steady tick recompiled")
   }
 }

@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.operators.{Dedup, Graphs}
+import graft.core.SegmentStore
+import graft.operators.{Dedup, DocStore, Graphs, Similarity}
 
 /** Job-count pins for the per-refresh gates answered on the driver
   * ([[graft.core.Small]]): below the size gate, connected components,
@@ -232,5 +233,159 @@ class GateJobsSpec extends SparkSpec {
     val sent = done.asScala.count(stages.contains)
     assert(sent >= 6 && sent <= 16,
       s"$sent of 64 partitions sent their rows to the driver")
+  }
+
+  /** Rows read from input sources by the stages `f` started on this
+    * thread. */
+  private def inputRowsOf(f: => Unit): Long = {
+    val tag = s"gaterows-${System.nanoTime}"
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val rows = new java.util.concurrent.atomic.AtomicLong
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onStageSubmitted(
+          e: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
+        if (e.properties != null &&
+            e.properties.getProperty("graft.spec.rows") == tag)
+          stages.add(e.stageInfo.stageId)
+      override def onStageCompleted(
+          e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
+        if (stages.contains(e.stageInfo.stageId))
+          rows.addAndGet(e.stageInfo.taskMetrics.inputMetrics.recordsRead)
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(l)
+    sc.setLocalProperty("graft.spec.rows", tag)
+    try f
+    finally {
+      sc.setLocalProperty("graft.spec.rows", null)
+      org.apache.spark.SpecBus.drain(sc)
+      sc.removeSparkListener(l)
+    }
+    rows.get
+  }
+
+  private def docs(from: Int, n: Int): DataFrame =
+    (from until from + n).map(i =>
+        (i.toLong, s"doc $i on topic ${i % 5} with ${i % 11} words ${i % 3}"))
+      .toDF("id", "text")
+      .select(col("id"), encode(col("text"), "UTF-8").as("data"))
+
+  test("a small dedupAgainst probe starts no broadcast build") {
+    val path = tmp("gatejobs_against")
+    Dedup.signatureSave(Seq(
+        (1L, "the quick brown fox jumps over the lazy dog"),
+        (2L, "completely different content about spark engines and shuffles"))
+      .toDF("doc_id", "text"), col("doc_id"), col("text"), path)
+    val batch = Seq(
+      (11L, "the quick brown fox jumps over the lazy dog"),
+      (12L, "unique new content entirely fresh words today"))
+      .toDF("doc_id", "text").localCheckpoint(true)
+    def probe(maxRows: Int): (Int, Set[(Long, Long)]) = {
+      var out = Set.empty[(Long, Long)]
+      val (_, bc) = jobsOf {
+        out = Dedup.dedupAgainstGated(spark, path, batch, col("doc_id"),
+          col("text"), 0.5, maxRows).select("id", "dup_of").as[(Long, Long)]
+          .collect().toSet
+      }
+      (bc, out)
+    }
+    val (smallBc, smallOut) = probe(graft.core.Small.MaxRows)
+    assert(smallBc == 0, s"driver-side probe built $smallBc broadcasts")
+    // the pin can fail: the band join broadcasts
+    val (joinBc, joinOut) = probe(0)
+    assert(joinBc > 0)
+    assert(smallOut == joinOut && smallOut == Set((11L, 1L)))
+  }
+
+  test("a small IVF retrieve runs at most 3 jobs and no broadcast build") {
+    val path = tmp("gatejobs_retrieve")
+    DocStore.build(docs(0, 40), col("id"), col("data"), chunkSize = 8,
+      overlap = 2).save(path, nlist = 4)
+    val ps = DocStore.open(spark, path, dedupChunks = true)
+    val q = Seq((1L, "topic 3 with 7 words")).toDF("qid", "q")
+    var hits = 0
+    val (jobs, bc) = jobsOf {
+      hits = ps.retrieve(q, col("qid"), col("q"), 5).collect().length
+    }
+    assert(jobs <= 3 && bc == 0 && hits == 5,
+      s"retrieve ran $jobs jobs and $bc broadcast builds for $hits hits")
+    // the pin can fail: the distributed search runs more
+    val (dist, _) = jobsOf(
+      ps.retrieveGated(q, col("qid"), col("q"), 5, None, 0).collect())
+    assert(dist > jobs, s"distributed search ran $dist jobs")
+  }
+
+  test("segment-store reads build with no job: rows and side of a " +
+      "two-segment index, readParquet of a table") {
+    val path = tmp("gatejobs_open")
+    def vecs(from: Int) = (from until from + 20).map(i =>
+      (i.toLong, Array(1.0 + i % 5, 2.0, i % 3 * 1.0))).toDF("id", "v")
+    Similarity.ivfSave(vecs(0), col("id"), col("v"), path, 4)
+    Similarity.ivfAppend(spark, path, vecs(100), col("id"), col("v"))
+    val (jobs, _) = jobsOf {
+      val g = SegmentStore.open(path)
+      assert(g.segments.size == 2)
+      g.rows(spark)
+      g.side(spark, "centroids")
+      graft.core.readParquet(spark, s"${g.dir}/centroids")
+    }
+    assert(jobs == 0, s"building the reads ran $jobs jobs")
+    // the pin can fail: a schema-less read infers the schema with a job
+    val (inferred, _) = jobsOf(
+      spark.read.parquet(SegmentStore.open(path).segmentDirs.head))
+    assert(inferred > 0)
+  }
+
+  test("extendIndex reads new chunk files only: equal jobs at 1x and 8x " +
+      "store size and at 1 and 6 index segments, chunk rows read bounded " +
+      "by the new chunks, a copied chunk file adds nothing, no new file " +
+      "runs no job") {
+    def chunks(from: Int, n: Int): DataFrame =
+      DocStore.build(docs(from, n), col("id"), col("data"), chunkSize = 8,
+        overlap = 2).chunks
+    /** A saved store of `size` docs whose index has `segments` segments. */
+    def store(size: Int, segments: Int): String = {
+      val path = tmp("gatejobs_extend")
+      DocStore.build(docs(0, size), col("id"), col("data"), chunkSize = 8,
+        overlap = 2).save(path, nlist = 4)
+      for (s <- 1 until segments) {
+        chunks(100000 + 100 * s, 3).write.mode("append")
+          .parquet(s"$path/chunks")
+        DocStore.extendIndex(spark, path)
+      }
+      path
+    }
+    def indexRows(path: String): Long = SegmentStore.open(s"$path/index")
+      .segmentDirs.map(graft.core.parquetRowCount(spark, _)).sum
+    val rows = Seq(("1x, 1 segment", 20, 1), ("8x, 1 segment", 160, 1),
+        ("1x, 6 segments", 20, 6)).map { case (name, size, segments) =>
+      val path = store(size, segments)
+      val tick = chunks(900000, 6)
+      val fresh = tick.count()
+      tick.write.mode("append").parquet(s"$path/chunks")
+      val before = indexRows(path)
+      var added = 0L
+      var read = 0L
+      val (jobs, bc) = jobsOf { read = inputRowsOf {
+        added = DocStore.extendIndex(spark, path) } }
+      assert(added == fresh && indexRows(path) == before + fresh, name)
+      // the index ids are scanned once and the centroids (4) collected;
+      // every other row read is a new chunk, read at most twice
+      assert(read - before <= 2 * fresh + 4,
+        s"$name: read $read rows for $fresh new chunks over $before indexed")
+      // a retried batch: the same rows under a new file name
+      val dir = new java.io.File(s"$path/chunks")
+      val last = dir.listFiles().filter(_.getName.endsWith(".parquet"))
+        .maxBy(_.lastModified())
+      java.nio.file.Files.copy(last.toPath,
+        new java.io.File(dir, "part-99999-retried.snappy.parquet").toPath)
+      assert(DocStore.extendIndex(spark, path) == 0 &&
+        indexRows(path) == before + fresh, s"$name: the copy was indexed")
+      val (idle, _) = jobsOf(assert(DocStore.extendIndex(spark, path) == 0))
+      assert(idle == 0, s"$name: a call with no new file ran $idle jobs")
+      (name, jobs, bc)
+    }
+    assert(rows.map(_._2).distinct.size == 1 && rows.forall(_._3 == 0),
+      s"(case, jobs, broadcast builds): ${rows.mkString(", ")}")
   }
 }

@@ -69,27 +69,85 @@ def side(thread):
         else "driver"
 
 
-def ledger(lines, boundary, sources):
-    windows = [{"start_job": None, "compiles": [], "janino_ms": 0.0}]
-    last_site = "(before any job)"
+def events(lines, sources):
+    """The log as a sequence of ("job", site) and ("compile", key, ms)
+    events, in log order. A compile's Janino time is the next "Code
+    generated" line of the same thread."""
+    out = []
+    open_compile = {}
     for level, thread, logger, msg in records(lines):
         if logger == "DAGScheduler":
             m = GOT_JOB.match(msg[0])
             if m:
-                last_site = m.group(2)
-                if boundary.search(last_site):
-                    windows.append({"start_job": int(m.group(1)),
-                                    "compiles": [], "janino_ms": 0.0})
+                out.append(["job", int(m.group(1)), m.group(2)])
         elif logger == "CodeGenerator":
             m = GENERATED.match(msg[0])
             if m:
-                windows[-1]["janino_ms"] += float(m.group(1))
+                if thread in open_compile:
+                    open_compile.pop(thread)[3] += float(m.group(1))
             elif level == "DEBUG" and len(msg) > 1:
                 code = "\n".join(msg[1:]).strip()
                 key = (side(thread),
                        hashlib.sha1(code.encode()).hexdigest()[:12])
-                windows[-1]["compiles"].append((key, last_site))
                 sources[key] = code
+                ev = ["compile", key, thread, 0.0]
+                open_compile[thread] = ev
+                out.append(ev)
+    return out
+
+
+def ledger(lines, boundary, sources, first=False, phases=(),
+           first_phase="all"):
+    """Windows of compiles. A compile belongs to a job: an executor-side
+    compile to the job running it (the last one submitted before it), a
+    driver-side compile to the job its plan is built for (the next one
+    submitted after it). A window opens at each job whose call site
+    matches `boundary` or, with `first`, at such a job whose predecessor
+    does not match (the first stream job after other work). Inside a
+    window, `phases` [(name, regex)] advance in order: a phase begins at
+    the first job of the current phase whose call site matches its
+    regex. Names may repeat; their keys are counted together."""
+    evs = events(lines, sources)
+    jobs = [e for e in evs if e[0] == "job"]
+    owner = {}
+    last = None
+    pending = []
+    for e in evs:
+        if e[0] == "job":
+            for c in pending:
+                owner[id(c)] = e
+            pending = []
+            last = e
+        elif e[1][0] == "executor" and last is not None:
+            owner[id(e)] = last
+        else:
+            pending.append(e)
+    for c in pending:
+        owner[id(c)] = last
+    # per job: its window index and phase name
+    where = {}
+    w, ph, pos, prev_site = 0, first_phase, 0, None
+    windows = [{"start_job": None, "compiles": [], "janino_ms": 0.0}]
+    for j in jobs:
+        site = j[2]
+        opens = boundary.search(site) and not (
+            first and prev_site is not None and boundary.search(prev_site))
+        if opens:
+            windows.append({"start_job": j[1], "compiles": [],
+                            "janino_ms": 0.0})
+            w, ph, pos = len(windows) - 1, first_phase, 0
+        elif pos < len(phases) and phases[pos][1].search(site):
+            ph, pos = phases[pos][0], pos + 1
+        where[id(j)] = (w, ph, site)
+        prev_site = site
+    for e in evs:
+        if e[0] != "compile":
+            continue
+        j = owner.get(id(e))
+        wi, phase, site = where[id(j)] if j is not None else \
+            (0, first_phase, "(no job)")
+        windows[wi]["compiles"].append((e[1], site, phase))
+        windows[wi]["janino_ms"] += e[3]
     return windows
 
 
@@ -97,17 +155,21 @@ def summarize(windows):
     seen = set()
     occurs = {}
     for i, w in enumerate(windows):
-        for key, _ in w["compiles"]:
+        for key, _, _ in w["compiles"]:
             occurs.setdefault(key, set()).add(i)
     rows = []
     for i, w in enumerate(windows):
-        keys = {k for k, _ in w["compiles"]}
+        keys = {k for k, _, _ in w["compiles"]}
         new = keys - seen
         seen |= keys
         once = {}
-        for key, site in w["compiles"]:
+        phases = {}
+        for key, site, phase in w["compiles"]:
             if occurs[key] == {i} and key not in once:
                 once[key] = site
+            p = phases.setdefault(phase, {"keys": set(), "compiles": 0})
+            p["keys"].add(key)
+            p["compiles"] += 1
         rows.append({
             "window": i,
             "start_job": w["start_job"],
@@ -119,6 +181,11 @@ def summarize(windows):
             "new_keys": len(new),
             "never_reused": [{"side": k[0], "key": k[1], "after_job": s}
                              for k, s in once.items()],
+            "phases": {n: {"keys": len(p["keys"]),
+                           "compiles": p["compiles"],
+                           "new_keys": len(p["keys"] & new),
+                           "never_reused": len(p["keys"] & set(once))}
+                       for n, p in phases.items()},
         })
     return rows
 
@@ -128,14 +195,28 @@ def main():
     ap.add_argument("log")
     ap.add_argument("--boundary", default=r"^parquet at Main\.scala:182$",
                     help="regex on the job call site that opens a window")
+    ap.add_argument("--boundary-first", metavar="REGEX",
+                    help="open a window at the first job matching REGEX "
+                         "after a job that does not (overrides --boundary)")
+    ap.add_argument("--phase", action="append", default=[],
+                    metavar="NAME=REGEX",
+                    help="split each window: phase NAME begins at the first "
+                         "later job matching REGEX (repeat, in order; a "
+                         "repeated NAME continues that phase)")
+    ap.add_argument("--first-phase", default="all",
+                    help="name of the phase a window opens with")
     ap.add_argument("--skip", type=int, default=0,
                     help="windows of set-up to leave out of the summary")
     ap.add_argument("--dump", help="directory for never-reused sources")
     ap.add_argument("--sites", type=int, help="window to split by call site")
     a = ap.parse_args()
     sources = {}
+    phases = [(p.split("=", 1)[0], re.compile(p.split("=", 1)[1]))
+              for p in a.phase]
     with open(a.log, errors="replace") as fh:
-        windows = ledger(fh, re.compile(a.boundary), sources)
+        windows = ledger(fh, re.compile(a.boundary_first or a.boundary),
+                         sources, first=a.boundary_first is not None,
+                         phases=phases, first_phase=a.first_phase)
     rows = summarize(windows)
     if a.dump:
         os.makedirs(a.dump, exist_ok=True)
@@ -146,7 +227,7 @@ def main():
                     fh.write(sources[(n["side"], n["key"])] + "\n")
     if a.sites is not None:
         first = {}
-        for key, site in windows[a.sites]["compiles"]:
+        for key, site, _ in windows[a.sites]["compiles"]:
             first.setdefault(key, site)
         by = {}
         for (sd, _), site in first.items():
@@ -159,6 +240,13 @@ def main():
         print(f"{r['window']:>6} {str(r['start_job']):>9} {r['compiles']:>8} "
               f"{r['janino_s']:>8.3f} {r['keys']:>4} {r['keys_driver']:>6} "
               f"{r['keys_executor']:>8} {r['new_keys']:>8}")
+    if phases:
+        print("window phase keys compiles new_keys never_reused")
+        for r in rows[1 + a.skip:]:
+            for n, p in r["phases"].items():
+                print(f"{r['window']:>6} {n:<10} {p['keys']:>4} "
+                      f"{p['compiles']:>8} {p['new_keys']:>8} "
+                      f"{p['never_reused']:>12}")
     for r in rows:
         if r["never_reused"]:
             print(f"window {r['window']}: {len(r['never_reused'])} never-reused keys")
@@ -172,9 +260,9 @@ def main():
     body = [w for w in windows[1 + a.skip:]]
     steady = rows[1 + a.skip:]
     if len(body) >= 2:
-        pairs = [len({k for w in body[i:i + 2] for k, _ in w["compiles"]})
+        pairs = [len({k for w in body[i:i + 2] for k, _, _ in w["compiles"]})
                  for i in range(len(body) - 1)]
-        touched = [len({k for k, _ in w["compiles"]}) for w in body]
+        touched = [len({k for k, _, _ in w["compiles"]}) for w in body]
         print(f"summary: windows {len(body)}, compiles/window "
               f"{[r['compiles'] for r in steady]}, "
               f"new keys/window {[r['new_keys'] for r in steady]}")
