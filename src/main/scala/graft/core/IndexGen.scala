@@ -11,12 +11,9 @@ import java.nio.file.{Files, StandardCopyOption}
   * A `mode("overwrite")` rewrite of a live index directory is NOT
   * atomic: a reader landing mid-rebuild can see new centroids with
   * old/half-deleted inverted lists (the r10 judge finding). This helper
-  * gives every persisted index (the [[SegmentStore]] families, and
-  * therefore `DocStore.rebuildIndex`, plus the fitted-model saves) the
-  * same generation-dir + marker-flip protocol the upsert sink uses for
-  * snapshots
-  * ([[graft.streaming.Streaming]]'s staged-tmp + atomic-rename
-  * discipline):
+  * gives everything graft persists (the [[SegmentStore]] index
+  * families, the DocStore index, the upsert sinks' snapshots, plus the
+  * fitted-model saves) one generation-dir + marker-flip protocol:
   *
   *  - writers [[stage]] a fresh `path/gen-<N>/` (N = max existing + 1 —
   *    an uncommitted leftover from a crashed build is skipped over,
@@ -26,8 +23,8 @@ import java.nio.file.{Files, StandardCopyOption}
   *    see exactly one complete generation, never a mix;
   *  - [[commit]] keeps the previously COMMITTED generation (the
   *    marker's old value): an in-flight reader that resolved the
-  *    previous marker can still finish its scan (one generation of grace
-  *    — the reader-vs-swap discipline of the upsert sink's `.old` dirs).
+  *    previous marker can still finish its scan (one generation of
+  *    grace).
   *    Every other dir below N is pruned, uncommitted debris included: a
   *    crashed, never-committed generation must not take the previous
   *    complete one's place. Each generation records its commit in a
@@ -37,16 +34,23 @@ import java.nio.file.{Files, StandardCopyOption}
   *    as committed (the rule that layout was written under), and the
   *    next commit records them all before it prunes.
   *
-  * Single writer per index path (the same contract as the upsert sink);
-  * concurrent readers are the point. Renames are atomic on a real
-  * filesystem; object stores want their own versioned-pointer story, as
-  * noted on the sink.
+  * Single writer per index path; concurrent readers are the point.
+  * Renames are atomic on a real filesystem; object stores want their own
+  * versioned-pointer story.
   */
 object IndexGen {
 
   private val GenPattern = "gen-(\\d+)".r
 
   private def markerFile(path: String) = new File(path, "_current")
+
+  /** Fault injection for specs: [[commit]] calls it with (path, step) at
+    * each crash point of a write — "staged" once every artifact of the
+    * generation is written, "marker" between the marker's write-aside
+    * and its rename, "vacuum" after the rename and before the records
+    * and the prune. A hook that throws stops the write there, as a crash
+    * would. */
+  @volatile private[graft] var crashHook: (String, String) => Unit = (_, _) => ()
 
   /** The record that generation `gen` was committed at some point. */
   private def record(path: String, gen: Long) =
@@ -103,10 +107,13 @@ object IndexGen {
   def commit(path: String, gen: Long, grace: Long = 1): Unit = {
     val root = new File(path)
     val prev = current(path)
+    crashHook(path, "staged")
     val tmp = new File(root, s".tmp-current-${java.util.UUID.randomUUID()}")
     Files.writeString(tmp.toPath, gen.toString)
+    crashHook(path, "marker")
     Files.move(tmp.toPath, markerFile(path).toPath,
       StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    crashHook(path, "vacuum")
     // after the rename: a crash before these writes leaves `gen` current
     // (committed by the marker), and the next commit records it as prev
     (prev.toSeq.flatMap(committedUpTo(path, _)) :+ gen)

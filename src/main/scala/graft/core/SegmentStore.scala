@@ -7,15 +7,21 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.graftbridge.ColumnBridge
 
-/** The one write protocol of every persisted index family — IVF lists,
-  * IVF-PQ lists, binary codes, PQ codes, HNSW graphs, MinHash signatures
-  * and content hashes (reference: the engine keeps its external indexes
-  * answering while they are maintained, xpacks/llm/document_store.py).
+/** The one write protocol of everything graft persists — the index
+  * families (IVF lists, IVF-PQ lists, binary codes, PQ codes, HNSW
+  * graphs, MinHash signatures, content hashes) and the upsert sinks'
+  * snapshots, whole or bucketed (reference: the engine keeps its
+  * external indexes answering while they are maintained,
+  * xpacks/llm/document_store.py; the DeltaTableWriter of
+  * data_storage.rs:1611 commits a batch's files in one log entry).
   *
   * An index at `path` is a set of [[IndexGen]] generations plus a shared
   * `segments/` dir. A generation dir holds:
   *  - `meta.txt` — the [[Meta]] record: family, format version and the
-  *    family's scalar geometry;
+  *    family's scalar geometry, then the generation's parameters
+  *    (`param.<k>=<v>`: settings its reader serves with, such as a
+  *    DocStore index's rescore depth — carried by every append, cover
+  *    and compact, and left out of append's record check);
   *  - `segments.txt` — the manifest: the segments (under `path`) whose
   *    rows, unioned, are the index;
   *  - side tables (`centroids/`, `codebook/`) — small parquet tables
@@ -34,7 +40,10 @@ import org.apache.spark.sql.graftbridge.ColumnBridge
   *    geometry fails loudly instead of committing a generation no reader
   *    can load), carries the side tables over as a file copy (no Spark
   *    job) and lists the old segments plus one new one;
-  *  - [[compact]] rewrites given rows as the generation's only segment.
+  *  - [[compact]] rewrites given rows as the generation's only segment;
+  *  - [[publishPartitions]] swaps some segments for the partitions of
+  *    one `partitionBy` write, one segment per partition (the bucketed
+  *    snapshot: a batch replaces the buckets it touches).
   *
   * The manifest is written BEFORE the segment's bytes land, and it is
   * what the vacuum reads, so there is no instant at which a freshly
@@ -51,6 +60,7 @@ object SegmentStore {
   private val MetaFile = "meta.txt"
   private val Manifest = "segments.txt"
   private val Covers = "covers.txt"
+  private val Param = "param."
 
   /** A persisted index family: its name in the record and the names of
     * its scalar geometry. */
@@ -64,7 +74,15 @@ object SegmentStore {
     case object Signature extends Family("signature", Seq("n", "k", "bands"))
     case object Hash extends Family("hash")
     case object Hnsw extends Family("hnsw", Seq("m", "ef_construction"))
-    lazy val all: Seq[Family] = Seq(Ivf, IvfPq, Binary, Pq, Signature, Hash, Hnsw)
+    /** An upsert sink's snapshot, one whole table per generation. */
+    case object Snapshot extends Family("snapshot")
+    /** A bucketed upsert snapshot: one segment per key-hash bucket
+      * (`b=<i>`), bucket = pmod(murmur3 `hash(keys)`, buckets). The name
+      * pins the hash recipe, the geometry the count: both make up the
+      * key→bucket mapping. */
+    case object Buckets extends Family("murmur3_buckets", Seq("buckets"))
+    lazy val all: Seq[Family] =
+      Seq(Ivf, IvfPq, Binary, Pq, Signature, Hash, Hnsw, Snapshot, Buckets)
   }
 
   /** The meta record of one generation (written with [[FormatVersion]]). */
@@ -78,11 +96,12 @@ object SegmentStore {
   }
 
   /** One committed generation, resolved once: its meta record, its
-    * manifest's segments (relative to `path`), its side tables and the
-    * input files it covers (None: no record). */
+    * manifest's segments (relative to `path`), its side tables, the
+    * input files it covers (None: no record) and its parameters. */
   final case class Generation(path: String, gen: Long, meta: Meta,
       segments: Seq[String], sides: Seq[String],
-      covers: Option[Seq[String]] = None) {
+      covers: Option[Seq[String]] = None,
+      params: Map[String, String] = Map.empty) {
     def dir: String = s"$path/gen-$gen"
 
     /** This generation, after checking that it holds `family`. */
@@ -123,8 +142,11 @@ object SegmentStore {
   /** Resolve the committed generation of the index at `path`. Fails,
     * naming the path, when nothing is committed there, and fails on a
     * generation without a record at [[FormatVersion]]. */
-  def open(path: String): Generation = {
-    val gen = IndexGen.committed(path)
+  def open(path: String): Generation = openAt(path, IndexGen.committed(path))
+
+  /** Resolve generation `gen` of the index at `path`, which the caller
+    * checked is one of [[IndexGen.versions]]. */
+  def openAt(path: String, gen: Long): Generation = {
     val dir = new File(path, s"gen-$gen")
     val mf = new File(dir, MetaFile)
     require(mf.isFile, s"no segment-store meta record in $dir")
@@ -140,20 +162,24 @@ object SegmentStore {
     val covers = new File(dir, Covers)
     Generation(path, gen, Meta(family, family.geometry.map(kv(_).toInt)), segs,
       dir.listFiles().filter(_.isDirectory).map(_.getName).sorted.toSeq,
-      if (covers.isFile) Some(lines(covers)) else None)
+      if (covers.isFile) Some(lines(covers)) else None,
+      kv.collect { case (k, v) if k.startsWith(Param) => k.stripPrefix(Param) -> v })
   }
 
   /** A fresh index at `path`: the side tables and `rows` as its one
-    * segment, covering the input files `covers` (None: no record).
-    * Returns the committed generation. */
+    * segment, covering the input files `covers` (None: no record), with
+    * parameters `params`. The commit keeps the `grace` newest committed
+    * generations below it ([[IndexGen.commit]]). Returns the committed
+    * generation. */
   def save(path: String, meta: Meta, rows: DataFrame,
       sides: Seq[(String, DataFrame)] = Nil,
-      covers: Option[Seq[String]] = None): Long = {
+      covers: Option[Seq[String]] = None,
+      params: Map[String, String] = Map.empty, grace: Long = 1): Long = {
     val (dir, gen) = IndexGen.stage(path)
     sides.foreach { case (name, df) =>
       df.write.mode("overwrite").parquet(s"$dir/$name")
     }
-    publish(path, dir, gen, meta, Nil, Some(rows), covers)
+    publish(path, dir, gen, meta, Nil, Some(rows), covers, params, grace)
   }
 
   /** Grow the generation `g` by one segment of `rows`. `meta` is the
@@ -188,21 +214,61 @@ object SegmentStore {
     new File(dir).mkdirs()
     g.sides.foreach(s =>
       copyTree(new File(g.dir, s).toPath, new File(dir, s).toPath))
-    publish(g.path, dir, gen, g.meta, keep, rows, covers)
+    publish(g.path, dir, gen, g.meta, keep, rows, covers, g.params, 1)
+  }
+
+  /** Commit a generation of `meta` whose manifest keeps `keep` (segments
+    * of the committed generation) and adds one segment per `k=v`
+    * partition dir of the table `write` writes at the path it is given,
+    * inside the staged generation. Each partition dir moves into a
+    * segment of its own after the manifest names it, so
+    * [[Generation.rows]] still reads the partition column. Returns the
+    * committed generation. */
+  private[graft] def publishPartitions(path: String, meta: Meta,
+      keep: Seq[String])(write: String => Unit): Long = {
+    val (dir, gen) = IndexGen.stage(path)
+    val staged = new File(dir, "staged")
+    write(staged.getPath)
+    val parts = Option(staged.listFiles()).getOrElse(Array.empty[File])
+      .filter(f => f.isDirectory && f.getName.contains("=")).sortBy(_.getName).toSeq
+    val segs = parts.map(_ => newSegment())
+    writeRecord(dir, meta, keep ++ segs, None, Map.empty)
+    parts.zip(segs).foreach { case (p, seg) =>
+      val to = new File(path, seg)
+      to.mkdirs()
+      Files.move(p.toPath, new File(to, p.getName).toPath)
+    }
+    rmTree(staged)
+    commit(path, gen, 1)
+  }
+
+  private def newSegment() = s"segments/seg-${java.util.UUID.randomUUID()}"
+
+  private def writeRecord(dir: String, meta: Meta, segments: Seq[String],
+      covers: Option[Seq[String]], params: Map[String, String]): Unit = {
+    new File(dir).mkdirs()
+    Files.writeString(new File(dir, MetaFile).toPath,
+      (Seq("family" -> meta.family.name, "version" -> FormatVersion.toString) ++
+        meta.family.geometry.zip(meta.geometry.map(_.toString)) ++
+        params.toSeq.sorted.map { case (k, v) => (Param + k) -> v })
+        .map { case (k, v) => s"$k=$v" }.mkString("\n"))
+    Files.writeString(new File(dir, Manifest).toPath, segments.mkString("\n"))
+    covers.foreach(c =>
+      Files.writeString(new File(dir, Covers).toPath, c.mkString("\n")))
+  }
+
+  private def commit(path: String, gen: Long, grace: Long): Long = {
+    IndexGen.commit(path, gen, grace)
+    vacuum(path)
+    gen
   }
 
   private def publish(path: String, dir: String, gen: Long, meta: Meta,
       keep: Seq[String], rows: Option[DataFrame],
-      covers: Option[Seq[String]]): Long = {
-    val seg = s"segments/seg-${java.util.UUID.randomUUID()}"
-    new File(dir).mkdirs()
-    Files.writeString(new File(dir, MetaFile).toPath,
-      (Seq("family" -> meta.family.name, "version" -> FormatVersion.toString) ++
-        meta.family.geometry.zip(meta.geometry.map(_.toString)))
-        .map { case (k, v) => s"$k=$v" }.mkString("\n"))
-    Files.writeString(new File(dir, Manifest).toPath, (keep ++ rows.map(_ => seg)).mkString("\n"))
-    covers.foreach(c =>
-      Files.writeString(new File(dir, Covers).toPath, c.mkString("\n")))
+      covers: Option[Seq[String]], params: Map[String, String],
+      grace: Long): Long = {
+    val seg = newSegment()
+    writeRecord(dir, meta, keep ++ rows.map(_ => seg), covers, params)
     // Part-file count at rest IS the read parallelism of every kernel
     // that scans a segment (maxPartitionBytes makes a small file one scan
     // split), so no layout ever coalesces: a single-file PQ code segment
@@ -229,9 +295,7 @@ object SegmentStore {
       }
       w.mode("overwrite").parquet(s"$path/$seg")
     }
-    IndexGen.commit(path, gen)
-    vacuum(path)
-    gen
+    commit(path, gen, grace)
   }
 
   private def manifestOf(genDir: File): Option[Seq[String]] = {

@@ -73,12 +73,10 @@ object DocStore {
   final case class BinaryCodes(rescore: Int = 32) extends StoreIndex
   final case class IvfPqCodes(m: Int, ksub: Int = 256, nlist: Int = 0,
       rescore: Int = 32) extends StoreIndex {
-    // validated at CONSTRUCTION, not at writeIndexKind: save(path,
-    // IvfPqCodes(rescore = 0)) would otherwise run the whole
-    // centroid-fit/encode/segment build and only then throw, leaving an
-    // orphaned committed generation in the kind dir (readIndexKind
-    // re-constructs from the marker file, so a hand-edited rescore=0
-    // marker fails loudly here too)
+    // validated at CONSTRUCTION: save(path, IvfPqCodes(rescore = 0))
+    // fails before the centroid-fit/encode/segment build starts, and
+    // kindOf re-constructs from the meta record, so a hand-edited
+    // rescore=0 record fails loudly here too
     require(rescore > 0, "IvfPqCodes: rescore must be > 0 — the float " +
       "refine is the layout's precision contract (ivfPqLoadTopK requires it)")
   }
@@ -524,43 +522,45 @@ object DocStore {
         }
   }
 
-  /** (Re)build the IVF index over the accumulated chunk table of a
+  /** (Re)build the index over the accumulated chunk table of a
     * [[buildStream]]-fed (or [[Store.save]]d) store — run after a batch
-    * of ingest, like the reference's periodic index maintenance.
-    * `nlist <= 0` derives from the CURRENT chunk count, so the index
-    * geometry grows with the corpus across refreshes — the count comes
-    * from the parquet FOOTERS ([[graft.core.parquetRowCount]]: O(files)
-    * driver-side metadata reads, no Spark job, no data scan), so a
-    * refresh on a huge chunk table doesn't pay a full-table count()
-    * before the build.
+    * of ingest, like the reference's periodic index maintenance. The
+    * rebuild keeps the store's at-rest kind and its parameters, which
+    * the committed index generation names; a store with no index yet
+    * gets an IVF-flat one. `nlist <= 0` derives from the
+    * CURRENT chunk count, so the index geometry grows with the corpus
+    * across refreshes — the count comes from the parquet FOOTERS
+    * ([[graft.core.parquetRowCount]]: O(files) driver-side metadata
+    * reads, no Spark job, no data scan), so a refresh on a huge chunk
+    * table doesn't pay a full-table count() before the build.
     *
-    * The save is atomically versioned ([[graft.core.IndexGen]] inside
-    * [[Similarity.ivfSave]]): retrieval over [[open]] keeps serving the
+    * The save is atomically versioned ([[graft.core.SegmentStore]] over
+    * [[graft.core.IndexGen]]): retrieval over [[open]] keeps serving the
     * previous index generation until the one marker rename publishes the
     * new one — the reference's serve-during-maintenance contract. */
-  def rebuildIndex(spark: SparkSession, path: String, nlist: Int = 0): Unit =
-    buildIndex(spark, path, readIndexKind(path), nlist)
-
-  /** [[rebuildIndex]] under an explicit at-rest representation — builds
-    * the new kind's index FIRST (into its kind-scoped dir, committed by
-    * IndexGen's atomic marker rename), then flips the durable kind
-    * marker (`path/index_kind.txt`, itself an atomic rename). Readers
-    * are consistent through the whole switch: the kind they read always
-    * names an index dir whose committed generation matches it — a
-    * concurrent or crashed kind-switching rebuild leaves them on the
-    * OLD kind over the OLD index, never a mismatched pair. Later plain
-    * rebuilds and every [[open]] follow the flipped kind. */
-  def rebuildIndex(spark: SparkSession, path: String,
-      index: StoreIndex): Unit = {
-    // the previous kind is read only to grant its dir vacuum grace — an
-    // unreadable/corrupt marker must not make the EXPLICIT-kind rebuild
-    // throw (this call is the one API path that repairs a bad marker by
-    // overwriting it); fall back to the new kind, i.e. no extra grace
-    val prev = scala.util.Try(readIndexKind(path)).getOrElse(index)
-    buildIndex(spark, path, index, 0)
-    writeIndexKind(path, index)
-    vacuumKindDirs(path, current = index, grace = prev)
+  def rebuildIndex(spark: SparkSession, path: String, nlist: Int = 0): Unit = {
+    val kind =
+      if (graft.core.IndexGen.current(s"$path/index").isDefined) kindOf(indexOf(path))
+      else {
+        require(!new java.io.File(path, "index_kind.txt").exists, s"$path names " +
+          "its index kind in index_kind.txt, a layout this build does not " +
+          "read; rebuild it with an explicit kind")
+        IvfFlat()
+      }
+    buildIndex(spark, path, kind, nlist)
   }
+
+  /** [[rebuildIndex]] under an explicit at-rest representation: a save
+    * of that kind's family, with its parameters in the meta record,
+    * into the store's one index path `path/index`. A kind switch is one
+    * more generation there, published by the same marker rename, so a
+    * reader sees the old kind's generation or the new one, never a mix;
+    * the previous generation stays for in-flight readers (IndexGen's
+    * grace). Later plain rebuilds and every [[open]] follow the kind of
+    * the committed generation. */
+  def rebuildIndex(spark: SparkSession, path: String,
+      index: StoreIndex): Unit =
+    buildIndex(spark, path, index, 0)
 
   /** Corpus-size line past which a FLAT PqCodes store is the wrong kind
     * (serving pays |q|·|chunks| decoded dots with no coarse prune):
@@ -582,53 +582,44 @@ object DocStore {
         "IvfPqCodes - same codes at rest behind a coarse prune")
     else None
 
-  /** Remove SUPERSEDED kind dirs after a kind flip, grace-1 like
-    * [[graft.core.IndexGen.commit]]: the dir of the kind that was
-    * current immediately before the flip survives (an in-flight reader
-    * that resolved the old marker can finish its scan); any OLDER
-    * superseded kind's dir — stale since an earlier switch, referenced
-    * by nothing — is deleted, so a store cycling kinds no longer leaks
-    * an index-sized dir per switch. */
-  private def vacuumKindDirs(path: String, current: StoreIndex,
-      grace: StoreIndex): Unit = {
-    val keep = Set(indexDirOf(path, current), indexDirOf(path, grace))
-    allKindDirs(path)
-      .filterNot(keep)
-      .map(new java.io.File(_))
-      .filter(_.isDirectory)
-      .foreach(graft.core.rmTree)
-  }
+  /** The committed generation of the store's index, `path/index`. */
+  private def indexOf(path: String): graft.core.SegmentStore.Generation =
+    graft.core.SegmentStore.open(s"$path/index")
 
-  /** Every kind-scoped index dir a store at `path` could own — one
-    * representative per [[StoreIndex]] subclass (params don't affect the
-    * dir, see [[indexDirOf]]). Keep this list in sync with the sealed
-    * trait: a kind missing here is never vacuumed after being superseded
-    * (DocStoreSpec pins the count against the dir-name set). */
-  private[graft] def allKindDirs(path: String): Seq[String] =
-    Seq[StoreIndex](IvfFlat(), PqCodes(1, 1, 1), BinaryCodes(1),
-      IvfPqCodes(1, 1, 0, 1)).map(k => indexDirOf(path, k)).distinct
+  /** The meta-record parameters of a kind: what [[kindOf]] reads back. */
+  private def paramsOf(ix: StoreIndex): Map[String, String] = (ix match {
+    case IvfFlat(n) => Seq("nlist" -> n)
+    case PqCodes(m, ksub, r) => Seq("m" -> m, "ksub" -> ksub, "rescore" -> r)
+    case BinaryCodes(r) => Seq("rescore" -> r)
+    case IvfPqCodes(m, ksub, n, r) =>
+      Seq("m" -> m, "ksub" -> ksub, "nlist" -> n, "rescore" -> r)
+  }).map { case (k, v) => k -> v.toString }.toMap
 
-  /** The kind's index location — kind-SCOPED dirs ("index" stays the
-    * IVF-flat home for pre-codes-era stores) are what makes the kind
-    * flip above safe: an index generation can never be read under the
-    * wrong kind's schema. A kind flip keeps the immediately-previous
-    * kind's dir for in-flight readers and vacuums older superseded ones
-    * ([[vacuumKindDirs]] — the IndexGen grace-1 discipline). */
-  private[graft] def indexDirOf(path: String, ix: StoreIndex): String =
-    ix match {
-      case IvfFlat(_) => s"$path/index"
-      case PqCodes(_, _, _) => s"$path/index-pq"
-      case BinaryCodes(_) => s"$path/index-binary"
-      case IvfPqCodes(_, _, _, _) => s"$path/index-ivfpq"
+  /** The at-rest kind an index generation holds: its family and its
+    * parameters. A generation without them (a store written before the
+    * kind moved into the meta record, which kept it in `index_kind.txt`
+    * and `index-pq`/`index-binary`/`index-ivfpq` dirs) fails and names
+    * the path; rebuild it with [[rebuildIndex]] and an explicit kind. */
+  private[graft] def kindOf(g: graft.core.SegmentStore.Generation): StoreIndex = {
+    import graft.core.SegmentStore.Family
+    def p(k: String): Int = g.params.getOrElse(k,
+      throw new IllegalArgumentException(s"${g.dir} names no '$k' parameter: " +
+        "not a DocStore index of this layout (the index kind is in the " +
+        "meta record, not index_kind.txt); rebuild it with an explicit kind"))
+      .toInt
+    g.meta.family match {
+      case Family.Ivf => IvfFlat(p("nlist"))
+      case Family.Pq => PqCodes(p("m"), p("ksub"), p("rescore"))
+      case Family.Binary => BinaryCodes(p("rescore"))
+      case Family.IvfPq => IvfPqCodes(p("m"), p("ksub"), p("nlist"), p("rescore"))
+      case _ => throw new IllegalArgumentException(
+        s"${g.path} holds a ${g.meta} index, not a DocStore index")
     }
+  }
 
   private def buildIndex(spark: SparkSession, path: String,
       kind: StoreIndex, nlist: Int): Unit = {
     val persisted = graft.core.readParquet(spark, s"$path/chunks")
-    // the generation covers every chunk file this build reads, so the
-    // next extendIndex reads only files added after it
-    val covers = Some(chunkFiles(spark, path, persisted))
-    val dir = indexDirOf(path, kind)
     // dim from the data (one narrow take(1) — PQ's subspace slicing
     // cannot size itself from the stream like the generic dot loop);
     // fail with the real problem, not head()'s bare NoSuchElementException
@@ -641,22 +632,26 @@ object DocStore {
     def derivedN(defN: Int) = if (nlist > 0) nlist
       else if (defN > 0) defN
       else Similarity.nlistFor(graft.core.parquetRowCount(spark, s"$path/chunks"))
-    kind match {
+    val (meta, rows, sides) = kind match {
       case IvfFlat(defN) =>
-        Similarity.ivfSave(persisted, col("chunk_key"), col("embedding"),
-          dir, derivedN(defN), covers = covers)
+        Similarity.ivfIndex(persisted, col("chunk_key"), col("embedding"),
+          derivedN(defN))
       case PqCodes(m, ksub, _) =>
         flatPqCorpusWarning(graft.core.parquetRowCount(spark, s"$path/chunks"))
           .foreach(msg => System.err.println(s"[graft] WARN $msg"))
-        Similarity.pqSave(persisted, col("chunk_key"), col("embedding"),
-          dir, m, ksub, dim, covers)
+        Similarity.pqIndex(persisted, col("chunk_key"), col("embedding"),
+          m, ksub, dim)
       case BinaryCodes(_) =>
-        Similarity.binarySave(persisted, col("chunk_key"), col("embedding"),
-          dir, covers)
+        Similarity.binaryIndex(persisted, col("chunk_key"), col("embedding"))
       case IvfPqCodes(m, ksub, defN, _) =>
-        Similarity.ivfPqSave(persisted, col("chunk_key"), col("embedding"),
-          dir, derivedN(defN), m, ksub, dim, covers)
+        Similarity.ivfPqIndex(persisted, col("chunk_key"), col("embedding"),
+          derivedN(defN), m, ksub, dim)
     }
+    // the generation covers every chunk file this build reads, so the
+    // next extendIndex reads only files added after it
+    graft.core.SegmentStore.save(s"$path/index", meta, rows, sides,
+      Some(chunkFiles(spark, path, persisted)), paramsOf(kind))
+    ()
   }
 
   /** The files of a chunk table read as `table` (a read of
@@ -671,59 +666,6 @@ object DocStore {
       .newHadoopConf()).makeQualified(root).toUri.toString + "/")
     table.inputFiles.toSeq
       .map(f => base.relativize(new java.net.URI(f)).toString).sorted
-  }
-
-  /** Durable index-kind marker — written AFTER the kind's index commits
-    * (see [[rebuildIndex]]), via write-aside + ATOMIC_MOVE so a reader
-    * re-reading it per query batch can never observe a torn file.
-    * Absent file = IVF-flat (pre-codes-era stores). */
-  private def kindFile(path: String) = new java.io.File(path, "index_kind.txt")
-
-  private[graft] def writeIndexKind(path: String, ix: StoreIndex): Unit = {
-    val root = new java.io.File(path)
-    root.mkdirs()
-    // sweep write-aside orphans from crashed earlier flips (single-writer
-    // contract, so any existing .index_kind.*.tmp is dead) — the
-    // IndexGen.commit .tmp-current-* discipline; without it a crash
-    // between writeString and ATOMIC_MOVE leaked one tmp file forever
-    Option(root.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isFile && f.getName.startsWith(".index_kind.")
-        && f.getName.endsWith(".tmp"))
-      .foreach(_.delete())
-    val body = ix match {
-      case IvfFlat(n) => s"kind=ivf\nnlist=$n"
-      case PqCodes(m, ksub, r) => s"kind=pq\nm=$m\nksub=$ksub\nrescore=$r"
-      case BinaryCodes(r) => s"kind=binary\nrescore=$r"
-      case IvfPqCodes(m, ksub, n, r) =>
-        // rescore > 0 already required by the IvfPqCodes constructor
-        s"kind=ivfpq\nm=$m\nksub=$ksub\nnlist=$n\nrescore=$r"
-    }
-    val tmp = new java.io.File(path, s".index_kind.${System.nanoTime()}.tmp")
-    java.nio.file.Files.writeString(tmp.toPath, body)
-    java.nio.file.Files.move(tmp.toPath, kindFile(path).toPath,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    ()
-  }
-
-  private[graft] def readIndexKind(path: String): StoreIndex = {
-    val f = kindFile(path)
-    if (!f.isFile) IvfFlat()
-    else {
-      val kv = java.nio.file.Files.readString(f.toPath).split("\n")
-        .map(_.trim).filter(_.contains("="))
-        .map { l => val Array(k, v) = l.split("=", 2); k -> v }.toMap
-      kv("kind") match {
-        case "ivf" => IvfFlat(kv.getOrElse("nlist", "0").toInt)
-        case "pq" => PqCodes(kv("m").toInt, kv("ksub").toInt,
-          kv.getOrElse("rescore", "32").toInt)
-        case "binary" => BinaryCodes(kv.getOrElse("rescore", "32").toInt)
-        case "ivfpq" => IvfPqCodes(kv("m").toInt, kv("ksub").toInt,
-          kv.getOrElse("nlist", "0").toInt, kv.getOrElse("rescore", "32").toInt)
-        case other => throw new IllegalArgumentException(
-          s"unknown index kind '$other' in ${f.getPath}")
-      }
-    }
   }
 
   /** INCREMENTAL index refresh — the between-rebuilds maintenance step
@@ -745,11 +687,10 @@ object DocStore {
     * first call reads every chunk file, and the key check keeps the
     * answer exact. Returns the number of newly indexed chunks. */
   def extendIndex(spark: SparkSession, path: String): Long = {
-    // ONE kind read for the whole call: the indexed-set scan and the
-    // append must agree on the kind even if a concurrent rebuild flips it
-    val kind = readIndexKind(path)
-    val dir = indexDirOf(path, kind)
-    val g = graft.core.SegmentStore.open(dir)
+    // ONE open for the whole call: the kind, the indexed-set scan and
+    // the append all come from the same generation
+    val g = indexOf(path)
+    val kind = kindOf(g)
     val schema = graft.core.parquetSchema(spark, s"$path/chunks")
     val covered = g.covers.getOrElse(Nil).toSet
     val added = chunkFiles(spark, path,
@@ -761,18 +702,18 @@ object DocStore {
     if (n == 0) graft.core.SegmentStore.cover(g, added)
     else kind match {
       case IvfFlat(_) =>
-        Similarity.ivfAppend(spark, dir, fresh,
-          col("chunk_key"), col("embedding"), covers = covers)
+        Similarity.ivfAppend(spark, g, fresh,
+          col("chunk_key"), col("embedding"), covers)
       case BinaryCodes(_) =>
-        Similarity.binaryAppend(spark, dir, fresh,
+        Similarity.binaryAppend(g, fresh,
           col("chunk_key"), col("embedding"), covers)
       case PqCodes(_, _, _) =>
         // frozen-codebook encode of the new rows only (the FAISS
         // add-to-trained-index contract; periodic rebuild re-fits)
-        Similarity.pqAppend(spark, dir, fresh,
+        Similarity.pqAppend(spark, g, fresh,
           col("chunk_key"), col("embedding"), covers)
       case IvfPqCodes(_, _, _, _) =>
-        Similarity.ivfPqAppend(spark, dir, fresh,
+        Similarity.ivfPqAppend(spark, g, fresh,
           col("chunk_key"), col("embedding"), covers)
     }
     n
@@ -814,78 +755,37 @@ object DocStore {
 
   /** The query surface both store flavors share — what [[serve]]
     * exposes (reference: servers.py's DocumentStoreServer serves either
-    * store behind one endpoint schema). */
+    * store behind one endpoint schema). A flavor supplies its chunk
+    * table, its [[retrieve]] and its narrow fetch stage; every derived
+    * query is built here over those. */
   trait Queryable {
+    /** The chunk rows: (doc_id, chunk_id, chunk_key, text, metadata…,
+      * embedding). */
+    def chunks: DataFrame
+    def metadata: Seq[String]
     def retrieve(queries: DataFrame, qid: Column, qtext: Column, k: Int,
         filter: Option[Column] = None): DataFrame
-    def stats(modified: Option[Column] = None): DataFrame
-    def inputs(filter: Option[Column] = None): DataFrame
     private[DocStore] def session: SparkSession
-  }
 
-  /** A built store: one chunk-level DataFrame carrying everything the
-    * query methods need — (doc_id, chunk_id, chunk_key, text, metadata…,
-    * embedding). */
-  final class Store private[DocStore] (
-      val chunks: DataFrame,
-      val metadata: Seq[String],
-      embedder: Column => Column) extends Queryable {
+    /** The narrow fetch stage: (qid, rank, chunk_key, score) hits,
+      * rank ≤ k, over the chunks `filter` keeps, and the chunk rows to
+      * join them back to. */
+    private[DocStore] def narrow(queries: DataFrame, qid: Column,
+        qtext: Column, k: Int, filter: Option[Column]): (DataFrame, DataFrame)
 
-    private[DocStore] def session: SparkSession = chunks.sparkSession
-
-    /** k nearest chunks per query row by exact cosine (reference
-      * `retrieve_query`). `filter` (the metadata-filter analog)
-      * restricts the CANDIDATE set before ranking — k survivors from
-      * the matching chunks, exactly like the reference passing the
-      * filter INTO the index, not a lossy post-filter of unfiltered
-      * hits. Queries are the small probe-set side (broadcast); the
-      * chunk corpus stays fully distributed. Returns
-      * (qid, rank, doc_id, chunk_id, text, metadata…, score). */
-    def retrieve(queries: DataFrame, qid: Column, qtext: Column, k: Int,
-        filter: Option[Column] = None): DataFrame = {
-      val (top, corpus) = fetchNarrow(queries, qid, qtext, k, filter)
-      widen(top, corpus, metadata)
-    }
-
-    /** The narrow fetch stage shared by [[retrieve]] and
-      * [[retrieveDiverse]]: (qid, chunk_key, score, rank ≤ k) hits plus
-      * the filtered corpus for join-backs.
-      *
-      * Score and rank over NARROW rows — (qid, chunk_key, score) is 24
-      * bytes; the candidate expansion is |queries|×|chunks| rows, and
-      * carrying text+metadata through the pairwise projection and the
-      * rank window's sort multiplied the bytes materialized/sorted ~10×
-      * (measured ~11 s → ~3 s at sf0.1). The wide columns join back
-      * over only the |queries|·k winners — both branches read the
-      * chunk frame [[build]] materialized once, so neither re-parses,
-      * re-chunks, nor re-embeds (PlanSpec pins the cache scan). */
-    private def fetchNarrow(queries: DataFrame, qid: Column, qtext: Column,
-        k: Int, filter: Option[Column]): (DataFrame, DataFrame) = {
-      val corpus = chunks.filter(filter.getOrElse(lit(true)))
-      val d = corpus.select(col("chunk_key"), col("embedding"))
-        .withColumn("_dn", Similarity.norm2(col("embedding")))
-      val q = queries.select(qid.as("qid"), embedder(qtext).as("_qv"))
-        .withColumn("_qn", Similarity.norm2(col("_qv")))
-      val scored = d.crossJoin(broadcast(q))
-        .select(col("qid"), col("chunk_key"),
-          Similarity.cosinePrenorm(col("_qv"), col("embedding"),
-            col("_qn"), col("_dn")).as("score"))
-      (Similarity.topKPer(scored, "qid", "score", "chunk_key", k), corpus)
-    }
-
-    /** Diversity retrieval — fetch the `fetch` nearest chunks by cosine,
-      * then keep `k` by greedy maximal marginal relevance
-      * ([[Similarity.mmrTopK]]): each kept chunk trades relevance
-      * against max-cosine redundancy to chunks already kept, so a RAG
-      * context stops being n copies of the same best paragraph. The
-      * greedy pass touches only the |queries|·fetch shortlist. Returns
+    /** Diversity retrieval — fetch the `fetch` nearest chunks, then keep
+      * `k` by greedy maximal marginal relevance ([[Similarity.mmrTopK]]):
+      * each kept chunk trades relevance against max-cosine redundancy to
+      * chunks already kept, so a RAG context stops being n copies of the
+      * same best paragraph. The greedy pass touches only the
+      * |queries|·fetch shortlist. Returns
       * (qid, rank, doc_id, chunk_id, text, metadata…, score) with
       * score = the MMR objective at selection time. */
     def retrieveDiverse(queries: DataFrame, qid: Column, qtext: Column,
         k: Int, fetch: Int, lam: Double = 0.75,
         filter: Option[Column] = None): DataFrame = {
       require(fetch >= k, s"retrieveDiverse: fetch ($fetch) must be >= k ($k)")
-      val (top, corpus) = fetchNarrow(queries, qid, qtext, fetch, filter)
+      val (top, corpus) = narrow(queries, qid, qtext, fetch, filter)
       diverseStage(top, corpus, metadata, k, lam)
     }
 
@@ -900,12 +800,12 @@ object DocStore {
 
     /** Two-stage retrieval (reference rerankers.py + the
       * `rerank_topk_filter` pattern): stage 1 fetches the `fetch`
-      * nearest chunks per query by embedding cosine ([[retrieve]],
-      * filter included), stage 2 re-scores ONLY those candidates with
-      * `scorer` — a (queryText, chunkText) pair function, i.e. the
-      * cross-encoder contract: too expensive for the corpus, affordable
-      * on |queries|·fetch rows — and keeps the top `k` by the new
-      * score. Ties break on the first-stage rank (cosine order, itself
+      * nearest chunks per query ([[retrieve]], filter included), stage 2
+      * re-scores ONLY those candidates with `scorer` — a
+      * (queryText, chunkText) pair function, i.e. the cross-encoder
+      * contract: too expensive for the corpus, affordable on
+      * |queries|·fetch rows — and keeps the top `k` by the new score.
+      * Ties break on the first-stage rank (cosine order, itself
       * chunk-key tie-broken), so rankings stay fully deterministic.
       * Returns (qid, rank, doc_id, chunk_id, text, metadata…, score). */
     def retrieveRerank(queries: DataFrame, qid: Column, qtext: Column,
@@ -930,10 +830,9 @@ object DocStore {
 
     /** Two-stage retrieval feeding the context assembler — the RAG
       * end-game composition (reference: rerankers.py output consumed by
-      * question_answering.py's prompt builder): stage-1 cosine fetch,
-      * stage-2 `scorer` re-rank ([[retrieveRerank]]), top-k chunks
-      * concatenated in the RERANKED order. Returns
-      * (qid, n_chunks, context). */
+      * question_answering.py's prompt builder): stage-1 fetch, stage-2
+      * `scorer` re-rank ([[retrieveRerank]]), top-k chunks concatenated
+      * in the RERANKED order. Returns (qid, n_chunks, context). */
     def retrieveRerankContext(queries: DataFrame, qid: Column, qtext: Column,
         k: Int, fetch: Int,
         scorer: (Column, Column) => Column = overlapReranker,
@@ -945,12 +844,66 @@ object DocStore {
       * file count / last_modified). `modified`: optional per-chunk
       * modification-stamp column carried in the metadata. */
     def stats(modified: Option[Column] = None): DataFrame =
-      DocStore.statsOf(chunks, modified)
+      chunks.agg(
+        countDistinct(col("doc_id")).as("doc_count"),
+        count(lit(1)).as("chunk_count"),
+        max(modified.getOrElse(lit(null).cast("long"))).as("last_modified"))
 
     /** Indexed input documents and their metadata under a filter
       * (reference `inputs_query`). */
     def inputs(filter: Option[Column] = None): DataFrame =
-      DocStore.inputsOf(chunks, metadata, filter)
+      chunks.filter(filter.getOrElse(lit(true)))
+        .select(col("doc_id") +: metadata.map(col): _*).distinct()
+  }
+
+  /** A built store: one chunk-level DataFrame carrying everything the
+    * query methods need — (doc_id, chunk_id, chunk_key, text, metadata…,
+    * embedding). */
+  final class Store private[DocStore] (
+      val chunks: DataFrame,
+      val metadata: Seq[String],
+      embedder: Column => Column) extends Queryable {
+
+    private[DocStore] def session: SparkSession = chunks.sparkSession
+
+    /** k nearest chunks per query row by exact cosine (reference
+      * `retrieve_query`). `filter` (the metadata-filter analog)
+      * restricts the CANDIDATE set before ranking — k survivors from
+      * the matching chunks, exactly like the reference passing the
+      * filter INTO the index, not a lossy post-filter of unfiltered
+      * hits. Queries are the small probe-set side (broadcast); the
+      * chunk corpus stays fully distributed. Returns
+      * (qid, rank, doc_id, chunk_id, text, metadata…, score). */
+    def retrieve(queries: DataFrame, qid: Column, qtext: Column, k: Int,
+        filter: Option[Column] = None): DataFrame = {
+      val (top, corpus) = narrow(queries, qid, qtext, k, filter)
+      widen(top, corpus, metadata)
+    }
+
+    /** The narrow fetch stage by exact cosine: (qid, chunk_key, score,
+      * rank ≤ k) hits plus the filtered corpus for join-backs.
+      *
+      * Score and rank over NARROW rows — (qid, chunk_key, score) is 24
+      * bytes; the candidate expansion is |queries|×|chunks| rows, and
+      * carrying text+metadata through the pairwise projection and the
+      * rank window's sort multiplied the bytes materialized/sorted ~10×
+      * (measured ~11 s → ~3 s at sf0.1). The wide columns join back
+      * over only the |queries|·k winners — both branches read the
+      * chunk frame [[build]] materialized once, so neither re-parses,
+      * re-chunks, nor re-embeds (PlanSpec pins the cache scan). */
+    private[DocStore] def narrow(queries: DataFrame, qid: Column,
+        qtext: Column, k: Int, filter: Option[Column]): (DataFrame, DataFrame) = {
+      val corpus = chunks.filter(filter.getOrElse(lit(true)))
+      val d = corpus.select(col("chunk_key"), col("embedding"))
+        .withColumn("_dn", Similarity.norm2(col("embedding")))
+      val q = queries.select(qid.as("qid"), embedder(qtext).as("_qv"))
+        .withColumn("_qn", Similarity.norm2(col("_qv")))
+      val scored = d.crossJoin(broadcast(q))
+        .select(col("qid"), col("chunk_key"),
+          Similarity.cosinePrenorm(col("_qv"), col("embedding"),
+            col("_qn"), col("_dn")).as("score"))
+      (Similarity.topKPer(scored, "qid", "score", "chunk_key", k), corpus)
+    }
 
     /** Persist the store: the chunk table (embeddings included — the
       * one-pass embed cost is paid here, never again) plus a cosine IVF
@@ -965,22 +918,14 @@ object DocStore {
     /** Persist under an explicit at-rest index representation — see
       * [[StoreIndex]]: IVF-flat float lists, PQ codes, or binary sign
       * codes (8-64× smaller at rest; serving float-refines shortlists
-      * against the chunk table). The kind is durable store config
-      * (`index_kind.txt`): [[rebuildIndex]]/[[open]] follow it. */
+      * against the chunk table). The index generation's meta record
+      * names the kind: [[rebuildIndex]]/[[open]] follow it. */
     def save(path: String, index: StoreIndex): Unit = {
       chunks.write.mode("overwrite").parquet(s"$path/chunks")
-      // build-then-flip (the kind marker lands only after the kind's
-      // index generation commits — see DocStore.rebuildIndex)
       DocStore.rebuildIndex(chunks.sparkSession, path, index)
     }
   }
 
-  /** Open a [[Store.save]]d store. Retrieval serves from the persisted
-    * IVF index — coarse-prune to `nprobe` lists, exact cosine inside
-    * them, hits joined back to the persisted chunk table for
-    * text/metadata. The embedder must be the one the store was built
-    * with (the store persists data, not code — same contract as the
-    * reference, whose embedder is re-supplied at server start). */
   /** Read a store's persisted chunk table. `dedup = true` (the default)
     * collapses the duplicate rows an at-least-once gated stream
     * ([[buildStream]] with dedup gates) can append on retry: rows
@@ -1003,10 +948,17 @@ object DocStore {
     if (dedup) raw.distinct() else raw
   }
 
-  /** `dedupChunks = true` reads the chunk table through [[readChunks]]'
-    * at-least-once repair — use it when the store was built by a gated
-    * [[buildStream]] (whose delivery is at-least-once on retry); the
-    * default `false` keeps the straight scan for exactly-once tables. */
+  /** Open a [[Store.save]]d store. Retrieval serves from the persisted
+    * index of the kind its committed generation names — IVF-flat:
+    * coarse-prune to `nprobe` lists, exact cosine inside them — with
+    * hits joined back to the persisted chunk table for text/metadata.
+    * The embedder must be the one the store was built with (the store
+    * persists data, not code — same contract as the reference, whose
+    * embedder is re-supplied at server start). `dedupChunks = true`
+    * reads the chunk table through [[readChunks]]' at-least-once repair
+    * — use it when the store was built by a gated [[buildStream]]
+    * (whose delivery is at-least-once on retry); the default `false`
+    * keeps the straight scan for exactly-once tables. */
   def open(spark: SparkSession, path: String,
       embedder: Column => Column = hashEmbedder(),
       nprobe: Int = 4, dedupChunks: Boolean = false): PersistedStore =
@@ -1038,13 +990,16 @@ object DocStore {
       retrieveGated(queries, qid, qtext, k, filter, graft.core.Small.MaxRows)
 
     /** [[retrieve]] with an explicit gate size — 0 forces the
-      * distributed search (the equivalence spec drives both). */
+      * distributed search (the equivalence spec drives both). The index
+      * generation is resolved once, and both searches read it. */
     private[graft] def retrieveGated(queries: DataFrame, qid: Column,
         qtext: Column, k: Int, filter: Option[Column],
-        maxRows: Int): DataFrame =
-      (if (filter.isEmpty) retrieveLocal(queries, qid, qtext, k, maxRows)
+        maxRows: Int): DataFrame = {
+      val g = indexOf(path)
+      (if (filter.isEmpty) retrieveLocal(g, queries, qid, qtext, k, maxRows)
        else None).getOrElse(
-        widen(probeNarrow(queries, qid, qtext, k, filter), chunks, metadata))
+        widen(probeNarrow(g, queries, qid, qtext, k, filter), chunks, metadata))
+    }
 
     /** [[retrieve]] answered on the driver, in three jobs: the IVF
       * search of [[Similarity.ivfSearchLocal]] (the centroids and the
@@ -1053,19 +1008,19 @@ object DocStore {
       * their keys and joined to the hits on the driver — one row per
       * key with `dedupChunks` (rows sharing a key are byte-identical),
       * every matching row without, as the join of [[widen]] has it.
-      * The answer is a driver-local relation. None when the index is
-      * not IVF-flat or a table is over the gate. */
-    private def retrieveLocal(queries: DataFrame, qid: Column, qtext: Column,
+      * The answer is a driver-local relation. None when the index
+      * generation `g` is not IVF-flat or a table is over the gate. */
+    private def retrieveLocal(g: graft.core.SegmentStore.Generation,
+        queries: DataFrame, qid: Column, qtext: Column,
         k: Int, maxRows: Int): Option[DataFrame] = {
       import graft.core.Small
       import org.apache.spark.sql.Row
       import org.apache.spark.sql.types.{DoubleType, IntegerType, StructField,
         StructType}
-      val kind = DocStore.readIndexKind(path)
-      if (!kind.isInstanceOf[IvfFlat]) return None
+      if (!kindOf(g).isInstanceOf[IvfFlat]) return None
       val q = queries.select(qid.as("qid"), embedder(qtext).as("qv"))
       val wide = Seq("doc_id", "chunk_id", "text") ++ metadata
-      Similarity.ivfSearchLocal(spark, DocStore.indexDirOf(path, kind), q,
+      Similarity.ivfSearchLocal(spark, g, q,
           col("qid"), col("qv"), nprobe, k, maxRows)
         .flatMap { hits =>
           Small.rows(readChunks(spark, path, dedup = false)
@@ -1084,33 +1039,34 @@ object DocStore {
         }
     }
 
-    /** The narrow index-probe stage shared by [[retrieve]] and
-      * [[retrieveDiverse]]: (qid, chunk_key, score, rank ≤ k),
-      * dispatched on the store's at-rest [[StoreIndex]] kind. Resolves
-      * the committed index GENERATION per query batch
-      * (graft.core.IndexGen): a concurrent rebuildIndex/extendIndex
-      * publishes with one atomic marker rename, so this store keeps
-      * serving — each batch sees exactly one complete index. The
-      * metadata `filter` is pushed INTO every kind the same way: the
-      * lists/codes are semi-joined against the filtered chunk keys
-      * BEFORE candidate ranking. For PQ/binary with rescore > 0 the
-      * shortlist float-refines against the chunk table (score =
-      * cosine); with rescore = 0 serving never reads the embedding
-      * column — codes scan only — and score = the index's native
-      * measure (PQ decoded dot / negated Hamming, "larger = closer"
-      * like every retriever). */
-    private def probeNarrow(queries: DataFrame, qid: Column, qtext: Column,
+    /** The narrow stage of the derived queries: the index probe over
+      * the committed generation, and the chunk table. */
+    private[DocStore] def narrow(queries: DataFrame, qid: Column,
+        qtext: Column, k: Int, filter: Option[Column]): (DataFrame, DataFrame) =
+      (probeNarrow(indexOf(path), queries, qid, qtext, k, filter), chunks)
+
+    /** The narrow index probe: (qid, chunk_key, score, rank ≤ k),
+      * dispatched on the at-rest [[StoreIndex]] kind of the index
+      * generation `g`, which the caller resolves once per query batch:
+      * a concurrent rebuildIndex/extendIndex publishes with one atomic
+      * marker rename, so this store keeps serving — each batch sees
+      * exactly one complete index. The metadata `filter` is pushed INTO
+      * every kind the same way: the lists/codes are semi-joined against
+      * the filtered chunk keys BEFORE candidate ranking. For PQ/binary
+      * with rescore > 0 the shortlist float-refines against the chunk
+      * table (score = cosine); with rescore = 0 serving never reads the
+      * embedding column — codes scan only — and score = the index's
+      * native measure (PQ decoded dot / negated Hamming, "larger =
+      * closer" like every retriever). */
+    private def probeNarrow(g: graft.core.SegmentStore.Generation,
+        queries: DataFrame, qid: Column, qtext: Column,
         k: Int, filter: Option[Column]): DataFrame = {
       val restrict = filter.map(f =>
         chunks.filter(f).select(col("chunk_key")))
       val q = queries.select(qid.as("qid"), embedder(qtext).as("qv"))
-      // kind read once per batch (atomic file); its kind-scoped dir's
-      // committed generation always matches it — see rebuildIndex
-      val kind = DocStore.readIndexKind(path)
-      val dir = DocStore.indexDirOf(path, kind)
-      kind match {
+      kindOf(g) match {
         case IvfFlat(_) =>
-          val (cents, assigned) = Similarity.ivfLoadParts(spark, dir)
+          val (cents, assigned) = Similarity.ivfLoadParts(spark, g)
           Similarity.ivfSearch(cents, assigned, q, col("qid"),
               col("qv"), nprobe, k, excludeSelf = false, restrictTo = restrict)
             .select(col("query_id").as("qid"), col("rank"),
@@ -1118,10 +1074,8 @@ object DocStore {
         case BinaryCodes(rescore) =>
           val against = if (rescore > 0)
             Some((chunks, col("chunk_key"), col("embedding"))) else None
-          Similarity.binaryLoadTopK(spark, dir, q,
-              col("qid"), col("qv"), k, rescore = rescore,
-              rescoreAgainst = against, excludeSelf = false,
-              restrictTo = restrict)
+          Similarity.binaryLoadTopK(spark, g, q, col("qid"), col("qv"), k,
+              rescore, against, excludeSelf = false, restrictTo = restrict)
             .select(col("query_id").as("qid"), col("rank"),
               col("neighbor_id").as("chunk_key"),
               (if (rescore > 0) col("cosine")
@@ -1129,74 +1083,21 @@ object DocStore {
         case PqCodes(_, _, rescore) =>
           val against = if (rescore > 0)
             Some((chunks, col("chunk_key"), col("embedding"))) else None
-          Similarity.pqLoadTopK(spark, dir, q,
-              col("qid"), col("qv"), k, rescore = rescore,
-              rescoreAgainst = against, excludeSelf = false,
-              restrictTo = restrict)
+          Similarity.pqLoadTopK(spark, g, q, col("qid"), col("qv"), k,
+              rescore, against, excludeSelf = false, restrictTo = restrict)
             .select(col("query_id").as("qid"), col("rank"),
               col("neighbor_id").as("chunk_key"),
               (if (rescore > 0) col("cosine") else col("score")).as("score"))
         case IvfPqCodes(_, _, _, rescore) =>
           // rescore > 0 enforced by the IvfPqCodes constructor (which
-          // readIndexKind just invoked) — never coerced here
-          Similarity.ivfPqLoadTopK(spark, dir, q,
-              col("qid"), col("qv"), nprobe, k, rescore = rescore,
-              rescoreAgainst = (chunks, col("chunk_key"), col("embedding")),
+          // kindOf just invoked) — never coerced here
+          Similarity.ivfPqLoadTopK(spark, g, q, col("qid"), col("qv"),
+              nprobe, k, rescore, (chunks, col("chunk_key"), col("embedding")),
               excludeSelf = false, restrictTo = restrict)
             .select(col("query_id").as("qid"), col("rank"),
               col("neighbor_id").as("chunk_key"), col("cosine").as("score"))
       }
     }
-
-    /** Diversity retrieval over the persisted index — see
-      * [[Store.retrieveDiverse]]; stage 1 is the IVF probe, the greedy
-      * MMR pass touches only the |queries|·fetch shortlist. */
-    def retrieveDiverse(queries: DataFrame, qid: Column, qtext: Column,
-        k: Int, fetch: Int, lam: Double = 0.75,
-        filter: Option[Column] = None): DataFrame = {
-      require(fetch >= k, s"retrieveDiverse: fetch ($fetch) must be >= k ($k)")
-      diverseStage(probeNarrow(queries, qid, qtext, fetch, filter),
-        chunks, metadata, k, lam)
-    }
-
-    /** Diversified RAG context over the persisted index — see
-      * [[Store.retrieveDiverseContext]]. */
-    def retrieveDiverseContext(queries: DataFrame, qid: Column,
-        qtext: Column, k: Int, fetch: Int, lam: Double = 0.75,
-        filter: Option[Column] = None, sep: String = "\n\n"): DataFrame =
-      contextOf(retrieveDiverse(queries, qid, qtext, k, fetch, lam, filter),
-        sep)
-
-    def stats(modified: Option[Column] = None): DataFrame =
-      DocStore.statsOf(chunks, modified)
-
-    def inputs(filter: Option[Column] = None): DataFrame =
-      DocStore.inputsOf(chunks, metadata, filter)
-
-    /** Two-stage retrieval over the persisted index — see
-      * [[Store.retrieveRerank]]; stage 1 is the IVF probe. */
-    def retrieveRerank(queries: DataFrame, qid: Column, qtext: Column,
-        k: Int, fetch: Int,
-        scorer: (Column, Column) => Column = overlapReranker,
-        filter: Option[Column] = None): DataFrame =
-      rerankStage(retrieve(queries, qid, qtext, fetch, filter),
-        queries, qid, qtext, metadata, k, fetch, scorer)
-
-    /** RAG context assembly over the persisted index — see
-      * [[Store.retrieveContext]]; stage 1 is the IVF probe. */
-    def retrieveContext(queries: DataFrame, qid: Column, qtext: Column,
-        k: Int, filter: Option[Column] = None,
-        sep: String = "\n\n"): DataFrame =
-      contextOf(retrieve(queries, qid, qtext, k, filter), sep)
-
-    /** Reranked RAG context over the persisted index — see
-      * [[Store.retrieveRerankContext]]. */
-    def retrieveRerankContext(queries: DataFrame, qid: Column, qtext: Column,
-        k: Int, fetch: Int,
-        scorer: (Column, Column) => Column = overlapReranker,
-        filter: Option[Column] = None, sep: String = "\n\n"): DataFrame =
-      contextOf(retrieveRerank(queries, qid, qtext, k, fetch, scorer, filter),
-        sep)
   }
 
   /** Wide join-back shared by both store flavors: narrow
@@ -1253,17 +1154,6 @@ object DocStore {
       .select(col("qid") +: col("rank") +: col("doc_id") +: col("chunk_id") +:
         col("text") +: metadata.map(col) :+ col("_score2").as("score"): _*)
   }
-
-  private def statsOf(chunks: DataFrame, modified: Option[Column]): DataFrame =
-    chunks.agg(
-      countDistinct(col("doc_id")).as("doc_count"),
-      count(lit(1)).as("chunk_count"),
-      max(modified.getOrElse(lit(null).cast("long"))).as("last_modified"))
-
-  private def inputsOf(chunks: DataFrame, metadata: Seq[String],
-      filter: Option[Column]): DataFrame =
-    chunks.filter(filter.getOrElse(lit(true)))
-      .select(col("doc_id") +: metadata.map(col): _*).distinct()
 
   /** Minimal REST query server over either store flavor (reference:
     * xpacks/llm/servers.py `DocumentStoreServer` — the store's

@@ -387,14 +387,14 @@ object Hnsw {
     val segDirs = g.segmentDirs
     val cols = Seq("shard", "node", "id", "vec", "level", "links",
       "entry", "max_level")
-    val base = spark.read.parquet(segDirs.head)
+    val base = graft.core.readParquet(spark, segDirs.head)
       .select(cols.head, cols.tail: _*)
     // routing table: the base segment's shard ids (bounded — one per
     // build task), sorted for determinism
     val baseShards = base.select("shard").distinct()
       .collect().map(_.getAs[Int]("shard")).sorted
     if (baseShards.isEmpty) return g.gen // zero-row guard, as everywhere
-    val later = segDirs.tail.map(d0 => spark.read.parquet(d0)
+    val later = segDirs.tail.map(d0 => graft.core.readParquet(spark, d0)
       .select(col("id"), col("vec"))).reduceOption(_ unionByName _)
     val fresh = later match {
       case None => spark.emptyDataset[(Int, Long, Seq[Double])].toDF(
@@ -453,7 +453,7 @@ object Hnsw {
     // whole), so the group key is (segment, shard) — encoded into one
     // long for the shuffle
     val graphs = g.segmentDirs.zipWithIndex.map { case (d0, i) =>
-      spark.read.parquet(d0)
+      graft.core.readParquet(spark, d0)
         .select((lit(i.toLong) * lit(1000000L) +
             col("shard").cast("long")).as("grp"),
           col("node"), col("id"), col("vec"),

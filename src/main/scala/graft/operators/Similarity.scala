@@ -443,10 +443,17 @@ object Similarity {
     * the old or the new index — never new centroids over old lists. */
   def ivfSave(data: DataFrame, did: Column, dvec: Column, path: String,
       nlist: Int, dim: Int = 0, covers: Option[Seq[String]] = None): Unit = {
-    val (cents, assigned) = ivfBuild(data, did, dvec, nlist)
-    SegmentStore.save(path, Meta(Family.Ivf), assigned,
-      Seq("centroids" -> cents), covers)
+    val (meta, rows, sides) = ivfIndex(data, did, dvec, nlist)
+    SegmentStore.save(path, meta, rows, sides, covers)
     ()
+  }
+
+  /** What [[ivfSave]] writes: the record, the inverted lists and the
+    * centroid side table. */
+  private[graft] def ivfIndex(data: DataFrame, did: Column, dvec: Column,
+      nlist: Int): (Meta, DataFrame, Seq[(String, DataFrame)]) = {
+    val (cents, assigned) = ivfBuild(data, did, dvec, nlist)
+    (Meta(Family.Ivf), assigned, Seq("centroids" -> cents))
   }
 
   /** Incremental index refresh — the Lucene/FAISS SEGMENT model: assign
@@ -471,11 +478,15 @@ object Similarity {
     * generation. */
   def ivfAppend(spark: org.apache.spark.sql.SparkSession, path: String,
       newData: DataFrame, did: Column, dvec: Column, dim: Int = 0,
-      covers: Option[Seq[String]] = None): Long = {
-    val g = SegmentStore.open(path).of(Family.Ivf)
-    SegmentStore.append(g, Meta(Family.Ivf),
+      covers: Option[Seq[String]] = None): Long =
+    ivfAppend(spark, SegmentStore.open(path), newData, did, dvec, covers)
+
+  /** [[ivfAppend]] to the opened generation `g`. */
+  private[graft] def ivfAppend(spark: org.apache.spark.sql.SparkSession,
+      g: SegmentStore.Generation, newData: DataFrame, did: Column,
+      dvec: Column, covers: Option[Seq[String]]): Long =
+    SegmentStore.append(g.of(Family.Ivf), Meta(Family.Ivf),
       assignVectors(newData, did, dvec, g.side(spark, "centroids")), covers)
-  }
 
   /** Assign vectors to FIXED centroids — the map-side half of
     * [[ivfBuild]] (argmax cosine, tie → smallest cid), one
@@ -485,19 +496,18 @@ object Similarity {
     assignToCents(
       buildRows(data, did, dvec).withColumn("n2", norm2(col("v"))), cents)
 
-  /** Load the committed generation's (centroids, inverted lists) pair —
-    * lists unioned across the manifest's segments, cid re-cast to the
-    * centroid table's type (partition discovery re-infers small longs as
-    * int). */
+  /** Load the generation's (centroids, inverted lists) pair — lists
+    * unioned across the manifest's segments, cid re-cast to the centroid
+    * table's type (partition discovery re-infers small longs as int). */
   private[graft] def ivfLoadParts(spark: org.apache.spark.sql.SparkSession,
-      path: String): (DataFrame, DataFrame) = {
-    val g = SegmentStore.open(path).of(Family.Ivf)
+      g0: SegmentStore.Generation): (DataFrame, DataFrame) = {
+    val g = g0.of(Family.Ivf)
     val cents = g.side(spark, "centroids")
     (cents, g.rows(spark).withColumn("cid",
       col("cid").cast(cents.schema("cid").dataType)))
   }
 
-  /** [[ivfSearch]] over the committed IVF-flat generation at `path`,
+  /** [[ivfSearch]] over the IVF-flat generation `g`,
     * answered on the driver for a query batch that fits
     * [[graft.core.Small]]'s gate — no join, no rank window, no AQE
     * stage:
@@ -518,7 +528,7 @@ object Similarity {
     * probed lists over the gate, return None and the caller runs
     * [[ivfSearch]]. Returns (query_id, rank, neighbor_id, cosine) rows. */
   private[graft] def ivfSearchLocal(spark: org.apache.spark.sql.SparkSession,
-      path: String, queries: DataFrame, qid: Column, qvec: Column,
+      g0: SegmentStore.Generation, queries: DataFrame, qid: Column, qvec: Column,
       nprobe: Int, k: Int, maxRows: Int)
       : Option[Seq[org.apache.spark.sql.Row]] = {
     import graft.core.Small
@@ -553,7 +563,7 @@ object Similarity {
       else -java.lang.Double.compare(x, y)
     val q = queries.select(qid.as("query_id"), qvec.cast("array<double>").as("qv"))
     if (!integral(q.schema("query_id").dataType)) return None
-    val g = SegmentStore.open(path).of(Family.Ivf)
+    val g = g0.of(Family.Ivf)
     val lists = g.rows(spark)
     if (!integral(lists.schema("neighbor_id").dataType)) return None
     Small.rows(q, maxRows)
@@ -603,7 +613,7 @@ object Similarity {
       queries: DataFrame, qid: Column, qvec: Column,
       nprobe: Int, k: Int, excludeSelf: Boolean = false,
       dim: Int = 0): DataFrame = {
-    val (cents, assigned) = ivfLoadParts(spark, path)
+    val (cents, assigned) = ivfLoadParts(spark, SegmentStore.open(path))
     ivfSearch(cents, assigned, queries, qid, qvec, nprobe, k, excludeSelf)
   }
 
@@ -833,10 +843,15 @@ object Similarity {
     * rewriting the corpus codes. */
   def binarySave(data: DataFrame, did: Column, dvec: Column,
       path: String, covers: Option[Seq[String]] = None): Unit = {
-    SegmentStore.save(path, Meta(Family.Binary), binaryCodesOf(data, did, dvec),
-      covers = covers)
+    val (meta, rows, sides) = binaryIndex(data, did, dvec)
+    SegmentStore.save(path, meta, rows, sides, covers)
     ()
   }
+
+  /** What [[binarySave]] writes: the record and the codes. */
+  private[graft] def binaryIndex(data: DataFrame, did: Column,
+      dvec: Column): (Meta, DataFrame, Seq[(String, DataFrame)]) =
+    (Meta(Family.Binary), binaryCodesOf(data, did, dvec), Nil)
 
   /** Incremental growth of a [[binarySave]]d index — the segment-append
     * model of [[ivfAppend]], simpler here because sign codes need no
@@ -850,7 +865,13 @@ object Similarity {
   def binaryAppend(spark: org.apache.spark.sql.SparkSession, path: String,
       newData: DataFrame, did: Column, dvec: Column,
       covers: Option[Seq[String]] = None): Long =
-    SegmentStore.append(SegmentStore.open(path).of(Family.Binary),
+    binaryAppend(SegmentStore.open(path), newData, did, dvec, covers)
+
+  /** [[binaryAppend]] to the opened generation `g`. */
+  private[graft] def binaryAppend(g: SegmentStore.Generation,
+      newData: DataFrame, did: Column, dvec: Column,
+      covers: Option[Seq[String]]): Long =
+    SegmentStore.append(g.of(Family.Binary),
       Meta(Family.Binary), binaryCodesOf(newData, did, dvec), covers)
 
   private def binaryCodesOf(data: DataFrame, did: Column,
@@ -883,9 +904,18 @@ object Similarity {
     require(rescore <= 0 || rescoreAgainst.isDefined,
       s"binaryLoadTopK: rescore = $rescore needs rescoreAgainst — the index " +
         "persists codes only, the refine stage must be given the float corpus")
-    binarySearch(SegmentStore.open(path).of(Family.Binary).rows(spark),
-      queries, qid, qvec, k, rescore, rescoreAgainst, excludeSelf, restrictTo)
+    binaryLoadTopK(spark, SegmentStore.open(path), queries, qid, qvec, k,
+      rescore, rescoreAgainst, excludeSelf, restrictTo)
   }
+
+  /** [[binaryLoadTopK]] over the opened generation `g`. */
+  private[graft] def binaryLoadTopK(spark: org.apache.spark.sql.SparkSession,
+      g: SegmentStore.Generation, queries: DataFrame, qid: Column,
+      qvec: Column, k: Int, rescore: Int,
+      rescoreAgainst: Option[(DataFrame, Column, Column)],
+      excludeSelf: Boolean, restrictTo: Option[DataFrame]): DataFrame =
+    binarySearch(g.of(Family.Binary).rows(spark),
+      queries, qid, qvec, k, rescore, rescoreAgainst, excludeSelf, restrictTo)
 
   /** The binary search shared by [[binaryTopK]] and [[binaryLoadTopK]]:
     * Hamming rank of the packed query codes over `codes`
@@ -1172,10 +1202,18 @@ object Similarity {
   def ivfPqSave(data: DataFrame, did: Column, dvec: Column, path: String,
       nlist: Int, m: Int, ksub: Int, dim: Int,
       covers: Option[Seq[String]] = None): Unit = {
-    val (_, cents, cb, lists) = ivfPqBuild(data, did, dvec, nlist, m, ksub, dim)
-    SegmentStore.save(path, Meta(Family.IvfPq), lists,
-      Seq("centroids" -> cents, "codebook" -> cb), covers)
+    val (meta, rows, sides) = ivfPqIndex(data, did, dvec, nlist, m, ksub, dim)
+    SegmentStore.save(path, meta, rows, sides, covers)
     ()
+  }
+
+  /** What [[ivfPqSave]] writes: the record, the code lists and the
+    * centroid and codebook side tables. */
+  private[graft] def ivfPqIndex(data: DataFrame, did: Column, dvec: Column,
+      nlist: Int, m: Int, ksub: Int,
+      dim: Int): (Meta, DataFrame, Seq[(String, DataFrame)]) = {
+    val (_, cents, cb, lists) = ivfPqBuild(data, did, dvec, nlist, m, ksub, dim)
+    (Meta(Family.IvfPq), lists, Seq("centroids" -> cents, "codebook" -> cb))
   }
 
   /** Incremental growth of an [[ivfPqSave]]d index: assign ONLY
@@ -1188,8 +1226,14 @@ object Similarity {
     * [[ivfPqSave]] rebuilds re-derive both. Returns the generation. */
   def ivfPqAppend(spark: org.apache.spark.sql.SparkSession, path: String,
       newData: DataFrame, did: Column, dvec: Column,
-      covers: Option[Seq[String]] = None): Long = {
-    val g = SegmentStore.open(path).of(Family.IvfPq)
+      covers: Option[Seq[String]] = None): Long =
+    ivfPqAppend(spark, SegmentStore.open(path), newData, did, dvec, covers)
+
+  /** [[ivfPqAppend]] to the opened generation `g0`. */
+  private[graft] def ivfPqAppend(spark: org.apache.spark.sql.SparkSession,
+      g0: SegmentStore.Generation, newData: DataFrame, did: Column,
+      dvec: Column, covers: Option[Seq[String]]): Long = {
+    val g = g0.of(Family.IvfPq)
     val d = graft.core.Caches.eager(
       unitRows(newData, did, dvec).withColumn("n2", norm2(col("v"))))
     SegmentStore.append(g, Meta(Family.IvfPq),
@@ -1213,7 +1257,17 @@ object Similarity {
       excludeSelf: Boolean = false,
       restrictTo: Option[DataFrame] = None): DataFrame = {
     require(rescore > 0, "ivfPqLoadTopK: rescore must be > 0")
-    val g = SegmentStore.open(path).of(Family.IvfPq)
+    ivfPqLoadTopK(spark, SegmentStore.open(path), queries, qid, qvec, nprobe,
+      k, rescore, rescoreAgainst, excludeSelf, restrictTo)
+  }
+
+  /** [[ivfPqLoadTopK]] over the opened generation `g0`. */
+  private[graft] def ivfPqLoadTopK(spark: org.apache.spark.sql.SparkSession,
+      g0: SegmentStore.Generation, queries: DataFrame, qid: Column,
+      qvec: Column, nprobe: Int, k: Int, rescore: Int,
+      rescoreAgainst: (DataFrame, Column, Column), excludeSelf: Boolean,
+      restrictTo: Option[DataFrame]): DataFrame = {
+    val g = g0.of(Family.IvfPq)
     val cents = g.side(spark, "centroids")
     val lists = g.rows(spark)
       .withColumn("cid", col("cid").cast(cents.schema("cid").dataType))
@@ -1233,9 +1287,17 @@ object Similarity {
     * shortlist rows' vectors). */
   def pqSave(data: DataFrame, did: Column, dvec: Column, path: String,
       m: Int, ksub: Int, dim: Int, covers: Option[Seq[String]] = None): Unit = {
-    val (cb, codes) = pqBuild(data, did, dvec, m, ksub, dim)
-    SegmentStore.save(path, Meta(Family.Pq), codes, Seq("codebook" -> cb), covers)
+    val (meta, rows, sides) = pqIndex(data, did, dvec, m, ksub, dim)
+    SegmentStore.save(path, meta, rows, sides, covers)
     ()
+  }
+
+  /** What [[pqSave]] writes: the record, the codes and the codebook
+    * side table. */
+  private[graft] def pqIndex(data: DataFrame, did: Column, dvec: Column,
+      m: Int, ksub: Int, dim: Int): (Meta, DataFrame, Seq[(String, DataFrame)]) = {
+    val (cb, codes) = pqBuild(data, did, dvec, m, ksub, dim)
+    (Meta(Family.Pq), codes, Seq("codebook" -> cb))
   }
 
   /** Incremental growth of a [[pqSave]]d index — encode ONLY `newData`
@@ -1251,8 +1313,14 @@ object Similarity {
     * generation. */
   def pqAppend(spark: org.apache.spark.sql.SparkSession, path: String,
       newData: DataFrame, did: Column, dvec: Column,
-      covers: Option[Seq[String]] = None): Long = {
-    val g = SegmentStore.open(path).of(Family.Pq)
+      covers: Option[Seq[String]] = None): Long =
+    pqAppend(spark, SegmentStore.open(path), newData, did, dvec, covers)
+
+  /** [[pqAppend]] to the opened generation `g0`. */
+  private[graft] def pqAppend(spark: org.apache.spark.sql.SparkSession,
+      g0: SegmentStore.Generation, newData: DataFrame, did: Column,
+      dvec: Column, covers: Option[Seq[String]]): Long = {
+    val g = g0.of(Family.Pq)
     val codes = unitRows(newData, did, dvec).select(col("id").as("neighbor_id"),
       pqEncodeBy(g.side(spark, "codebook")).as("codes"))
     SegmentStore.append(g, Meta(Family.Pq), codes, covers)
@@ -1275,7 +1343,17 @@ object Similarity {
     require(rescore <= 0 || rescoreAgainst.isDefined,
       s"pqLoadTopK: rescore = $rescore needs rescoreAgainst — the index " +
         "persists codes only, the refine stage must be given the float corpus")
-    val g = SegmentStore.open(path).of(Family.Pq)
+    pqLoadTopK(spark, SegmentStore.open(path), queries, qid, qvec, k,
+      rescore, rescoreAgainst, excludeSelf, restrictTo)
+  }
+
+  /** [[pqLoadTopK]] over the opened generation `g0`. */
+  private[graft] def pqLoadTopK(spark: org.apache.spark.sql.SparkSession,
+      g0: SegmentStore.Generation, queries: DataFrame, qid: Column,
+      qvec: Column, k: Int, rescore: Int,
+      rescoreAgainst: Option[(DataFrame, Column, Column)],
+      excludeSelf: Boolean, restrictTo: Option[DataFrame]): DataFrame = {
+    val g = g0.of(Family.Pq)
     pqSearch(g.side(spark, "codebook"), g.rows(spark), queries, qid, qvec, k,
       rescore, rescoreAgainst, excludeSelf, restrictTo)
   }

@@ -26,9 +26,10 @@ import graft.core.Table
   *  - deletions/upserts are DATA here, not channel events: emit a
   *    (key, order, deleted, …) change row and fold with
   *    [[graft.sources.Cdc.applyLatest]] (batch) or
-  *    [[graft.streaming.Streaming.upsertParquetSink]] (streaming) — same
-  *    recipe as every CDC source, so a subject-fed stream and a Kafka-fed
-  *    stream share one downstream pipeline.
+  *    [[graft.streaming.Streaming.upsertParquetSink]] (streaming: each
+  *    micro-batch publishes one snapshot generation) — same recipe as
+  *    every CDC source, so a subject-fed stream and a Kafka-fed stream
+  *    share one downstream pipeline.
   *
   * Scale note: like the reference's Python subject, the feed itself is a
   * single driver-side producer — right for control planes, test rigs,

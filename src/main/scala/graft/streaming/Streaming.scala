@@ -5,7 +5,8 @@ import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode}
 
-import graft.core.rmTree
+import graft.core.SegmentStore
+import graft.core.SegmentStore.{Family, Generation, Meta}
 
 /** Streaming operator layer (reference: stdlib/temporal/temporal_behavior
   * .py, table.py:1064 deduplicate, _asof_now_join.py, io/_subscribe.py,
@@ -24,14 +25,6 @@ import graft.core.rmTree
   * semantics on bounded input.
   */
 object Streaming {
-
-  /** The partitioned upsert sink's key→bucket hash function, recorded in
-    * the `_buckets` marker so a restart under a DIFFERENT hash (a Spark
-    * major version changing `hash()` semantics, or a foreign engine
-    * reading the snapshot) fails loudly instead of mis-routing keys.
-    * Spark's `hash()` is Murmur3-x86-32 with seed 42 — stable across
-    * every Spark 1.6+ release to date. */
-  val BucketHashRecipe = "murmur3"
 
   /** reference: temporal_behavior.py:29 common_behavior. Durations are
     * Spark interval strings (e.g. "10 seconds"). */
@@ -568,8 +561,14 @@ object Streaming {
     * DeltaTableWriter data_storage.rs:1611; PsqlWriter :1072 in
     * snapshot mode). Each micro-batch folds its events into the stored
     * snapshot — highest `orderCol` per key wins, exactly the
-    * [[graft.sources.Cdc.applyLatest]] rule — and swaps the snapshot
-    * directory, so a reader between batches sees one complete state.
+    * [[graft.sources.Cdc.applyLatest]] rule — and publishes the result
+    * as a new [[graft.core.SegmentStore]] generation: the merged table
+    * is written into a staged generation, and one atomic marker rename
+    * ([[graft.core.IndexGen.commit]]) makes it the snapshot. A reader
+    * ([[readSnapshot]]) resolves the committed generation once, so it
+    * sees one complete batch boundary; the previous generation stays on
+    * disk until the next commit, so a reader that resolved it finishes
+    * its scan.
     *
     * Tombstones are RETAINED in the snapshot (deleteCol = true rows)
     * rather than dropped: a dropped tombstone would let an
@@ -577,104 +576,85 @@ object Streaming {
     * them on read with [[readSnapshot]] — the same retain-until-vacuum
     * discipline Delta uses. The foreachBatch checkpoint gives
     * exactly-once batch replay, and the merge itself is idempotent
-    * (max-by-order over a union), so a retried half-applied batch
-    * converges to the same snapshot.
+    * (max-by-order over a union), so a batch that crashed before its
+    * commit replays onto the last committed snapshot and converges to
+    * the same state; its staged generation is pruned by the next
+    * commit.
     *
     * Scale note: rewrites the whole snapshot per batch (what a
     * compacting MERGE does at file granularity) — the right shape for
     * dimension-sized state; fact-sized state wants
     * [[upsertParquetSinkPartitioned]], which rewrites only the key-hash
-    * buckets a batch touches. The directory swap is two renames (atomic
-    * on a real filesystem); object stores want a versioned-dir +
-    * pointer-file layout instead. */
+    * buckets a batch touches. Renames are atomic on a real filesystem;
+    * object stores want their own versioned-pointer story. */
   def upsertParquetSink(events: DataFrame, keys: Seq[String],
       orderCol: String, deleteCol: String, path: String,
       checkpoint: String): DataStreamWriter[Row] =
-    events.writeStream.outputMode("update")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        val cur = new java.io.File(path)
-        // crash recovery: a crash between the two swap renames leaves NO
-        // snapshot at `path` but a complete one at `path.tmp.<n>` (the
-        // merged state of the crashed batch) or `path.old.<n>` (the
-        // pre-batch state). Promote the newest leftover back to `path`
-        // BEFORE merging — either converges, because the checkpoint
-        // replays the crashed batch and the merge is idempotent
-        // (max-by-order over a union). Without this the replayed batch
-        // would rebuild state from itself alone, silently dropping every
-        // previously upserted key.
-        recoverSnapshot(cur)
-        val merged = {
-          val b = batch.persist()
-          val all =
-            if (cur.isDirectory)
-              spark.read.parquet(path).unionByName(b, allowMissingColumns = false)
-            else b
-          graft.operators.ColUtils.argmaxRowsOrdered(
-            all, keys.map(col), col(orderCol))
-        }
-        val tmp = new java.io.File(s"$path.tmp.$batchId")
-        val old = new java.io.File(s"$path.old.$batchId")
-        merged.write.mode("overwrite").parquet(tmp.getPath)
-        batch.unpersist()
-        if (cur.isDirectory)
-          require(cur.renameTo(old),
-            s"upsertParquetSink: rename $cur -> $old failed")
-        require(tmp.renameTo(cur),
-          s"upsertParquetSink: rename $tmp -> $cur failed")
-        rmTree(old)
-      }
+    upsertSink(events, keys, orderCol, path, checkpoint, grace = 1)
 
   /** Version-retaining variant of [[upsertParquetSink]] — Delta TIME
     * TRAVEL without the jar (reference: DeltaTableWriter
     * data_storage.rs:1611 writes a Delta log whose versions stay
-    * readable via `versionAsOf`): each micro-batch publishes its merged
-    * snapshot as a NEW [[graft.core.IndexGen]] generation (staged dir +
-    * one atomic marker rename) instead of swapping in place, and the
-    * last `keepVersions` generations stay on disk for as-of reads.
+    * readable via `versionAsOf`): the same generation per micro-batch,
+    * with the last `keepVersions` generations kept on disk for as-of
+    * reads.
     *
     *  - [[readSnapshotAsOf]] with no version reads the committed
     *    generation; with a version it reads that retained generation —
     *    a consistent historical state at a batch boundary;
-    *  - [[snapshotVersions]] lists what is still readable;
+    *  - [[snapshotVersions]] lists what is still readable — committed
+    *    generations only, never a staged one a crash left behind;
     *  - retention is enforced AT COMMIT (generations older than
     *    `current - keepVersions` are pruned), so disk stays bounded at
     *    keepVersions × snapshot bytes with no separate vacuum job.
     *
-    * Crash safety is simpler than the in-place sink's rename pair: the
-    * marker always points at a complete generation, a crash mid-write
-    * leaves an uncommitted staged dir that numbering skips over
-    * (never reused), and the checkpoint replays the crashed batch whose
-    * idempotent merge publishes the next generation. Same
-    * dimension-sized-state scale contract as [[upsertParquetSink]];
-    * each version is a full snapshot copy, which is the price of
-    * log-free time travel. */
+    * Same crash contract and dimension-sized-state scale contract as
+    * [[upsertParquetSink]]; each version is a full snapshot copy, which
+    * is the price of log-free time travel. */
   def upsertParquetSinkVersioned(events: DataFrame, keys: Seq[String],
       orderCol: String, deleteCol: String, path: String,
       checkpoint: String, keepVersions: Int = 8): DataStreamWriter[Row] = {
     require(keepVersions >= 1,
       s"upsertParquetSinkVersioned: keepVersions must be >= 1, got $keepVersions")
+    // grace counts generations BELOW current: keepVersions total
+    upsertSink(events, keys, orderCol, path, checkpoint,
+      grace = (keepVersions - 1).toLong)
+  }
+
+  /** The whole-snapshot sink: each batch merges into the committed
+    * snapshot and publishes one generation, keeping `grace` committed
+    * generations below it. */
+  private def upsertSink(events: DataFrame, keys: Seq[String],
+      orderCol: String, path: String, checkpoint: String,
+      grace: Long): DataStreamWriter[Row] =
     events.writeStream.outputMode("update")
       .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val spark = batch.sparkSession
+      .foreachBatch { (batch: Dataset[Row], _: Long) =>
         val b = batch.persist()
-        val all = graft.core.IndexGen.current(path) match {
-          case Some(n) =>
-            spark.read.parquet(s"$path/gen-$n/snapshot")
-              .unionByName(b, allowMissingColumns = false)
-          case None => b
-        }
-        val merged = graft.operators.ColUtils.argmaxRowsOrdered(
-          all, keys.map(col), col(orderCol))
-        val (dir, gen) = graft.core.IndexGen.stage(path)
-        merged.write.mode("overwrite").parquet(s"$dir/snapshot")
+        val all = snapshotOf(path, Family.Snapshot).fold(b.toDF())(
+          _.rows(batch.sparkSession).unionByName(b, allowMissingColumns = false))
+        SegmentStore.save(path, Meta(Family.Snapshot),
+          graft.operators.ColUtils.argmaxRowsOrdered(all, keys.map(col),
+            col(orderCol)), grace = grace)
         b.unpersist()
-        // grace counts generations BELOW current: keepVersions total
-        graft.core.IndexGen.commit(path, gen, grace = (keepVersions - 1).toLong)
+        ()
       }
-  }
+
+  /** The committed generation of the snapshot at `path`, checked to
+    * hold `family`; None when nothing was committed there. A dir in the
+    * layout written before snapshots were generations (parquet files or
+    * `b=<i>` bucket dirs at its root, a `_buckets` marker) fails and
+    * names the path instead of being taken for an empty snapshot. */
+  private def snapshotOf(path: String, family: Family): Option[Generation] =
+    graft.core.IndexGen.current(path).map(_ => SegmentStore.open(path).of(family))
+      .orElse {
+        val old = Option(new java.io.File(path).list()).getOrElse(Array.empty[String])
+          .filter(n => n == "_buckets" || n.endsWith(".parquet") || n.startsWith("b="))
+        require(old.isEmpty, s"$path holds a snapshot in the layout written " +
+          s"before snapshots were published as generations (${old.head}); " +
+          "replay its change log into a new path")
+        None
+      }
 
   /** Read the live rows of an [[upsertParquetSinkVersioned]] snapshot at
     * the committed version (default) or any retained one — tombstones
@@ -682,17 +662,15 @@ object Streaming {
     * An unretained/unknown version fails loudly. */
   def readSnapshotAsOf(spark: SparkSession, path: String, orderCol: String,
       deleteCol: String, version: Option[Long] = None): DataFrame = {
-    val gen = version match {
+    val g = version match {
       case Some(v) =>
         require(graft.core.IndexGen.versions(path).contains(v),
           s"readSnapshotAsOf: version $v not retained at $path — " +
             s"available: ${graft.core.IndexGen.versions(path).mkString(",")}")
-        v
-      case None => graft.core.IndexGen.current(path).getOrElse(
-        throw new IllegalArgumentException(
-          s"readSnapshotAsOf: no committed snapshot at $path"))
+        SegmentStore.openAt(path, v)
+      case None => SegmentStore.open(path)
     }
-    spark.read.parquet(s"$path/gen-$gen/snapshot")
+    g.of(Family.Snapshot).rows(spark)
       .filter(!col(deleteCol)).drop(orderCol, deleteCol)
   }
 
@@ -746,206 +724,113 @@ object Streaming {
   }
 
   /** Hash-bucketed variant of [[upsertParquetSink]] for fact-sized
-    * state: the snapshot lives in `path/b=<i>` subdirectories (`buckets`
-    * of them, key-hash assigned), and a micro-batch merges + rewrites
-    * ONLY the buckets its keys touch — cost per batch is
-    * O(touched-bucket bytes), not O(snapshot bytes). The merge for all
-    * touched buckets is ONE Spark job (staged `partitionBy("b")` write);
-    * the swap is then a driver-side rename pair per touched bucket.
+    * state: the snapshot is a [[graft.core.SegmentStore]] of the
+    * `Buckets` family whose segments are buckets — each segment holds
+    * one `b=<i>` dir (`buckets` of them at most, key-hash assigned) —
+    * and a micro-batch merges + rewrites ONLY the buckets its keys
+    * touch: cost per batch is O(touched-bucket bytes), not O(snapshot
+    * bytes). The merge for all touched buckets is ONE Spark job (staged
+    * `partitionBy("b")` write); the new generation's manifest swaps in
+    * the touched buckets' new segments and carries every other bucket
+    * by reference, and one marker rename publishes them all.
     *
-    * Consistency: each bucket swap is atomic, and a key lives in exactly
-    * one bucket, so a concurrent reader sees every KEY at a complete
-    * batch boundary — but different keys may straddle batches N-1/N
-    * while a swap loop is mid-flight (the transaction-log-free analog of
-    * Delta's per-file replace; the reference's DeltaTableWriter
-    * data_storage.rs:1611 gets cross-key atomicity from the log).
+    * Consistency: a reader ([[readSnapshotPartitioned]]) resolves one
+    * generation, so it sees every key at the same batch boundary — the
+    * cross-key atomicity the reference's DeltaTableWriter
+    * (data_storage.rs:1611) gets from one log commit. The bucket count
+    * is the generation's geometry and the family name pins the murmur3
+    * hash: a restart with another count fails loudly instead of routing
+    * a key's update to another bucket than its current row.
     *
-    * Crash safety mirrors the single-dir sink: leftovers are recovered
-    * on batch entry ([[recoverBuckets]]), the checkpoint replays the
-    * crashed batch, and the per-bucket merge is idempotent, so any
-    * mix of swapped/unswapped buckets converges. Bucket `.old` leftovers
-    * are SIBLINGS of `path` (`path.old.<batch>.b<i>`), never inside it —
-    * a dir like `b=3.old.7` under `path` would poison partition
-    * discovery for readers. */
+    * Crash safety is the whole sink's: a batch that crashed before its
+    * commit left a staged generation and orphan segments, which the next
+    * commit prunes; the checkpoint replays the batch, and the per-bucket
+    * merge is idempotent. */
   def upsertParquetSinkPartitioned(events: DataFrame, keys: Seq[String],
       orderCol: String, deleteCol: String, path: String,
       checkpoint: String, buckets: Int = 32): DataStreamWriter[Row] =
     events.writeStream.outputMode("update")
       .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val spark = batch.sparkSession
+      .foreachBatch { (batch: Dataset[Row], _: Long) =>
         require(!batch.columns.contains("b"),
           "upsertParquetSinkPartitioned: the stream must not carry a column " +
             "named 'b' — it is the snapshot's bucket-partition column")
-        recoverBuckets(new java.io.File(path))
-        // the (hash fn, bucket count) pair IS the key→directory mapping:
-        // restarting with a different count — or on a Spark whose hash()
-        // recipe changed — would route a key's update to a different
-        // bucket than its current row and silently duplicate/resurrect
-        // it. Persist the full recipe ("murmur3:<count>") on first write
-        // (underscore-prefixed = invisible to parquet discovery), fail
-        // loudly on any mismatch. Legacy bare-int markers predate the
-        // recipe tag and were written by this same murmur3 code path.
-        val root = new java.io.File(path)
-        root.mkdirs()
-        val marker = new java.io.File(root, "_buckets")
-        val recipe = s"$BucketHashRecipe:$buckets"
-        if (marker.isFile) {
-          val stored0 = java.nio.file.Files.readString(marker.toPath).trim
-          val stored =
-            if (stored0.forall(_.isDigit)) s"$BucketHashRecipe:$stored0" else stored0
-          require(stored == recipe,
-            s"upsertParquetSinkPartitioned: snapshot at $path was written " +
-              s"with bucket recipe '$stored', restarted with '$recipe' — " +
-              "the key→bucket mapping would break; keep the original " +
-              "count and hash function")
-        } else java.nio.file.Files.writeString(marker.toPath, recipe)
+        val meta = Meta(Family.Buckets, Seq(buckets))
+        val g = snapshotOf(path, Family.Buckets)
+        g.foreach(g => require(g.meta == meta,
+          s"upsertParquetSinkPartitioned: snapshot at $path was written as " +
+            s"${g.meta}, restarted as $meta — the key→bucket mapping would " +
+            "break; keep the original count"))
         val bCol = pmod(hash(keys.map(col): _*), lit(buckets))
         val b = batch.persist()
         val touched = b.select(bCol.as("b")).distinct()
-          .collect().map(_.getInt(0)).sorted
-        val existing = touched
-          .map(i => new java.io.File(path, s"b=$i"))
-          .filter(_.isDirectory).map(_.getPath)
-        val all =
-          if (existing.isEmpty) b.toDF()
-          else spark.read.parquet(existing: _*)
-            .unionByName(b, allowMissingColumns = false)
-        val merged = graft.operators.ColUtils.argmaxRowsOrdered(
-          all, keys.map(col), col(orderCol))
-        val stage = new java.io.File(s"$path.stage.$batchId")
-        merged.withColumn("b", bCol)
-          .write.mode("overwrite").partitionBy("b").parquet(stage.getPath)
-        b.unpersist()
-        touched.foreach { i =>
-          val cur = new java.io.File(root, s"b=$i")
-          val old = new java.io.File(s"$path.old.$batchId.b$i")
-          val fresh = new java.io.File(stage, s"b=$i")
-          if (fresh.isDirectory) { // all-tombstone buckets still stage rows
-            if (cur.isDirectory)
-              require(cur.renameTo(old),
-                s"upsertParquetSinkPartitioned: rename $cur -> $old failed")
-            require(fresh.renameTo(cur),
-              s"upsertParquetSinkPartitioned: rename $fresh -> $cur failed")
-            rmTree(old)
+          .collect().map(_.getInt(0)).toSet
+        if (touched.nonEmpty) {
+          val old = g.toSeq.flatMap(g =>
+            bucketSegments(g).collect { case (i, s) if touched(i) => s })
+          val all =
+            if (old.isEmpty) b.toDF()
+            else g.get.copy(segments = old).rows(batch.sparkSession).drop("b")
+              .unionByName(b, allowMissingColumns = false)
+          val merged = graft.operators.ColUtils.argmaxRowsOrdered(
+            all, keys.map(col), col(orderCol))
+          SegmentStore.publishPartitions(path, meta,
+              g.toSeq.flatMap(_.segments).diff(old)) { dir =>
+            merged.withColumn("b", bCol)
+              .write.mode("overwrite").partitionBy("b").parquet(dir)
           }
         }
-        rmTree(stage)
+        b.unpersist()
+        ()
       }
 
-  /** Restore bucket dirs of an [[upsertParquetSinkPartitioned]] snapshot
-    * from swap leftovers, then clear leftovers + stale staging dirs. */
-  private[graft] def recoverBuckets(root: java.io.File): Unit = {
-    val parent = Option(root.getAbsoluteFile.getParentFile)
-      .getOrElse(new java.io.File("."))
-    val oldPrefix = s"${root.getName}.old."
-    val stagePrefix = s"${root.getName}.stage."
-    val siblings = Option(parent.listFiles).getOrElse(Array.empty[java.io.File])
-    siblings.filter(f => f.isDirectory && f.getName.startsWith(oldPrefix))
-      .foreach { o =>
-        // name shape: <root>.old.<batchId>.b<i>
-        o.getName.drop(oldPrefix.length).split("\\.") match {
-          case Array(bid, bname) if bid.forall(_.isDigit) &&
-              bname.startsWith("b") && bname.drop(1).forall(_.isDigit) =>
-            val cur = new java.io.File(root, s"b=${bname.drop(1)}")
-            if (!cur.isDirectory) require(o.renameTo(cur),
-              s"upsertParquetSinkPartitioned: recovery rename $o -> $cur failed")
-            else rmTree(o)
-          case _ => () // not ours — leave unknown siblings alone
-        }
-      }
-    siblings.filter(f => f.isDirectory && f.getName.startsWith(stagePrefix))
-      .foreach(rmTree)
-  }
+  private val BucketDir = "b=(\\d+)".r
+
+  /** The bucket each segment of a bucketed snapshot holds, from a
+    * driver-side listing of the segment dirs. */
+  private def bucketSegments(g: Generation): Seq[(Int, String)] =
+    g.segments.flatMap(s => Option(new java.io.File(g.path, s).list())
+      .getOrElse(Array.empty[String]).collect { case BucketDir(i) => i.toInt -> s })
 
   /** Read the live rows of an [[upsertParquetSinkPartitioned]] snapshot —
     * tombstones filtered, bookkeeping + bucket columns dropped. */
   def readSnapshotPartitioned(spark: SparkSession, path: String,
       orderCol: String, deleteCol: String): DataFrame =
-    spark.read.parquet(path).filter(!col(deleteCol))
-      .drop(orderCol, deleteCol, "b")
+    SegmentStore.open(path).of(Family.Buckets).rows(spark)
+      .filter(!col(deleteCol)).drop(orderCol, deleteCol, "b")
 
-  /** Compact the bucket dirs of an [[upsertParquetSinkPartitioned]]
+  /** Compact the buckets of an [[upsertParquetSinkPartitioned]]
     * snapshot down to one file per bucket — the small-file maintenance
     * job (Delta OPTIMIZE analog). Each bucket rewrite leaves up to
     * shuffle-partitions part files holding that bucket's rows; over a
     * long-lived 100 TB snapshot the file count (not the byte count) is
     * what degrades scan planning and open() overhead. Compaction is pure
-    * file-count reduction: every bucket dir already IS its complete
-    * latest-per-key folded state (each touched-bucket swap rewrites the
-    * whole bucket), so no merge logic runs — rows are rewritten
-    * unchanged, and [[readSnapshotPartitioned]] is identical before and
-    * after.
+    * file-count reduction: every bucket already IS its complete
+    * latest-per-key folded state (each batch rewrites a touched bucket
+    * whole), so no merge logic runs — rows are rewritten unchanged, and
+    * [[readSnapshotPartitioned]] is identical before and after.
     *
-    * One Spark job for all compactable buckets (partition-pruned read →
+    * One Spark job for all compactable buckets (their segments read →
     * `repartition(col("b"))` so each bucket lands in one task → staged
-    * `partitionBy("b")` write), then the sink's own per-bucket atomic
-    * rename swap. Crash safety rides the sink's recovery: leftovers use
-    * the same `.old.<tag>.b<i>` / `.stage.<tag>` naming
-    * [[recoverBuckets]] already heals. Run it like [[vacuum]] — between
-    * batches, not concurrently with an active sink.
+    * `partitionBy("b")` write), published as one more generation, like
+    * a batch. Run it like [[vacuumSnapshot]] — between batches, not
+    * concurrently with an active sink (single writer).
     *
     * Returns the number of buckets compacted (those with >1 data file). */
   def compactBuckets(spark: SparkSession, path: String): Int = {
-    val root = new java.io.File(path)
-    require(root.isDirectory, s"compactBuckets: no snapshot at $path")
-    recoverBuckets(root)
-    def dataFiles(d: java.io.File): Int =
-      Option(d.listFiles).getOrElse(Array.empty[java.io.File])
+    val g = SegmentStore.open(path).of(Family.Buckets)
+    def dataFiles(seg: String): Int =
+      Option(new java.io.File(g.path, seg).listFiles).getOrElse(Array.empty[java.io.File])
+        .flatMap(d => Option(d.listFiles).getOrElse(Array.empty[java.io.File]))
         .count(f => f.isFile && f.getName.endsWith(".parquet"))
-    val todo = Option(root.listFiles).getOrElse(Array.empty[java.io.File])
-      .filter(f => f.isDirectory && f.getName.startsWith("b=") &&
-        dataFiles(f) > 1)
-      .map(_.getName.drop(2).toInt).sorted
-    if (todo.isEmpty) return 0
-    val tag = System.currentTimeMillis()
-    val stage = new java.io.File(s"$path.stage.$tag")
-    spark.read.parquet(path)
-      .filter(graft.core.Small.in(col("b"), todo.map(Integer.valueOf)))
-      .repartition(todo.length, col("b"))
-      .write.mode("overwrite").partitionBy("b").parquet(stage.getPath)
-    todo.foreach { i =>
-      val cur = new java.io.File(root, s"b=$i")
-      val old = new java.io.File(s"$path.old.$tag.b$i")
-      val fresh = new java.io.File(stage, s"b=$i")
-      if (fresh.isDirectory) {
-        require(cur.renameTo(old),
-          s"compactBuckets: rename $cur -> $old failed")
-        require(fresh.renameTo(cur),
-          s"compactBuckets: rename $fresh -> $cur failed")
-        rmTree(old)
+    val todo = g.segments.filter(dataFiles(_) > 1)
+    if (todo.nonEmpty)
+      SegmentStore.publishPartitions(path, g.meta, g.segments.diff(todo)) { dir =>
+        g.copy(segments = todo).rows(spark)
+          .repartition(todo.length, col("b"))
+          .write.mode("overwrite").partitionBy("b").parquet(dir)
       }
-    }
-    rmTree(stage)
     todo.length
-  }
-
-  /** Restore an [[upsertParquetSink]] snapshot dir from swap leftovers
-    * (see the recovery note there), then clear remaining leftovers. */
-  private[graft] def recoverSnapshot(cur: java.io.File): Unit = {
-    val parent = Option(cur.getAbsoluteFile.getParentFile)
-      .getOrElse(new java.io.File("."))
-    def leftovers(kind: String): Seq[java.io.File] = {
-      val prefix = s"${cur.getName}.$kind."
-      Option(parent.listFiles).getOrElse(Array.empty[java.io.File]).toSeq
-        .filter(f => f.isDirectory && f.getName.startsWith(prefix) &&
-          f.getName.drop(prefix.length).forall(_.isDigit))
-        .sortBy(_.getName.drop(prefix.length).toLong)
-    }
-    if (!cur.isDirectory) {
-      // tmp.<n> (post-batch-n) outranks old.<n> (pre-batch-n) — but only
-      // a COMMITTED tmp (job-commit marker present): a crash mid-write
-      // leaves a tmp with no _SUCCESS, and promoting that would wedge the
-      // sink on an unreadable snapshot every restart
-      val committed = leftovers("tmp")
-        .filter(d => new java.io.File(d, "_SUCCESS").isFile)
-      val candidate = committed.lastOption.orElse(leftovers("old").lastOption)
-      candidate.foreach { c =>
-        require(c.renameTo(cur),
-          s"upsertParquetSink: recovery rename $c -> $cur failed")
-      }
-    }
-    (leftovers("tmp") ++ leftovers("old")).foreach(rmTree)
   }
 
   /** Drop tombstones with order ≤ `horizon` from an [[upsertParquetSink]]
@@ -957,64 +842,32 @@ object Streaming {
     * arrive (a watermark, in streaming terms). Live rows are untouched —
     * [[readSnapshot]] is identical before and after.
     *
-    * Atomicity: same tmp→swap protocol as the sink, with the horizon as
-    * the numeric suffix, so [[recoverSnapshot]] heals a crashed vacuum
-    * exactly like a crashed batch (either state is correct — vacuum is
+    * The vacuumed snapshot is published as one more generation, like a
+    * batch (a crash leaves the previous one committed — vacuum is
     * maintenance, not data). Run it BETWEEN batches of the owning query:
-    * the sink and the vacuum must not swap the same dir concurrently. */
+    * one writer per snapshot path. */
   def vacuumSnapshot(spark: SparkSession, path: String, orderCol: String,
-      deleteCol: String, horizon: Long): Unit = {
-    val cur = new java.io.File(path)
-    recoverSnapshot(cur)
-    if (cur.isDirectory) {
-      val kept = spark.read.parquet(path)
-        .filter(!col(deleteCol) || col(orderCol) > lit(horizon))
-      val tmp = new java.io.File(s"$path.tmp.${math.max(horizon, 0L)}")
-      val old = new java.io.File(s"$path.old.${math.max(horizon, 0L)}")
-      kept.write.mode("overwrite").parquet(tmp.getPath)
-      require(cur.renameTo(old), s"vacuumSnapshot: rename $cur -> $old failed")
-      require(tmp.renameTo(cur), s"vacuumSnapshot: rename $tmp -> $cur failed")
-      rmTree(old)
-    }
-  }
+      deleteCol: String, horizon: Long): Unit =
+    snapshotOf(path, Family.Snapshot).foreach(g => SegmentStore.compact(g,
+      g.rows(spark).filter(!col(deleteCol) || col(orderCol) > lit(horizon))))
 
   /** [[vacuumSnapshot]] for an [[upsertParquetSinkPartitioned]] layout:
-    * every bucket is rewritten through one staged partitionBy job, then
-    * per-bucket atomic swaps ([[recoverBuckets]] heals a crash). */
+    * every bucket is rewritten through one staged partitionBy job and
+    * published as one more generation. */
   def vacuumSnapshotPartitioned(spark: SparkSession, path: String,
-      orderCol: String, deleteCol: String, horizon: Long): Unit = {
-    val root = new java.io.File(path)
-    recoverBuckets(root)
-    val bucketDirs = Option(root.listFiles).getOrElse(Array.empty[java.io.File])
-      .filter(f => f.isDirectory && f.getName.startsWith("b="))
-    if (bucketDirs.nonEmpty) {
-      val stage = new java.io.File(s"$path.stage.${math.max(horizon, 0L)}")
-      // partition values survive as a `b` column on a discovery read of
-      // the root; re-partitioning by it reproduces the exact layout
-      spark.read.parquet(path)
-        .filter(!col(deleteCol) || col(orderCol) > lit(horizon))
-        .write.mode("overwrite").partitionBy("b").parquet(stage.getPath)
-      bucketDirs.foreach { cur =>
-        val i = cur.getName.drop(2)
-        val old = new java.io.File(s"$path.old.${math.max(horizon, 0L)}.b$i")
-        val fresh = new java.io.File(stage, cur.getName)
-        require(cur.renameTo(old),
-          s"vacuumSnapshotPartitioned: rename $cur -> $old failed")
-        if (fresh.isDirectory) // a bucket can vacuum down to zero rows
-          require(fresh.renameTo(cur),
-            s"vacuumSnapshotPartitioned: rename $fresh -> $cur failed")
-        rmTree(old)
+      orderCol: String, deleteCol: String, horizon: Long): Unit =
+    snapshotOf(path, Family.Buckets).foreach { g =>
+      SegmentStore.publishPartitions(path, g.meta, Nil) { dir =>
+        g.rows(spark).filter(!col(deleteCol) || col(orderCol) > lit(horizon))
+          .write.mode("overwrite").partitionBy("b").parquet(dir)
       }
-      rmTree(stage)
     }
-  }
 
   /** Read the live rows of an [[upsertParquetSink]] snapshot —
     * tombstoned keys filtered, bookkeeping columns dropped. */
   def readSnapshot(spark: SparkSession, path: String, orderCol: String,
       deleteCol: String): DataFrame =
-    spark.read.parquet(path).filter(!col(deleteCol))
-      .drop(orderCol, deleteCol)
+    readSnapshotAsOf(spark, path, orderCol, deleteCol)
 
   /** Persistence / recovery conventions (reference: src/persistence/ —
     * config.rs PersistenceConfig, operator_snapshot.rs, input_snapshot

@@ -344,9 +344,7 @@ class DocStoreSpec extends SparkSpec {
     assert(persisted.exceptAll(exact).count() == 0 &&
       exact.exceptAll(persisted).count() == 0)
     // the index at rest is packed codes ONLY — no centroids, no floats
-    // (kind-scoped dir: a generation can never be read under the wrong
-    // kind's schema)
-    val idir = DocStore.indexDirOf(path, DocStore.readIndexKind(path))
+    val idir = s"$path/index"
     val gen = graft.core.IndexGen.readDir(idir)
     assert(!new java.io.File(gen, "centroids").exists())
     val codes = graft.operators.Similarity.binaryLoadParts(spark, idir)
@@ -358,7 +356,7 @@ class DocStoreSpec extends SparkSpec {
     // rescore = 0: pure Hamming serving — the plan must not read the
     // chunk table's embedding column anywhere (codes-only probe + the
     // embedding-dropped widen join-back)
-    DocStore.writeIndexKind(path, DocStore.BinaryCodes(rescore = 0))
+    DocStore.rebuildIndex(spark, path, DocStore.BinaryCodes(rescore = 0))
     val ps0 = DocStore.open(spark, path, DocStore.hashEmbedder(8))
     val hits0 = ps0.retrieve(queries, col("qid"), col("qtext"), 3)
     assert(!hits0.queryExecution.executedPlan.toString.contains("embedding"),
@@ -383,8 +381,7 @@ class DocStoreSpec extends SparkSpec {
     assert(persisted.exceptAll(exact).count() == 0 &&
       exact.exceptAll(persisted).count() == 0)
     // PQ at rest: codebook + int codes, never float vectors
-    assert(graft.operators.Similarity.binaryLoadParts(spark,
-        DocStore.indexDirOf(path, DocStore.readIndexKind(path)))
+    assert(graft.operators.Similarity.binaryLoadParts(spark, s"$path/index")
       .columns.toSeq == Seq("neighbor_id", "codes"))
     // filter pushdown
     val es = ps.retrieve(queries, col("qid"), col("qtext"), 3,
@@ -425,7 +422,7 @@ class DocStoreSpec extends SparkSpec {
       exact.exceptAll(persisted).count() == 0)
     // lists at rest: (neighbor_id, cid, codes) — m ints, no floats
     val lists = graft.operators.Similarity.binaryLoadParts(spark,
-      DocStore.indexDirOf(path, DocStore.readIndexKind(path)))
+      s"$path/index")
     assert(lists.columns.toSet == Set("neighbor_id", "cid", "codes"))
     // filter pushdown through restrictTo
     val es = ps.retrieve(queries, col("qid"), col("qtext"), 3,
@@ -469,7 +466,7 @@ class DocStoreSpec extends SparkSpec {
     val ivfRoot = java.nio.file.Files.createTempDirectory("ds_sw").toString
     store.save(ivfRoot, nlist = 4)
     DocStore.rebuildIndex(spark, ivfRoot, DocStore.BinaryCodes(rescore = 200))
-    assert(DocStore.readIndexKind(ivfRoot) ==
+    assert(DocStore.kindOf(graft.core.SegmentStore.open(s"$ivfRoot/index")) ==
       DocStore.BinaryCodes(rescore = 200))
     val sw = DocStore.open(spark, ivfRoot, DocStore.hashEmbedder(8))
       .retrieve(q("uno dos tres"), col("qid"), col("qtext"), 3)
@@ -480,42 +477,42 @@ class DocStoreSpec extends SparkSpec {
       exact.exceptAll(sw).count() == 0)
   }
 
-  test("kind switches vacuum superseded index dirs grace-1; a reader " +
-      "mid-switch still answers") {
+  test("kind switches save into the one index path: the previous " +
+      "generation stays for readers, older ones go; the store answers " +
+      "after each switch") {
     val root = java.nio.file.Files.createTempDirectory("ds_kvac").toString
+    val idx = s"$root/index"
+    def gens() = new java.io.File(idx).list().filter(_.startsWith("gen-")).toSet
+    def exactAnswer(nprobe: Int) = {
+      val sw = DocStore.open(spark, root, DocStore.hashEmbedder(8), nprobe)
+        .retrieve(q("uno dos tres"), col("qid"), col("qtext"), 3)
+        .select("qid", "rank", "doc_id", "chunk_id")
+      val exact = store.retrieve(q("uno dos tres"), col("qid"), col("qtext"), 3)
+        .select("qid", "rank", "doc_id", "chunk_id")
+      sw.exceptAll(exact).count() == 0 && exact.exceptAll(sw).count() == 0
+    }
     store.save(root, DocStore.BinaryCodes(rescore = 200)) // kind A
-    val binDir = DocStore.indexDirOf(root, DocStore.BinaryCodes(rescore = 200))
-    val pqDir = DocStore.indexDirOf(root, DocStore.PqCodes(3, 4, 200))
-    val ivfpqDir = DocStore.indexDirOf(root,
-      DocStore.IvfPqCodes(3, 4, 4, 200))
-    // switch A → B: the previous kind's dir survives (grace for an
-    // in-flight reader that resolved the old marker)
+    val a = graft.core.IndexGen.committed(idx)
+    // switch A → B: the previous kind's generation survives (grace for
+    // an in-flight reader that resolved it)
     DocStore.rebuildIndex(spark, root, DocStore.PqCodes(m = 3, ksub = 4,
       rescore = 200))
-    assert(new java.io.File(binDir).isDirectory,
-      "immediately-previous kind dir must survive the flip (grace-1)")
-    // switch B → C: A's dir is now beyond the grace line and vacuumed;
-    // B's survives
+    assert(gens() == Set(s"gen-$a", s"gen-${a + 1}"))
+    assert(graft.core.SegmentStore.openAt(idx, a).meta.family ==
+      graft.core.SegmentStore.Family.Binary)
+    assert(exactAnswer(4))
+    // switch B → C: A's generation is beyond the grace line and pruned
     DocStore.rebuildIndex(spark, root, DocStore.IvfPqCodes(m = 3, ksub = 4,
       nlist = 4, rescore = 200))
-    assert(!new java.io.File(binDir).exists(),
-      "kind dir superseded two switches ago must be vacuumed")
-    assert(new java.io.File(pqDir).isDirectory)
-    assert(new java.io.File(ivfpqDir).isDirectory)
+    assert(gens() == Set(s"gen-${a + 1}", s"gen-${a + 2}"))
+    assert(DocStore.kindOf(graft.core.SegmentStore.open(idx)) ==
+      DocStore.IvfPqCodes(m = 3, ksub = 4, nlist = 4, rescore = 200))
     // the store keeps answering after the double switch, identically to
     // the exact store (full probe + full rescore)
-    val sw = DocStore.open(spark, root, DocStore.hashEmbedder(8), nprobe = 4)
-      .retrieve(q("uno dos tres"), col("qid"), col("qtext"), 3)
-      .select("qid", "rank", "doc_id", "chunk_id")
-    val exact = store.retrieve(q("uno dos tres"), col("qid"), col("qtext"), 3)
-      .select("qid", "rank", "doc_id", "chunk_id")
-    assert(sw.exceptAll(exact).count() == 0 && exact.exceptAll(sw).count() == 0)
-    // crashed-flip tmp orphans are swept by the next successful flip
-    val orphan = new java.io.File(root, ".index_kind.123.tmp")
-    java.nio.file.Files.writeString(orphan.toPath, "kind=binary")
-    DocStore.rebuildIndex(spark, root, DocStore.PqCodes(m = 3, ksub = 4,
-      rescore = 200))
-    assert(!orphan.exists(), "stale .index_kind.*.tmp must be swept")
+    assert(exactAnswer(4))
+    // every dir under the store is the chunk table or the one index
+    assert(new java.io.File(root).list().filterNot(_.startsWith(".")).toSet ==
+      Set("chunks", "index"))
   }
 
   test("IvfPqCodes rejects rescore=0 at construction, before any build work") {
@@ -541,18 +538,11 @@ class DocStoreSpec extends SparkSpec {
     assert(graft.operators.Similarity.nlistFor(DocStore.flatPqWarnRows - 1) < 64)
   }
 
-  test("allKindDirs covers every kind-scoped dir name (vacuum registry)") {
-    val dirs = DocStore.allKindDirs("p").map(_.stripPrefix("p/")).toSet
-    assert(dirs == Set("index", "index-pq", "index-binary", "index-ivfpq"),
-      s"a StoreIndex kind is missing from allKindDirs — its superseded " +
-        s"dir would never be vacuumed: $dirs")
-  }
-
   test("restrictTo rejects a multi-column id frame instead of silently " +
       "filtering by the first column") {
     val path = java.nio.file.Files.createTempDirectory("ds_restrict").toString
     store.save(path, DocStore.BinaryCodes(rescore = 200))
-    val idir = DocStore.indexDirOf(path, DocStore.readIndexKind(path))
+    val idir = s"$path/index"
     val twoCols = store.chunks.select("chunk_key", "doc_id")
     val ex = intercept[IllegalArgumentException] {
       graft.operators.Similarity.binaryLoadTopK(spark, idir,

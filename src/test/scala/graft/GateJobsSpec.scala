@@ -336,6 +336,35 @@ class GateJobsSpec extends SparkSpec {
     assert(inferred > 0)
   }
 
+  test("snapshot reads build with no job: readSnapshot, readSnapshotAsOf " +
+      "and readSnapshotPartitioned") {
+    implicit val sqlCtx = spark.sqlContext
+    val root = tmp("gatejobs_snap")
+    def fill(path: String, w: (DataFrame, String) =>
+        org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row]): Unit = {
+      val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, Boolean, String)]
+      val q = w(in.toDF().toDF("id", "ord", "del", "v"), s"$path-ckpt").start()
+      try for (r <- 1 to 2) {
+        in.addData((1L to 8L).map(i => (i, r.toLong, false, s"v$r")): _*)
+        q.processAllAvailable()
+      } finally q.stop()
+    }
+    import graft.streaming.Streaming
+    fill(s"$root/plain", (ev, c) => Streaming.upsertParquetSink(ev, Seq("id"),
+      "ord", "del", s"$root/plain", c))
+    fill(s"$root/ver", (ev, c) => Streaming.upsertParquetSinkVersioned(ev,
+      Seq("id"), "ord", "del", s"$root/ver", c))
+    fill(s"$root/part", (ev, c) => Streaming.upsertParquetSinkPartitioned(ev,
+      Seq("id"), "ord", "del", s"$root/part", c, buckets = 4))
+    val (jobs, _) = jobsOf {
+      Streaming.readSnapshot(spark, s"$root/plain", "ord", "del")
+      Streaming.readSnapshotAsOf(spark, s"$root/ver", "ord", "del", Some(1L))
+      Streaming.readSnapshotAsOf(spark, s"$root/ver", "ord", "del")
+      Streaming.readSnapshotPartitioned(spark, s"$root/part", "ord", "del")
+    }
+    assert(jobs == 0, s"building the snapshot reads ran $jobs jobs")
+  }
+
   test("extendIndex reads new chunk files only: equal jobs at 1x and 8x " +
       "store size and at 1 and 6 index segments, chunk rows read bounded " +
       "by the new chunks, a copied chunk file adds nothing, no new file " +

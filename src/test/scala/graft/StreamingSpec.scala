@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import graft.core.SegmentStore
 import graft.streaming.Streaming
 
 /** Streaming semantics over MemoryStream timed batches — the analog of
@@ -10,6 +11,11 @@ import graft.streaming.Streaming
   * (reference: pw.debug table_from_markdown + compute_and_print_update_stream). */
 class StreamingSpec extends SparkSpec {
   import spark.implicits._
+
+  /** The `b=<i>` dirs of a bucketed snapshot's committed generation. */
+  private def bucketDirs(path: String): Seq[java.io.File] =
+    SegmentStore.open(path).segmentDirs.flatMap(s =>
+      new java.io.File(s).listFiles.filter(_.getName.startsWith("b=")).toSeq)
 
   test("deduplicateStreaming emits only acceptor-approved changes") {
     implicit val sqlCtx = spark.sqlContext
@@ -64,47 +70,6 @@ class StreamingSpec extends SparkSpec {
         Thread.sleep(700); in.addData(("u", 5)); tries += 1
       }
       assert(uEmits >= 2, s"(u,5) never re-emitted after eviction window")
-    } finally q.stop()
-  }
-
-  test("partitioned sink _buckets marker pins the hash recipe, not just " +
-      "the count: a foreign recipe fails loudly; a legacy bare-int marker " +
-      "is accepted") {
-    implicit val sqlCtx = spark.sqlContext
-    val root = java.nio.file.Files.createTempDirectory("graft_bucket_recipe").toString
-    def runOne(path: String, ckpt: String): Unit = {
-      val in = MemoryStream[(Long, Long, Boolean, String)]
-      val q = Streaming.upsertParquetSinkPartitioned(
-        in.toDF().toDF("id", "ord", "del", "v"), Seq("id"), "ord", "del",
-        path, ckpt, buckets = 4).start()
-      try { in.addData((1L, 10L, false, "a")); q.processAllAvailable() }
-      finally q.stop()
-    }
-    // legacy marker (bare count, written by the pre-recipe murmur3 code
-    // path) upgrades silently
-    val legacy = s"$root/legacy"
-    new java.io.File(legacy).mkdirs()
-    java.nio.file.Files.writeString(
-      java.nio.file.Path.of(legacy, "_buckets"), "4")
-    runOne(legacy, s"$root/ckpt_legacy")
-    assert(Streaming.readSnapshotPartitioned(spark, legacy, "ord", "del").count() == 1)
-    // a marker naming a DIFFERENT hash function must raise even though
-    // the count matches — the key→bucket mapping depends on both
-    val foreign = s"$root/foreign"
-    new java.io.File(foreign).mkdirs()
-    java.nio.file.Files.writeString(
-      java.nio.file.Path.of(foreign, "_buckets"), "xxhash64:4")
-    val in = MemoryStream[(Long, Long, Boolean, String)]
-    val q = Streaming.upsertParquetSinkPartitioned(
-      in.toDF().toDF("id", "ord", "del", "v"), Seq("id"), "ord", "del",
-      foreign, s"$root/ckpt_foreign", buckets = 4).start()
-    try {
-      in.addData((1L, 10L, false, "a"))
-      val ex = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-        q.processAllAvailable()
-      }
-      assert(ex.getMessage.contains("bucket recipe") ||
-        Option(ex.getCause).exists(_.getMessage.contains("bucket recipe")))
     } finally q.stop()
   }
 
@@ -329,7 +294,7 @@ class StreamingSpec extends SparkSpec {
       val s2 = Streaming.readSnapshot(spark, path, "ord", "del")
       assert(rowsOf(s2) == Set(Seq(1L, "a2")))
       // the tombstone itself is retained in the raw snapshot
-      val raw = spark.read.parquet(path)
+      val raw = SegmentStore.open(path).rows(spark)
       assert(raw.filter(col("del")).select("id").collect().map(_.getLong(0)).toSeq == Seq(2L))
     } finally q.stop()
   }
@@ -610,43 +575,6 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
-  test("upsertParquetSink recovers a crash between the two swap renames " +
-      "without losing prior keys") {
-    implicit val sqlCtx = spark.sqlContext
-    val root = java.nio.file.Files.createTempDirectory("graft_upsert_crash").toString
-    val path = s"$root/state"
-    val in = MemoryStream[(Long, Long, Boolean, String)]
-    val events = in.toDF().toDF("id", "ord", "del", "v")
-    val q1 = Streaming.upsertParquetSink(events, Seq("id"), "ord", "del",
-      path, s"$root/ckpt").start()
-    try {
-      in.addData((1L, 10L, false, "a"), (2L, 10L, false, "b"))
-      q1.processAllAvailable()
-    } finally q1.stop()
-    // simulate the worst crash point of the NEXT batch's swap: state was
-    // renamed aside to `state.old.1` and the process died before the tmp
-    // promotion — `path` no longer exists at all
-    val cur = new java.io.File(path)
-    val old = new java.io.File(s"$path.old.1")
-    assert(cur.renameTo(old) && !cur.exists())
-    // restart from the same checkpoint with one more event; without
-    // recovery the new batch would rebuild state from itself alone
-    val in2 = MemoryStream[(Long, Long, Boolean, String)]
-    val q2 = Streaming.upsertParquetSink(in2.toDF().toDF("id", "ord", "del", "v"),
-      Seq("id"), "ord", "del", path, s"$root/ckpt").start()
-    try {
-      // the checkpoint already committed the old stream's offset 1: this
-      // first block occupies it and is (correctly) never re-processed
-      in2.addData((99L, 1L, true, "filler"))
-      in2.addData((3L, 20L, false, "c"))
-      q2.processAllAvailable()
-      val s = Streaming.readSnapshot(spark, path, "ord", "del")
-      assert(rowsOf(s) == Set(Seq(1L, "a"), Seq(2L, "b"), Seq(3L, "c")))
-      // the leftover dir was consumed by recovery, not left to rot
-      assert(!old.exists())
-    } finally q2.stop()
-  }
-
   test("upsertParquetSinkPartitioned rewrites only the buckets a batch touches") {
     implicit val sqlCtx = spark.sqlContext
     val root = java.nio.file.Files.createTempDirectory("graft_upsert_part").toString
@@ -665,8 +593,7 @@ class StreamingSpec extends SparkSpec {
           .filter(_.getName.endsWith(".parquet"))
           .map(f => f.getName -> f.lastModified).toMap
       def snap(): Map[String, Map[String, Long]] =
-        new java.io.File(path).listFiles.filter(_.getName.startsWith("b="))
-          .map(d => d.getName -> filesOf(d)).toMap
+        bucketDirs(path).map(d => d.getName -> filesOf(d)).toMap
       val before = snap()
       assert(before.size > 1) // 64 murmur3-hashed keys occupy many buckets
       // update ONE key: exactly one bucket's files may change
@@ -706,7 +633,7 @@ class StreamingSpec extends SparkSpec {
       spark.conf.unset("spark.sql.files.maxRecordsPerFile")
     }
     def files(): Map[String, Int] =
-      new java.io.File(path).listFiles.filter(_.getName.startsWith("b="))
+      bucketDirs(path)
         .map(d => d.getName -> d.listFiles.count(_.getName.endsWith(".parquet")))
         .toMap
     val before = Streaming.readSnapshotPartitioned(spark, path, "ord", "del")
@@ -722,57 +649,9 @@ class StreamingSpec extends SparkSpec {
     assert(after == before, "compaction must not change the live view")
     // already-compact snapshot: no-op
     assert(Streaming.compactBuckets(spark, path) == 0)
-    // the _buckets recipe marker survives compaction (a restart depends on it)
-    assert(new java.io.File(path, "_buckets").isFile)
-  }
-
-  test("upsertParquetSinkPartitioned recovers a bucket lost mid-swap " +
-      "without losing its keys") {
-    implicit val sqlCtx = spark.sqlContext
-    val root = java.nio.file.Files.createTempDirectory("graft_upsert_part_crash").toString
-    val path = s"$root/state"
-    val in = MemoryStream[(Long, Long, Boolean, String)]
-    val q1 = Streaming.upsertParquetSinkPartitioned(
-      in.toDF().toDF("id", "ord", "del", "v"), Seq("id"), "ord", "del",
-      path, s"$root/ckpt", buckets = 4).start()
-    try {
-      in.addData((1L to 16L).map(i => (i, 10L, false, s"v$i")): _*)
-      q1.processAllAvailable()
-    } finally q1.stop()
-    // worst crash point of the next batch's swap loop: one bucket was
-    // renamed aside to its sibling .old dir and the process died before
-    // the staged promotion — that bucket is gone from the snapshot root
-    val victim = new java.io.File(path).listFiles
-      .filter(_.getName.startsWith("b=")).minBy(_.getName)
-    val i = victim.getName.drop(2)
-    val old = new java.io.File(s"$path.old.1.b$i")
-    assert(victim.renameTo(old) && !victim.exists())
-    val in2 = MemoryStream[(Long, Long, Boolean, String)]
-    val q2 = Streaming.upsertParquetSinkPartitioned(
-      in2.toDF().toDF("id", "ord", "del", "v"), Seq("id"), "ord", "del",
-      path, s"$root/ckpt", buckets = 4).start()
-    try {
-      // the checkpoint already committed the old stream's offset 1: this
-      // block occupies it and is (correctly) never re-processed
-      in2.addData((99L, 1L, true, "filler"))
-      in2.addData((100L, 20L, false, "new"))
-      q2.processAllAvailable()
-      val s = Streaming.readSnapshotPartitioned(spark, path, "ord", "del")
-      assert(s.count() == 17) // all 16 originals + the new key, none lost
-      assert(!old.exists()) // the leftover was consumed by recovery
-    } finally q2.stop()
-    // restarting over the same snapshot with a DIFFERENT bucket count
-    // must fail loudly — silently re-routing keys would duplicate them
-    val in3 = MemoryStream[(Long, Long, Boolean, String)]
-    val q3 = Streaming.upsertParquetSinkPartitioned(
-      in3.toDF().toDF("id", "ord", "del", "v"), Seq("id"), "ord", "del",
-      path, s"$root/ckpt_other", buckets = 8).start()
-    try {
-      in3.addData((200L, 30L, false, "z"))
-      intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-        q3.processAllAvailable()
-      }
-    } finally q3.stop()
+    // the bucket recipe survives compaction (a restart depends on it)
+    assert(SegmentStore.open(path).meta ==
+      SegmentStore.Meta(SegmentStore.Family.Buckets, Seq(4)))
   }
 
   test("vacuum drops only expired tombstones; the live view is unchanged") {
@@ -791,7 +670,7 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
     val liveBefore = rowsOf(Streaming.readSnapshot(spark, path, "ord", "del"))
     Streaming.vacuumSnapshot(spark, path, "ord", "del", horizon = 30L)
-    val raw = spark.read.parquet(path)
+    val raw = SegmentStore.open(path).rows(spark)
     assert(raw.filter(col("del")).select("id").collect()
       .map(_.getLong(0)).toSeq == Seq(3L)) // expired tombstone gone
     assert(rowsOf(Streaming.readSnapshot(spark, path, "ord", "del")) == liveBefore)
@@ -810,13 +689,13 @@ class StreamingSpec extends SparkSpec {
     val liveBefore2 = rowsOf(
       Streaming.readSnapshotPartitioned(spark, path2, "ord", "del"))
     Streaming.vacuumSnapshotPartitioned(spark, path2, "ord", "del", horizon = 30L)
-    val raw2 = spark.read.parquet(path2)
+    val raw2 = SegmentStore.open(path2).rows(spark)
     assert(raw2.filter(col("del")).select("id").collect()
       .map(_.getLong(0)).toSeq == Seq(101L))
     assert(rowsOf(
       Streaming.readSnapshotPartitioned(spark, path2, "ord", "del")) == liveBefore2)
     // layout preserved: bucket dirs survive the vacuum rewrite
-    assert(new java.io.File(path2).listFiles.exists(_.getName.startsWith("b=")))
+    assert(bucketDirs(path2).nonEmpty)
   }
 
   test("subjectStream feeds commits through as ingestible blocks") {
@@ -887,32 +766,5 @@ class StreamingSpec extends SparkSpec {
       Seq("k"), col("_ts_ms"))
     assert(streamed == rowsOf(batch))
     assert(streamed == Set(Seq(1L, "a2"))) // k2 deleted, k1 updated
-  }
-
-  test("recoverSnapshot prefers the newest tmp over old and clears leftovers") {
-    val root = java.nio.file.Files.createTempDirectory("graft_recover").toFile
-    val cur = new java.io.File(root, "state")
-    def mk(name: String, marker: String): java.io.File = {
-      val d = new java.io.File(root, name)
-      assert(d.mkdir())
-      java.nio.file.Files.writeString(new java.io.File(d, marker).toPath, marker)
-      d
-    }
-    mk("state.old.3", "from_old")
-    val tmp4 = mk("state.tmp.4", "from_tmp")
-    // a committed write carries Spark's job-commit marker
-    java.nio.file.Files.writeString(new java.io.File(tmp4, "_SUCCESS").toPath, "")
-    // an UNCOMMITTED tmp (crash mid-write, no _SUCCESS) must never win,
-    // even though its batch id is newest
-    mk("state.tmp.5", "half_written")
-    Streaming.recoverSnapshot(cur)
-    // committed tmp.4 (post-batch state) won; all leftovers are gone
-    assert(cur.isDirectory && new java.io.File(cur, "from_tmp").exists())
-    assert(!new java.io.File(root, "state.old.3").exists())
-    assert(!new java.io.File(root, "state.tmp.4").exists())
-    assert(!new java.io.File(root, "state.tmp.5").exists())
-    // idempotent when the snapshot is already in place
-    Streaming.recoverSnapshot(cur)
-    assert(cur.isDirectory && new java.io.File(cur, "from_tmp").exists())
   }
 }
