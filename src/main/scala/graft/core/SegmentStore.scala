@@ -4,7 +4,9 @@ import java.io.File
 import java.nio.file.{Files, Path}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{DataType, StructType}
 import org.apache.spark.sql.graftbridge.ColumnBridge
 
 /** The one write protocol of everything graft persists — the index
@@ -30,7 +32,9 @@ import org.apache.spark.sql.graftbridge.ColumnBridge
   *    the index is built from, whose rows the generation holds. A
   *    writer that reads its input by file records them so the next one
   *    reads only files added since; a generation without the record
-  *    covers nothing.
+  *    covers nothing;
+  *  - `schema.json` (only with an empty manifest) — the schema the
+  *    generation's zero rows read with.
   *
   * Writers go stage → meta + manifest → segment → commit → vacuum:
   *  - [[save]] writes the side tables and one segment into a fresh
@@ -41,6 +45,8 @@ import org.apache.spark.sql.graftbridge.ColumnBridge
   *    can load), carries the side tables over as a file copy (no Spark
   *    job) and lists the old segments plus one new one;
   *  - [[compact]] rewrites given rows as the generation's only segment;
+  *  - [[fold]] is an append and a compact in one write: the committed
+  *    rows plus the new ones become the only segment;
   *  - [[publishPartitions]] swaps some segments for the partitions of
   *    one `partitionBy` write, one segment per partition (the bucketed
   *    snapshot: a batch replaces the buckets it touches).
@@ -61,6 +67,7 @@ object SegmentStore {
   private val Manifest = "segments.txt"
   private val Covers = "covers.txt"
   private val Param = "param."
+  private val SchemaFile = "schema.json"
 
   /** A persisted index family: its name in the record and the names of
     * its scalar geometry. */
@@ -97,11 +104,13 @@ object SegmentStore {
 
   /** One committed generation, resolved once: its meta record, its
     * manifest's segments (relative to `path`), its side tables, the
-    * input files it covers (None: no record) and its parameters. */
+    * input files it covers (None: no record), its parameters and, when
+    * the manifest is empty, the recorded schema. */
   final case class Generation(path: String, gen: Long, meta: Meta,
       segments: Seq[String], sides: Seq[String],
       covers: Option[Seq[String]] = None,
-      params: Map[String, String] = Map.empty) {
+      params: Map[String, String] = Map.empty,
+      schema: Option[StructType] = None) {
     def dir: String = s"$path/gen-$gen"
 
     /** This generation, after checking that it holds `family`. */
@@ -127,8 +136,15 @@ object SegmentStore {
       * in every segment. Schemas come from footers ([[parquetSchema]]),
       * so no read infers one with a job. Segments whose schemas differ
       * (ids appended in another integral type) are read one by one and
-      * unioned, which widens them. */
+      * unioned, which widens them. A generation whose manifest lists no
+      * segment reads as no rows of the schema its record names
+      * ([[publishPartitions]] records it when a write leaves no
+      * partition). */
     def rows(spark: SparkSession): DataFrame = {
+      if (segments.isEmpty) return spark.createDataFrame(
+        java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+        schema.getOrElse(throw new IllegalStateException(
+          s"$dir lists no segment and records no schema")))
       val schemas = segmentDirs.map(d =>
         ColumnBridge.asNullable(parquetSchema(spark, d)))
       if (schemas.forall(_ == schemas.head))
@@ -160,10 +176,13 @@ object SegmentStore {
     val segs = manifestOf(dir).getOrElse(
       throw new IllegalArgumentException(s"no segment manifest in $dir"))
     val covers = new File(dir, Covers)
+    val schema = new File(dir, SchemaFile)
     Generation(path, gen, Meta(family, family.geometry.map(kv(_).toInt)), segs,
       dir.listFiles().filter(_.isDirectory).map(_.getName).sorted.toSeq,
       if (covers.isFile) Some(lines(covers)) else None,
-      kv.collect { case (k, v) if k.startsWith(Param) => k.stripPrefix(Param) -> v })
+      kv.collect { case (k, v) if k.startsWith(Param) => k.stripPrefix(Param) -> v },
+      if (schema.isFile) Some(DataType.fromJson(Files.readString(schema.toPath))
+        .asInstanceOf[StructType]) else None)
   }
 
   /** A fresh index at `path`: the side tables and `rows` as its one
@@ -189,8 +208,7 @@ object SegmentStore {
     * record over as it is). Returns the committed generation. */
   def append(g: Generation, meta: Meta, rows: DataFrame,
       covers: Option[Seq[String]] = None): Long = {
-    require(meta == g.meta, s"cannot append a $meta segment to ${g.path}: " +
-      s"its committed generation ${g.gen} holds a ${g.meta} index")
+    requireRecord(g, meta)
     carry(g, g.segments, Some(rows), covered(g, covers))
   }
 
@@ -205,6 +223,38 @@ object SegmentStore {
   def compact(g: Generation, rows: DataFrame): Long =
     carry(g, Nil, Some(rows), g.covers)
 
+  /** [[append]] `rows` and [[compact]] in ONE write: `g`'s rows plus
+    * `rows` become the new generation's only segment (the append of a
+    * compaction slot, which would otherwise write the batch's rows and
+    * then rewrite them). Same record check and `covers` as [[append]].
+    * The new rows ride in the tasks of the committed rows' scan, so the
+    * segment has as many part files as that scan has splits: the batch
+    * adds none of its own, and no split of the committed rows is merged
+    * into another (their part files are the read parallelism, see
+    * [[publish]]). Returns the committed generation. */
+  def fold(g: Generation, meta: Meta, rows: DataFrame,
+      covers: Option[Seq[String]] = None): Long = {
+    requireRecord(g, meta)
+    val folded =
+      if (g.segments.isEmpty) rows
+      else {
+        val old = g.rows(rows.sparkSession)
+        old.unionByName(rows).coalesce(scanSplits(old).max(1))
+      }
+    carry(g, Nil, Some(folded), covered(g, covers))
+  }
+
+  /** The file splits the scans of `df` read: how many tasks its
+    * scan runs, from the planned scans, with no job. */
+  private def scanSplits(df: DataFrame): Int =
+    df.queryExecution.executedPlan.collect {
+      case s: FileSourceScanExec => s.inputRDD.getNumPartitions
+    }.sum
+
+  private def requireRecord(g: Generation, meta: Meta): Unit =
+    require(meta == g.meta, s"cannot append a $meta segment to ${g.path}: " +
+      s"its committed generation ${g.gen} holds a ${g.meta} index")
+
   private def covered(g: Generation, covers: Option[Seq[String]]) =
     covers.map(g.covers.getOrElse(Nil) ++ _).orElse(g.covers)
 
@@ -218,21 +268,26 @@ object SegmentStore {
   }
 
   /** Commit a generation of `meta` whose manifest keeps `keep` (segments
-    * of the committed generation) and adds one segment per `k=v`
-    * partition dir of the table `write` writes at the path it is given,
-    * inside the staged generation. Each partition dir moves into a
-    * segment of its own after the manifest names it, so
-    * [[Generation.rows]] still reads the partition column. Returns the
-    * committed generation. */
+    * of the committed generation) and adds one segment per bucket of
+    * `rows` written `partitionBy` its bucket column `b`, staged inside
+    * the generation. Each `b=<i>` dir moves into a segment of its own
+    * after the manifest names it, so [[Generation.rows]] still reads the
+    * bucket column. A generation left with no segment at all records the
+    * rows' schema (as a read gives it: `b` last), which is what
+    * [[Generation.rows]] then reads. Returns the committed generation. */
   private[graft] def publishPartitions(path: String, meta: Meta,
-      keep: Seq[String])(write: String => Unit): Long = {
+      keep: Seq[String], rows: DataFrame): Long = {
+    val by = "b"
     val (dir, gen) = IndexGen.stage(path)
     val staged = new File(dir, "staged")
-    write(staged.getPath)
+    rows.write.mode("overwrite").partitionBy(by).parquet(staged.getPath)
     val parts = Option(staged.listFiles()).getOrElse(Array.empty[File])
       .filter(f => f.isDirectory && f.getName.contains("=")).sortBy(_.getName).toSeq
     val segs = parts.map(_ => newSegment())
     writeRecord(dir, meta, keep ++ segs, None, Map.empty)
+    if (keep.isEmpty && segs.isEmpty)
+      Files.writeString(new File(dir, SchemaFile).toPath, ColumnBridge.asNullable(
+        StructType(rows.schema.filterNot(_.name == by) :+ rows.schema(by))).json)
     parts.zip(segs).foreach { case (p, seg) =>
       val to = new File(path, seg)
       to.mkdirs()

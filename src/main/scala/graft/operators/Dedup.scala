@@ -200,10 +200,14 @@ object Dedup {
     * hash count would silently corrupt the signature space.
     *
     * `hasRows` is whether `sigs` has any row, when the caller already
-    * knows it from rows its gate collected; None probes `sigs`. */
+    * knows it from rows its gate collected; None probes `sigs`.
+    *
+    * `fold` (a stream's compaction slot): the index comes out as one
+    * segment — the rows are appended by [[SegmentStore.fold]], and with
+    * no row to add a generation of several segments is compacted. */
   private[graft] def signatureAppendSigs(g: SegmentStore.Generation,
       n: Int, k: Int, sigs: DataFrame,
-      hasRows: Option[Boolean] = None): Long = {
+      hasRows: Option[Boolean] = None, fold: Boolean = false): Long = {
     val meta = Meta(Family.Signature, Seq(n, k, g.meta.geometry.last))
     require(sigs.columns.toSeq == ("id" +: (0 until k).map(i => s"h$i")),
       s"signatureAppendSigs: signature columns ${sigs.columns.mkString(",")} " +
@@ -214,9 +218,15 @@ object Dedup {
     // read of that segment would fail schema inference. A batch at
     // another geometry still goes to the append, whose record check
     // fails it.
-    if (meta == g.meta && !hasRows.getOrElse(!sigs.isEmpty)) g.gen
-    else SegmentStore.append(g, meta, sigs)
+    if (meta == g.meta && !hasRows.getOrElse(!sigs.isEmpty))
+      if (fold) compactSegmented(sigs.sparkSession, g) else g.gen
+    else appendOrFold(g, meta, sigs, fold)
   }
+
+  private def appendOrFold(g: SegmentStore.Generation, meta: Meta,
+      rows: DataFrame, fold: Boolean): Long =
+    if (fold) SegmentStore.fold(g, meta, rows)
+    else SegmentStore.append(g, meta, rows)
 
   /** Dedup NEW documents against the persisted history: band-key
     * equi-join of the new docs' banded signatures against the index's
@@ -360,14 +370,18 @@ object Dedup {
       maxDf, maxRows, canonMaxRows)._1
 
   /** [[dedupRefreshGated]], and whether any row survives: known from the
-    * collected signature rows (one per canonical row) when the history
-    * probe ran on the driver, None when it did not. */
+    * collected signature rows (one per canonical row) when the whole
+    * refresh ran on the driver — then the frame is a filter over
+    * `batch` — and None when the canonicalization or the history probe
+    * did not. `fold`: the survivor append leaves the index as one
+    * segment ([[signatureAppendSigs]]). */
   private[graft] def dedupRefreshWith(
       spark: org.apache.spark.sql.SparkSession, path: String,
       batch: DataFrame, id: Column, text: Column, threshold: Double,
       estThreshold: Double, maxDf: Int = 100,
       maxRows: Int = graft.core.Small.MaxRows,
-      canonMaxRows: Int = graft.core.Small.MaxRows)
+      canonMaxRows: Int = graft.core.Small.MaxRows,
+      fold: Boolean = false)
       : (DataFrame, Option[Boolean]) = {
     val (g, n, k, bands) = openSig(path)
     val r = k / bands
@@ -421,10 +435,10 @@ object Dedup {
           .map(x => org.apache.spark.sql.Row.fromSeq(x.toSeq.take(1 + k)))
         signatureAppendSigs(g, n, k, spark.createDataFrame(
           java.util.Arrays.asList(appended: _*), probe.schema),
-          Some(appended.nonEmpty))
+          Some(appended.nonEmpty), fold)
         (canon.filter(Small.notIn(col("_id"), dups))
           .select(batch.columns.map(col).toSeq: _*),
-          Some(rows.exists(x => x.isNullAt(0) || !dups(x.get(0)))))
+          Option.when(local)(rows.exists(x => x.isNullAt(0) || !dups(x.get(0)))))
       case None =>
         val probeC = Caches.eager(probe)
         val dupIds = dedupAgainstSigs(spark, g, probeC, estThreshold)
@@ -434,7 +448,7 @@ object Dedup {
         val survivors = Caches.eager(canon.join(dupIds, Seq("_id"), "left_anti"))
         signatureAppendSigs(g, n, k,
           probeC.join(survivors.select(col("_id").as("id")), Seq("id"),
-            "left_semi"))
+            "left_semi"), fold = fold)
         (survivors.select(batch.columns.map(col).toSeq: _*), None)
     }
   }
@@ -541,16 +555,18 @@ object Dedup {
     * kernel is not re-run over the batch text a third time. `hasHashes`
     * is whether any row has a non-NULL hash, when the caller's gate
     * already knows it ([[exactGate]]'s answer below the gate); None
-    * probes the table. */
+    * probes the table. `fold` as in [[signatureAppendSigs]]. */
   private[operators] def hashAppendHashes(
       spark: org.apache.spark.sql.SparkSession, path: String,
-      newHashes: DataFrame, hasHashes: Option[Boolean] = None): Long = {
+      newHashes: DataFrame, hasHashes: Option[Boolean] = None,
+      fold: Boolean = false): Long = {
     val g = SegmentStore.open(path).of(Family.Hash)
     val hashes = newHashes.toDF("id", "h").filter(col("h").isNotNull)
     // empty/all-NULL batch: keep the current generation (zero-row
     // parquet segments can land without part files — see signatureAppend)
-    if (!hasHashes.getOrElse(!hashes.isEmpty)) g.gen
-    else SegmentStore.append(g, Meta(Family.Hash), hashes)
+    if (!hasHashes.getOrElse(!hashes.isEmpty))
+      if (fold) compactSegmented(spark, g) else g.gen
+    else appendOrFold(g, Meta(Family.Hash), hashes, fold)
   }
 
   /** Exact-dedup NEW documents against the persisted history: every new
@@ -730,15 +746,29 @@ object Dedup {
     * compact concurrently with an append). Returns the committed
     * generation. */
   def signatureCompact(spark: org.apache.spark.sql.SparkSession,
-      path: String): Long = compactIndex(spark, path, Family.Signature)
+      path: String): Long =
+    compactIndex(spark, SegmentStore.open(path).of(Family.Signature))
 
   /** [[signatureCompact]] for a [[hashSave]]d exact-dedup index. */
   def hashCompact(spark: org.apache.spark.sql.SparkSession,
-      path: String): Long = compactIndex(spark, path, Family.Hash)
+      path: String): Long =
+    compactIndex(spark, SegmentStore.open(path).of(Family.Hash))
+
+  /** A compaction slot with nothing to fold in: the committed index at
+    * `path` (if any) is compacted when it has more than one segment —
+    * one segment is compact already. The stream bodies run this for an
+    * empty micro-batch, which skips the appends. */
+  private[graft] def compactSlot(spark: org.apache.spark.sql.SparkSession,
+      path: String): Unit =
+    if (graft.core.IndexGen.current(path).isDefined)
+      compactSegmented(spark, SegmentStore.open(path))
+
+  private def compactSegmented(spark: org.apache.spark.sql.SparkSession,
+      g: SegmentStore.Generation): Long =
+    if (g.segments.size > 1) compactIndex(spark, g) else g.gen
 
   private def compactIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String, family: Family): Long = {
-    val g = SegmentStore.open(path).of(family)
+      g: SegmentStore.Generation): Long = {
     // zero-row guard, mirroring signatureAppend/hashAppend: an empty
     // committed table compacted to a zero-row parquet segment can land
     // with no part files, and every later manifest read would fail

@@ -203,7 +203,7 @@ object DocStore {
         if (exactFreshH ne chunkedC) chunkedC.unpersist(blocking = false)
         val fresh = nearDedupIndex match {
           case Some(np) => nearFreshChunks(spark, exactFresh, np,
-            nearThreshold, nearEstThreshold, nearGeometry)._1
+            nearThreshold, nearEstThreshold, nearGeometry, fold = false)._1
           case None => exactFresh
         }
         // EMBED + materialize first, index the exact hashes after — the
@@ -219,7 +219,8 @@ object DocStore {
         val store = new Store(graft.core.Caches.eager(
           fresh.withColumn("embedding", embedder(col("text")))),
           metadata, embedder)
-        dedupIndex.foreach(p => indexChunkHashes(spark, p, exactFreshH, known))
+        dedupIndex.foreach(p =>
+          indexChunkHashes(spark, p, exactFreshH, known, fold = false))
         // gate checkpoints release with their RDDs (ContextCleaner); the
         // only explicit release left is the no-gate chunk cache alias
         if (exactFreshH eq chunkedC) chunkedC.unpersist(blocking = false)
@@ -266,15 +267,17 @@ object DocStore {
     * re-ingests; this gate handles the near-but-not-identical
     * remainder.
     *
-    * Returns the survivors and whether there are any, when the history
-    * probe collected it (None: ask the frame). */
+    * `fold`: the survivors' signatures leave the index as one segment
+    * (a compaction slot of [[buildStream]]). Returns the survivors and
+    * whether there are any, when the refresh ran on the driver (None:
+    * ask the frame). */
   private def nearFreshChunks(spark: SparkSession, chunked: DataFrame,
       path: String, threshold: Double, estThreshold: Double,
-      geometry: (Int, Int, Int)): (DataFrame, Option[Boolean]) = {
+      geometry: (Int, Int, Int), fold: Boolean): (DataFrame, Option[Boolean]) = {
     val (fresh, any) =
       if (graft.core.IndexGen.current(path).isDefined)
         Dedup.dedupRefreshWith(spark, path, chunked, col("chunk_key"),
-          col("text"), threshold, estThreshold)
+          col("text"), threshold, estThreshold, fold = fold)
       else {
         val (n, k, bands) = geometry
         val canon = graft.core.Caches.eager(
@@ -288,8 +291,10 @@ object DocStore {
     // localCheckpoint at the gate exit (not a cache — see
     // dedupFreshChunks): truncates the LSH+CC lineage so the embed
     // stage and every Store operation plan from a scan, not from the
-    // whole gate tree
-    (graft.core.Caches.checkpoint(fresh), any)
+    // whole gate tree. When the refresh ran on the driver the survivors
+    // are a filter over `chunked` (the exact gate's checkpoint): there
+    // is no tree to truncate, and a checkpoint would only cost a job.
+    (if (any.isDefined) fresh else graft.core.Caches.checkpoint(fresh), any)
   }
 
   /** The exact-dedup gate of the ingest pipeline (`dedupIndex` on
@@ -333,13 +338,15 @@ object DocStore {
 
   /** Record an ingest's surviving chunk hashes in the dedup index —
     * creates it on first ingest, O(new rows) segment append after
-    * ([[Dedup.hashCompact]] is the long-run maintenance cadence).
+    * ([[Dedup.hashCompact]] is the long-run maintenance cadence;
+    * `fold` makes this append the compaction of a [[buildStream]] slot).
     * `known` is what the gate collected about its survivors (None above
     * the gate): whether any has a hash, and their (id, hash) rows, which
     * are appended from the driver instead of scanned again. Single
     * writer, like every segment store. */
   private def indexChunkHashes(spark: SparkSession, indexPath: String,
-      freshH: DataFrame, known: Option[Dedup.Survivors]): Unit = {
+      freshH: DataFrame, known: Option[Dedup.Survivors],
+      fold: Boolean): Unit = {
     // the gate survivors arrive with their `_h` content hashes cached
     // (dedupFreshChunks) — append those, never re-hash the chunk text
     val scanned = freshH.select(col("chunk_key").as("id"), col("_h").as("h"))
@@ -347,7 +354,7 @@ object DocStore {
       spark.createDataFrame(java.util.Arrays.asList(rows: _*), scanned.schema))
     val hashed = known.map(_.hashed)
     if (graft.core.IndexGen.current(indexPath).isDefined) {
-      Dedup.hashAppendHashes(spark, indexPath, hashes, hashed)
+      Dedup.hashAppendHashes(spark, indexPath, hashes, hashed, fold)
       ()
     } else if (hashed.getOrElse(!freshH.isEmpty))
       Dedup.hashSaveHashes(hashes, indexPath)
@@ -420,11 +427,16 @@ object DocStore {
     *
     * `compactEvery`: with the gates on, every micro-batch appends one
     * manifest segment to each gate index, and probe cost grows with
-    * segment count; `compactEvery = N > 0` folds each gate index back
-    * to one segment every N batches ([[Dedup.hashCompact]] /
-    * [[Dedup.signatureCompact]]) INSIDE the same foreachBatch thread,
-    * so the single-writer contract holds by construction — no pausing
-    * the stream. 0 disables (compact manually between runs). */
+    * segment count; with `compactEvery = N > 0` the append of every
+    * N-th batch IS the compaction — each gate index's committed rows
+    * plus the batch's new ones are written as its only segment, in one
+    * write ([[graft.core.SegmentStore.fold]]), and an index the batch
+    * adds nothing to is compacted if it has more than one segment. So
+    * after every N-th batch, empty or not (both gates run on every
+    * batch), each gate index is one segment. It runs INSIDE the same
+    * foreachBatch thread, so the single-writer contract holds by
+    * construction — no pausing the stream. 0 disables (compact manually
+    * between runs with [[Dedup.hashCompact]] / [[Dedup.signatureCompact]]). */
   def buildStream(docs: DataFrame, id: Column, data: Column,
       path: String, checkpoint: String,
       metadata: Seq[String] = Nil,
@@ -475,6 +487,13 @@ object DocStore {
           // ingest accumulates them
           graft.core.Caches.microBatch {
             val spark = batch.sparkSession
+            // maintenance cadence, keyed to batchId: on a slot both gate
+            // appends fold their index to one segment, on THIS thread
+            // (the single writer). A retried batch folds again, which
+            // leaves one segment too. Every slot folds, an empty batch's
+            // included: the gates run on it and compact what they append
+            // nothing to, so sparse sources cannot defer the fold.
+            val fold = compactEvery > 0 && (batchId + 1) % compactEvery == 0
             // no cache of the parse+chunk stage: the exact gate's first
             // act is a checkpoint of the chunked batch, which runs the
             // stage once, and every later read is of that checkpoint.
@@ -490,7 +509,7 @@ object DocStore {
             val exactFresh = exactFreshH.drop("_h")
             val (fresh, any) = nearDedupIndex match {
               case Some(np) => nearFreshChunks(spark, exactFresh, np,
-                nearThreshold, nearEstThreshold, nearGeometry)
+                nearThreshold, nearEstThreshold, nearGeometry, fold)
               case None => (exactFresh, known.map(_.any))
             }
             // skip all-dup batches: a zero-row FIRST append could leave
@@ -499,25 +518,7 @@ object DocStore {
             if (any.getOrElse(!fresh.isEmpty))
               fresh.withColumn("embedding", embedder(col("text")))
                 .write.mode("append").parquet(s"$path/chunks")
-            indexChunkHashes(spark, dedupIndex.get, exactFreshH, known)
-            // maintenance cadence: fold each gate index's per-batch
-            // manifest segments back to one, on THIS thread (the
-            // single writer). Keyed to batchId so a retried batch
-            // compacts at most once more — compaction is idempotent
-            // (same rows, one segment, new atomic generation). Every
-            // cadence slot folds: an empty micro-batch landing on a
-            // cadence slot must not defer the fold to the next multiple
-            // (sparse/bursty sources can skip many slots); the IndexGen
-            // guards keep a no-index-yet batch a no-op.
-            if (compactEvery > 0 && (batchId + 1) % compactEvery == 0) {
-              dedupIndex.filter(p =>
-                  graft.core.IndexGen.current(p).isDefined)
-                .foreach(p => Dedup.hashCompact(batch.sparkSession, p))
-              nearDedupIndex.filter(p =>
-                  graft.core.IndexGen.current(p).isDefined)
-                .foreach(p =>
-                  Dedup.signatureCompact(batch.sparkSession, p))
-            }
+            indexChunkHashes(spark, dedupIndex.get, exactFreshH, known, fold)
           }
         }
   }

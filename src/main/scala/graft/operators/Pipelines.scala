@@ -391,7 +391,25 @@ object Pipelines {
       sampleRate: Double, salt: String,
       packBudget: Long, packBuckets: Int,
       nearDup: NearDupConfig = NearDupConfig(),
-      estThreshold: Double = 0.5): DataFrame = {
+      estThreshold: Double = 0.5): DataFrame =
+    pretrainRefresh(batch, id, text, markers, keepLang, stopwords,
+      minQuality, blocklist, hashIndex, sigIndex, heldout, heldoutText, ngram,
+      sampleRate, salt, packBudget, packBuckets, nearDup, estThreshold,
+      fold = false)
+
+  /** [[pretrainCorpusIncremental]]; with `fold` (a compaction slot of
+    * [[graft.streaming.Streaming.pretrainRefreshStream]]) both index
+    * appends leave their index as one segment
+    * ([[Dedup.signatureAppendSigs]]). */
+  private[graft] def pretrainRefresh(batch: DataFrame, id: Column,
+      text: Column, markers: Map[String, Seq[String]], keepLang: String,
+      stopwords: Seq[String], minQuality: Double, blocklist: Seq[String],
+      hashIndex: String, sigIndex: String,
+      heldout: DataFrame, heldoutText: Column, ngram: Int,
+      sampleRate: Double, salt: String,
+      packBudget: Long, packBuckets: Int,
+      nearDup: NearDupConfig, estThreshold: Double,
+      fold: Boolean): DataFrame = {
     val spark = batch.sparkSession
     val base = batch.select(id.as("doc_id"), text.as("text"))
     val langKept = base.filter(TextOps.langId(col("text"), markers) === keepLang)
@@ -421,9 +439,9 @@ object Pipelines {
     val gateOut = exactFresh.drop("_h")
     val canonical = graft.core.Caches.checkpoint(
       if (graft.core.IndexGen.current(sigIndex).isDefined)
-        Dedup.dedupRefresh(spark, sigIndex, gateOut,
+        Dedup.dedupRefreshWith(spark, sigIndex, gateOut,
           col("doc_id"), col("text"),
-          nearDup.threshold, estThreshold, nearDup.maxDf)
+          nearDup.threshold, estThreshold, nearDup.maxDf, fold = fold)._1
       else {
         val c = graft.core.Caches.eager(
           Dedup.canonicalize(gateOut, col("doc_id"), col("text"),
@@ -444,7 +462,7 @@ object Pipelines {
     val freshHashes = exactFresh.select(col("doc_id").as("id"),
       col("_h").as("h"))
     if (graft.core.IndexGen.current(hashIndex).isDefined)
-      Dedup.hashAppendHashes(spark, hashIndex, freshHashes, hashed)
+      Dedup.hashAppendHashes(spark, hashIndex, freshHashes, hashed, fold)
     else Dedup.hashSaveHashes(freshHashes, hashIndex)
     // per-batch tail of the chain: decontaminate → sample → pack; both
     // gates' outputs are canonicalize outputs, one row per doc_id

@@ -263,13 +263,19 @@ object Streaming {
     *
     * Index maintenance: every batch commits one manifest segment, so a
     * loop running for thousands of batches grows probe cost with
-    * segment count. `compactEvery = N > 0` runs [[graft.operators.Dedup
-    * .signatureCompact]] every N batches (one signature-table read, no
-    * re-shingling; probe results unchanged) INSIDE the foreachBatch —
-    * the same thread as the appends, so the single-writer contract
-    * holds by construction, no pausing the stream; 0 disables (compact
-    * manually between runs). The same save-is-append's-compaction
-    * cadence as ivfSave/ivfAppend. Returns the unstarted writer. */
+    * segment count. With `compactEvery = N > 0` the append of every
+    * N-th batch IS the compaction: the index's signatures plus the
+    * batch's survivors' are written as its only segment, in one write
+    * ([[graft.core.SegmentStore.fold]]; no re-shingling, probe results
+    * unchanged). A slot batch with no survivor to add, or an empty one,
+    * compacts the index when it has more than one segment. So after
+    * every N-th batch the index is one segment. All of it runs INSIDE
+    * the foreachBatch — the same thread as the appends, so the
+    * single-writer contract holds by construction, no pausing the
+    * stream; 0 disables (compact manually between runs with
+    * [[graft.operators.Dedup.signatureCompact]]). The same
+    * save-is-append's-compaction cadence as ivfSave/ivfAppend. Returns
+    * the unstarted writer. */
   def dedupRefreshStream(stream: DataFrame, id: Column, text: Column,
       indexPath: String, survivorsOut: String, checkpoint: String,
       threshold: Double = 0.8, estThreshold: Double = 0.5,
@@ -284,27 +290,23 @@ object Streaming {
         // write) complete inside the body, so microBatch may free
         // them when it returns.
         graft.core.Caches.microBatch {
+          // cadence keyed to batchId: a slot batch's append folds the
+          // index to one segment; a retried batch folds again, which
+          // leaves one segment too
+          val fold = compactEvery > 0 && (batchId + 1) % compactEvery == 0
           if (!batch.isEmpty) {
-            val survivors = graft.operators.Dedup.dedupRefresh(
+            val survivors = graft.operators.Dedup.dedupRefreshWith(
               batch.sparkSession, indexPath, batch.toDF(), id, text,
-              threshold, estThreshold, maxDf)
+              threshold, estThreshold, maxDf, fold = fold)._1
             // skip all-dup batches: a zero-row FIRST append could leave a
             // schema-less survivors dir (only _SUCCESS) that fails reads
             if (!survivors.isEmpty)
               survivors.write.mode("append").parquet(survivorsOut)
           }
-          // cadence keyed to batchId, OUTSIDE the empty-batch guard (an
-          // empty batch on a slot must not defer the fold to the next
-          // multiple — sparse sources can skip many); a retried batch
-          // re-compacts at most once more, and compaction is idempotent
-          // (same rows, one segment, new atomic generation). IndexGen
-          // guard: an all-empty prefix has no index to fold yet.
-          if (compactEvery > 0 && (batchId + 1) % compactEvery == 0 &&
-              graft.core.IndexGen.current(indexPath).isDefined) {
-            graft.operators.Dedup.signatureCompact(
-              batch.sparkSession, indexPath)
-            ()
-          }
+          // an empty batch on a slot appends nothing but must not defer
+          // the fold to the next multiple (sparse sources can skip many)
+          else if (fold)
+            graft.operators.Dedup.compactSlot(batch.sparkSession, indexPath)
         }
       }
 
@@ -323,9 +325,13 @@ object Streaming {
     * chain's own-id exclusions on BOTH gates (a replayed batch
     * re-derives its survivors identically and re-appends — the packed
     * sink may hold duplicate rows; dedup by (refresh, doc_id) on read
-    * or land through the upsert sink). `compactEvery = N > 0` folds
-    * both gate indexes every N batches on this thread (single-writer
-    * holds; same cadence contract as the gated buildStream). */
+    * or land through the upsert sink). With `compactEvery = N > 0` the
+    * appends of every N-th batch are the compaction: each gate index's
+    * committed rows plus the batch's new ones are written as its only
+    * segment, in one write, on this thread (single-writer holds), and a
+    * gate index the batch adds nothing to — an empty batch's two —
+    * is compacted when it has more than one segment. Same cadence
+    * contract as the gated buildStream. */
   def pretrainRefreshStream(stream: DataFrame, id: Column, text: Column,
       markers: Map[String, Seq[String]], keepLang: String,
       stopwords: Seq[String], minQuality: Double, blocklist: Seq[String],
@@ -345,35 +351,30 @@ object Streaming {
         // the stream-execution thread; microBatch releases them
         // when the body returns (all consumers complete inside it)
         graft.core.Caches.microBatch {
+          // cadence keyed to batchId, as in dedupRefreshStream
+          val fold = compactEvery > 0 && (batchId + 1) % compactEvery == 0
           if (!batch.isEmpty) {
             // eager: the isEmpty probe and the write would otherwise
             // each run the decontaminate→sample→pack tail (the gate
             // frames upstream ARE checkpointed, but the window-heavy
             // pack stage re-executed per consumer); drained below
             val packed = graft.core.Caches.eager(
-              graft.operators.Pipelines.pretrainCorpusIncremental(
+              graft.operators.Pipelines.pretrainRefresh(
                 batch.toDF(), id, text, markers, keepLang, stopwords,
                 minQuality, blocklist, hashIndex, sigIndex,
                 heldout, heldoutText, ngram, sampleRate, salt,
-                packBudget, packBuckets, nearDup, estThreshold))
+                packBudget, packBuckets, nearDup, estThreshold, fold))
             // zero-row FIRST append guard, as everywhere
             if (!packed.isEmpty)
               packed
                 .withColumn("refresh", lit(batchId + 1))
                 .write.mode("append").parquet(packedOut)
           }
-          // cadence OUTSIDE the empty-batch guard: an empty micro-batch
-          // landing on a slot must not defer compaction to the next
-          // multiple (sparse/bursty sources can skip many slots); the
-          // IndexGen guards keep a no-index-yet batch a no-op
-          if (compactEvery > 0 && (batchId + 1) % compactEvery == 0) {
-            if (graft.core.IndexGen.current(hashIndex).isDefined)
-              graft.operators.Dedup.hashCompact(batch.sparkSession, hashIndex)
-            if (graft.core.IndexGen.current(sigIndex).isDefined)
-              graft.operators.Dedup.signatureCompact(
-                batch.sparkSession, sigIndex)
-            ()
-          }
+          // an empty batch on a slot must not defer the fold to the next
+          // multiple (sparse/bursty sources can skip many slots)
+          else if (fold)
+            Seq(hashIndex, sigIndex).foreach(
+              graft.operators.Dedup.compactSlot(batch.sparkSession, _))
         }
       }
 
@@ -775,10 +776,7 @@ object Streaming {
           val merged = graft.operators.ColUtils.argmaxRowsOrdered(
             all, keys.map(col), col(orderCol))
           SegmentStore.publishPartitions(path, meta,
-              g.toSeq.flatMap(_.segments).diff(old)) { dir =>
-            merged.withColumn("b", bCol)
-              .write.mode("overwrite").partitionBy("b").parquet(dir)
-          }
+            g.toSeq.flatMap(_.segments).diff(old), merged.withColumn("b", bCol))
         }
         b.unpersist()
         ()
@@ -825,11 +823,8 @@ object Streaming {
         .count(f => f.isFile && f.getName.endsWith(".parquet"))
     val todo = g.segments.filter(dataFiles(_) > 1)
     if (todo.nonEmpty)
-      SegmentStore.publishPartitions(path, g.meta, g.segments.diff(todo)) { dir =>
-        g.copy(segments = todo).rows(spark)
-          .repartition(todo.length, col("b"))
-          .write.mode("overwrite").partitionBy("b").parquet(dir)
-      }
+      SegmentStore.publishPartitions(path, g.meta, g.segments.diff(todo),
+        g.copy(segments = todo).rows(spark).repartition(todo.length, col("b")))
     todo.length
   }
 
@@ -856,12 +851,9 @@ object Streaming {
     * published as one more generation. */
   def vacuumSnapshotPartitioned(spark: SparkSession, path: String,
       orderCol: String, deleteCol: String, horizon: Long): Unit =
-    snapshotOf(path, Family.Buckets).foreach { g =>
-      SegmentStore.publishPartitions(path, g.meta, Nil) { dir =>
-        g.rows(spark).filter(!col(deleteCol) || col(orderCol) > lit(horizon))
-          .write.mode("overwrite").partitionBy("b").parquet(dir)
-      }
-    }
+    snapshotOf(path, Family.Buckets).foreach(g =>
+      SegmentStore.publishPartitions(path, g.meta, Nil,
+        g.rows(spark).filter(!col(deleteCol) || col(orderCol) > lit(horizon))))
 
   /** Read the live rows of an [[upsertParquetSink]] snapshot —
     * tombstoned keys filtered, bookkeeping columns dropped. */

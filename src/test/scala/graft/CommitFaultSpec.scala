@@ -5,7 +5,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 import graft.core.{IndexGen, SegmentStore}
-import graft.operators.DocStore
+import graft.operators.{Dedup, DocStore}
 import graft.streaming.Streaming
 
 /** Fault injection over the one write protocol: each writer — the
@@ -156,6 +156,85 @@ class CommitFaultSpec extends SparkSpec {
       DocStore.rebuildIndex(spark, root, binary)
       assert(DocStore.kindOf(SegmentStore.open(idx)) == binary)
       assert(answer() == exact)
+      assertClean(idx)
+    }
+
+  /** A stream whose every batch folds its gate index (`compactEvery =
+    * 1`): the index the crash hits, the writer, and its survivors. */
+  private case class Folding(name: String, index: String => String,
+      start: (DataFrame, String) => org.apache.spark.sql.streaming.StreamingQuery,
+      kept: String => Set[Seq[Any]], setup: String => Unit = _ => ())
+
+  private val foldings = Seq(
+    // the signature fold lands before the survivors write
+    Folding("signature", root => s"$root/sig",
+      (in, root) => Streaming.dedupRefreshStream(in, col("doc_id"), col("text"),
+        s"$root/sig", s"$root/out", s"$root/ckpt", compactEvery = 1).start(),
+      root => rowsOf(spark.read.parquet(s"$root/out")),
+      root => Dedup.signatureSave(
+        Seq((-1L, "seed history document words here now")).toDF("doc_id", "text"),
+        col("doc_id"), col("text"), s"$root/sig")),
+    // the exact gate's hash fold lands after the chunk write
+    Folding("DocStore hash", root => s"$root/exact",
+      (in, root) => DocStore.buildStream(
+        in.select(col("doc_id"), encode(col("text"), "UTF-8").as("data")),
+        col("doc_id"), col("data"), s"$root/store", s"$root/ckpt",
+        chunkSize = 16, overlap = 4, dedupIndex = Some(s"$root/exact"),
+        nearDedupIndex = Some(s"$root/near"), compactEvery = 1).start(),
+      root => rowsOf(spark.read.parquet(s"$root/store/chunks")
+        .select("doc_id", "chunk_id", "text"))))
+
+  private val foldBatches = Seq(
+    Seq((1L, "the quick brown fox jumps over the lazy dog"),
+      (2L, "completely different content about spark engines and shuffles")),
+    Seq((11L, "the quick brown fox jumps over the lazy dog"),
+      (12L, "unique new content entirely fresh words today"),
+      (13L, "another unrelated document with entirely different words")))
+
+  for (f <- foldings; step <- Steps)
+    test(s"a folded ${f.name} append survives a crash at '$step'") {
+      implicit val sqlCtx = spark.sqlContext
+      def rowsAt(root: String) = rowsOf(SegmentStore.open(f.index(root)).rows(spark))
+      /** Start the stream at `root` over `in`, run `body`, stop it. */
+      def running(root: String, in: MemoryStream[(Long, String)])(
+          body: org.apache.spark.sql.streaming.StreamingQuery => Unit): Unit = {
+        val q = f.start(in.toDF().toDF("doc_id", "text"), root)
+        try body(q) finally q.stop()
+      }
+      // the same batches with no crash
+      val clean = tmp(s"fold_clean_${f.name.replace(' ', '_')}")
+      f.setup(clean)
+      val in0 = MemoryStream[(Long, String)]
+      running(clean, in0)(q => foldBatches.foreach { b =>
+        in0.addData(b: _*)
+        q.processAllAvailable()
+      })
+      val root = tmp(s"fault_fold_${f.name.replace(' ', '_')}_$step")
+      val idx = f.index(root)
+      f.setup(root)
+      val in1 = MemoryStream[(Long, String)]
+      var before = Set.empty[Seq[Any]]
+      running(root, in1) { q =>
+        in1.addData(foldBatches(0): _*)
+        q.processAllAvailable()
+        before = rowsAt(root)
+        crashing(idx, step) {
+          in1.addData(foldBatches(1): _*)
+          q.processAllAvailable()
+        }
+      }
+      // a reader gets the previous generation, or old ∪ new once the
+      // marker moved; either is one segment
+      assert(rowsAt(root) == (if (step == "vacuum") rowsAt(clean) else before))
+      assert(SegmentStore.open(idx).segments.size == 1)
+      // restart from the checkpoint: batch 1 replays (its slot in the new
+      // source holds the same docs) and yields the clean run's survivors
+      val in2 = MemoryStream[(Long, String)]
+      foldBatches.foreach(b => in2.addData(b: _*))
+      running(root, in2)(_.processAllAvailable())
+      assert(f.kept(root) == f.kept(clean), "survivors of the replayed batch")
+      assert(rowsAt(root) == rowsAt(clean) &&
+        SegmentStore.open(idx).segments.size == 1)
       assertClean(idx)
     }
 

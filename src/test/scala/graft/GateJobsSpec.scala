@@ -417,4 +417,93 @@ class GateJobsSpec extends SparkSpec {
     assert(rows.map(_._2).distinct.size == 1 && rows.forall(_._3 == 0),
       s"(case, jobs, broadcast builds): ${rows.mkString(", ")}")
   }
+
+  test("a gated buildStream batch on a compaction slot writes each gate " +
+      "index once: one write job per index, equal jobs at 1x and 8x " +
+      "history") {
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val writePath = "InsertIntoHadoopFsRelationCommand\\n[^\\n]*\\nArguments: file:([^,]+),".r
+    /** A compactEvery = 1 buildStream fed `history` docs, then three
+      * ticks of 12 fresh docs and 2 exact re-sends. Per micro-batch: its
+      * jobs and the dirs its writes went to, relative to the stream's
+      * root (`seg-*` for a segment). */
+    def run(history: Int): Seq[(Int, Seq[String])] = {
+      val t = new java.io.File(tmp("gatejobs_fold")).getCanonicalPath
+      val tag = s"gatefold-${System.nanoTime}"
+      val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]
+      val writes = new java.util.concurrent.ConcurrentHashMap[Long, String]
+      val l = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+          val p = e.properties
+          if (p != null && p.getProperty("graft.spec.tag") == tag)
+            Option(p.getProperty("streaming.sql.batchId")).foreach(b =>
+              jobs.add(b.toLong -> Option(p.getProperty("spark.sql.execution.id"))
+                .fold(-1L)(_.toLong)))
+        }
+        override def onOtherEvent(
+            e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+          case s: SparkListenerSQLExecutionStart =>
+            writePath.findFirstMatchIn(s.physicalPlanDescription).foreach(m =>
+              writes.put(s.executionId, m.group(1).stripPrefix(t + "/")
+                .replaceAll("seg-[0-9a-f-]+", "seg-*")))
+          case _ =>
+        }
+      }
+      val in = org.apache.spark.sql.execution.streaming.runtime
+        .MemoryStream[(Long, String)]
+      val sc = spark.sparkContext
+      sc.addSparkListener(l)
+      // the stream thread copies the caller's local properties at start
+      sc.setLocalProperty("graft.spec.tag", tag)
+      val sq = try DocStore.buildStream(in.toDF().toDF("doc_id", "text")
+          .select(col("doc_id"), encode(col("text"), "UTF-8").as("data")),
+        col("doc_id"), col("data"), s"$t/store", s"$t/ckpt", chunkSize = 16,
+        overlap = 4, dedupIndex = Some(s"$t/exact"),
+        nearDedupIndex = Some(s"$t/near"), compactEvery = 1).start()
+      finally sc.setLocalProperty("graft.spec.tag", null)
+      val rnd = new scala.util.Random(4417)
+      def text(): String =
+        Seq.fill(30)(s"w${rnd.nextInt(500)}").mkString(" ")
+      val sent = scala.collection.mutable.ArrayBuffer[String]()
+      def feed(id0: Long, n: Int): Unit = {
+        val fresh = (0 until n).map(j => (id0 + j, text()))
+        val resent = sent.take(2).zipWithIndex.map { case (s, j) =>
+          (id0 + 500 + j, s) }
+        in.addData(fresh ++ resent: _*)
+        sq.processAllAvailable()
+        sent ++= fresh.map(_._2)
+      }
+      try {
+        feed(0L, history)
+        for (n <- 1 to 3) feed(n * 1000L, 12)
+      } finally {
+        sq.stop()
+        org.apache.spark.SpecBus.drain(sc)
+        sc.removeSparkListener(l)
+      }
+      for (ix <- Seq("exact", "near"))
+        assert(SegmentStore.open(s"$t/$ix").segments.size == 1, s"$ix index")
+      import scala.jdk.CollectionConverters._
+      val byBatch = jobs.asScala.toSeq.groupBy(_._1)
+      (0L to 3L).map { b =>
+        val js = byBatch.getOrElse(b, Nil)
+        (js.size, js.flatMap(j => Option(writes.get(j._2))).sorted)
+      }
+    }
+    val one = run(12)
+    val eight = run(96)
+    // a slot batch's writes: the near gate's signature fold, the chunk
+    // append, the exact gate's hash fold — each gate index once
+    for ((name, batches) <- Seq("1x" -> one, "8x" -> eight); b <- 1 to 3)
+      assert(batches(b)._2 == Seq("exact/segments/seg-*",
+        "near/segments/seg-*", "store/chunks"), s"$name batch $b: ${batches(b)}")
+    // the spread shuffle, the exact gate's checkpoint, its batch and
+    // history collects, the near gate's LSH, signature and history
+    // collects, and the three writes
+    assert(one.drop(1).map(_._1) == Seq(10, 10, 10) &&
+      eight.drop(1).map(_._1) == Seq(10, 10, 10),
+      s"jobs per batch: 1x ${one.map(_._1)}, 8x ${eight.map(_._1)}")
+  }
 }

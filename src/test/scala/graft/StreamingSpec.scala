@@ -698,6 +698,35 @@ class StreamingSpec extends SparkSpec {
     assert(bucketDirs(path2).nonEmpty)
   }
 
+  test("vacuumSnapshotPartitioned over an all-tombstone snapshot reads " +
+      "back no rows with the snapshot's schema; the next batch lands") {
+    implicit val sqlCtx = spark.sqlContext
+    val root = java.nio.file.Files.createTempDirectory("graft_vacuum_all").toString
+    val path = s"$root/state"
+    val in = MemoryStream[(Long, Long, Boolean, String)]
+    val q = Streaming.upsertParquetSinkPartitioned(
+      in.toDF().toDF("id", "ord", "del", "v"), Seq("id"), "ord", "del",
+      path, s"$root/ckpt", buckets = 4).start()
+    try {
+      in.addData((1L to 6L).map(i => (i, 10L, true, s"v$i")): _*)
+      q.processAllAvailable()
+      Streaming.vacuumSnapshotPartitioned(spark, path, "ord", "del", horizon = 30L)
+      // every row vacuumed: the generation lists no segment
+      assert(SegmentStore.open(path).segments.isEmpty)
+      val raw = SegmentStore.open(path).rows(spark)
+      assert(raw.collect().isEmpty)
+      assert(raw.schema.map(f => f.name -> f.dataType.simpleString) == Seq(
+        "id" -> "bigint", "ord" -> "bigint", "del" -> "boolean",
+        "v" -> "string", "b" -> "int"))
+      val live = Streaming.readSnapshotPartitioned(spark, path, "ord", "del")
+      assert(live.collect().isEmpty && live.columns.toSeq == Seq("id", "v"))
+      in.addData((7L, 40L, false, "w"))
+      q.processAllAvailable()
+    } finally q.stop()
+    assert(rowsOf(Streaming.readSnapshotPartitioned(spark, path, "ord", "del")) ==
+      Set(Seq(7L, "w")))
+  }
+
   test("subjectStream feeds commits through as ingestible blocks") {
     // reference: pw.io.python.read in streaming mode — run() on a feeder
     // thread, commit() = batch boundary (__init__.py:41 *COMMIT*)
